@@ -30,16 +30,15 @@ import org.apache.spark.sql.types._
   *   part-<uuid>-<i>.parquet                immutable data files
   * }}}
   *
-  * Why this shape survives an object store (unlike every rename-based
-  * swap in [[Maintenance]]):
+  * Why this shape needs no rename (unlike every rename-based swap in
+  * [[Maintenance]]):
   *
-  *   - '''Commit = put-if-absent of one small object.''' The next
+  *   - '''Commit = put-if-absent of one small file.''' The next
   *     version's log file is created atomically via a hard link from a
-  *     fully-written temp file ([[TxLog.putIfAbsent]]) — the local-FS
-  *     analogue of S3 `If-None-Match:*` / GCS `ifGenerationMatch=0`.
-  *     Exactly one of two racing writers wins; the loser re-reads and
-  *     retries (appends) or aborts loudly (rewrites). No rename of data
-  *     ever happens — data files are immutable and uniquely named.
+  *     fully-written temp file ([[TxLog.putIfAbsent]]) on the local
+  *     filesystem — the only store this log supports. Exactly one of two
+  *     racing writers wins. No rename of data ever happens — data files
+  *     are immutable and uniquely named.
   *   - '''Readers never list data files.''' A snapshot is resolved purely
   *     from the log (checkpoint + suffix replay), so a crashed writer's
   *     orphan parquet is invisible — there is no torn-state window at
@@ -49,12 +48,24 @@ import org.apache.spark.sql.types._
   *     copy-on-write both prune at FILE granularity, which is what keeps
   *     a point-ish MERGE from rewriting 100 TB.
   *
-  * Concurrency model: optimistic. Blind appends never conflict logically
-  * and auto-retry under a bounded loop; overwrite/upsert/compact validate
-  * that the table head still equals their read version and throw
-  * [[TxLog.ConcurrentWriteException]] otherwise (a lost-update there
-  * would silently drop the other writer's rows — the caller must re-read
-  * and re-merge).
+  * Concurrency model: optimistic, through ONE commit loop
+  * (`GraftTable.transact`). A mutator builds its actions for a head; the
+  * loop publishes them at head + 1 and, when another writer won that
+  * version, applies the mutator's [[TxLog.OnConflict]] policy:
+  *
+  *   - '''Retry''' (appends, schema and property ops): re-build the
+  *     actions at the new head and publish again, within the op's retry
+  *     budget.
+  *   - '''Rebase''' (compact, zorder, purge): re-publish the same
+  *     actions when every interleaved commit is a blind append.
+  *   - '''Abort''' (upsert, delete, row-level DML, restore,
+  *     addConstraint, overwrite): throw
+  *     [[TxLog.ConcurrentWriteException]] — a lost update there would
+  *     silently drop the other writer's rows; the caller must re-read and
+  *     re-merge.
+  *
+  * A commit that does not land deletes the data and change files it
+  * staged.
   */
 object TxLog {
 
@@ -159,6 +170,25 @@ object TxLog {
   }
 
   final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
+
+  /** What [[GraftTable]]'s commit loop does when its publish loses the
+    * race for the next version. */
+  private[medallion] sealed trait OnConflict
+  /** Re-run the body at the new head — appends and schema/property ops,
+    * which re-derive everything they commit from the head they see. */
+  private[medallion] case object Retry extends OnConflict
+  /** Re-publish the same actions on top of interleaved blind appends —
+    * row-preserving rewrites (compact, zorder, purge); any other
+    * interleaved commit aborts. */
+  private[medallion] case object Rebase extends OnConflict
+  /** The head must still be the read version (CAS): the actions were
+    * computed against that exact snapshot — upsert, delete, row-level
+    * DML, restore, addConstraint, overwrite, create. */
+  private[medallion] case object Abort extends OnConflict
+
+  /** An append's staged identity values went stale (a racing allocator
+    * moved the head's identity columns): restage, don't commit. */
+  private[medallion] object IdentityRaced extends scala.util.control.ControlThrowable
 
   private[graft] val LogDir = "_graft_log"
 
@@ -497,7 +527,7 @@ object TxLog {
       k.stripPrefix(IdentityPrefix) -> v.trim.toLong }
 
   /** Min age (ms) before vacuum may sweep an UNREFERENCED change file.
-    * Writers stage change files into [[ChangeDir]] BEFORE `tryCommit`,
+    * Writers stage change files into [[ChangeDir]] BEFORE they publish,
     * so a zero-age sweep racing an in-flight writer would delete its
     * just-staged cdc files and leave the winning commit's feed
     * unreadable. The guard must exceed the longest stage→commit gap
@@ -943,9 +973,11 @@ object TxLog {
         "path" -> JString(p))))
   }
 
+  /** One commit's actions — what [[parseCommit]] reads back, and what a
+    * [[GraftTable]] mutator hands its commit loop to publish. */
   private[medallion] final case class Commit(
-      op: String, schemaJson: Option[String], adds: Seq[AddFile], removes: Seq[String],
-      txns: Map[String, Long],
+      op: String, schemaJson: Option[String] = None, adds: Seq[AddFile] = Nil,
+      removes: Seq[String] = Nil, txns: Map[String, Long] = Map.empty,
       /** per-add provenance versions, present only in checkpoint files */
       addVersions: Map[String, Long] = Map.empty,
       /** full-replacement constraint set, when this commit changed it */
@@ -1019,127 +1051,103 @@ object TxLog {
       prp, cdc.result(), cdcFull.result(), mk, hwm)
   }
 
-  // ------------------------------------ parsed-checkpoint cache (JVM)
+  // ------------------------------------------- parsed-commit caches (JVM)
 
-  /** Content-addressed cache of PARSED checkpoints. Snapshot
-    * resolution re-parses the checkpoint JSON on every call — the
-    * dominant cost once tables carry 10⁴+ files (~10 µs/add measured),
-    * paid by EVERY plan and every commit's read phase. Checkpoint
-    * bytes are already read whole for parsing, so the key is the md5
-    * of those bytes: content-addressed, it can never serve a stale
-    * parse — not even when a test rebuilds a table at the same path
-    * with the same version number. Bounded three ways: ≤ 8 entries,
-    * ≤ 2·10⁶ cached adds total (a million-file Commit is the working
-    * set, not a leak), LRU on access — and the values are
-    * SoftReferences, so a JVM under memory pressure reclaims the
-    * parsed adds instead of OOMing: a driver that relies on the
-    * distributed prune to AVOID million-add heap is never pinned by
-    * one stray snapshot() call that populated this cache. A cleared
-    * reference is a cache miss (re-parse), never an error. */
-  private val MaxCachedCheckpoints = 8
-  private val MaxCachedAdds = 2000000L
-  private[graft] val checkpointCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private val checkpointCache =
-    new java.util.LinkedHashMap[String, java.lang.ref.SoftReference[Commit]](
-      16, 0.75f, true)
+  /** A bounded LRU of PARSED commit documents — what keeps snapshot
+    * resolution from re-parsing immutable log files: a checkpoint's
+    * parse costs ~10 µs/add on 10⁴+-file tables and every plan and
+    * every commit's read phase resolves one; the suffix replay re-parses
+    * O(K²/2) commit documents over K commits between checkpoints (and
+    * `autoCheckpointIfDue` resolves after EVERY commit). Bounded three
+    * ways: ≤ `maxEntries` entries, ≤ `maxAdds` cached adds in total (a
+    * million-file Commit is the working set, not a leak), LRU on
+    * access — and the values are SoftReferences, so a JVM under memory
+    * pressure reclaims the parsed adds instead of OOMing (a driver that
+    * relies on the distributed prune to AVOID million-add heap is never
+    * pinned by one stray snapshot() call). A cleared reference is a
+    * miss (re-parse), never an error. The parse runs OUTSIDE the lock
+    * (concurrent appendSlices commits resolve snapshots from worker
+    * threads); a racing double-parse of the same key is benign — last
+    * put wins with an identical value. `hits` counts avoided parses,
+    * `parses` (when given) the real ones. */
+  private[medallion] final class ParseCache[K](
+      maxEntries: Int, maxAdds: Long,
+      hits: java.util.concurrent.atomic.AtomicLong,
+      parses: Option[java.util.concurrent.atomic.AtomicLong] = None) {
+    private val lru =
+      new java.util.LinkedHashMap[K, java.lang.ref.SoftReference[Commit]](
+        16, 0.75f, true)
 
-  private[medallion] def parseCheckpointCached(bytes: Array[Byte]): Commit = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = java.util.Base64.getEncoder.encodeToString(md.digest(bytes))
-    checkpointCache.synchronized {
-      val ref = checkpointCache.get(key)
-      val hit = if (ref == null) null else ref.get()
-      if (hit != null) { checkpointCacheHits.incrementAndGet(); return hit }
-      if (ref != null) checkpointCache.remove(key) // GC-cleared: drop slot
-    }
-    val parsed = parseCommit(new String(bytes, "UTF-8"))
-    checkpointCache.synchronized {
-      checkpointCache.put(key, new java.lang.ref.SoftReference(parsed))
-      // drop GC-cleared slots first, then LRU-evict by entry/add caps
-      checkpointCache.values().removeIf(r => r.get() == null)
-      var totalAdds = 0L
-      val it = checkpointCache.values().iterator()
-      while (it.hasNext) {
-        val c = it.next().get()
-        if (c != null) totalAdds += c.adds.size
+    def apply(key: K)(parse: => Commit): Commit = {
+      lru.synchronized {
+        val ref = lru.get(key)
+        val hit = if (ref == null) null else ref.get()
+        if (hit != null) { hits.incrementAndGet(); return hit }
+        if (ref != null) lru.remove(key) // GC-cleared: drop slot
       }
-      val eldest = checkpointCache.entrySet().iterator()
-      while ((checkpointCache.size() > MaxCachedCheckpoints ||
-          totalAdds > MaxCachedAdds) && checkpointCache.size() > 1 &&
-          eldest.hasNext) {
-        val c = eldest.next().getValue.get()
-        if (c != null) totalAdds -= c.adds.size
-        eldest.remove()
+      parses.foreach(_.incrementAndGet())
+      val parsed = parse
+      lru.synchronized {
+        lru.put(key, new java.lang.ref.SoftReference(parsed))
+        // drop GC-cleared slots first, then LRU-evict by entry/add caps
+        lru.values().removeIf(r => r.get() == null)
+        var totalAdds = 0L
+        val it = lru.values().iterator()
+        while (it.hasNext) {
+          val c = it.next().get()
+          if (c != null) totalAdds += c.adds.size
+        }
+        val eldest = lru.entrySet().iterator()
+        while ((lru.size() > maxEntries || totalAdds > maxAdds) &&
+            lru.size() > 1 && eldest.hasNext) {
+          val c = eldest.next().getValue.get()
+          if (c != null) totalAdds -= c.adds.size
+          eldest.remove()
+        }
       }
+      parsed
     }
-    parsed
   }
 
-  // ---------------------------------- parsed-live-commit cache (JVM)
+  /** Content key of a document already read whole for parsing: the md5
+    * of its bytes — it can never serve a stale parse, not even when a
+    * test or bench rebuilds a table at the same path and version. */
+  private def contentKey(bytes: Array[Byte]): String =
+    java.util.Base64.getEncoder.encodeToString(
+      java.security.MessageDigest.getInstance("MD5").digest(bytes))
 
-  /** Content-addressed cache of PARSED live commit files, the companion
-    * of [[parseCheckpointCached]] for the SUFFIX side of snapshot
-    * resolution. Every snapshot() replays the commits since the last
-    * checkpoint, and `autoCheckpointIfDue` resolves a fresh snapshot
-    * after EVERY commit — so a K-commit query between checkpoints
-    * re-parses O(K²/2) commit documents on the driver even though each
-    * file is immutable once published (atomic-rename protocol, never
-    * rewritten). Locally commits are KBs; at 100 TB a commit carries
-    * thousands of AddFiles and its JSON parse is the driver cost this
-    * cache removes (guide §5: the driver should do almost no data
-    * work). Same safety argument as the checkpoint cache: the bytes
-    * are already read whole for parsing, the key is their md5 —
-    * content-addressed, it cannot serve a stale parse even when a
-    * bench/test rebuilds a table at the same path and version number.
-    * Bounds: ≤ 64 entries (3× the checkpoint interval, so one table's
-    * working suffix plus neighbours fit), the shared ≤ 2·10⁶ cached
-    * adds cap, LRU on access, SoftReference values (memory pressure
-    * reclaims, a cleared ref is a re-parse, never an error).
-    * [[liveCommitCacheHits]] counts avoided parses and
-    * [[liveCommitParses]] the real ones — the deterministic evidence
-    * pair (hits = parses the pre-cache code performed in the same
-    * run). */
-  private val MaxCachedLiveCommits = 64
+  private val MaxCachedAdds = 2000000L
+  /** Avoided checkpoint parses, JSON and parquet alike. */
+  private[graft] val checkpointCacheHits = new java.util.concurrent.atomic.AtomicLong
+  /** Avoided / real parses of live (suffix) commit files — the
+    * deterministic evidence pair (hits = parses the pre-cache code
+    * performed in the same run). */
   private[graft] val liveCommitCacheHits = new java.util.concurrent.atomic.AtomicLong
   private[graft] val liveCommitParses = new java.util.concurrent.atomic.AtomicLong
-  private val liveCommitCache =
-    new java.util.LinkedHashMap[String, java.lang.ref.SoftReference[Commit]](
-      64, 0.75f, true)
 
-  private[medallion] def parseLiveCommitCached(bytes: Array[Byte]): Commit = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = java.util.Base64.getEncoder.encodeToString(md.digest(bytes))
-    liveCommitCache.synchronized {
-      val ref = liveCommitCache.get(key)
-      val hit = if (ref == null) null else ref.get()
-      if (hit != null) { liveCommitCacheHits.incrementAndGet(); return hit }
-      if (ref != null) liveCommitCache.remove(key) // GC-cleared: drop slot
-    }
-    // parse OUTSIDE the lock (concurrent appendSlices commits resolve
-    // snapshots from worker threads); a racing double-parse of the same
-    // bytes is benign — last put wins with an identical value
-    liveCommitParses.incrementAndGet()
-    val parsed = parseCommit(new String(bytes, "UTF-8"))
-    liveCommitCache.synchronized {
-      liveCommitCache.put(key, new java.lang.ref.SoftReference(parsed))
-      liveCommitCache.values().removeIf(r => r.get() == null)
-      var totalAdds = 0L
-      val it = liveCommitCache.values().iterator()
-      while (it.hasNext) {
-        val c = it.next().get()
-        if (c != null) totalAdds += c.adds.size
-      }
-      val eldest = liveCommitCache.entrySet().iterator()
-      while ((liveCommitCache.size() > MaxCachedLiveCommits ||
-          totalAdds > MaxCachedAdds) && liveCommitCache.size() > 1 &&
-          eldest.hasNext) {
-        val c = eldest.next().getValue.get()
-        if (c != null) totalAdds -= c.adds.size
-        eldest.remove()
-      }
-    }
-    parsed
-  }
+  /** JSON checkpoints, content-addressed: ≤ 8 entries. */
+  private val checkpointCache =
+    new ParseCache[String](8, MaxCachedAdds, checkpointCacheHits)
+  /** Live commit files, content-addressed: ≤ 64 entries (3× the
+    * checkpoint interval, so one table's working suffix plus
+    * neighbours fit). */
+  private val liveCommitCache = new ParseCache[String](
+    64, MaxCachedAdds, liveCommitCacheHits, Some(liveCommitParses))
+  /** PARQUET checkpoints, keyed by (path, size, mtime) — no need to read
+    * the file twice, and safe for an immutable, atomically-linked
+    * artifact whose name encodes its version: ≤ 4 entries. */
+  private val parquetCommitCache = new ParseCache[(String, Long, Long)](
+    4, Long.MaxValue, checkpointCacheHits)
+
+  private[medallion] def parseCheckpointCached(bytes: Array[Byte]): Commit =
+    checkpointCache(contentKey(bytes))(parseCommit(new String(bytes, "UTF-8")))
+
+  private[medallion] def parseLiveCommitCached(bytes: Array[Byte]): Commit =
+    liveCommitCache(contentKey(bytes))(parseCommit(new String(bytes, "UTF-8")))
+
+  private[medallion] def parquetCommitCached(path: Path): Commit =
+    parquetCommitCache((path.toString, Files.size(path),
+      Files.getLastModifiedTime(path).toMillis))(ParquetCheckpoint.readCommit(path))
 
   // --------------------------- distributed checkpoint pruning (planning)
 
@@ -1316,37 +1324,6 @@ object TxLog {
       }
       .collect().toSeq
   }
-
-  // -------------------------------- parquet-checkpoint commit cache
-
-  /** Parse cache for PARQUET checkpoints, keyed by (path, size, mtime)
-    * — cheaper than content addressing (no need to read the file twice)
-    * and safe for an immutable, atomically-linked artifact whose name
-    * encodes its version. SoftReference values like the JSON cache. */
-  private val parquetCommitCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-      java.lang.ref.SoftReference[Commit]](8, 0.75f, true)
-
-  private[medallion] def parquetCommitCached(path: Path): Commit = {
-    val key = (path.toString, Files.size(path),
-      Files.getLastModifiedTime(path).toMillis)
-    parquetCommitCache.synchronized {
-      val ref = parquetCommitCache.get(key)
-      val hit = if (ref == null) null else ref.get()
-      if (hit != null) { checkpointCacheHits.incrementAndGet(); return hit }
-      if (ref != null) parquetCommitCache.remove(key)
-    }
-    val parsed = ParquetCheckpoint.readCommit(path)
-    parquetCommitCache.synchronized {
-      parquetCommitCache.put(key, new java.lang.ref.SoftReference(parsed))
-      parquetCommitCache.values().removeIf(r => r.get() == null)
-      val eldest = parquetCommitCache.entrySet().iterator()
-      while (parquetCommitCache.size() > 4 && eldest.hasNext) {
-        eldest.next(); eldest.remove()
-      }
-    }
-    parsed
-  }
 }
 
 /** Handle on one log-structured table rooted at `tablePath`. Thread-safe
@@ -1361,12 +1338,6 @@ object TxLog {
   */
 final class GraftTable(val tablePath: String) {
   import TxLog._
-
-  /** Test-only seam: runs after an append's files are staged but before
-    * its commit loop, letting specs interleave a concurrent commit into
-    * the stage→commit window deterministically (e.g. the identity
-    * property appearing mid-append). No-op in production. */
-  private[graft] var afterStageHook: () => Unit = () => ()
 
   private val root = Paths.get(new java.io.File(tablePath).getAbsolutePath)
   private def logDir: Path = root.resolve(LogDir)
@@ -2734,34 +2705,72 @@ final class GraftTable(val tablePath: String) {
       rowIdWatermark = Some(newHwm))
   }
 
-  /** Attempt to commit at exactly `version`; true if won. */
-  private def tryCommit(
-      version: Long, op: String, readVersion: Long, schemaJson: Option[String],
-      adds: Seq[AddFile], removes: Seq[String],
-      txns: Map[String, Long] = Map.empty,
-      constraints: Option[Map[String, String]] = None,
-      props: Option[Map[String, String]] = None,
-      addVersions: Map[String, Long] = Map.empty,
-      cdc: Seq[(String, Long)] = Nil,
-      cdcFull: Seq[String] = Nil,
-      mergeKey: Option[String] = None,
-      rowIdWatermark: Option[Long] = None): Boolean = {
+  /** The ONE commit loop — the shape of Delta's `OptimisticTransaction`
+    * [Armbrust et al., VLDB 2020]. A mutator hands it a body that builds
+    * its actions for a given head; the loop owns the rest: read the head
+    * (or start from the caller's `read` version), publish `head + 1` by
+    * put-if-absent, auto-checkpoint a won commit, and on a lost race
+    * apply `onConflict` ([[TxLog.OnConflict]]) within `maxRetries`
+    * publish attempts. A body returning None has nothing left to commit
+    * at that head (a streaming batch the txn ledger already covers): the
+    * loop returns that head. `staged` names the commit's own temporaries
+    * — data and change files, relative to the root — deleted whenever it
+    * does not commit: a throwing body, an abort or an exhausted budget. */
+  private def transact(
+      onConflict: OnConflict, read: Long = -1L, staged: Seq[String] = Nil,
+      maxRetries: Int = 20)(body: Long => Option[Commit]): Long = {
+    def dropStaged(): Unit = staged.foreach(p => Files.deleteIfExists(root.resolve(p)))
+    def build(head: Long): Option[Commit] =
+      try body(head) catch { case e: Throwable => dropStaged(); throw e }
+    def publish(v: Long, read: Long, c: Commit): Boolean =
+      putIfAbsent(
+        renderCommit(c.op, read, c.schemaJson, c.adds, c.removes, c.txns,
+          addVersions = c.addVersions, constraints = c.constraints,
+          // every real commit carries wall-clock time (TIMESTAMP AS OF
+          // resolves against it); checkpoints bypass this loop and stay
+          // deterministic-bytes
+          tsMillis = Some(System.currentTimeMillis()),
+          props = c.props, cdc = c.cdc, cdcFull = c.cdcFull,
+          mergeKey = c.mergeKey, rowIdWatermark = c.rowIdWatermark),
+        versionFile(v))
+    var base = if (read >= 0L) read else latestVersion() // what the body read
+    var at = base // the version the next publish must follow
+    var next = build(base)
     ensureDirs()
-    val won = putIfAbsent(
-      renderCommit(op, readVersion, schemaJson, adds, removes, txns,
-        addVersions = addVersions,
-        constraints = constraints,
-        // every real commit carries wall-clock time (TIMESTAMP AS OF
-        // resolves against it); checkpoints bypass tryCommit and stay
-        // deterministic-bytes
-        tsMillis = Some(System.currentTimeMillis()),
-        props = props,
-        cdc = cdc, cdcFull = cdcFull, mergeKey = mergeKey,
-        rowIdWatermark = rowIdWatermark),
-      versionFile(version))
-    if (won) autoCheckpointIfDue(version)
-    won
+    var attempt = 0
+    while (next.isDefined) {
+      val c = next.get
+      def conflict(why: String): ConcurrentWriteException = {
+        dropStaged()
+        new ConcurrentWriteException(s"txlog: ${c.op} on $tablePath $why — " +
+          "nothing was committed; re-read and re-run")
+      }
+      beforePublishHook()
+      // a body built on an earlier read re-checks the head first: a lone
+      // put-if-absent at at + 1 would also succeed over a truncated log
+      // whose checkpoint already covers that version. Retry bodies were
+      // built on a head read just before them, so they skip the listing.
+      if ((onConflict == Retry || latestVersion() == at) && publish(at + 1, base, c)) {
+        autoCheckpointIfDue(at + 1)
+        return at + 1
+      }
+      attempt += 1
+      val head = latestVersion()
+      if (onConflict == Abort || (onConflict == Rebase && !rebasable(c, at, head)))
+        throw conflict(s"read version $base but the head moved to $head")
+      if (attempt >= maxRetries) throw conflict(s"lost $attempt commit races")
+      if (onConflict == Retry) { base = head; next = build(head) }
+      at = head
+    }
+    dropStaged()
+    base
   }
+
+  /** Test-only seam: runs before every publish attempt of [[transact]] —
+    * after the body built its actions, before the put-if-absent — so a
+    * spec can land an interloping commit exactly where a real race
+    * lands one. No-op in production. */
+  private[graft] var beforePublishHook: () => Unit = () => ()
 
   /** Fail loudly if any row of `df` VIOLATES a constraint (evaluates it
     * to FALSE — a NULL result passes, the SQL CHECK contract). One
@@ -2862,69 +2871,39 @@ final class GraftTable(val tablePath: String) {
     // recomputed against the live head on every attempt — see
     // commitSchemaFor
     val head0 = latestVersion()
+    val snap0 =
+      if (head0 == 0L) Snapshot(0L, df0.schema.json, Nil) else snapshot(head0)
     // generated columns the batch omits are computed here, BEFORE the
     // schema check (an omitting batch is the feature's contract, not a
     // mismatch); provided values are validated on the staged bytes below.
     // Identity columns fill with monotonically-unique values at or above
     // the property's `next` (gaps allowed — the Delta contract); the
     // commit below advances `next` transactionally, and a racing
-    // allocator forces a restage (see the attempt loop). A batch
+    // allocator forces a restage (see `finish` below). A batch
     // PROVIDING an identity column refuses: ALWAYS semantics.
-    val idBase: Map[String, Long] =
-      if (head0 == 0L) Map.empty else identityCols(snapshot(head0).props)
-    val df =
-      if (head0 == 0L) df0
-      else {
-        val snap0 = snapshot(head0)
-        idBase.keys.foreach(c => require(!df0.columns.contains(c),
-          s"txlog: column '$c' is GENERATED ALWAYS AS IDENTITY — the " +
-            "engine assigns it (overwrite() is the reshape escape hatch, " +
-            "then syncIdentity)"))
-        val genFilled = fillGenerated(df0, snap0.schema, snap0.props)
-        val idFilled = idBase.foldLeft(genFilled) { case (d, (c, next)) =>
-          if (!snap0.schema.fieldNames.contains(c)) d
-          else d.withColumn(c,
-            (lit(next) + monotonically_increasing_id())
-              .cast(snap0.schema(c).dataType))
-        }
-        if (idBase.isEmpty) idFilled
-        else projectSchemaOrder(idFilled, snap0.schema)
-      }
-    val schemaJson0 =
-      if (head0 > 0) commitSchemaFor(head0, df.schema, mergeSchema) else df.schema.json
-    def commitSchema0(json: String): StructType =
-      DataType.fromJson(json).asInstanceOf[StructType]
+    val idBase: Map[String, Long] = identityCols(snap0.props)
+    idBase.keys.foreach(c => require(!df0.columns.contains(c),
+      s"txlog: column '$c' is GENERATED ALWAYS AS IDENTITY — the " +
+        "engine assigns it (overwrite() is the reshape escape hatch, " +
+        "then syncIdentity)"))
+    val idFilled = idBase.foldLeft(fillGenerated(df0, snap0.schema, snap0.props)) {
+      case (d, (c, next)) =>
+        if (!snap0.schema.fieldNames.contains(c)) d
+        else d.withColumn(c,
+          (lit(next) + monotonically_increasing_id())
+            .cast(snap0.schema(c).dataType))
+    }
+    val df = if (idBase.isEmpty) idFilled else projectSchemaOrder(idFilled, snap0.schema)
     // mapped tables: the staged bytes carry the commit schema's PHYSICAL
-    // names; a rename/drop racing this append would de-sync the staged
-    // bytes from the schema actually committed — detected per attempt
-    val stagedPhysical = physicalSchema(commitSchema0(schemaJson0)).fieldNames.toSeq
+    // names (a rename/drop racing this append is detected per attempt)
+    val stagedUnder = DataType.fromJson(commitSchemaFor(snap0, df.schema, mergeSchema))
+      .asInstanceOf[StructType]
     // hidden partitioning: cluster the batch by the spec's transform
     // tuple (one range exchange) so files cover tight transform ranges —
     // see [[PartitionSpec.cluster]]; no-op on spec-less tables
-    val physDf = toPhysical(df, commitSchema0(schemaJson0))
-    val readSnap0 = if (head0 == 0L) None else Some(snapshot(head0))
-    val clustered = readSnap0 match {
-      case None => physDf
-      case Some(h) =>
-        PartitionSpec.cluster(physDf,
-          PartitionSpec.resolved(h.props, h.schema, physDf.schema))
-    }
-    val adds = stageData(clustered, readSnap0)
-    // constraints validate the STAGED bytes (see enforceOnStaged: the
-    // rows checked are the rows committed, and the source lineage never
-    // runs twice); a violation deletes the staged files and throws.
-    // The read schema is the WIDENED committed schema, not the batch's:
-    // a mergeSchema batch may omit a constrained table column, whose
-    // rows are then NULL — which PASSES the check (SQL semantics) —
-    // rather than failing analysis on a missing column.
-    def commitSchema(json: String): StructType =
-      DataType.fromJson(json).asInstanceOf[StructType]
-    var validated = if (head0 > 0) {
-      val s0 = snapshot(head0)
-      s0.constraints ++ generatedChecks(s0.props)
-    } else Map.empty[String, String]
-    enforceOnStaged(df.sparkSession, commitSchema(schemaJson0), adds, validated)
-    afterStageHook()
+    val physDf = toPhysical(df, stagedUnder)
+    val adds = stageData(PartitionSpec.cluster(physDf,
+      PartitionSpec.resolved(snap0.props, snap0.schema, physDf.schema)), Some(snap0))
     // upcast-on-write: when the commit schema is WIDER than the staged
     // bytes (an integral-narrow batch on a widened table), the narrow
     // column's hash-keyed stats artifacts — bloom bitsets, HLL
@@ -2934,14 +2913,14 @@ final class GraftTable(val tablePath: String) {
     // min/max/null/sum strings are value-identical in the integral
     // domain and stay. Re-derived per commit attempt: a concurrent
     // widen can move the commit schema mid-race.
-    def narrowAdjusted(cs: StructType): Seq[AddFile] = {
+    def narrowAdjusted(cs: StructType, in: Seq[AddFile]): Seq[AddFile] = {
       val physTypes = physicalSchema(cs).fields
         .map(f => f.name -> f.dataType).toMap
       val narrowed: Set[String] = physDf.schema.fields.collect {
         case f if physTypes.get(f.name).exists(_ != f.dataType) => f.name
       }.toSet
-      if (narrowed.isEmpty) adds
-      else adds.map { a =>
+      if (narrowed.isEmpty) in
+      else in.map { a =>
         val drop = a.stats.keysIterator.filter(k =>
           PartitionSpec.fromStatKey(k).exists(t =>
             t.kind == "bucket" && narrowed(t.source))).toSet
@@ -2951,87 +2930,97 @@ final class GraftTable(val tablePath: String) {
         })
       }
     }
-    def dropStaged(): Unit =
-      adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
-      val schemaJson =
-        try commitSchemaFor(head, df.schema, mergeSchema)
-        catch { case e: Throwable => dropStaged(); throw e }
-      // PREFIX compare: physical names are immutable for surviving
-      // columns (rename re-points the logical name only) and a
-      // concurrent widen APPENDS fields — both leave the staged bytes'
-      // binding intact. What this catches is a concurrent overwrite /
-      // drop+re-add changing the physical identity of a column this
-      // batch already staged bytes for
-      if (physicalSchema(commitSchema(schemaJson)).fieldNames
-          .take(stagedPhysical.length).toSeq != stagedPhysical) {
-        dropStaged()
-        throw new ConcurrentWriteException(
-          s"txlog: the column mapping of $tablePath changed while this " +
-            "append was staging (concurrent overwrite or drop/re-add) — " +
-            "the staged bytes carry stale physical names; re-run the append")
-      }
-      // a constraint added since validation must re-check the batch (the
-      // rare race; re-validation is one more columnar read of the stage)
-      val cur =
-        if (head == head0) validated
-        else {
-          val sh = snapshot(head)
-          sh.constraints ++ generatedChecks(sh.props)
-        }
-      if (cur != validated) {
-        enforceOnStaged(df.sparkSession, commitSchema(schemaJson), adds, cur)
-        validated = cur
-      }
-      // identity: the staged values were allocated against idBase — a
-      // head whose `next` moved means a racing allocator; restage with
-      // fresh bases rather than committing overlapping ranges. Re-read
-      // even when idBase was EMPTY at staging: a concurrent
-      // setProperty('identity.<c>') landing mid-flight would otherwise
-      // let a batch that PROVIDES c commit past ALWAYS semantics
-      // without advancing `next` — later allocations would collide.
-      val headProps =
-        if (head == head0 && idBase.isEmpty) Map.empty[String, String]
-        else snapshot(head).props
-      val headIds =
-        if (head == head0) idBase else identityCols(headProps)
-      if (headIds != idBase) {
-        dropStaged()
-        if (maxRetries - attempt <= 1) throw new ConcurrentWriteException(
-          s"txlog: identity allocation kept racing at $tablePath")
-        return append(df0, mergeSchema, maxRetries - attempt - 1)
-      }
-      val commitProps: Option[Map[String, String]] =
-        if (idBase.isEmpty) None
-        else Some(headProps ++ idBase.map { case (c, next) =>
-          val phys = physicalOf(commitSchema(schemaJson), c)
-          val mx = adds.flatMap(_.stats.get(phys))
-            .map(cs => BigDecimal(cs.max).toLongExact)
-          (IdentityPrefix + c) ->
-            (if (mx.isEmpty) next else math.max(next, mx.max + 1L)).toString
-        })
-      // row tracking: every append assigns VIRTUAL row ids from the
-      // head's watermark — log metadata only, re-derived per attempt
-      // (a lost race means a concurrent assigner moved the watermark)
-      val hwmBase = if (head == 0L) 0L else snapshot(head).rowIdWatermark
-      val (ridAdds, newHwm) =
-        assignBaseRowIds(narrowAdjusted(commitSchema(schemaJson)), hwmBase)
-      if (tryCommit(head + 1, "append", head, Some(schemaJson),
-          ridAdds, Nil,
-          props = commitProps,
-          rowIdWatermark = Some(newHwm)))
-        return head + 1
-      attempt += 1
+    // identity: the staged values were allocated against idBase — a
+    // head whose identity columns moved means a racing allocator;
+    // restage with fresh bases rather than commit overlapping ranges.
+    // Checked even when idBase was EMPTY at staging: a concurrent
+    // setProperty('identity.<c>') landing mid-flight would otherwise
+    // let a batch that PROVIDES c commit past ALWAYS semantics without
+    // advancing `next` — later allocations would collide.
+    def finish(head: Snapshot, cs: StructType, c: Commit): Commit = {
+      if (identityCols(head.props) != idBase) throw IdentityRaced
+      c.copy(adds = narrowAdjusted(cs, c.adds),
+        props = if (idBase.isEmpty) None else Some(head.props ++ idBase.map {
+          case (name, next) =>
+            val mx = adds.flatMap(_.stats.get(physicalOf(cs, name)))
+              .map(st => BigDecimal(st.max).toLongExact)
+            (IdentityPrefix + name) ->
+              (if (mx.isEmpty) next else math.max(next, mx.max + 1L)).toString
+        }))
     }
-    dropStaged()
-    throw new ConcurrentWriteException(
-      s"txlog: append lost $maxRetries commit races at $tablePath")
+    val body = appendBody(df.sparkSession, "append", df.schema, mergeSchema,
+      adds, stagedUnder, finish = finish)
+    var attempts = 0
+    try transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries) { head =>
+      attempts += 1
+      body(head)
+    } catch { case IdentityRaced =>
+      if (maxRetries - attempts <= 0) throw new ConcurrentWriteException(
+        s"txlog: identity allocation kept racing at $tablePath")
+      append(df0, mergeSchema, maxRetries - attempts)
+    }
   }
 
-  /** The schema line an append at head `head` must commit: the CURRENT
-    * head schema, widened by the batch schema only under
+  /** The per-attempt body every append path hands [[transact]] (`Retry`).
+    * At each head it re-derives the schema line ([[commitSchemaFor]]),
+    * refuses a column mapping that moved under the staged bytes,
+    * validates the staged bytes against the head's constraints whenever
+    * they differ from the set the bytes last passed, skips a batch the
+    * head's txn ledger already covers, and assigns row ids from the
+    * head's watermark — all from ONE snapshot resolution per attempt.
+    * `stagedUnder` is the logical schema whose physical names the staged
+    * bytes carry; `finish` adds [[append]]'s identity and up-cast steps. */
+  private def appendBody(
+      spark: SparkSession, op: String, batch: StructType, mergeSchema: Boolean,
+      adds: Seq[AddFile], stagedUnder: StructType,
+      txn: Option[(String, Long)] = None,
+      finish: (Snapshot, StructType, Commit) => Commit = (_, _, c) => c
+  ): Long => Option[Commit] = {
+    val stagedPhysical = physicalSchema(stagedUnder).fieldNames.toSeq
+    var validated = Map.empty[String, String]
+    head => {
+      val snap = if (head == 0L) Snapshot(0L, batch.json, Nil) else snapshot(head)
+      // a racing writer (same restarted query) already landed this
+      // batch — ours would be a duplicate
+      if (txn.exists { case (app, id) => snap.txns.get(app).exists(_ >= id) }) None
+      else {
+        val schemaJson = commitSchemaFor(snap, batch, mergeSchema)
+        val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+        // PREFIX compare: physical names are immutable for surviving
+        // columns (rename re-points the logical name only) and a
+        // concurrent widen APPENDS fields — both leave the staged bytes'
+        // binding intact. What this catches is a concurrent overwrite /
+        // drop+re-add changing the physical identity of a column this
+        // batch already staged bytes for
+        if (physicalSchema(schema).fieldNames.take(stagedPhysical.length).toSeq !=
+            stagedPhysical)
+          throw new ConcurrentWriteException(
+            s"txlog: the column mapping of $tablePath changed while this " +
+              s"$op was staging (concurrent overwrite or drop/re-add) — the " +
+              "staged bytes carry stale physical names; re-run it")
+        // constraints validate the STAGED bytes (see enforceOnStaged: the
+        // rows checked are the rows committed, and the source lineage
+        // never runs twice), read under the head's LOGICAL commit schema:
+        // mapped bytes carry physical names, and a mergeSchema batch
+        // omitting a constrained column reads NULL there — which PASSES
+        // (SQL semantics). Only a constraint set that moved since the
+        // last pass costs another read.
+        val cur = snap.constraints ++ generatedChecks(snap.props)
+        if (cur != validated) {
+          enforceOnStaged(spark, schema, adds, cur)
+          validated = cur
+        }
+        // row tracking: every append assigns VIRTUAL row ids from the
+        // head's watermark — log metadata only
+        val (ridAdds, hwm) = assignBaseRowIds(adds, snap.rowIdWatermark)
+        Some(finish(snap, schema, Commit(op, Some(schemaJson), ridAdds,
+          txns = txn.toMap, rowIdWatermark = Some(hwm))))
+      }
+    }
+  }
+
+  /** The schema line an append at `head` must commit: the CURRENT head
+    * schema, widened by the batch schema only under
     * `mergeSchema = true`. Recomputed per commit attempt — committing a
     * schema captured before a lost race would silently ERASE a
     * concurrent widening append's new columns from the table (snapshot
@@ -3040,10 +3029,10 @@ final class GraftTable(val tablePath: String) {
     * here rather than silently merging; type conflicts under merge mode
     * fail inside [[mergedSchema]]. */
   private def commitSchemaFor(
-      head: Long, batch: StructType, mergeSchema: Boolean): String =
-    if (head == 0) batch.json
+      head: Snapshot, batch: StructType, mergeSchema: Boolean): String =
+    if (head.version == 0L) batch.json
     else {
-      val existing = snapshot(head).schema
+      val existing = head.schema
       if (sameSchema(existing, batch) ||
           upcastCompatible(existing, batch)) existing.json
       else if (!mergeSchema) throw new IllegalArgumentException(
@@ -3095,6 +3084,30 @@ final class GraftTable(val tablePath: String) {
     * The txn check re-runs on every lost commit race: two executors of
     * the same restarted query racing the same batch resolve to exactly
     * one append. Returns the committed (or already-covering) version. */
+  def appendIdempotent(
+      df0: DataFrame, appId: String, batchId: Long, maxRetries: Int = 20): Long = {
+    require(appId.nonEmpty, "txlog: appId must be non-empty")
+    val pre = if (Files.exists(logDir)) snapshot() else Snapshot(0L, df0.schema.json, Nil)
+    if (pre.txns.get(appId).exists(_ >= batchId)) return pre.version
+    // generated columns an epoch omits are computed, like append
+    val df = if (pre.version == 0L) df0 else fillGenerated(df0, pre.schema, pre.props)
+    val existing = pre.version > 0 && pre.schema.nonEmpty
+    if (existing) {
+      require(sameSchema(pre.schema, df.schema),
+        s"txlog: append schema ${df.schema.simpleString} does not match table " +
+          s"schema ${pre.schema.simpleString}; use overwrite() to change schema")
+    }
+    // mapped tables: stage under the table's physical names; validate
+    // against the table's LOGICAL schema (constraints speak logical)
+    val stagedUnder = if (existing) pre.schema else df.schema
+    val adds = stageData(toPhysical(df, stagedUnder), Some(pre))
+    // streaming appends are strict: a sink must not silently evolve the
+    // table
+    transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries)(
+      appendBody(df.sparkSession, "streamingUpdate", df.schema, mergeSchema = false,
+        adds, stagedUnder, txn = Some(appId -> batchId)))
+  }
+
   /** [[appendIdempotent]] over files a DSv2 streaming write already
     * staged (the `writeStream.toTable` path): same txn-ledger contract
     * — a batch id at or below the app's high-water mark is a no-op and
@@ -3107,11 +3120,13 @@ final class GraftTable(val tablePath: String) {
       staged: Seq[java.nio.file.Path], maxRetries: Int = 20,
       sortedBy: Seq[String] = Nil): Long = {
     require(appId.nonEmpty, "txlog: appId must be non-empty")
-    def dropStaged(): Unit = staged.foreach(p => Files.deleteIfExists(p))
     val pre = snapshot()
     require(pre.version > 0L,
       s"txlog: no committed table at $root for a streaming append")
-    if (pre.txns.get(appId).exists(_ >= batchId)) { dropStaged(); return pre.version }
+    if (pre.txns.get(appId).exists(_ >= batchId)) {
+      staged.foreach(p => Files.deleteIfExists(p))
+      return pre.version
+    }
     // the staged bytes carry PHYSICAL names (the DSv2 writer factory is
     // built over physicalSchema); `schema` here is the logical schema
     // `sortedBy` is the write-declared effective sort (spec sources ++
@@ -3119,130 +3134,11 @@ final class GraftTable(val tablePath: String) {
     // tuple-rolled file is a sorted subsequence — stamp it
     val adds = adoptStaged(spark, physicalSchema(schema), staged,
       sortedBy = sortedBy)
-    // DSv2-staged epochs validate like every other write: the adopted
-    // parquet is the batch — one columnar scan, drop-and-throw on breach
-    var validated = pre.constraints ++ generatedChecks(pre.props)
-    enforceOnStaged(spark, schema, adds, validated)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot(latestVersion())
-      if (head.txns.get(appId).exists(_ >= batchId)) {
-        // a racing writer (same restarted query) already landed this
-        // batch — ours would be a duplicate
-        adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        return head.version
-      }
-      // strict schema line, recomputed per attempt like appendIdempotent:
-      // a concurrent retype mid-stream fails loudly rather than
-      // committing files the head schema cannot read
-      val schemaJson =
-        try commitSchemaFor(head.version, schema, mergeSchema = false)
-        catch { case e: Throwable =>
-          adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-          throw e
-        }
-      // PREFIX compare (see append): a mapping-identity change landing
-      // mid-epoch (concurrent overwrite, drop/re-add) would commit a
-      // schema whose physical names the staged bytes don't carry
-      val epochPhysical = physicalSchema(schema).fieldNames.toSeq
-      if (physicalSchema(DataType.fromJson(schemaJson).asInstanceOf[StructType])
-          .fieldNames.take(epochPhysical.length).toSeq != epochPhysical) {
-        adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        throw new ConcurrentWriteException(
-          s"txlog: the column mapping of $tablePath changed while this " +
-            "streaming epoch was staging — restart the query to pick up " +
-            "the new mapping")
-      }
-      // a constraint added mid-race must re-validate the batch — same
-      // contract as append(); skipping it would commit unchecked rows
-      if (head.constraints ++ generatedChecks(head.props) != validated) {
-        validated = head.constraints ++ generatedChecks(head.props)
-        enforceOnStaged(spark, schema, adds, validated)
-      }
-      {
-        // row tracking: streaming epochs assign like batch appends
-        val (ridAdds, newHwm) = assignBaseRowIds(adds, head.rowIdWatermark)
-        if (tryCommit(head.version + 1, "streamingUpdate", head.version,
-            Some(schemaJson), ridAdds, Nil,
-            Map(appId -> batchId),
-            rowIdWatermark = Some(newHwm))) return head.version + 1
-      }
-      attempt += 1
-    }
-    adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-    throw new ConcurrentWriteException(
-      s"txlog: streaming append lost $maxRetries commit races at $tablePath")
-  }
-
-  def appendIdempotent(
-      df0: DataFrame, appId: String, batchId: Long, maxRetries: Int = 20): Long = {
-    require(appId.nonEmpty, "txlog: appId must be non-empty")
-    val pre = if (Files.exists(logDir)) snapshot() else Snapshot(0L, df0.schema.json, Nil)
-    if (pre.txns.get(appId).exists(_ >= batchId)) return pre.version
-    // generated columns an epoch omits are computed, like append
-    val df = if (pre.version == 0L) df0 else fillGenerated(df0, pre.schema, pre.props)
-    if (pre.version > 0 && pre.schema.nonEmpty) {
-      require(sameSchema(pre.schema, df.schema),
-        s"txlog: append schema ${df.schema.simpleString} does not match table " +
-          s"schema ${pre.schema.simpleString}; use overwrite() to change schema")
-    }
-    // mapped tables: stage under the table's physical names; validate
-    // against the table's LOGICAL schema (constraints speak logical)
-    val stagedPhysical = physicalSchema(pre.schema).fieldNames.toSeq
-    val adds = stageData(toPhysical(df, pre.schema), Some(pre))
-    // constraints validate the staged bytes (enforceOnStaged): checked
-    // rows == committed rows, source lineage never runs twice
-    var validated = pre.constraints ++ generatedChecks(pre.props)
-    enforceOnStaged(df.sparkSession,
-      if (pre.version > 0 && pre.schema.nonEmpty) pre.schema else df.schema,
-      adds, validated)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot(latestVersion())
-      if (head.txns.get(appId).exists(_ >= batchId)) {
-        // a racing writer (same restarted query) already landed this
-        // batch — ours would be a duplicate; drop the staged files
-        adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        return head.version
-      }
-      val v = head.version + 1
-      // schema recomputed against the live head per attempt — same
-      // lost-update hazard as append (see commitSchemaFor); streaming
-      // appends are strict (a sink must not silently evolve the table)
-      val schemaJson =
-        try commitSchemaFor(head.version, df.schema, mergeSchema = false)
-        catch { case e: Throwable =>
-          adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-          throw e
-        }
-      // PREFIX compare (see append): only a mapping-identity change
-      // (concurrent overwrite, drop/re-add) invalidates the staged bytes
-      if (pre.version > 0 &&
-          physicalSchema(DataType.fromJson(schemaJson)
-            .asInstanceOf[StructType]).fieldNames
-            .take(stagedPhysical.length).toSeq != stagedPhysical) {
-        adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        throw new ConcurrentWriteException(
-          s"txlog: the column mapping of $tablePath changed while this " +
-            "streaming append was staging — re-run against the new head")
-      }
-      // a constraint added mid-race must re-validate the batch
-      if (head.constraints ++ generatedChecks(head.props) != validated) {
-        validated = head.constraints ++ generatedChecks(head.props)
-        enforceOnStaged(df.sparkSession, df.schema, adds, validated)
-      }
-      {
-        val (ridAdds, newHwm) = assignBaseRowIds(adds, head.rowIdWatermark)
-        if (tryCommit(v, "streamingUpdate", head.version,
-            Some(schemaJson), ridAdds, Nil,
-            Map(appId -> batchId),
-            rowIdWatermark = Some(newHwm))) return v
-      }
-      attempt += 1
-    }
-    adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-    throw new ConcurrentWriteException(
-      s"txlog: appendIdempotent lost $maxRetries commit races at $tablePath")
+    // DSv2-staged epochs validate like every other write (the adopted
+    // parquet is the batch)
+    transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries)(
+      appendBody(spark, "streamingUpdate", schema, mergeSchema = false,
+        adds, schema, txn = Some(appId -> batchId)))
   }
 
   private def sameSchema(a: StructType, b: StructType): Boolean =
@@ -3474,14 +3370,8 @@ final class GraftTable(val tablePath: String) {
     * The catalog's `CREATE TABLE` — fails if anything ever committed
     * here (concurrent creators race on the same put-if-absent commit,
     * one wins). */
-  def create(schema: StructType): Long = {
-    ensureDirs()
-    if (latestVersion() > 0L)
-      throw new ConcurrentWriteException(s"txlog: table already exists at $root")
-    if (!tryCommit(1L, "create", 0L, Some(schema.json), Nil, Nil))
-      throw new ConcurrentWriteException(s"txlog: lost the create race at $root")
-    1L
-  }
+  def create(schema: StructType): Long =
+    transact(Abort, read = 0L)(_ => Some(Commit("create", Some(schema.json))))
 
   /** Widen the table by `cols` in ONE schema-only commit — the catalog's
     * `ALTER TABLE ADD COLUMNS`. New columns append as nullable trailing
@@ -3501,9 +3391,7 @@ final class GraftTable(val tablePath: String) {
     require(lowered.distinct.size == cols.size,
       s"txlog: addColumns batch repeats a column name (case-insensitive): " +
         cols.map(_.name).mkString(", "))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+    transact(Retry, maxRetries = maxRetries) { head =>
       require(head > 0L, s"txlog: no table at $root to alter")
       val existing = snapshot(head).schema
       val existingLower =
@@ -3523,13 +3411,8 @@ final class GraftTable(val tablePath: String) {
       val stamped =
         if (!isMapped(existing)) cols
         else cols.map(f => withPhysical(f, freshPhysical(f.name)))
-      val widened = StructType(existing.fields ++ stamped)
-      if (tryCommit(head + 1, "addColumns", head, Some(widened.json), Nil, Nil))
-        return head + 1
-      attempt += 1
+      Some(Commit("addColumns", Some(StructType(existing.fields ++ stamped).json)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: addColumns lost $maxRetries commit races at $tablePath")
   }
 
   /** `ALTER TABLE … RENAME COLUMN old TO new` as ONE schema-only commit:
@@ -3541,26 +3424,25 @@ final class GraftTable(val tablePath: String) {
     * sees the old name. */
   def renameColumn(oldName: String, newName: String, maxRetries: Int = 20): Long = {
     require(oldName != newName, "txlog: rename to the same name is a no-op")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+    transact(Retry, maxRetries = maxRetries) { head =>
       require(head > 0L, s"txlog: no table at $root to alter")
-      val existing = snapshot(head).schema
+      val snap = snapshot(head)
+      val existing = snap.schema
       require(existing.fieldNames.contains(oldName),
         s"txlog: no column '$oldName' on $root to rename")
       require(!existing.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT))
           .contains(newName.toLowerCase(java.util.Locale.ROOT)),
         s"txlog: column '$newName' already exists on $root " +
           "(names compare case-insensitively, as Spark resolves them)")
-      constraintsReferencing(snapshot(head).constraints, oldName).foreach { n =>
+      constraintsReferencing(snap.constraints, oldName).foreach { n =>
         throw new IllegalArgumentException(
           s"txlog: cannot rename '$oldName' — CHECK constraint '$n' " +
             "references it; drop the constraint first and re-add it " +
             "against the new name")
       }
       locally {
-        val gens = generatedCols(snapshot(head).props)
-        require(!identityCols(snapshot(head).props).contains(oldName),
+        val gens = generatedCols(snap.props)
+        require(!identityCols(snap.props).contains(oldName),
           s"txlog: cannot rename '$oldName' — it is an identity column; " +
             s"unset '$IdentityPrefix$oldName' first and re-declare it")
         require(!gens.contains(oldName),
@@ -3576,12 +3458,8 @@ final class GraftTable(val tablePath: String) {
         if (f.name != oldName) f
         else withPhysical(f, physicalName(f)).copy(name = newName)
       })
-      if (tryCommit(head + 1, "renameColumn", head, Some(renamed.json), Nil, Nil))
-        return head + 1
-      attempt += 1
+      Some(Commit("renameColumn", Some(renamed.json)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: renameColumn lost $maxRetries commit races at $tablePath")
   }
 
   /** TYPE WIDENING as a metadata-only schema commit (opt-in via
@@ -3613,9 +3491,7 @@ final class GraftTable(val tablePath: String) {
         td.scale == fd.scale && td.precision > fd.precision
       case _ => false
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+    transact(Retry, maxRetries = maxRetries) { head =>
       require(head > 0L, s"txlog: no table at $root to alter")
       val snap = snapshot(head)
       require(snap.props.get(TypeWideningProp).contains("true"),
@@ -3669,13 +3545,8 @@ final class GraftTable(val tablePath: String) {
       // provenance of re-emitted entries stays with the ORIGINAL commit
       val addVersions = changed.map(a =>
         a.path -> snap.addedIn.getOrElse(a.path, head)).toMap
-      if (tryCommit(head + 1, "widen", head, Some(widened.json), changed,
-          Nil, addVersions = addVersions))
-        return head + 1
-      attempt += 1
+      Some(Commit("widen", Some(widened.json), changed, addVersions = addVersions))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: widenColumn lost $maxRetries commit races at $tablePath")
   }
 
   /** `ALTER TABLE … DROP COLUMN` as ONE schema-only commit: the field
@@ -3685,17 +3556,16 @@ final class GraftTable(val tablePath: String) {
     * column mapping ON for every surviving field: a future ADD COLUMNS
     * of the same name must take a fresh physical name, or it would
     * resurrect this column's bytes from pre-drop files. */
-  def dropColumn(name: String, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+  def dropColumn(name: String, maxRetries: Int = 20): Long =
+    transact(Retry, maxRetries = maxRetries) { head =>
       require(head > 0L, s"txlog: no table at $root to alter")
-      val existing = snapshot(head).schema
+      val snap = snapshot(head)
+      val existing = snap.schema
       require(existing.fieldNames.contains(name),
         s"txlog: no column '$name' on $root to drop")
       require(existing.fields.length > 1,
         s"txlog: cannot drop '$name' — it is the only column")
-      constraintsReferencing(snapshot(head).constraints, name).foreach { n =>
+      constraintsReferencing(snap.constraints, name).foreach { n =>
         throw new IllegalArgumentException(
           s"txlog: cannot drop '$name' — CHECK constraint '$n' references " +
             "it; drop the constraint first")
@@ -3703,7 +3573,7 @@ final class GraftTable(val tablePath: String) {
       // a partition transform reading this column would silently stop
       // applying to new files — refuse, like constraints (the spec is
       // one `setProperty` away from dropping the transform first)
-      snapshot(head).props.get(PartitionSpec.Prop).foreach { spec =>
+      snap.props.get(PartitionSpec.Prop).foreach { spec =>
         if (PartitionSpec.parse(spec).exists(t => t.source == name ||
             t.source == physicalOf(existing, name)))
           throw new IllegalArgumentException(
@@ -3711,8 +3581,8 @@ final class GraftTable(val tablePath: String) {
               s"('$spec') partitions on it; update the spec first")
       }
       locally {
-        val gens = generatedCols(snapshot(head).props)
-        require(!identityCols(snapshot(head).props).contains(name),
+        val gens = generatedCols(snap.props)
+        require(!identityCols(snap.props).contains(name),
           s"txlog: cannot drop '$name' — it is an identity column; " +
             s"unset '$IdentityPrefix$name' first")
         require(!gens.contains(name),
@@ -3726,13 +3596,8 @@ final class GraftTable(val tablePath: String) {
       }
       val remaining = StructType(existing.fields.filterNot(_.name == name)
         .map(f => withPhysical(f, physicalName(f))))
-      if (tryCommit(head + 1, "dropColumn", head, Some(remaining.json), Nil, Nil))
-        return head + 1
-      attempt += 1
+      Some(Commit("dropColumn", Some(remaining.json)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: dropColumn lost $maxRetries commit races at $tablePath")
-  }
 
   /** Names of constraints whose SQL expression mentions `column` —
     * conservative word-boundary text match (no SQL parse): renames and
@@ -3761,35 +3626,22 @@ final class GraftTable(val tablePath: String) {
       s"txlog: constraint '$name' already exists " +
         s"(${snap.constraints(name)}) — drop it first")
     enforceConstraints(readFiles(spark, snap, identity), Map(name -> sqlExpr))
-    val v = snap.version + 1
-    val won = latestVersion() == snap.version &&
-      tryCommit(v, "addConstraint", snap.version, None, Nil, Nil,
-        constraints = Some(snap.constraints + (name -> sqlExpr)))
-    if (!won) throw new ConcurrentWriteException(
-      s"txlog: addConstraint read version ${snap.version} but head moved — " +
-        "the concurrent commit's rows were never validated; re-run")
-    v
+    // CAS: a commit landing mid-validation brought rows never validated
+    transact(Abort, read = snap.version)(_ => Some(Commit("addConstraint",
+      constraints = Some(snap.constraints + (name -> sqlExpr)))))
   }
 
   /** DROP CONSTRAINT: one metadata commit removes the named check.
     * Retries lost races (dropping is conflict-free — later writes just
     * stop enforcing). Fails loudly on an unknown name. */
-  def dropConstraint(name: String, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+  def dropConstraint(name: String, maxRetries: Int = 20): Long =
+    transact(Retry, maxRetries = maxRetries) { head =>
       val snap = snapshot(head)
       require(snap.constraints.contains(name),
         s"txlog: no constraint '$name' on $root " +
           s"(have: ${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
-      if (tryCommit(head + 1, "dropConstraint", head, None, Nil, Nil,
-        constraints = Some(snap.constraints - name)))
-        return head + 1
-      attempt += 1
+      Some(Commit("dropConstraint", constraints = Some(snap.constraints - name)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: dropConstraint lost $maxRetries commit races at $tablePath")
-  }
 
   /** Current CHECK constraints (name → SQL expression). */
   def constraints: Map[String, String] = snapshot().constraints
@@ -3812,19 +3664,12 @@ final class GraftTable(val tablePath: String) {
     require(kvs.nonEmpty, "txlog: setProperties needs at least one property")
     kvs.keys.foreach(n =>
       require(n.nonEmpty, "txlog: property name must be non-empty"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+    transact(Retry, maxRetries = maxRetries) { head =>
       require(head > 0L, s"txlog: no table at $root to set properties on")
       val snap = snapshot(head)
       kvs.foreach { case (name, value) => validateProperty(name, value, snap) }
-      if (tryCommit(head + 1, "setProps", head, None, Nil, Nil,
-        props = Some(snap.props ++ kvs)))
-        return head + 1
-      attempt += 1
+      Some(Commit("setProps", props = Some(snap.props ++ kvs)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: setProperties lost $maxRetries commit races at $tablePath")
   }
 
   private def validateProperty(
@@ -3944,22 +3789,14 @@ final class GraftTable(val tablePath: String) {
       ()
   }
 
-  def unsetProperty(name: String, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestVersion()
+  def unsetProperty(name: String, maxRetries: Int = 20): Long =
+    transact(Retry, maxRetries = maxRetries) { head =>
       val snap = snapshot(head)
       require(snap.props.contains(name),
         s"txlog: no property '$name' on $root " +
           s"(have: ${snap.props.keys.toSeq.sorted.mkString(", ")})")
-      if (tryCommit(head + 1, "setProps", head, None, Nil, Nil,
-        props = Some(snap.props - name)))
-        return head + 1
-      attempt += 1
+      Some(Commit("setProps", props = Some(snap.props - name)))
     }
-    throw new ConcurrentWriteException(
-      s"txlog: unsetProperty lost $maxRetries commit races at $tablePath")
-  }
 
   /** Current table properties. */
   def properties: Map[String, String] = snapshot().props
@@ -3996,24 +3833,17 @@ final class GraftTable(val tablePath: String) {
       s"txlog: data file ${a.path} of version $targetVersion was vacuumed — " +
         "restore target is behind the retention window"))
     val removes = snap.files.map(_.path).filterNot(wanted.contains)
-    val v = snap.version + 1
-    // NOT commitRewrite: its lost-race cleanup deletes the adds' files,
-    // which here are live HISTORICAL data files, not staged temporaries.
-    // The constraint set reverts WITH the data (restoring to a
-    // pre-constraint version must not keep enforcing a rule whose
-    // clean-table validation no longer holds).
+    // nothing staged: the re-adds are live HISTORICAL data files, never
+    // temporaries an abort may delete. The constraint set reverts WITH
+    // the data (restoring to a pre-constraint version must not keep
+    // enforcing a rule whose clean-table validation no longer holds).
     // Re-adds carry the TARGET version's provenance: after a restore,
     // rows attribute exactly as they did at the restored version.
-    val won = latestVersion() == snap.version &&
-      tryCommit(v, "restore", snap.version, Some(target.schemaJson),
-        readds, removes, constraints = Some(target.constraints),
-        props = Some(target.props),
-        addVersions = readds.map(a =>
-          a.path -> target.addedIn.getOrElse(a.path, targetVersion)).toMap)
-    if (!won) throw new ConcurrentWriteException(
-      s"txlog: restore read version ${snap.version} but head moved — " +
-        "re-read and retry")
-    v
+    transact(Abort, read = snap.version)(_ => Some(Commit("restore",
+      Some(target.schemaJson), readds, removes,
+      constraints = Some(target.constraints), props = Some(target.props),
+      addVersions = readds.map(a =>
+        a.path -> target.addedIn.getOrElse(a.path, targetVersion)).toMap)))
   }
 
   /** Zero-copy snapshot CLONE (the `CREATE TABLE ... CLONE` shape): hard-
@@ -4060,8 +3890,8 @@ final class GraftTable(val tablePath: String) {
     // format for every clone and break pre-constraint readers on tables
     // that never used the feature (restore keeps its unconditional line
     // for clear-on-revert semantics)
-    val won = dest.tryCommit(1L, "clone", 0L, Some(snap.schemaJson),
-      snap.files, Nil,
+    dest.transact(Abort, read = 0L)(_ => Some(Commit("clone",
+      Some(snap.schemaJson), snap.files,
       constraints = if (snap.constraints.nonEmpty) Some(snap.constraints)
                     else None,
       props = if (snap.props.nonEmpty) Some(snap.props) else None,
@@ -4069,9 +3899,7 @@ final class GraftTable(val tablePath: String) {
       // its files — a fresh-watermark clone would hand its first append
       // the cloned rows' own id range (silent duplicates)
       rowIdWatermark =
-        if (snap.rowIdWatermark > 0L) Some(snap.rowIdWatermark) else None)
-    if (!won) throw new ConcurrentWriteException(
-      s"txlog: clone destination $destPath raced another creator")
+        if (snap.rowIdWatermark > 0L) Some(snap.rowIdWatermark) else None)))
     dest
   }
 
@@ -4265,10 +4093,7 @@ final class GraftTable(val tablePath: String) {
       }
       try enforceOnStaged(spark, snap.schema, newAdds,
         snap.constraints ++ generatedChecks(snap.props))
-      catch { case e: Throwable =>
-        survivorAdds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        throw e
-      }
+      catch { case e: Throwable => dropStaged(); throw e }
     }
     if (dropped.isEmpty && touched.isEmpty && newAdds.isEmpty)
       return (0, 0, snap.version)
@@ -4414,21 +4239,13 @@ final class GraftTable(val tablePath: String) {
           snap.schema)
         .withColumn(ChangeTypeCol, lit("delete")))
     }
-    val v = snap.version + 1
-    val won = latestVersion() == snap.version &&
-      tryCommit(v, "delete", snap.version, None,
-        stagedAdds ++ dvAdds,
+    // staged: ONLY the rewrite output and change files — the DV adds
+    // reference live data files that must never be touched on abort
+    val v = transact(Abort, read = snap.version,
+        staged = stagedAdds.map(_.path) ++ cdc.map(_._1))(_ =>
+      Some(Commit("delete", None, stagedAdds ++ dvAdds,
         rewriteFiles.map(_.path) ++ dvAdds.map(_.path),
-        addVersions = addVersions, cdc = cdc)
-    if (!won) {
-      // clean up ONLY the staged rewrite output — the DV adds reference
-      // live data files that must never be touched on abort
-      stagedAdds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-      cdc.foreach { case (p, _) => Files.deleteIfExists(root.resolve(p)) }
-      throw new ConcurrentWriteException(
-        s"txlog: deleteRows read version ${snap.version} but head moved — " +
-          "re-read and retry (a silent commit here would drop the concurrent writer's rows)")
-    }
+        addVersions = addVersions, cdc = cdc)))
     (dvAdds.size, rewriteFiles.size, counts.values.sum, v)
   }
 
@@ -4645,30 +4462,19 @@ final class GraftTable(val tablePath: String) {
     val addVersions = dvAdds.map(a =>
       a.path -> snap.addedIn.getOrElse(a.path, snap.version)).toMap
     val removes = merged.map(_._1)
-    val v = snap.version + 1
     // row tracking: the new files (post-images + the over-threshold
     // rewrite leg) take fresh virtual bases; DV'd originals keep their
     // rid info through the AddFile copy, so surviving ids never move
     val (ridNew, newHwm) =
       assignBaseRowIds(stagedAdds ++ insertAdds, snap.rowIdWatermark)
-    // manual CAS (not commitRewrite): its abort path deletes `adds`
-    // files, and dvAdds reference LIVE data files that must never be
-    // touched — same discipline as deleteRows
-    val won = latestVersion() == snap.version &&
-      tryCommit(v, op, snap.version, None,
-        dvAdds ++ ridNew, removes,
+    // staged: the new files and change files only — dvAdds reference
+    // LIVE data files that must never be touched on abort (same
+    // discipline as deleteRows)
+    transact(Abort, read = readVersion,
+        staged = (stagedAdds ++ insertAdds).map(_.path) ++ cdc.map(_._1))(_ =>
+      Some(Commit(op, None, dvAdds ++ ridNew, removes,
         addVersions = addVersions, cdc = cdc, mergeKey = mergeKey,
-        rowIdWatermark = Some(newHwm))
-    if (!won) {
-      (stagedAdds ++ insertAdds).foreach(a =>
-        Files.deleteIfExists(root.resolve(a.path)))
-      cdc.foreach { case (p, _) => Files.deleteIfExists(root.resolve(p)) }
-      throw new ConcurrentWriteException(
-        s"txlog: row-level write read version $readVersion but head " +
-          "moved — re-run (a silent commit would drop the concurrent " +
-          "writer's rows)")
-    }
-    v
+        rowIdWatermark = Some(newHwm))))
   }
 
   /** Materialize every deletion vector: each DV'd file is rewritten
@@ -4854,8 +4660,6 @@ final class GraftTable(val tablePath: String) {
     (snap.files.size, adds.size, v)
   }
 
-  /** Commit a rewrite (removes + adds) iff the head is still the read
-    * version; otherwise delete the staged files and abort loudly. */
   /** Rewrites whose output preserves the table's ROW CONTENT exactly
     * (compaction, z-order, DV purge) — the ops the Delta-style conflict
     * matrix lets REBASE over concurrent blind appends instead of
@@ -4869,21 +4673,29 @@ final class GraftTable(val tablePath: String) {
     * correctness was computed against the exact read snapshot. */
   private val RowPreservingOps = Set("compact", "zorder", "purge")
 
-  /** Could the rewrite safely re-commit on top of version `iv`'s
-    * commit? Pure blind appends only: no removes (nothing of ours or
-    * anyone's retired), no constraint change (our re-materialized rows
-    * were validated as the pre-image of the same content), not a
-    * schema-REPLACING or mapping-moving op (append's schema line only
-    * ever widens, which explicit-schema reads null-fill). */
-  private def rebaseSafe(iv: Long): Boolean = {
-    val f = versionFile(iv)
-    Files.exists(f) && {
-      val c = readCommitFileCached(f)
-      (c.op == "append" || c.op == "streamingUpdate") &&
-        c.removes.isEmpty && c.constraints.isEmpty
-    }
-  }
+  /** Could `c` safely re-commit on top of the commits `at + 1 .. head`?
+    * Only when it stages no change feed and no schema, and every
+    * interleaved commit is a pure blind append: no removes (nothing of
+    * ours or anyone's retired), no constraint change (our
+    * re-materialized rows were validated as the pre-image of the same
+    * content), not a schema-REPLACING or mapping-moving op (append's
+    * schema line only ever widens, which explicit-schema reads
+    * null-fill). */
+  private def rebasable(c: Commit, at: Long, head: Long): Boolean =
+    c.cdc.isEmpty && c.cdcFull.isEmpty && c.schemaJson.isEmpty && head > at &&
+      ((at + 1) to head).forall { iv =>
+        val f = versionFile(iv)
+        Files.exists(f) && {
+          val ic = readCommitFileCached(f)
+          (ic.op == "append" || ic.op == "streamingUpdate") &&
+            ic.removes.isEmpty && ic.constraints.isEmpty
+        }
+      }
 
+  /** Commit a rewrite (removes + adds) computed against `readSnap`:
+    * [[RowPreservingOps]] rebase over interleaved blind appends, every
+    * other op aborts on a moved head; either way a commit that does not
+    * land deletes its staged data and change files. */
   private def commitRewrite(
       readSnap: Snapshot, op: String, schemaJson: Option[String],
       adds: Seq[AddFile], removes: Seq[String],
@@ -4891,35 +4703,12 @@ final class GraftTable(val tablePath: String) {
       cdc: Seq[(String, Long)] = Nil,
       cdcFull: Seq[String] = Nil,
       mergeKey: Option[String] = None,
-      rowIdWatermark: Option[Long] = None): Long = {
-    var expected = readSnap.version
-    var attempt = 0
-    while (attempt < 20) {
-      val v = expected + 1
-      if (latestVersion() == expected &&
-          tryCommit(v, op, readSnap.version, schemaJson, adds, removes,
-            addVersions = addVersions, cdc = cdc, cdcFull = cdcFull,
-            mergeKey = mergeKey, rowIdWatermark = rowIdWatermark)) return v
-      val head = latestVersion()
-      val rebasable = RowPreservingOps.contains(op) &&
-        cdc.isEmpty && cdcFull.isEmpty && schemaJson.isEmpty &&
-        head > expected && ((expected + 1) to head).forall(rebaseSafe)
-      if (!rebasable) {
-        adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-        // staged change files are this commit's own temporaries too
-        cdc.foreach { case (p, _) => Files.deleteIfExists(root.resolve(p)) }
-        throw new ConcurrentWriteException(
-          s"txlog: $op read version ${readSnap.version} but head moved — " +
-            "re-read and retry (a silent commit here would drop the " +
-            "concurrent writer's rows)")
-      }
-      expected = head
-      attempt += 1
-    }
-    adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
-    throw new ConcurrentWriteException(
-      s"txlog: $op lost 20 rebased commit races at $tablePath")
-  }
+      rowIdWatermark: Option[Long] = None): Long =
+    transact(if (RowPreservingOps(op)) Rebase else Abort, read = readSnap.version,
+        staged = adds.map(_.path) ++ cdc.map(_._1))(_ =>
+      Some(Commit(op, schemaJson, adds, removes, addVersions = addVersions,
+        cdc = cdc, cdcFull = cdcFull, mergeKey = mergeKey,
+        rowIdWatermark = rowIdWatermark)))
 
   // ------------------------------------------------- checkpoint / vacuum
 
@@ -5118,7 +4907,7 @@ final class GraftTable(val tablePath: String) {
     // keep those referenced by commits inside the window, drop the rest
     // (orphans of lost commit races included). An unreferenced-but-
     // YOUNG file may belong to an in-flight writer (stageChanges runs
-    // before tryCommit) — the age guard keeps it until it is either
+    // before its publish) — the age guard keeps it until it is either
     // committed (referenced) or provably abandoned.
     val changeRoot = root.resolve(ChangeDir)
     val staleCdc = if (!Files.exists(changeRoot)) Nil else {

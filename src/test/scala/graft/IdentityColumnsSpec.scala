@@ -102,8 +102,8 @@ class IdentityColumnsSpec extends SparkSpec {
     val t = freshTable("midrace")
     t.append(Seq((1L, "a")).toDF("id", "v"))
     val racer = new GraftTable(t.tablePath)
-    t.afterStageHook = () => {
-      t.afterStageHook = () => () // one-shot: the restage must not re-race
+    t.beforePublishHook = () => {
+      t.beforePublishHook = () => () // one-shot: the restage must not re-race
       racer.setProperty("identity.id", "1000")
     }
     val err = intercept[IllegalArgumentException] {
@@ -116,8 +116,8 @@ class IdentityColumnsSpec extends SparkSpec {
     val t2 = freshTable("midrace2")
     t2.append(Seq((1L, "a")).toDF("id", "v"))
     val racer2 = new GraftTable(t2.tablePath)
-    t2.afterStageHook = () => {
-      t2.afterStageHook = () => ()
+    t2.beforePublishHook = () => {
+      t2.beforePublishHook = () => ()
       racer2.setProperty("identity.id", "500")
     }
     t2.append(Seq("b", "c").toDF("v"), mergeSchema = true, 20)
