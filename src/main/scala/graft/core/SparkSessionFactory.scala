@@ -64,11 +64,10 @@ object SparkSessionFactory {
       // which Lake.events rebuilds into TimestampType
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // write timestamps as INT64 TIMESTAMP(MICROS), not the deprecated
-      // 12-byte INT96 Spark still defaults to: micros carry USABLE
-      // footer statistics (INT96 ordering is undefined), so staged
-      // timestamp columns serve their min/max from footers
-      // (TxLog.adoptStaged) instead of forcing the stats aggregate;
-      // read-side behavior is unchanged (Spark reads both)
+      // 12-byte INT96 Spark still defaults to: it fixes the file format
+      // of every timestamp column this session writes to the standard,
+      // ordered parquet type other engines read natively; read-side
+      // behavior is unchanged (Spark reads both)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     objectStore.fold(b) { c =>
       objectStoreConfs(c).foldLeft(b) { case (bb, (k, v)) =>

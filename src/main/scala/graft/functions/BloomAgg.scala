@@ -5,14 +5,15 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** Per-file Bloom filter builder for the table format's point-lookup
   * skipping ([[graft.medallion.TxLog]] bloom constants): input is the
-  * column's `xxhash64` (computed codegen'd in the staging aggregate's
-  * projection — this aggregator only sets bits), buffer is the bitset
-  * as packed longs, output the serialized bytes.
+  * column's `xxhash64` (computed codegen'd in the writer's stats
+  * projection, [[graft.medallion.FileStats]] — this aggregator only sets
+  * bits), buffer is the bitset as packed longs, output the serialized
+  * bytes.
   *
-  * Mergeable by bitwise OR, so it rides ordinary partial aggregation:
-  * the per-file groupBy in `adoptStaged` costs one extra O(bits/64)
-  * buffer per (file × bloomed column) — at 128 MB target files that is
-  * 1 KiB of metadata per file per column, invisible next to the data.
+  * The writing task folds each file's rows into one O(bits/64) buffer
+  * per bloomed column — at 128 MB target files that is 1 KiB of
+  * metadata per file per column, invisible next to the data. Mergeable
+  * by bitwise OR, so it also serves as an ordinary Spark aggregate.
   */
 class BloomAgg(bits: Int, k: Int)
     extends Aggregator[Long, Array[Long], Array[Byte]] {

@@ -40,8 +40,8 @@ import org.apache.spark.sql.types._
   * compaction or upsert rewrite. Min/max in transform space stays sound
   * under straddling (the range just widens), so every rewrite path —
   * compact, z-order, upsert's copy-on-write — keeps partition pruning
-  * without knowing partitioning exists: staging recomputes the derived
-  * stats from the bytes themselves.
+  * without knowing partitioning exists: the writer recomputes the
+  * derived stats from the rows it writes.
   *
   * Cross-engine note: `days`/`hours` are defined over epoch millis
   * (`unix_millis`), and `months` over DATE fields only — all
@@ -189,100 +189,6 @@ private[graft] object PartitionSpec {
   def statsKind(t: Transform, dt: DataType): String =
     if ((t.kind == "trunc" || t.kind == "id") && dt == StringType) "str" else "num"
 
-  /** Footer-side twin of [[column]] for MONOTONE transforms: the
-    * transformed column's per-file ColStats derived from the SOURCE
-    * column's exact footer bounds — for a non-decreasing f,
-    * min f(x) = f(min x) and max f(x) = f(max x), and every transform
-    * maps null to null and non-null to non-null, so the null count
-    * carries over unchanged. None = not derivable for this
-    * (kind, type, value) — run the stats aggregate:
-    *
-    *   - `bucket` is not monotone, never derives.
-    *   - float/double sources (only `id` can name one): the aggregate
-    *     path emits non-finite literals where the footer path drops the
-    *     entry — route to the aggregate so the two stay bit-identical.
-    *   - integral `trunc` near the type's MIN_VALUE: the aggregate's
-    *     `c - pmod(c, w)` runs in the SOURCE's arithmetic width and
-    *     could overflow; stay conservative below MIN + w.
-    *
-    * Every arithmetic branch mirrors [[column]]'s Spark expression
-    * exactly (floor divisions, code-point substring, epoch-ms floor);
-    * raw values arrive in [[FooterStats]]'s converted JVM forms (the
-    * same forms the aggregate's collect() yields), so
-    * [[TxLog.statsLiteral]] renders identically. */
-  def deriveStat(t: Transform, dt: DataType,
-      srcMin: Any, srcMax: Any, nulls: Long): Option[TxLog.ColStats] = {
-    def mk(mn: Any, mx: Any): Option[TxLog.ColStats] =
-      Some(TxLog.ColStats(statsKind(t, dt),
-        TxLog.statsLiteral(mn), TxLog.statsLiteral(mx), Some(nulls)))
-    def epochMs(v: Any): Option[Long] = v match {
-      case i: java.time.Instant => Some(i.toEpochMilli)
-      case _ => None
-    }
-    def epochDay(v: Any): Option[Long] = v match {
-      case d: java.time.LocalDate => Some(d.toEpochDay)
-      case _ => None
-    }
-    def asLong(v: Any): Option[Long] = v match {
-      case n: java.lang.Integer => Some(n.longValue())
-      case n: java.lang.Long => Some(n.longValue())
-      case _ => None
-    }
-    if (dt == FloatType || dt == DoubleType) return None
-    t.kind match {
-      case "id" => mk(srcMin, srcMax)
-      case "days" if dt == DateType =>
-        // column(): datediff(c, epoch) — the epoch-day int itself
-        (epochDay(srcMin), epochDay(srcMax)) match {
-          case (Some(a), Some(b)) => mk(a, b)
-          case _ => None
-        }
-      case "days" if dt == TimestampType =>
-        (epochMs(srcMin), epochMs(srcMax)) match {
-          case (Some(a), Some(b)) =>
-            mk(Math.floorDiv(a, MsPerDay), Math.floorDiv(b, MsPerDay))
-          case _ => None
-        }
-      case "hours" if dt == TimestampType =>
-        (epochMs(srcMin), epochMs(srcMax)) match {
-          case (Some(a), Some(b)) =>
-            mk(Math.floorDiv(a, MsPerHour), Math.floorDiv(b, MsPerHour))
-          case _ => None
-        }
-      case "months" if dt == DateType =>
-        (srcMin, srcMax) match {
-          case (a: java.time.LocalDate, b: java.time.LocalDate) =>
-            def m(d: java.time.LocalDate): Int =
-              (d.getYear - 1970) * 12 + d.getMonthValue - 1
-            mk(m(a), m(b))
-          case _ => None
-        }
-      case "trunc" if dt == StringType =>
-        (srcMin, srcMax) match {
-          case (a: String, b: String) =>
-            // code points, matching Spark's substring(c, 1, w) (the
-            // same convention probeValue uses)
-            def tr(s: String): String = {
-              val cps = s.codePointCount(0, s.length)
-              s.substring(0, s.offsetByCodePoints(0, math.min(t.arg, cps)))
-            }
-            mk(tr(a), tr(b))
-          case _ => None
-        }
-      case "trunc" =>
-        // integral trunc: (c - pmod(c, w)) in the source's promoted
-        // arithmetic width (byte/short/int promote to int), cast long
-        val minOfWidth = if (dt == LongType) Long.MinValue else Int.MinValue.toLong
-        (asLong(srcMin), asLong(srcMax)) match {
-          case (Some(a), Some(b)) if a >= minOfWidth + t.arg =>
-            def tr(v: Long): Long = v - Math.floorMod(v, t.arg.toLong)
-            mk(tr(a), tr(b))
-          case _ => None
-        }
-      case _ => None // bucket (not monotone), or a kind/type mismatch
-    }
-  }
-
   /** Cluster an about-to-stage frame by the transform tuple (one range
     * exchange) so files cover tight transform ranges. Range — not hash —
     * partitioning: adjacent days land in adjacent files, so a day-range
@@ -393,22 +299,20 @@ private[graft] object PartitionSpec {
     }
 
   /** Serializable per-ROW transform-tuple key evaluator over the
-    * PHYSICAL write schema — the executor-side twin of [[column]] for
-    * writers that must roll files at tuple boundaries with no Spark
-    * plan underneath (DSv2 row-level COW rewrites, streaming epochs;
-    * the batch path splits in `stageData` via dynamic `partitionBy`).
+    * PHYSICAL write schema — the executor-side twin of [[column]] the
+    * table writer's fanout opens one file per key with (batch staging,
+    * DSv2 row-level rewrites, streaming epochs).
     * The key only needs to be INJECTIVE per tuple (files are grouped
     * by it, never parsed back), so elements render as plain value
     * strings; the arithmetic is [[column]]'s exactly (same XXH64 seed
     * and per-type bytes for bucket, same floor divisions — all
     * transforms are tz-free: `months` applies to DATE only).
     *
-    * None unless a bucket transform is present — the same gate as the
-    * batch staging path: only bucket specs need file-exact tuples
-    * (storage-partitioned joins), other specs prefer range-clustered
-    * files. A pathological `\u0001`-in-data collision in string data merges
-    * two tuples into one file: degrades that file's SPJ/pruning
-    * eligibility, never correctness. */
+    * None unless a bucket transform is present: only bucket specs need
+    * file-exact tuples (storage-partitioned joins), other specs prefer
+    * range-clustered files. A pathological `\u0001`-in-data collision in
+    * string data merges two tuples into one file: degrades that file's
+    * SPJ/pruning eligibility, never correctness. */
   def tupleKeyFn(
       transforms: Seq[Transform],
       schema: StructType): Option[org.apache.spark.sql.catalyst.InternalRow => String] = {

@@ -11,6 +11,7 @@ import org.json4s.jackson.JsonMethods
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetWrites
 import org.apache.spark.sql.types._
 
 /** A minimal log-structured table format — the transactional layer the
@@ -271,11 +272,6 @@ object TxLog {
     * written under different sizes coexist in one table. */
   private[graft] val BloomBitsProp = "bloom.bits"
 
-  /** Synthetic column staging writes `partitionBy` to roll files at
-    * transform-tuple boundaries under a bucket spec (see
-    * [[GraftTable.stageData]]); dropped from data files by the
-    * dynamic-partition layout, never visible to readers. */
-  private[graft] val StageSplitCol = "__graft_stage_split"
   /** Table property naming the comma-separated LOGICAL columns to
     * sketch with per-file HLL registers for distinct-count stats
     * (int/long/string — the same hash-replayable set as blooms). */
@@ -410,6 +406,62 @@ object TxLog {
     writeOrderDeclared(snap)
       .map(c => physicalOf(snap.schema, c))
       .takeWhile(p => writeSchema.fieldNames.contains(p))
+
+  /** Columns that get min/max stats: primitive orderable types only. */
+  private[graft] def statsColumns(schema: StructType): Seq[StructField] =
+    schema.fields.toSeq
+      .filter(_.name != RowIdPhysCol) // internal physical column: no stats
+      .filter(f => f.dataType match {
+        case _: NumericType | StringType | DateType | TimestampType => true
+        case _ => false
+      })
+
+  /** The writer of `schema`'s files under snapshot `at` (None or
+    * version 0: a table not yet created), with everything resolved from
+    * that one snapshot — the one the caller validated its commit
+    * against: the bucket-spec split key
+    * ([[PartitionSpec.tupleKeyFn]]) and the per-file stats its tasks
+    * compute ([[FileStats]]) — min/max/nulls of the stats columns, the
+    * partition-transform bounds under their `__p$` keys, and the opt-in
+    * `bloom.columns` / `ndv.columns` / `sum.columns` sketches on the
+    * physical columns `schema` carries. */
+  private[graft] def writerFactory(
+      spark: SparkSession, at: Option[Snapshot], schema: StructType,
+      stageDir: String, ridMetaIdx: Option[Int] = None)
+      : org.apache.spark.sql.graft.GraftParquetWriterFactory = {
+    import FileStats.{Bloom, Bounds, Fold, Hll, Sum}
+    val head = at.filter(_.version > 0L)
+    def propCols(prop: String, types: DataType => Boolean): Seq[String] =
+      head.toSeq.flatMap { h =>
+        h.props.get(prop).toSeq
+          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+          .map(c => physicalOf(h.schema, c))
+          .filter(p => schema.fields.exists(f => f.name == p && types(f.dataType)))
+      }
+    val hashable = (dt: DataType) => dt == IntegerType || dt == LongType || dt == StringType
+    lazy val bloomBits =
+      head.flatMap(_.props.get(BloomBitsProp)).map(_.toInt).getOrElse(BloomBits)
+    val transforms =
+      head.toSeq.flatMap(h => PartitionSpec.resolved(h.props, h.schema, schema))
+    def c(name: String): Column = col(s"`$name`")
+    val folds: Seq[(Column, Fold)] =
+      statsColumns(schema).map(f => c(f.name) -> Bounds(f.name, statsKind(f.dataType))) ++
+        transforms.map { t =>
+          val dt = schema(t.source).dataType
+          PartitionSpec.column(t, dt) -> Bounds(t.statKey, PartitionSpec.statsKind(t, dt))
+        } ++
+        propCols(BloomColumnsProp, hashable).map(p => xxhash64(c(p)) -> Bloom(p, bloomBits)) ++
+        // nulls map to NULL (not hashed): xxhash64(NULL) is the seed, a
+        // phantom distinct value
+        propCols(NdvColumnsProp, hashable).map(p =>
+          when(c(p).isNotNull, xxhash64(c(p))) -> Hll(p)) ++
+        propCols(SumColumnsProp, dt => dt == ByteType || dt == ShortType ||
+          dt == IntegerType || dt == LongType).map(p =>
+          c(p).cast(DecimalType(38, 0)) -> Sum(p))
+    org.apache.spark.sql.graft.ParquetWrites.factory(spark, schema, stageDir,
+      PartitionSpec.tupleKeyFn(transforms, schema), ridMetaIdx,
+      FileStats.spec(spark, schema, folds))
+  }
   /** Table property (`'true'`) opting in to metadata-only TYPE
     * WIDENING ([[GraftTable.widenColumn]] — Delta 3.2's typeWidening
     * shape). Off by default: a widened schema requires every reader to
@@ -543,8 +595,8 @@ object TxLog {
   private[graft] val BloomBits = 8192
   private[graft] val BloomK = 6
   /** xxhash64's SQL default seed — h1 is the plain `xxhash64(col)`
-    * the codegen'd staging aggregate computes; h2 = XXH64(h1) (double
-    * hashing with a derived second hash, the standard trick). */
+    * the writer's codegen'd stats projection computes; h2 = XXH64(h1)
+    * (double hashing with a derived second hash, the standard trick). */
   private[graft] val BloomSeed = 42L
 
   private[graft] def bloomH2(h1: Long): Long =
@@ -776,9 +828,8 @@ object TxLog {
 
   /** Phase-2 of [[GraftTable.deleteRows]]: fold `(__file, __idx)`
     * match pairs into per-file deletion bitmaps EXECUTOR-SIDE via the
-    * mergeable [[graft.functions.DvAgg]] aggregator (same shape as the
-    * Bloom build in `adoptStaged`). Output is one row per file:
-    * (`__file` string, `dv` binary) — `dv` is null when the optimized
+    * mergeable [[graft.functions.DvAgg]] aggregator. Output is one row
+    * per file: (`__file` string, `dv` binary) — `dv` is null when the optimized
     * bitmap exceeds `maxBytes`, routing that file to the rewrite leg.
     * The driver therefore collects file-count-sized metadata only,
     * never row indexes. */
@@ -1902,34 +1953,21 @@ final class GraftTable(val tablePath: String) {
 
   /** Stage a change frame (PHYSICAL column names + [[ChangeTypeCol]])
     * as parquet under [[ChangeDir]] and return (relative path, rows)
-    * refs for the commit's `cdc` actions. Invisible until a commit
-    * references them; a lost commit race leaves orphans for
-    * [[vacuum]]. An empty frame stages nothing. */
+    * refs for the commit's `cdc` actions — rows as counted by the tasks
+    * that wrote the files. Invisible until a commit references them; a
+    * lost commit race leaves orphans for [[vacuum]]. An empty frame
+    * stages nothing. */
   private def stageChanges(changes: DataFrame): Seq[(String, Long)] = {
-    val spark = changes.sparkSession
     val changeRoot = root.resolve(ChangeDir)
     Files.createDirectories(changeRoot)
     val stage = root.resolve(s"_staged_cdc_${UUID.randomUUID().toString.take(8)}")
-    changes.write.parquet(stage.toString)
-    val it = Files.list(stage)
-    val parts =
-      try it.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally it.close()
-    // per-file row counts straight from the footers — exact with no
-    // type caveats, so no Spark count job per CDC staging (guide §1.2);
-    // a 0-row file (empty change frame's schema-only part) is dropped
-    // exactly as the old groupBy-count (which emitted no group) did.
-    // Footers read on the small fixed pool, not a serial driver loop.
-    val conf = spark.sessionState.newHadoopConf()
-    val counted = FooterStats.rowCounts(conf, parts)
-      .filter(_._2 > 0L)
-      .sortBy(_._1.toString)
+    val files = ParquetWrites.write(changes,
+      ParquetWrites.factory(changes.sparkSession, changes.schema, stage.toString))
     val batch = UUID.randomUUID().toString.take(8)
-    val refs = counted.zipWithIndex.map { case ((src, rows), i) =>
+    val refs = files.sorted.zipWithIndex.map { case (f, i) =>
       val name = s"cdf-$batch-$i.parquet"
-      Files.move(src, changeRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      (s"$ChangeDir/$name", rows)
+      Files.move(Paths.get(f.path), changeRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      (s"$ChangeDir/$name", f.rows)
     }
     graft.core.Fs.rmTree(stage.toFile)
     refs
@@ -2253,396 +2291,81 @@ final class GraftTable(val tablePath: String) {
 
   // ------------------------------------------------------------- writes
 
-  /** Columns that get min/max stats: primitive orderable types only. */
-  private def statsColumns(schema: StructType): Seq[StructField] =
-    schema.fields.toSeq
-      .filter(_.name != RowIdPhysCol) // internal physical column: no stats
-      .filter(f => f.dataType match {
-        case _: NumericType | StringType | DateType | TimestampType => true
-        case _ => false
-      })
-
-  /** Stage `df` as immutable uniquely-named parquet files in the table
-    * root and return their add-actions. One extra Spark job computes
-    * per-file rows + min/max by grouping on `_metadata.file_path` — a
-    * #files-row aggregate, not a second full shuffle. Files only become
-    * visible when a later commit references them; a crash here leaves
-    * invisible orphans for [[vacuum]].
+  /** Stage `df` as uniquely-named parquet files in the table root and
+    * return their add-actions. The table's one writer
+    * ([[ParquetWrites]]) runs inside the tasks of `df`'s own plan, and
+    * each task computes the exact stats of the files it writes — one
+    * Spark job, nothing read back. Files only become visible when a
+    * later commit references them; a crash here leaves invisible
+    * orphans for [[vacuum]].
     *
     * `at` is the CALLER's read snapshot (None for a not-yet-created
-    * table): partition.spec / write.orderBy resolve from it, not from
-    * a re-read of HEAD — a concurrent setProperty between the caller's
-    * read and this staging must not split/sort files under a spec the
-    * commit never validated against (the sorted stamp would stay sound
-    * — it stamps what it sorted — but the files would silently lose
-    * SPJ/ordering eligibility under the committed spec). */
+    * table): partition.spec / write.orderBy / the stats sketches resolve
+    * from it, not from a re-read of HEAD — a concurrent setProperty
+    * between the caller's read and this staging must not split/sort
+    * files under a spec the commit never validated against (the sorted
+    * stamp would stay sound — it stamps what it sorted — but the files
+    * would silently lose SPJ/ordering eligibility under the committed
+    * spec). */
   private def stageData(df: DataFrame, at: Option[Snapshot]): Seq[AddFile] = {
     ensureDirs()
-    val spark = df.sparkSession
     val stage = root.resolve(s"_staged_${UUID.randomUUID().toString.take(8)}")
+    val head: Option[Snapshot] = at.filter(_.version > 0L)
     // Bucket-spec FILE INTEGRITY (the storage-partitioned-join
-    // precondition): when the head's partition.spec includes a bucket
-    // transform, every staged file must be SINGLE-VALUED on the full
-    // transform tuple — a file straddling two bucket values poisons
-    // the whole scan's KeyGroupedPartitioning and silently re-enables
-    // both join-side shuffles. No repartitioning scheme guarantees
-    // this (range boundaries come from sampling; hash mod n collides
-    // distinct bucket values into one task), so the guarantee lives at
-    // the WRITER: a synthetic tuple column + dynamic `partitionBy`
-    // rolls to a new file at every tuple boundary inside each task —
-    // the Iceberg fanout/clustered-writer semantic — and is dropped
-    // from the data files by the dynamic-partition layout itself.
+    // precondition): under a bucket transform every staged file must be
+    // SINGLE-VALUED on the full transform tuple — a file straddling two
+    // bucket values poisons the whole scan's KeyGroupedPartitioning and
+    // silently re-enables both join-side shuffles. No repartitioning
+    // scheme guarantees this (range boundaries come from sampling; hash
+    // mod n collides distinct bucket values into one task), so the
+    // guarantee lives at the WRITER: its fanout opens one file per tuple
+    // key. Leading the task-local sort with the tuple keeps that at
+    // exactly one file per tuple per task even past the fanout cap.
     // Non-bucket specs (days/months/trunc/id) keep the plain write:
     // their pruning wants tight RANGES per file (cluster() provides
     // that), not exactness, and skipping the split avoids per-value
     // file fanout on higher-cardinality transforms.
-    val headSnap: Option[Snapshot] = at.filter(_.version > 0L)
-    val splitTransforms: Seq[PartitionSpec.Transform] = {
-      val transforms = headSnap.map(h =>
-        PartitionSpec.resolved(h.props, h.schema, df.schema))
-        .getOrElse(Seq.empty[PartitionSpec.Transform])
-      if (!transforms.exists(_.kind == "bucket")) Seq.empty
-      else transforms.filter(t => df.schema.fields.exists(_.name == t.source))
-    }
-    val splitTuple: Seq[Column] = splitTransforms.map { t =>
-      val f = df.schema.fields.find(_.name == t.source).get
-      coalesce(PartitionSpec.column(t, f.dataType).cast(StringType),
-        lit("\u0001null"))
-    }
+    val transforms = head.toSeq.flatMap(h =>
+      PartitionSpec.resolved(h.props, h.schema, df.schema))
+    val tupleLead: Seq[Column] =
+      if (!transforms.exists(_.kind == "bucket")) Nil
+      else transforms.map(t => PartitionSpec.column(t, df.schema(t.source).dataType))
     // write.orderBy: the longest physical sort prefix this staged
     // schema can honor — stop at the first ABSENT column (a sort by
     // (c1, c3) is not a (c1, c2, c3) prefix). Each FILE gets locally
-    // sorted: with a tuple split the sort leads with the split column,
-    // so the dynamic-partition writer sees its required clustering
-    // already satisfied and streams rows IN ORDER into each rolled
-    // file; without one the plain write preserves the task-local sort.
-    val orderPhys: Seq[String] =
-      headSnap.toSeq.flatMap(h => writeOrderPhys(h, df.schema))
-    def sortedStage(d: DataFrame, lead: Seq[String]): DataFrame =
-      if (orderPhys.isEmpty) d
-      else d.sortWithinPartitions((lead ++ orderPhys).map(col): _*)
-    // \u0001 separator/null-sentinel: escaped to %01 by the dynamic-
-    // partition path layer (filesystem-safe), and practically absent
-    // from data -- a pathological collision merely merges two tuples
-    // into one file, which degrades that file's SPJ/pruning
-    // eligibility (stats stop being single-valued), never correctness
-    if (splitTuple.isEmpty) sortedStage(df, Nil).write.parquet(stage.toString)
-    else sortedStage(
-      df.withColumn(StageSplitCol, concat_ws("\u0001", splitTuple: _*)),
-      Seq(StageSplitCol))
-      .write.partitionBy(StageSplitCol).parquet(stage.toString)
-    val it = Files.walk(stage)
-    val parts =
-      try it.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally it.close()
-    val adds = adoptStaged(spark, df.schema, parts, sortedBy = orderPhys,
-      tupleSplit = splitTransforms)
+    // sorted: a task-local sort leaves every file's rows in order.
+    val orderPhys: Seq[String] = head.toSeq.flatMap(h => writeOrderPhys(h, df.schema))
+    val lead = tupleLead ++ orderPhys.map(col)
+    val files = ParquetWrites.write(
+      if (lead.isEmpty) df else df.sortWithinPartitions(lead: _*),
+      writerFactory(df.sparkSession, head, df.schema, stage.toString))
+    val adds = adoptStaged(files, sortedBy = orderPhys)
     graft.core.Fs.rmTree(stage.toFile)
     adds
   }
 
-  /** Inverse of Spark's dynamic-partition dirname escaping (%XX hex
-    * pairs); malformed escapes pass through verbatim. */
-  private def unescapePath(s: String): String = {
-    if (!s.contains('%')) return s
-    val out = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          val code = Integer.parseInt(s.substring(i + 1, i + 3), 16)
-          out.append(code.toChar); i += 3
-        } catch { case _: NumberFormatException => out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
-
-  /** Stats + adopt: per-file row counts and min/max/null stats come from
-    * the staged files' PARQUET FOOTERS ([[FooterStats]] — O(KB) driver
-    * reads, guide §1.2/§6: no second full pass over bytes just written);
-    * a Spark aggregate runs ONLY over what footers cannot decide exactly
-    * (size-dropped string stats, INT96 timestamps) and over the opt-in
-    * sketch/sum/partition-transform aggregates. Each file then moves
-    * INTO the root under a fresh unique name (data files are invisible
-    * until committed, so the moves need no atomicity).
-    * `spark.graft.footerStats=false` restores the full stats job (the
-    * differential oracle for FooterStatsSpec). */
+  /** Adopt staged files: the stats their writing tasks recorded become
+    * the add-actions, in commit order (task partition, file sequence);
+    * each file moves INTO the root under a fresh unique name (data files
+    * are invisible until committed, so the moves need no atomicity), and
+    * a write that sorted its files stamps the locally-sorted marker. */
   private[graft] def adoptStaged(
-      spark: SparkSession, schema: StructType,
-      staged: Seq[java.nio.file.Path],
-      sortedBy: Seq[String] = Nil,
-      /** the transforms whose tuple the staging SPLIT files by (the
-        * `partitionBy(StageSplitCol)` layout, in component order) —
-        * lets partition-transform stats parse from the split dirname
-        * instead of running the aggregate; Nil for unsplit stagings. */
-      tupleSplit: Seq[PartitionSpec.Transform] = Nil): Seq[AddFile] = {
+      staged: Seq[ParquetWrites.StagedFile],
+      sortedBy: Seq[String] = Nil): Seq[AddFile] = {
     if (staged.isEmpty) return Nil
     ensureDirs()
     val batch = UUID.randomUUID().toString.take(8)
-    val sCols = statsColumns(schema)
-    // ONE head resolution for every property lookup below (the previous
-    // shape re-resolved the snapshot per property — pure driver waste)
-    val head: Option[Snapshot] =
-      if (latestVersion() == 0L) None else Some(snapshot())
-    def headCols(prop: String, types: DataType => Boolean): Seq[String] =
-      head.toSeq.flatMap { h =>
-        h.props.get(prop).toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-          .map(c => physicalOf(h.schema, c))
-          .filter(p => schema.fields.exists(f => f.name == p && types(f.dataType)))
-      }
-    // opt-in per-file Bloom filters: the head's bloom.columns property
-    // (LOGICAL names) resolved to the physical columns this staged
-    // schema actually carries — one extra mergeable bitset aggregate
-    // per (file × column), hashes computed codegen'd in the projection
-    val bloomPhys: Seq[String] = headCols(BloomColumnsProp,
-      dt => dt == IntegerType || dt == LongType || dt == StringType)
-    val bloomBits =
-      if (bloomPhys.isEmpty) BloomBits
-      else head.flatMap(_.props.get(BloomBitsProp)).map(_.toInt).getOrElse(BloomBits)
-    val bloomFn = org.apache.spark.sql.functions.udaf(
-      new graft.functions.BloomAgg(bloomBits, BloomK))
-    // opt-in per-file HLL NDV sketches: same resolution, same
-    // hash-replayable type set, same one-aggregate ride-along as blooms
-    val ndvPhys: Seq[String] = headCols(NdvColumnsProp,
-      dt => dt == IntegerType || dt == LongType || dt == StringType)
-    val hllFn = org.apache.spark.sql.functions.udaf(
-      new graft.functions.HllAgg(HllP))
-    // opt-in exact per-file sums (integral columns; decimal-exact)
-    val sumPhys: Seq[String] = headCols(SumColumnsProp,
-      dt => dt == ByteType || dt == ShortType ||
-        dt == IntegerType || dt == LongType)
-    // hidden partitioning: the head's partition.spec resolved to the
-    // transforms applicable to this staged (physical) schema — min/max
-    // of the TRANSFORMED value ride the same per-file aggregate as
-    // ordinary stats (see [[PartitionSpec]]; one extra codegen'd
-    // projection column per transform, zero extra passes)
-    val pTransforms: Seq[PartitionSpec.Transform] =
-      head.toSeq.flatMap(h => PartitionSpec.resolved(h.props, h.schema, schema))
-    def pDt(t: PartitionSpec.Transform): DataType =
-      schema.fields.find(_.name == t.source).get.dataType
-    val useFooter =
-      spark.conf.getOption("spark.graft.footerStats").forall(_.toBoolean)
-    val footers: Map[String, FooterStats.FileFooter] =
-      if (!useFooter) Map.empty
-      else FooterStats.readAll(spark.sessionState.newHadoopConf(), staged, sCols)
-    // a column some staged file could not decide from its footer runs
-    // through the aggregate — but the aggregate's INPUT is narrowed to
-    // the files that actually failed a decision (per-file mixing: a
-    // single >4 KB-string file no longer drags every sibling through
-    // the scan), and each file takes a column from the job only when
-    // ITS footer failed on it
-    val residualCols: Seq[StructField] =
-      if (!useFooter) sCols
-      else sCols.filter(f => footers.values.exists(_.residual.contains(f.name)))
-    // tuple-split stagings (bucket specs) wrote each file SINGLE-VALUED
-    // on the transform tuple, and the dynamic-partition dirname IS the
-    // tuple — so per-transform min==max==component parses straight from
-    // the path when every component renders from an INTEGRAL transform
-    // column (then components can never contain the \u0001 separator
-    // and cast-to-string rendering equals statsLiteral's digits). Any
-    // string-domain transform (trunc/id on strings) or a split/spec
-    // mismatch falls back to the aggregate.
-    val tupleDerivable = useFooter && tupleSplit.nonEmpty &&
-      tupleSplit.map(_.render) == pTransforms.map(_.render) &&
-      pTransforms.forall { t =>
-        t.kind match {
-          case "bucket" | "days" | "hours" | "months" => true
-          case "trunc" => pDt(t) != StringType
-          case "id" => pDt(t) == ByteType || pDt(t) == ShortType ||
-            pDt(t) == IntegerType || pDt(t) == LongType
-          case _ => false
-        }
-      }
-    def parseTupleDir(p: java.nio.file.Path): Option[Seq[Option[String]]] = {
-      val dir = p.getParent.getFileName.toString
-      if (!dir.startsWith(StageSplitCol + "=")) return None
-      val raw = unescapePath(dir.substring(StageSplitCol.length + 1))
-      // reassemble components: integral values are plain digit runs; the
-      // null sentinel "\u0001null" splits to ["", "null"]
-      val toks = raw.split("\u0001", -1)
-      val comps = Seq.newBuilder[Option[String]]
-      var i = 0
-      while (i < toks.length) {
-        if (toks(i).isEmpty && i + 1 < toks.length && toks(i + 1) == "null") {
-          comps += None; i += 2
-        } else { comps += Some(toks(i)); i += 1 }
-      }
-      val out = comps.result()
-      if (out.length == pTransforms.length) Some(out) else None
-    }
-    val dirTupleStats: Option[Map[String, Map[String, ColStats]]] =
-      if (!tupleDerivable) None
-      else {
-        val parsed = staged.map(p => p.toString -> parseTupleDir(p))
-        if (parsed.exists(_._2.isEmpty)) None
-        else Some(parsed.map { case (k, comps) =>
-          k -> pTransforms.zip(comps.get).flatMap { case (t, c) =>
-            c.map(v => t.statKey -> ColStats(
-              PartitionSpec.statsKind(t, pDt(t)), v, v, Some(0L)))
-          }.toMap
-        }.toMap)
-      }
-    // monotone transforms derive per-file from the SOURCE column's
-    // footer-exact bounds (PartitionSpec.deriveStat: min f = f(min) for
-    // non-decreasing f; bucket never derives) — the unsplit-staging
-    // complement of the dirname parse above. Per file and transform:
-    // Some(Some(entry)) = derived, Some(None) = decided "no entry"
-    // (all-null source), key absent = this file needs the job for it.
-    val derivedP: Map[String, Map[String, Option[(String, ColStats)]]] =
-      if (!useFooter || pTransforms.isEmpty || dirTupleStats.isDefined) Map.empty
-      else footers.view.mapValues { ff =>
-        pTransforms.flatMap { t =>
-          if (ff.residual.contains(t.source)) None
-          else ff.rawBounds.get(t.source) match {
-            case Some((mn, mx)) =>
-              PartitionSpec.deriveStat(t, pDt(t), mn, mx,
-                ff.entries.get(t.source).flatMap(_.nulls).getOrElse(0L))
-                .map(cs => t.render -> Option(t.statKey -> cs))
-            case None =>
-              // source decided with NO stats entry ⇒ all-null (NaN
-              // suppression needs a float source, excluded above) ⇒
-              // the aggregate's min would be null ⇒ no __p$ entry
-              Some(t.render -> (None: Option[(String, ColStats)]))
-          }
-        }.toMap
-      }.toMap
-    val pTransformsJob: Seq[PartitionSpec.Transform] =
-      if (dirTupleStats.isDefined) Nil
-      else if (!useFooter) pTransforms
-      else pTransforms.filter(t =>
-        staged.exists(p => !derivedP(p.toString).contains(t.render)))
-    // which files must flow through the aggregate: residual stats
-    // columns or an underivable transform. Sketch/sum aggregates are
-    // all-file by definition.
-    def fileNeedsAgg(p: String): Boolean =
-      footers(p).residual.nonEmpty ||
-        (dirTupleStats.isEmpty &&
-          pTransforms.exists(t => !derivedP(p).contains(t.render)))
-    val aggFiles: Seq[java.nio.file.Path] =
-      if (!useFooter || bloomPhys.nonEmpty || ndvPhys.nonEmpty || sumPhys.nonEmpty)
-        staged
-      else staged.filter(p => fileNeedsAgg(p.toString))
-    val needJob = residualCols.nonEmpty || bloomPhys.nonEmpty ||
-      ndvPhys.nonEmpty || sumPhys.nonEmpty || pTransformsJob.nonEmpty || !useFooter
-    val aggs = ((count(lit(1)).as("_rows") +:
-      residualCols.flatMap(f => Seq(
-        min(col(f.name)).as(s"_min_${f.name}"), max(col(f.name)).as(s"_max_${f.name}"),
-        count(col(f.name)).as(s"_cnt_${f.name}")))) ++ // non-null count (NaN IS non-null)
-      bloomPhys.map(p => bloomFn(xxhash64(col(p))).as(s"_bloom_$p")) ++
-      // nulls map to NULL (not hashed): xxhash64(NULL) is the seed, a
-      // phantom distinct value; the aggregator skips null inputs
-      ndvPhys.map(p =>
-        hllFn(when(col(p).isNotNull, xxhash64(col(p)))).as(s"_hll_$p")) ++
-      sumPhys.map(p => sum(col(p).cast(DecimalType(38, 0))).as(s"_sum_$p"))) ++
-      pTransformsJob.flatMap(t => Seq(
-        min(PartitionSpec.column(t, pDt(t))).as(s"_pmin_${t.render}"),
-        max(PartitionSpec.column(t, pDt(t))).as(s"_pmax_${t.render}"),
-        count(PartitionSpec.column(t, pDt(t))).as(s"_pcnt_${t.render}")))
-    // job rows keyed by DECODED filesystem path (the URI renderings of
-    // Hadoop's file_path and nio's toUri need not agree byte-for-byte)
-    val perFile: Map[String, Row] =
-      if (!needJob || aggFiles.isEmpty) Map.empty
-      else spark.read.schema(schema).parquet(aggFiles.map(_.toString): _*)
-        .groupBy(col("_metadata.file_path").as("_file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect() // one row per scanned FILE — bounded by write parallelism
-        .map(r => (Paths.get(java.net.URI.create(r.getString(0)).getPath).toString, r))
-        .toMap
-    // emission order: sorted URI strings in the legacy branch (the
-    // historical order — rid assignment depends on it), sorted
-    // filesystem paths in the footer branch (identical for flat
-    // stagings; split-dir stagings stay order-deterministic per branch)
-    val ordered: Seq[(String, Option[Row])] =
-      if (!useFooter)
-        perFile.toSeq.sortBy(_._2.getString(0)).map { case (k, r) => (k, Some(r)) }
-      else staged.map(_.toString).sorted
-        .filter(u => footers(u).rows > 0L) // an empty staged file is never adopted
-        .map(u => (u, perFile.get(u)))
-
-    ordered.zipWithIndex.map { case ((fsPath, rowOpt), i) =>
-      val src = Paths.get(fsPath)
+    // locally-sorted marker: min == max == the physical sort list;
+    // read-side ordering reports require EVERY scanned file to carry an
+    // identical one
+    val sStat =
+      if (sortedBy.isEmpty) Map.empty[String, ColStats]
+      else Map(SortedKey -> ColStats(
+        "str", sortedBy.mkString(","), sortedBy.mkString(","), Some(0L)))
+    staged.sorted.zipWithIndex.map { case (f, i) =>
       val name = s"part-$batch-$i.parquet"
-      Files.move(src, root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      def row: Row = rowOpt.getOrElse(throw new IllegalStateException(
-        s"txlog: stats aggregate produced no row for staged file $fsPath"))
-      val fileRows =
-        if (useFooter) footers(fsPath).rows
-        else row.getLong(row.fieldIndex("_rows"))
-      val footerServed: Map[String, ColStats] =
-        if (useFooter) footers(fsPath).entries else Map.empty
-      // this FILE's undecided columns only — a column another file
-      // routed to the job stays footer-served here
-      val fileResidual: Seq[StructField] =
-        if (!useFooter) sCols
-        else residualCols.filter(f => footers(fsPath).residual.contains(f.name))
-      val stats = footerServed ++ fileResidual.flatMap { f =>
-        val mn = row.get(row.fieldIndex(s"_min_${f.name}"))
-        val mx = row.get(row.fieldIndex(s"_max_${f.name}"))
-        val nulls = fileRows - row.getLong(row.fieldIndex(s"_cnt_${f.name}"))
-        // all-null file column, or a NaN/Infinity bound (BigDecimal cannot
-        // represent them and max() surfaces NaN as greatest): no stats —
-        // conservative, the file simply never prunes on this column
-        if (mn == null || mx == null || !isFiniteStat(mn) || !isFiniteStat(mx)) None
-        else Some(f.name -> ColStats(statsKind(f.dataType), statsLiteral(mn),
-          statsLiteral(mx), Some(nulls)))
-      }.toMap
-      // overlay the per-file Bloom bitsets on columns that have stats
-      // (a stats-less column is all-null — nothing to bloom)
-      val withBlooms = bloomPhys.foldLeft(stats) { (acc, p) =>
-        (acc.get(p), Option(row.getAs[Array[Byte]](s"_bloom_$p"))) match {
-          case (Some(cs), Some(bytes)) =>
-            acc + (p -> cs.copy(bloom =
-              Some(java.util.Base64.getEncoder.encodeToString(bytes))))
-          case _ => acc
-        }
-      }
-      val withSums = sumPhys.foldLeft(withBlooms) { (acc, p) =>
-        (acc.get(p), Option(row.getAs[java.math.BigDecimal](s"_sum_$p"))) match {
-          case (Some(cs), Some(sm)) =>
-            acc + (p -> cs.copy(sum = Some(sm.toBigInteger.toString)))
-          case _ => acc
-        }
-      }
-      val withHll = ndvPhys.foldLeft(withSums) { (acc, p) =>
-        (acc.get(p), Option(row.getAs[Array[Byte]](s"_hll_$p"))) match {
-          case (Some(cs), Some(regs)) =>
-            acc + (p -> cs.copy(hll =
-              Some(java.util.Base64.getEncoder.encodeToString(regs))))
-          case _ => acc
-        }
-      }
-      // derived partition stats under reserved __p$ keys (all-null
-      // source → no entry → the file never partition-prunes:
-      // conservative); tuple-split stagings parse them from the split
-      // dirname (each file single-valued by the fanout writer); unsplit
-      // stagings take each MONOTONE transform from the footer-derived
-      // bounds and fall to the job row only where derivation failed
-      val pStats = dirTupleStats.map(_(fsPath)).getOrElse(
-        pTransforms.flatMap { t =>
-          derivedP.get(fsPath).flatMap(_.get(t.render)) match {
-            case Some(decided) => decided // derived entry, or "no entry"
-            case None =>
-              val mn = row.get(row.fieldIndex(s"_pmin_${t.render}"))
-              val mx = row.get(row.fieldIndex(s"_pmax_${t.render}"))
-              if (mn == null || mx == null) None
-              else Some(t.statKey -> ColStats(
-                PartitionSpec.statsKind(t, pDt(t)), statsLiteral(mn), statsLiteral(mx),
-                Some(fileRows - row.getLong(row.fieldIndex(s"_pcnt_${t.render}")))))
-          }
-        }.toMap)
-      // locally-sorted marker: min == max == the physical sort list;
-      // read-side ordering reports require EVERY scanned file to carry
-      // an identical one (fanout-written files never do — honest)
-      val sStat =
-        if (sortedBy.isEmpty) Map.empty[String, ColStats]
-        else Map(SortedKey -> ColStats(
-          "str", sortedBy.mkString(","), sortedBy.mkString(","), Some(0L)))
-      AddFile(name, fileRows, Files.size(root.resolve(name)),
-        withHll ++ pStats ++ sStat)
+      Files.move(Paths.get(f.path), root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      AddFile(name, f.rows, Files.size(root.resolve(name)), f.stats ++ sStat)
     }
   }
 
@@ -2655,7 +2378,7 @@ final class GraftTable(val tablePath: String) {
     * concurrent writer's commit would silently drop its rows. */
   private[graft] def replaceFiles(
       spark: SparkSession, readVersion: Long, removePaths: Seq[String],
-      staged: Seq[java.nio.file.Path],
+      staged: Seq[ParquetWrites.StagedFile],
       /** the COW writer's own materialization bit (its ridMetaIdx was
         * defined, so the staged bytes really carry the trailing id
         * column); None = legacy callers, fall back to the pinned
@@ -2665,13 +2388,13 @@ final class GraftTable(val tablePath: String) {
       writerRid: Option[Boolean] = None): Long = {
     val snap = snapshot(readVersion)
     // staged bytes carry PHYSICAL names (the row-level writer factory is
-    // built over physicalSchema); constraints validate logically. The
-    // sorted stamp is sound because GraftReplaceWrite DECLARED this
+    // built over physicalSchema) and their stats were computed under
+    // this snapshot; constraints validate logically. The sorted stamp is sound because GraftReplaceWrite DECLARED this
     // exact ordering (writeOrderDeclared over the same snapshot) via
     // RequiresDistributionAndOrdering, so every task — and hence every
     // tuple-rolled file's subsequence — arrived sorted; a write that
     // declared nothing stamps nothing.
-    val adds = adoptStaged(spark, physicalSchema(snap.schema), staged,
+    val adds = adoptStaged(staged,
       sortedBy = writeOrderDeclaredPhys(snap, physicalSchema(snap.schema)))
     // SQL UPDATE/MERGE can write constraint-violating values; check the
     // replacement rows (adopted parquet — one columnar scan) pre-commit
@@ -3117,23 +2840,22 @@ final class GraftTable(val tablePath: String) {
     * `loadTable`, so the schema was validated by Spark's resolution. */
   private[graft] def appendStagedIdempotent(
       spark: SparkSession, appId: String, batchId: Long, schema: StructType,
-      staged: Seq[java.nio.file.Path], maxRetries: Int = 20,
+      staged: Seq[ParquetWrites.StagedFile], maxRetries: Int = 20,
       sortedBy: Seq[String] = Nil): Long = {
     require(appId.nonEmpty, "txlog: appId must be non-empty")
     val pre = snapshot()
     require(pre.version > 0L,
       s"txlog: no committed table at $root for a streaming append")
     if (pre.txns.get(appId).exists(_ >= batchId)) {
-      staged.foreach(p => Files.deleteIfExists(p))
+      staged.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
       return pre.version
     }
     // the staged bytes carry PHYSICAL names (the DSv2 writer factory is
-    // built over physicalSchema); `schema` here is the logical schema
+    // built over physicalSchema); `schema` here is the logical schema.
     // `sortedBy` is the write-declared effective sort (spec sources ++
     // write.orderBy): Spark sorted each epoch task by it, so every
     // tuple-rolled file is a sorted subsequence — stamp it
-    val adds = adoptStaged(spark, physicalSchema(schema), staged,
-      sortedBy = sortedBy)
+    val adds = adoptStaged(staged, sortedBy = sortedBy)
     // DSv2-staged epochs validate like every other write (the adopted
     // parquet is the batch)
     transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries)(
@@ -4291,7 +4013,7 @@ final class GraftTable(val tablePath: String) {
   private[graft] def commitDeltaRowLevel(
       spark: SparkSession, readVersion: Long,
       newDeletes: Seq[(String, Array[Byte])],
-      insertStaged: Seq[java.nio.file.Path],
+      insertStaged: Seq[ParquetWrites.StagedFile],
       ridMaterialized: Boolean = false): Long = {
     val snap = snapshot(readVersion)
     if (newDeletes.isEmpty && insertStaged.isEmpty) return snap.version
@@ -4299,7 +4021,7 @@ final class GraftTable(val tablePath: String) {
     // writeOrderDeclared resolution over the same snapshot) — stamp
     // them; DV'd originals keep their own stats, marker included
     // (positions skip in place)
-    val adopted = adoptStaged(spark, physicalSchema(snap.schema), insertStaged,
+    val adopted = adoptStaged(insertStaged,
       sortedBy = writeOrderDeclaredPhys(snap, physicalSchema(snap.schema)))
     // row tracking: `ridMaterialized` is the WRITER's own bit (its
     // ridMetaIdx was defined and it appended the trailing id column) —

@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *      file when the groups are written back.
   *   2. Spark computes the replacement rows (updated + carried-over,
   *      plus MERGE's inserts) and hands them to the operation's WRITE:
-  *      executors stage plain parquet through Spark's own writer
-  *      factory ([[org.apache.spark.sql.graft.ParquetWrites]]).
+  *      executors stage plain parquet through the table's one writer
+  *      ([[org.apache.spark.sql.graft.ParquetWrites]]), whose tasks
+  *      also compute each file's stats.
   *   3. The commit swaps exactly the scanned files for the staged ones
   *      in ONE serializable `replace` commit; a head that moved since
   *      the scan fails loudly instead of dropping a concurrent
@@ -349,27 +350,21 @@ private final class GraftReplaceWrite(
       s"$tablePath/_staged_rlw_${UUID.randomUUID().toString.take(8)}"
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      org.apache.spark.sql.graft.ParquetWrites.factory(
-        SparkSession.active,
+      TxLog.writerFactory(
+        SparkSession.active, Some(new GraftTable(tablePath).snapshot(op.snapVersion)),
         // row tracking: the staged files carry the materialized id as a
         // trailing physical column, filled from the metadata row
         ridMetaIdx.fold(writeSchema)(_ => writeSchema.add(
           TxLog.RowIdPhysCol, org.apache.spark.sql.types.LongType)),
-        stageDir,
-        GraftTableV2.stageSplitKey(tablePath, writeSchema),
-        ridMetaIdx = ridMetaIdx)
+        stageDir, ridMetaIdx)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val staged = messages.toSeq.flatMap {
-        case org.apache.spark.sql.graft.ParquetWrites.StagedFiles(fs) => fs
-        case other => throw new IllegalStateException(
-          s"graft-table replace: unexpected commit message $other")
-      }
       val removed = op.plannedFiles.getOrElse(throw new IllegalStateException(
         "graft-table replace: the write committed before its scan planned " +
           "— the rewrite plan must read the table through the operation scan"))
       new GraftTable(tablePath).replaceFiles(
-        SparkSession.active, op.snapVersion, removed, staged.map(Paths.get(_)),
+        SparkSession.active, op.snapVersion, removed,
+        org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
         writerRid = Some(ridMetaIdx.isDefined))
       cleanupStage()
     }
@@ -523,15 +518,13 @@ private final class GraftDeltaWrite(
           info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.DeltaWriterFactory =
         new GraftDeltaWriterFactory(
-          org.apache.spark.sql.graft.ParquetWrites.factory(
-            SparkSession.active,
+          TxLog.writerFactory(
+            SparkSession.active, Some(new GraftTable(tablePath).snapshot(snapVersion)),
             // row tracking: post-images carry the materialized id as a
             // trailing physical column, filled from the metadata row
             ridMetaIdx.fold(writeSchema)(_ => writeSchema.add(
               TxLog.RowIdPhysCol, org.apache.spark.sql.types.LongType)),
-            stageDir,
-            GraftTableV2.stageSplitKey(tablePath, writeSchema),
-            ridMetaIdx = ridMetaIdx),
+            stageDir, ridMetaIdx),
           stageDir, fileOrd, posOrd)
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -564,7 +557,7 @@ private final class GraftDeltaWrite(
         }
         new GraftTable(tablePath).commitDeltaRowLevel(
           SparkSession.active, snapVersion, deletes,
-          msgs.flatMap(_.files).map(Paths.get(_)),
+          msgs.flatMap(_.files),
           ridMaterialized = ridMetaIdx.isDefined)
         cleanupStage()
       }
@@ -586,7 +579,8 @@ private[streaming] object GraftDeltaWrite {
   /** One task's contribution: staged insert files + its per-file
     * deletion bitmaps (inline, or spilled manifest paths). */
   final case class DeltaStaged(
-      files: Seq[String], inlineDeletes: Seq[(String, Array[Byte])],
+      files: Seq[org.apache.spark.sql.graft.ParquetWrites.StagedFile],
+      inlineDeletes: Seq[(String, Array[Byte])],
       spilledDeletes: Seq[String]) extends WriterCommitMessage
 
   /** Manifest format: repeated [nameLen int][nameUtf8][bmLen int][bm]. */
@@ -666,11 +660,8 @@ private final class GraftDeltaWriterFactory(
       }
 
       override def commit(): WriterCommitMessage = {
-        val staged = rows.commit() match {
-          case org.apache.spark.sql.graft.ParquetWrites.StagedFiles(fs) => fs
-          case other => throw new IllegalStateException(
-            s"graft-table delta write: unexpected inner message $other")
-        }
+        val staged =
+          org.apache.spark.sql.graft.ParquetWrites.filesOf(Seq(rows.commit()))
         val entries = bitmaps.toSeq.map { case (n, bm) =>
           bm.runOptimize()
           val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())

@@ -2019,37 +2019,37 @@ private final class GraftStreamingTableWrite(
         .getOrElse(f)))
   }
 
+  /** Per epoch: the split key and file stats resolve from the head the
+    * epoch writes over. */
   override def createStreamingWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : streaming_write.StreamingDataWriterFactory =
-    org.apache.spark.sql.graft.ParquetWrites.factory(
-      SparkSession.active, TxLog.physicalSchema(tableSchema), stageDir,
-      GraftTableV2.stageSplitKey(tablePath, TxLog.physicalSchema(tableSchema)))
+    TxLog.writerFactory(
+      SparkSession.active, Some(new GraftTable(tablePath).snapshot()),
+      TxLog.physicalSchema(tableSchema), stageDir)
 
   override def commit(
       epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val staged = messages.toSeq.flatMap {
-      case org.apache.spark.sql.graft.ParquetWrites.StagedFiles(fs) => fs
-      case other => throw new IllegalStateException(
-        s"graft-table streaming write: unexpected commit message $other")
-    }
-    new GraftTable(tablePath).appendStagedIdempotent(
-      SparkSession.active, s"graft-stream-$queryId", epochId, tableSchema,
-      staged.map(java.nio.file.Paths.get(_)),
-      // physical names: staged bytes carry the table's mapping
-      sortedBy = sortedBy.map(c => TxLog.physicalOf(tableSchema, c)))
-    ()
-  }
+      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+    try {
+      new GraftTable(tablePath).appendStagedIdempotent(
+        SparkSession.active, s"graft-stream-$queryId", epochId, tableSchema,
+        org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
+        // physical names: staged bytes carry the table's mapping
+        sortedBy = sortedBy.map(c => TxLog.physicalOf(tableSchema, c)))
+      ()
+    } finally cleanupStage()
 
   override def abort(
       epochId: Long,
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    messages.foreach {
-      case org.apache.spark.sql.graft.ParquetWrites.StagedFiles(fs) =>
-        fs.foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-      case _ => ()
-    }
+    cleanupStage()
+
+  // micro-batch epochs run one at a time: once an epoch commits or
+  // aborts, nothing else is writing into the staging directory
+  private def cleanupStage(): Unit = {
+    graft.core.Fs.rmTree(new java.io.File(stageDir)); ()
+  }
 }
 
 object GraftCatalogTable {
@@ -2104,28 +2104,6 @@ object GraftCatalogTable {
 }
 
 object GraftTableV2 {
-
-  /** Transform-tuple splitter for the DSv2 staging writers (streaming
-    * epochs, COW group-replace, MOR post-images): the table's resolved
-    * spec as a per-row key fn over the PHYSICAL write schema, or None
-    * when no bucket transform applies — see
-    * [[graft.medallion.PartitionSpec.tupleKeyFn]]. Without this, those
-    * paths stage one file per task, which straddles bucket values and
-    * silently demotes the table's storage-partitioned joins until the
-    * next compaction. */
-  private[streaming] def stageSplitKey(
-      tablePath: String, physWriteSchema: StructType)
-      : Option[org.apache.spark.sql.catalyst.InternalRow => String] = {
-    val t = new GraftTable(tablePath)
-    if (t.latestVersion() == 0L) None
-    else {
-      val snap = t.snapshot()
-      graft.medallion.PartitionSpec.tupleKeyFn(
-        graft.medallion.PartitionSpec.resolved(
-          snap.props, snap.schema, physWriteSchema),
-        physWriteSchema)
-    }
-  }
 
   /** Storage-partitioned-join eligibility + grouping for a file set:
     * when the snapshot's partition spec is entirely SPJ-expressible

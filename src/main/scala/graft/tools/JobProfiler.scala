@@ -21,10 +21,6 @@ object JobProfiler {
       else ("/root/testdata/sf0.1", args)
     val spark = graft.core.SparkSessionFactory.local("graft-jobprofiler")
     spark.sparkContext.setLogLevel("ERROR")
-    // A/B hook: SPARK_GRAFT_FOOTERSTATS=false profiles the legacy
-    // stats-job path without a rebuild
-    sys.env.get("SPARK_GRAFT_FOOTERSTATS")
-      .foreach(v => spark.conf.set("spark.graft.footerStats", v))
     // same session warm-up as Bench so the first profiled query is not
     // charged the codegen/parquet cold start
     spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")

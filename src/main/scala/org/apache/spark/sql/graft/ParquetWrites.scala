@@ -10,22 +10,28 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Bridge into Spark's OWN parquet write machinery for DSv2
-  * [[org.apache.spark.sql.connector.write.BatchWrite]]s that stage files
-  * for a transactional commit (the graft-table row-level operations and
-  * streaming epochs): [[ParquetUtils.prepareWrite]] builds the same
-  * serializable [[OutputWriterFactory]] the built-in parquet sink uses
-  * (dictionary/codec/output-committer settings from the session conf),
-  * and each executor task opens files in the staging directory through
-  * it.
+import graft.medallion.{FileStats, TxLog}
+
+/** The one writer of every graft-table data and change file: batch
+  * commits run it inside the tasks of the frame's own plan ([[write]]),
+  * DSv2 row-level operations and streaming epochs hand it their task
+  * rows. [[ParquetUtils.prepareWrite]] builds the same serializable
+  * [[OutputWriterFactory]] the built-in parquet sink uses
+  * (dictionary/codec/timestamp settings from the session conf), and each
+  * task opens files in the staging directory through it. The task that
+  * writes a file also computes its stats ([[FileStats]]) and returns
+  * them in its commit message, so a commit adopts files without reading
+  * them back.
   *
   * Like [[ParquetScans]], this lives in `org.apache.spark.sql` because
   * the writer factory is session-internal API; the public surface stays
@@ -33,16 +39,26 @@ import org.apache.spark.util.SerializableConfiguration
   */
 object ParquetWrites {
 
+  /** One staged file: written `seq`-th by the task of partition
+    * `partition`, with the rows and stats that task recorded. */
+  final case class StagedFile(
+      path: String, partition: Int, seq: Int, rows: Long,
+      stats: Map[String, TxLog.ColStats])
+  object StagedFile {
+    /** Commit order: task partition, then file sequence in the task. */
+    implicit val commitOrder: Ordering[StagedFile] = Ordering.by(f => (f.partition, f.seq))
+  }
+
   /** The staged parquet files of one (non-empty) task. */
-  final case class StagedFiles(files: Seq[String]) extends WriterCommitMessage
+  final case class StagedFiles(files: Seq[StagedFile]) extends WriterCommitMessage
 
   /** A serializable [[DataWriterFactory]] writing rows of `schema` as
-    * parquet files under `stageDir`. Files open lazily — an empty task
-    * stages nothing. Task attempts write attempt-unique names; the
-    * commit coordinator picks exactly one winner per task, and losers'
-    * files stay behind in the staging directory for the caller's
-    * abort/vacuum cleanup (never adopted: the commit lists only winning
-    * messages).
+    * parquet files under `stageDir`, each with the per-file `stats`.
+    * Files open lazily — an empty task stages nothing. Task attempts
+    * write attempt-unique names; the commit coordinator picks exactly
+    * one winner per task, and losers' files stay behind in the staging
+    * directory for the caller's abort/vacuum cleanup (never adopted: the
+    * commit lists only winning messages).
     *
     * `splitKey` (from [[graft.medallion.PartitionSpec.tupleKeyFn]])
     * switches the task writer to FANOUT mode — one open file per
@@ -52,38 +68,61 @@ object ParquetWrites {
     * joins silently degrade, and rows reach these writers in arbitrary
     * tuple order (streaming epochs, COW rewrite output), so rolling on
     * key CHANGE would explode the file count. Cost: one open parquet
-    * writer per live tuple per task — BOUNDED: past
-    * `graft.write.fanout.maxOpenWriters` (default 64) concurrent
-    * writers, the least-recently-written key closes and rolls; a later
-    * row for it opens a fresh attempt-unique file. Each file stays
-    * single-valued on the tuple (purity is per FILE, not per key), so
-    * the only cost of eviction is extra files — never straddling.
-    * Without the cap, a composite spec (days × bucket) under a
-    * many-day streaming epoch or MERGE rewrite opens days·buckets
+    * writer per live tuple per task — BOUNDED: past `maxOpenWriters`
+    * concurrent writers, the least-recently-written key closes and
+    * rolls; a later row for it opens a fresh attempt-unique file. Each
+    * file stays single-valued on the tuple (purity is per FILE, not per
+    * key), so the only cost of eviction is extra files — never
+    * straddling. Without the cap, a composite spec (days × bucket) under
+    * a many-day streaming epoch or MERGE rewrite opens days·buckets
     * writers per task, each buffering up to a parquet row group —
-    * executor OOM at exactly the 100-TB scale the feature targets. */
-  /** `ridMetaIdx`: row-tracking mode — `schema`'s TRAILING field is the
+    * executor OOM at exactly the 100-TB scale the feature targets.
+    *
+    * `ridMetaIdx`: row-tracking mode — `schema`'s TRAILING field is the
     * materialized row-id column, filled per row from ordinal
     * `ridMetaIdx` of the metadata row Spark hands to
     * `writeWithMetadata` (null for rows without one, e.g. MERGE
-    * inserts); plain `write` calls append null. The split key and every
-    * caller-visible ordinal keep speaking the original (un-extended)
-    * row layout. */
+    * inserts); plain `write` calls append null. The split key speaks the
+    * original (un-extended) row layout; `stats` binds to `schema`. */
   def factory(
       spark: SparkSession, schema: StructType, stageDir: String,
       splitKey: Option[InternalRow => String] = None,
-      ridMetaIdx: Option[Int] = None): GraftParquetWriterFactory = {
+      ridMetaIdx: Option[Int] = None,
+      stats: FileStats.Spec = FileStats.RowsOnly,
+      maxOpenWriters: Int = 64): GraftParquetWriterFactory = {
+    require(maxOpenWriters >= 1, s"maxOpenWriters must be >= 1, got $maxOpenWriters")
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val options = new ParquetOptions(Map.empty[String, String], spark.sessionState.conf)
     val owf = ParquetUtils.prepareWrite(spark.sessionState.conf, job, schema, options)
-    val maxOpen = spark.conf
-      .get("graft.write.fanout.maxOpenWriters", "64").toInt
-    require(maxOpen >= 1,
-      s"graft.write.fanout.maxOpenWriters must be >= 1, got $maxOpen")
     new GraftParquetWriterFactory(
       owf, new SerializableConfiguration(job.getConfiguration), schema, stageDir,
-      splitKey, maxOpen, ridMetaIdx)
+      splitKey, maxOpenWriters, ridMetaIdx, stats)
   }
+
+  /** Write `df` through `factory` inside the tasks of `df`'s own plan
+    * (one Spark job, one SQL execution) and return the staged files. */
+  def write(df: DataFrame, factory: GraftParquetWriterFactory): Seq[StagedFile] = {
+    val qe = df.queryExecution
+    filesOf(SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+        val w = factory.createWriter(pid, TaskContext.get().taskAttemptId())
+        try {
+          rows.foreach(w.write)
+          Iterator.single(w.commit())
+        } catch {
+          case t: Throwable => w.abort(); throw t
+        } finally w.close()
+      }.collect().toSeq
+    })
+  }
+
+  /** The staged files of the winning task messages. */
+  def filesOf(messages: Seq[WriterCommitMessage]): Seq[StagedFile] =
+    messages.flatMap {
+      case StagedFiles(fs) => fs
+      case other => throw new IllegalStateException(
+        s"graft-table write: unexpected commit message $other")
+    }
 }
 
 /** Serves BOTH write planes: batch ([[DataWriterFactory]]) and
@@ -93,9 +132,10 @@ object ParquetWrites {
 final class GraftParquetWriterFactory(
     owf: OutputWriterFactory, conf: SerializableConfiguration,
     schema: StructType, stageDir: String,
-    splitKey: Option[InternalRow => String] = None,
-    maxOpenWriters: Int = 64,
-    ridMetaIdx: Option[Int] = None) extends DataWriterFactory
+    splitKey: Option[InternalRow => String],
+    maxOpenWriters: Int,
+    ridMetaIdx: Option[Int],
+    stats: FileStats.Spec) extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
   override def createWriter(
@@ -109,18 +149,26 @@ final class GraftParquetWriterFactory(
       // LinkedHashMap churn on the per-row hot path)
       final class Open(
           val w: org.apache.spark.sql.execution.datasources.OutputWriter,
-          val path: Path) { var tick: Long = 0L }
+          val path: Path, val seq: Int, val acc: FileStats.Task#Acc) {
+        var tick: Long = 0L
+        def staged: ParquetWrites.StagedFile = {
+          val (rows, st) = acc.result()
+          ParquetWrites.StagedFile(path.toString, partitionId, seq, rows, st)
+        }
+      }
       // fanout state: one open writer per transform-tuple key (a single
       // sentinel key when splitKey is absent — the plain one-file path)
       private val open = mutable.LinkedHashMap.empty[String, Open]
-      // files already closed-and-rolled by the cap (or by commit):
-      // still part of this task's staged output
-      private val rolled = mutable.ArrayBuffer.empty[Path]
+      // files already closed-and-rolled by the cap: still part of this
+      // task's staged output
+      private val rolled = mutable.ArrayBuffer.empty[Open]
       private var clock = 0L
+      private var opened = 0
       private val keyOf: InternalRow => String =
         splitKey.getOrElse((_: InternalRow) => "")
+      private val statsTask = stats.newTask()
 
-      private def newFile(): (org.apache.spark.sql.execution.datasources.OutputWriter, Path) = {
+      private def newFile(): Open = {
         val ctx = new TaskAttemptContextImpl(
           conf.value,
           new TaskAttemptID(new TaskID(new JobID(UUID.randomUUID().toString.take(8), 0),
@@ -129,7 +177,9 @@ final class GraftParquetWriterFactory(
           stageDir,
           s"part-$partitionId-$taskId-${UUID.randomUUID().toString.take(8)}" +
             owf.getFileExtension(ctx))
-        (owf.newInstance(path.toString, schema, ctx), path)
+        opened += 1
+        new Open(owf.newInstance(path.toString, schema, ctx), path, opened,
+          statsTask.newFile())
       }
 
       private def writerFor(key: String): Open =
@@ -142,11 +192,10 @@ final class GraftParquetWriterFactory(
           if (open.size >= maxOpenWriters) {
             val (lruKey, lru) = open.minBy(_._2.tick)
             lru.w.close()
-            rolled += lru.path
+            rolled += lru
             open.remove(lruKey)
           }
-          val (w, p) = newFile()
-          val o = new Open(w, p)
+          val o = newFile()
           open.put(key, o)
           o
         })
@@ -162,6 +211,7 @@ final class GraftParquetWriterFactory(
         val o = writerFor(key)
         clock += 1; o.tick = clock
         o.w.write(out)
+        o.acc.add(out)
       }
 
       override def write(row: InternalRow): Unit =
@@ -186,20 +236,16 @@ final class GraftParquetWriterFactory(
         }
 
       override def commit(): WriterCommitMessage = {
-        val paths = (rolled ++ open.values.map(_.path)).map(_.toString).toSeq
-        open.values.foreach(_.w.close()); open.clear(); rolled.clear()
-        ParquetWrites.StagedFiles(paths)
+        open.values.foreach(_.w.close())
+        val files = (rolled ++ open.values).map(_.staged).toSeq
+        open.clear(); rolled.clear()
+        ParquetWrites.StagedFiles(files)
       }
 
       override def abort(): Unit = {
-        open.values.foreach { o =>
-          o.w.close()
-          val fs = o.path.getFileSystem(conf.value)
-          fs.delete(o.path, false); ()
-        }
-        rolled.foreach { p =>
-          val fs = p.getFileSystem(conf.value)
-          fs.delete(p, false); ()
+        open.values.foreach(_.w.close())
+        (rolled ++ open.values).foreach { o =>
+          o.path.getFileSystem(conf.value).delete(o.path, false); ()
         }
         open.clear(); rolled.clear()
       }

@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters.IteratorHasAsScala
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetWrites
 import org.apache.spark.sql.types._
 
 import graft.medallion.{GraftTable, TxLog}
@@ -69,10 +70,10 @@ class CommitRaceSpec extends SparkSpec {
 
   /** A parquet batch written outside the table — what a DSv2 streaming
     * write hands `appendStagedIdempotent`. */
-  private def stagedBatch(): Seq[java.nio.file.Path] = {
+  private def stagedBatch(): Seq[ParquetWrites.StagedFile] = {
     val dir = new java.io.File(s"target/tmp/crace_stage_${UUID.randomUUID().toString.take(8)}")
-    Seq((4L, "d", 40)).toDF("id", "v", "n").write.parquet(dir.getAbsolutePath)
-    dir.listFiles().filter(_.getName.endsWith(".parquet")).map(_.toPath).toSeq
+    val df = Seq((4L, "d", 40)).toDF("id", "v", "n")
+    ParquetWrites.write(df, TxLog.writerFactory(spark, None, df.schema, dir.getAbsolutePath))
   }
 
   private case class RetryCase(

@@ -113,7 +113,7 @@ class CrossFeatureSpec extends SparkSpec {
       assert(before.files.forall(a => after.files.exists(_.path == a.path)))
       assert(after.files.exists(_.dv.isDefined))
       // day pruning answers exactly THROUGH the DV + the new file (the
-      // post-image carries its own days(ts) stats via adoptStaged)
+      // post-image carries its own days(ts) stats from its writer)
       val lo = tsOf(19702L, 0L); val hi = tsOf(19702L, 86400000L - 1L)
       val day2 = t.readRange(spark, "ts", Some(lo), Some(hi))
       assert(day2.count() === 100L)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
 /** The fanout staging writer's open-writer CAP: one parquet writer per
   * live transform-tuple per task is the Iceberg fanout semantic, but
   * unbounded it is an executor OOM under a composite spec (days ×
-  * buckets of writers, each buffering up to a row group). Past
-  * `graft.write.fanout.maxOpenWriters` the least-recently-written key
+  * buckets of writers, each buffering up to a row group). Past the
+  * factory's `maxOpenWriters` the least-recently-written key
   * closes and ROLLS: its file is complete and tuple-pure; a recurring
   * key opens a fresh file. Invariants under eviction: every row lands
   * exactly once, every FILE stays single-valued on the split key (the
@@ -28,24 +28,18 @@ class FanoutWriterCapSpec extends SparkSpec {
     d.mkdirs(); d
   }
 
-  private def writeRows(stage: String, cap: Int, n: Int): Seq[String] = {
-    val prev = spark.conf.getOption("graft.write.fanout.maxOpenWriters")
-    spark.conf.set("graft.write.fanout.maxOpenWriters", cap.toString)
-    try {
-      val factory = ParquetWrites.factory(
-        spark, schema, stage,
-        splitKey = Some((r: InternalRow) => (r.getLong(0) % 8).toString))
-      val w = factory.createWriter(0, 0L)
-      // ids cycle through all 8 keys, so with cap < 8 every new key
-      // evicts the LRU writer — the roll path runs constantly
-      (0 until n).foreach(i => w.write(InternalRow(i.toLong, i * 1.0)))
-      val msg = w.commit().asInstanceOf[ParquetWrites.StagedFiles]
-      w.close()
-      msg.files
-    } finally prev match {
-      case Some(v) => spark.conf.set("graft.write.fanout.maxOpenWriters", v)
-      case None => spark.conf.unset("graft.write.fanout.maxOpenWriters")
-    }
+  private def writeRows(stage: String, cap: Int, n: Int): Seq[ParquetWrites.StagedFile] = {
+    val factory = ParquetWrites.factory(
+      spark, schema, stage,
+      splitKey = Some((r: InternalRow) => (r.getLong(0) % 8).toString),
+      maxOpenWriters = cap)
+    val w = factory.createWriter(0, 0L)
+    // ids cycle through all 8 keys, so with cap < 8 every new key
+    // evicts the LRU writer — the roll path runs constantly
+    (0 until n).foreach(i => w.write(InternalRow(i.toLong, i * 1.0)))
+    val msg = w.commit().asInstanceOf[ParquetWrites.StagedFiles]
+    w.close()
+    msg.files
   }
 
   test("cap evicts LRU writers: all rows land once, every file stays key-pure") {
@@ -55,6 +49,9 @@ class FanoutWriterCapSpec extends SparkSpec {
     // rolls happened: 8 live keys through a 2-writer cap must produce
     // strictly more files than keys
     assert(files.size > 8, s"expected rolled files, got ${files.size}")
+    // each file's task-counted rows match its bytes
+    assert(files.map(_.rows).sum === n.toLong)
+    assert(files.map(_.seq).sorted === (1 to files.size))
     val back = spark.read.schema(schema).parquet(stage.getAbsolutePath)
       .withColumn("__f", col("_metadata.file_path"))
     // exactly-once: all n rows, no dup, no loss
@@ -80,12 +77,11 @@ class FanoutWriterCapSpec extends SparkSpec {
 
   test("abort deletes rolled files, not just open ones") {
     val stage = freshStage()
-    val prev = spark.conf.getOption("graft.write.fanout.maxOpenWriters")
-    spark.conf.set("graft.write.fanout.maxOpenWriters", "2")
     try {
       val factory = ParquetWrites.factory(
         spark, schema, stage.getAbsolutePath,
-        splitKey = Some((r: InternalRow) => (r.getLong(0) % 8).toString))
+        splitKey = Some((r: InternalRow) => (r.getLong(0) % 8).toString),
+        maxOpenWriters = 2)
       val w = factory.createWriter(0, 0L)
       (0 until 100).foreach(i => w.write(InternalRow(i.toLong, i * 1.0)))
       w.abort()
@@ -99,12 +95,6 @@ class FanoutWriterCapSpec extends SparkSpec {
       leftover.close()
       assert(remaining.isEmpty,
         s"abort left staged parquet behind: $remaining")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.write.fanout.maxOpenWriters", v)
-        case None => spark.conf.unset("graft.write.fanout.maxOpenWriters")
-      }
-      graft.core.Fs.rmTree(stage)
-    }
+    } finally graft.core.Fs.rmTree(stage)
   }
 }

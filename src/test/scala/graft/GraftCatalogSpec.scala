@@ -306,6 +306,36 @@ class GraftCatalogSpec extends SparkSpec {
     }
   }
 
+  test("writeStream.toTable removes its staging directory after every epoch") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val wh = freshWarehouse()
+    spark.conf.set("spark.sql.catalog.gstd", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gstd.warehouse", wh)
+    try {
+      spark.sql("CREATE TABLE gstd.db.sink (id BIGINT, payload STRING)")
+      val ckpt = freshWarehouse() + "/ckpt"
+      val ms = MemoryStream[(Long, String)]
+      val stream = ms.toDF().toDF("id", "payload")
+      def run(): Unit = stream.writeStream.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).toTable("gstd.db.sink")
+        .awaitTermination()
+      ms.addData(1L -> "a", 2L -> "b")
+      run()
+      ms.addData(3L -> "c")
+      run()
+      assert(spark.sql("SELECT count(*) FROM gstd.db.sink").head().getLong(0) === 3L)
+      val staged = new java.io.File(s"$wh/db/sink").listFiles()
+        .map(_.getName).filter(_.startsWith("_staged_"))
+      assert(staged.isEmpty, s"epochs left staging entries behind: ${staged.toSeq}")
+    } finally {
+      spark.conf.unset("spark.sql.catalog.gstd")
+      spark.conf.unset("spark.sql.catalog.gstd.warehouse")
+    }
+  }
+
   test("a data column named _commit_version shadows the metadata column") {
     import spark.implicits._
     val wh = freshWarehouse()

@@ -96,9 +96,10 @@ class TxLogSpec extends SparkSpec {
     assert(removed.nonEmpty)
     // stage a replacement like the DSv2 write would
     val stage = new java.io.File(s"target/tmp/replace_stage_${java.util.UUID.randomUUID().toString.take(8)}")
-    Seq((1L, "A"), (2L, "B")).toDF("id", "v").repartition(1)
-      .write.parquet(stage.getAbsolutePath)
-    val staged = stage.listFiles().filter(_.getName.endsWith(".parquet")).map(_.toPath).toSeq
+    val replacement = Seq((1L, "A"), (2L, "B")).toDF("id", "v").repartition(1)
+    val staged = org.apache.spark.sql.graft.ParquetWrites.write(replacement,
+      graft.medallion.TxLog.writerFactory(spark, Some(t.snapshot(readVersion)),
+        replacement.schema, stage.getAbsolutePath))
     // a concurrent append moves the head between scan and commit
     t.append(Seq((3L, "c")).toDF("id", "v"))                             // v2
     intercept[graft.medallion.TxLog.ConcurrentWriteException](
