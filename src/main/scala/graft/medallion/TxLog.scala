@@ -328,26 +328,6 @@ object TxLog {
     * object-store LIST wall unrelated to data size. Keep this ≥ the
     * vacuum retention: vacuum resolves every snapshot in ITS window. */
   private[graft] val LogRetentionProp = "log.retention.versions"
-  /** Table property: checkpoint file format, `json` (default, line-
-    * oriented, text-splittable) or `parquet` (columnar — typed per-
-    * column stat bounds give the distributed planning prune row-group
-    * skipping + column projection; the driver path reads the same file
-    * through plain parquet-hadoop, no SparkSession). Delta's parquet-
-    * checkpoint shape. Gated by the `parquetCheckpoint` reader feature
-    * so a pre-feature reader fails by NAME on the property commit
-    * instead of silently missing checkpoints. */
-  private[graft] val CheckpointFormatProp = "checkpoint.format"
-  /** Companion to `checkpoint.format = auto`: the live-file count past
-    * which auto checkpoints write parquet instead of JSON lines. The
-    * default mirrors the 64 MiB distributed-prune threshold (~330 B of
-    * rendered JSON per add ⇒ ~2·10⁵ adds): below it the driver JSON
-    * path is faster anyway; above it the linear parse starts to bind
-    * and the columnar format's row-group skipping pays. A table under
-    * the default JSON format that silently grows to 10⁶ adds keeps
-    * paying the linear parse until an operator notices — `auto` makes
-    * the flip transparent at the checkpoint cadence. */
-  private[graft] val CheckpointAutoMinAddsProp = "checkpoint.auto.minAdds"
-  private[graft] val CheckpointAutoMinAddsDefault = 200000
   /** Table property: comma-separated LOGICAL column names every staged
     * file's rows are locally sorted by (Iceberg's `WRITE ORDERED BY`
     * shape, ascending nulls-first). Batch staging ([[GraftTable]]'s
@@ -781,9 +761,8 @@ object TxLog {
     case other => throw new IllegalStateException(s"txlog: expected long, got $other")
   }
 
-  /** Inverse of [[statsToJson]] — shared by the JSON add parser and the
-    * parquet checkpoint's exact stats round trip. */
-  private[medallion] def parseStats(j: JValue): Map[String, ColStats] = j match {
+  /** Inverse of [[statsToJson]]. */
+  private def parseStats(j: JValue): Map[String, ColStats] = j match {
     case JObject(fields) => fields.map { case (c, v) =>
       val sm = v.asInstanceOf[JObject].obj.toMap
       c -> ColStats(str(sm("k")), str(sm("min")), str(sm("max")),
@@ -848,8 +827,7 @@ object TxLog {
     * confinement, same policy as the feature actions themselves). */
   private[graft] val SupportedReaderFeatures: Set[String] = Set(
     "deletionVectors", "changeDataFeed", "checkConstraints",
-    "tableProperties", "columnMapping", "typeWidening",
-    "parquetCheckpoint", "rowTracking")
+    "tableProperties", "columnMapping", "typeWidening", "rowTracking")
 
   /** The reader features a commit's CONTENT requires — derived, not
     * declared, so the protocol line can never drift from the actions it
@@ -860,14 +838,6 @@ object TxLog {
       props: Option[Map[String, String]],
       cdc: Seq[(String, Long)], cdcFull: Seq[String]): Seq[String] =
     (Seq(
-      // a table whose checkpoints are (or under `auto` MAY become)
-      // parquet is unreadable to a json-only reader once truncation
-      // drops early commits — fail by feature name at the property
-      // commit, not by missing-file later
-      if (props.exists(p => p.get(CheckpointFormatProp).contains("parquet") ||
-          p.get(CheckpointFormatProp).contains("auto")))
-        Some("parquetCheckpoint")
-      else None,
       // the widen commit is the first point a reader MUST up-cast old
       // parquet bytes into the widened schema — gate it by name there
       // (the one op-derived feature: the widened schema json alone is
@@ -916,21 +886,6 @@ object TxLog {
       addVersions, constraints, tsMillis, props, cdc, cdcFull, mergeKey,
       rowIdWatermark)
       .mkString("\n")
-
-  /** ONLY the meta lines (info/protocol/schema/constraints/props/txns)
-    * of a commit document — what the parquet checkpoint stores in its
-    * meta row, rendered by the same code that renders JSON commits so
-    * the two formats can never drift. */
-  private[graft] def renderMetaLines(
-      op: String, readVersion: Long, schemaJson: Option[String],
-      adds: Iterable[AddFile], txns: Map[String, Long],
-      constraints: Option[Map[String, String]],
-      props: Option[Map[String, String]],
-      rowIdWatermark: Option[Long] = None): List[String] =
-    metaJsons(op, readVersion, schemaJson, adds, txns, constraints,
-      tsMillis = None, props = props, cdc = Nil, cdcFull = Nil,
-      mergeKey = None, rowIdWatermark = rowIdWatermark)
-      .map(j => JsonMethods.compact(JsonMethods.render(j)))
 
   private def metaJsons(
       op: String, readVersion: Long, schemaJson: Option[String],
@@ -1168,7 +1123,7 @@ object TxLog {
       java.security.MessageDigest.getInstance("MD5").digest(bytes))
 
   private val MaxCachedAdds = 2000000L
-  /** Avoided checkpoint parses, JSON and parquet alike. */
+  /** Avoided checkpoint parses. */
   private[graft] val checkpointCacheHits = new java.util.concurrent.atomic.AtomicLong
   /** Avoided / real parses of live (suffix) commit files — the
     * deterministic evidence pair (hits = parses the pre-cache code
@@ -1184,11 +1139,6 @@ object TxLog {
     * neighbours fit). */
   private val liveCommitCache = new ParseCache[String](
     64, MaxCachedAdds, liveCommitCacheHits, Some(liveCommitParses))
-  /** PARQUET checkpoints, keyed by (path, size, mtime) — no need to read
-    * the file twice, and safe for an immutable, atomically-linked
-    * artifact whose name encodes its version: ≤ 4 entries. */
-  private val parquetCommitCache = new ParseCache[(String, Long, Long)](
-    4, Long.MaxValue, checkpointCacheHits)
 
   private[medallion] def parseCheckpointCached(bytes: Array[Byte]): Commit =
     checkpointCache(contentKey(bytes))(parseCommit(new String(bytes, "UTF-8")))
@@ -1196,21 +1146,21 @@ object TxLog {
   private[medallion] def parseLiveCommitCached(bytes: Array[Byte]): Commit =
     liveCommitCache(contentKey(bytes))(parseCommit(new String(bytes, "UTF-8")))
 
-  private[medallion] def parquetCommitCached(path: Path): Commit =
-    parquetCommitCache((path.toString, Files.size(path),
-      Files.getLastModifiedTime(path).toMillis))(ParquetCheckpoint.readCommit(path))
-
   // --------------------------- distributed checkpoint pruning (planning)
 
-  /** Session conf bounding when the PLANNING path reads the checkpoint
+  /** Checkpoint size past which the PLANNING path reads the checkpoint
     * distributively instead of parsing it whole on the driver. Below
-    * the threshold the driver path is faster (no job overhead); above
-    * it, driver JSON parse time and — on million-file tables — driver
-    * heap become the binding constraint (the wall Delta hit before
-    * parquet checkpoints, Iceberg before manifest trees). */
-  private[graft] val DistributedPruneMinBytesConf =
-    "graft.log.distributedPrune.minBytes"
-  private[graft] val DistributedPruneMinBytesDefault: Long = 64L * 1024 * 1024
+    * it the driver path is faster (no job overhead); above it (~2·10⁵
+    * adds), driver JSON parse time and — on million-file tables —
+    * driver heap become the binding constraint (the wall Delta hit
+    * before parquet checkpoints, Iceberg before manifest trees). */
+  private[graft] val DistributedPruneMinBytes: Long = 64L * 1024 * 1024
+
+  /** Test-only seam: the threshold [[GraftTable.prunedSnapshot]]
+    * dispatches on, so a spec can force the distributed path on a
+    * small table. [[DistributedPruneMinBytes]] in production. */
+  @volatile private[graft] var distributedPruneMinBytes: Long =
+    DistributedPruneMinBytes
 
   /** Is this rendered log line an add action? EXACT for this log's own
     * renderer: [[addToJson]] emits the action tag first, so every add /
@@ -1270,111 +1220,6 @@ object TxLog {
       .map(l => parseAddLine(l).getOrElse(throw new IllegalStateException(
         s"txlog: survivor line stopped parsing as an add: ${l.take(200)}")))
   }
-
-  /** The parquet sibling of [[distributedPruneSurvivors]]: a real
-    * parquet scan over the columnar checkpoint. Two layers, both
-    * executor-side:
-    *
-    *  1. COARSE — a pushable predicate over the typed per-column bound
-    *    columns (`nmin_i`/`nmax_i` doubles, `tmin_i`/`tmax_i` strings):
-    *    parquet row groups whose bound ranges cannot overlap the scan's
-    *    constraints are SKIPPED unread (min/max statistics), and only
-    *    the projected columns of surviving groups decode. Null bounds
-    *    (no stats for the column) conservatively survive, matching
-    *    `stats.get(phys).forall(...)`.
-    *  2. EXACT — the shared predicate ([[ColStats.overlaps]] +
-    *    [[PartitionSpec.admits]]) on the parsed stats JSON of every row
-    *    the coarse layer admits. Correctness never depends on layer 1.
-    *
-    * Only survivors collect, as (AddFile, provenance). */
-  /** The COARSE (pushable) predicate over the columnar checkpoint's
-    * typed bound columns — extracted so PlanChecks can assert the
-    * parquet scan actually receives it as PushedFilters (row-group
-    * skipping evidence), not just trust it. Null bounds survive
-    * conservatively. */
-  private[graft] def parquetCoarsePredicate(
-      schema: StructType,
-      constraints: Seq[(String, Option[String], Option[String],
-        Option[Any], Option[Any])]): Column = {
-    val idxOf: Map[String, Int] = schema.fields.zipWithIndex.map {
-      case (f, i) => physicalOf(schema, f.name) -> i
-    }.toMap
-    constraints.foldLeft(lit(true)) {
-      case (acc, (phys, loS, hiS, _, _)) =>
-        idxOf.get(phys) match {
-          case None => acc
-          case Some(i) =>
-            if (statsKind(schema.fields(i).dataType) == "num") {
-              val inRange = Seq(
-                hiS.map(h => col(s"nmin_$i") <= ParquetCheckpoint.hiDouble(h)),
-                loS.map(l => col(s"nmax_$i") >= ParquetCheckpoint.loDouble(l)))
-                .flatten.reduceOption(_ && _).getOrElse(lit(true))
-              acc && (col(s"nmin_$i").isNull || inRange)
-            } else {
-              val inRange = Seq(
-                hiS.map(h => col(s"tmin_$i") <= h),
-                loS.map(l => col(s"tmax_$i") >= l))
-                .flatten.reduceOption(_ && _).getOrElse(lit(true))
-              acc && (col(s"tmin_$i").isNull || inRange)
-            }
-        }
-    }
-  }
-
-  private[medallion] def distributedPruneSurvivorsParquet(
-      spark: SparkSession, checkpointPath: String, schemaJson: String,
-      cpSchemaJson: Option[String],
-      excluded: Set[String],
-      constraints: Seq[(String, Option[String], Option[String],
-        Option[Any], Option[Any])]): Seq[(AddFile, Option[Long])] = {
-    import spark.implicits._
-    // The COARSE predicate must resolve nmin_i/tmin_i indices against
-    // the schema the checkpoint was WRITTEN under — suffix commits may
-    // have dropped/added columns since, shifting field indices (a
-    // drop would make the coarse term read the WRONG column's bounds
-    // and silently exclude live files; an add would reference a
-    // nonexistent nmin_k and fail the scan). Constraint columns absent
-    // from the checkpoint schema get no coarse term — conservative,
-    // like the name-based JSON path. The EXACT layer below keeps the
-    // evolved schema: it is name-based (physical stats keys are stable
-    // across evolution) and must agree with the driver-side `passes`.
-    val coarse = cpSchemaJson
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .map(parquetCoarsePredicate(_, constraints))
-      .getOrElse(lit(true))
-    val cpDf = spark.read.parquet(checkpointPath)
-    // row-tracking columns: absent on pre-tracking checkpoints — select
-    // typed nulls/false so one decode shape serves both generations
-    val ridCol = if (cpDf.columns.contains("rid")) col("rid")
-      else lit(null).cast("long").as("rid")
-    val ridmCol = if (cpDf.columns.contains("ridm"))
-      coalesce(col("ridm"), lit(false))
-      else lit(false).as("ridm")
-    cpDf
-      .filter(col("meta").isNull && coarse)
-      .select(col("path"), col("rows"), col("bytes"), col("stats"),
-        col("dv"), col("dvn"), col("v"), ridCol, ridmCol)
-      .as[(String, Option[Long], Option[Long], String,
-        Option[String], Option[Long], Option[Long], Option[Long], Boolean)]
-      .rdd // survivors collect as constructed AddFiles: stats JSON
-      //      parses ONCE, executor-side, not again on the driver
-      .mapPartitions { it =>
-        val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        it.flatMap { case (p, r, b, statsJson, dv, dvn, vOpt, rid, ridm) =>
-          if (excluded.contains(p)) None
-          else {
-            val stats = parseStats(JsonMethods.parse(statsJson))
-            val a = AddFile(p, r.getOrElse(0L), b.getOrElse(0L), stats,
-              dv, dvn.getOrElse(0L), rid, ridm)
-            if (constraints.forall { case (phys, loS, hiS, loR, hiR) =>
-              stats.get(phys).forall(_.overlaps(loS, hiS)) &&
-                PartitionSpec.admits(sch, a, phys, loR, hiR)
-            }) Some((a, vOpt)) else None
-          }
-        }
-      }
-      .collect().toSeq
-  }
 }
 
 /** Handle on one log-structured table rooted at `tablePath`. Thread-safe
@@ -1395,22 +1240,6 @@ final class GraftTable(val tablePath: String) {
   private def versionFile(v: Long): Path = logDir.resolve(s"${("%020d").format(v)}.json")
   private def checkpointFile(v: Long): Path =
     logDir.resolve(s"${("%020d").format(v)}.checkpoint.json")
-  private def checkpointFileParquet(v: Long): Path =
-    logDir.resolve(s"${("%020d").format(v)}.checkpoint.parquet")
-  /** The checkpoint artifact at `v`, whichever format wrote it —
-    * parquet preferred when both exist (a format migration leaves the
-    * old json behind until truncation sweeps it). */
-  private def checkpointArtifact(v: Long): Path = {
-    val pq = checkpointFileParquet(v)
-    if (Files.exists(pq)) pq else checkpointFile(v)
-  }
-  /** Read the checkpoint at `cv` as a parsed Commit, format-dispatched,
-    * through the per-format parse caches. */
-  private def readCheckpointCommit(cv: Long): Commit = {
-    val pq = checkpointFileParquet(cv)
-    if (Files.exists(pq)) TxLog.parquetCommitCached(pq)
-    else parseCheckpointCached(Files.readAllBytes(checkpointFile(cv)))
-  }
 
   /** Read + parse the live commit file at `f` through the JVM-wide
     * content-addressed parse cache ([[TxLog.parseLiveCommitCached]]) —
@@ -1425,16 +1254,23 @@ final class GraftTable(val tablePath: String) {
     * directory listing of the LOG (not the data). Checkpoint files count
     * too: a checkpoint AT v proves v committed, so a truncated log whose
     * newest artifact is the checkpoint itself (every commit ≤ checkpoint
-    * dropped) still resolves its head instead of reporting empty. */
+    * dropped) still resolves its head instead of reporting empty.
+    *
+    * A columnar checkpoint left by an older build fails here, by its
+    * reader feature's name: this build cannot read it, and skipping it
+    * would read a truncated log as an empty or partial table. */
   def latestVersion(): Long =
     if (!Files.exists(logDir)) 0L
     else {
       val it = Files.list(logDir)
       try it.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => (n.endsWith(".json") || n.endsWith(".checkpoint.parquet"))
-          && !n.startsWith("."))
-        .map(_.stripSuffix(".json").stripSuffix(".checkpoint.parquet")
-          .stripSuffix(".checkpoint"))
+        .filter { n =>
+          if (n.endsWith(".checkpoint.parquet")) throw new IllegalStateException(
+            s"txlog: $tablePath/$LogDir/$n requires reader feature " +
+              "'parquetCheckpoint', which this reader does not support")
+          n.endsWith(".json") && !n.startsWith(".")
+        }
+        .map(_.stripSuffix(".json").stripSuffix(".checkpoint"))
         .filter(n => n.nonEmpty && n.forall(_.isDigit))
         .map(_.toLong).foldLeft(0L)(math.max)
       finally it.close()
@@ -1455,8 +1291,7 @@ final class GraftTable(val tablePath: String) {
           val v = m.get("version").map {
             case JLong(x) => x; case JInt(x) => x.toLong; case _ => 0L
           }.getOrElse(0L)
-          if (v <= atMost && (Files.exists(checkpointFile(v)) ||
-            Files.exists(checkpointFileParquet(v)))) Some(v) else None
+          if (v <= atMost && Files.exists(checkpointFile(v))) Some(v) else None
         } else None
       } catch { case scala.util.control.NonFatal(_) => None }
     hinted.orElse {
@@ -1465,10 +1300,8 @@ final class GraftTable(val tablePath: String) {
         val it = Files.list(logDir)
         val vs =
           try it.iterator().asScala.map(_.getFileName.toString)
-            .filter(n => n.endsWith(".checkpoint.json") ||
-              n.endsWith(".checkpoint.parquet"))
-            .map(_.stripSuffix(".checkpoint.json")
-              .stripSuffix(".checkpoint.parquet"))
+            .filter(_.endsWith(".checkpoint.json"))
+            .map(_.stripSuffix(".checkpoint.json"))
             .filter(n => n.nonEmpty && n.forall(_.isDigit))
             .map(_.toLong).filter(_ <= atMost).toSeq
           finally it.close()
@@ -1499,10 +1332,10 @@ final class GraftTable(val tablePath: String) {
     var prps = Map.empty[String, String]
     var hwm = 0L
     cp.foreach { cv =>
-      // parse caches: the same checkpoint parses once per JVM — repeated
+      // parse cache: the same checkpoint parses once per JVM — repeated
       // resolution against an unchanged table costs one read + cache hit
-      // instead of the full parse (format-dispatched: json or parquet)
-      val c = readCheckpointCommit(cv)
+      // instead of the full parse
+      val c = parseCheckpointCached(Files.readAllBytes(checkpointFile(cv)))
       c.schemaJson.foreach(schemaJson = _)
       c.adds.foreach { a =>
         live += (a.path -> a)
@@ -1619,8 +1452,8 @@ final class GraftTable(val tablePath: String) {
     * in memory — measured ~1 KiB heap and ~3 µs parse per add (see
     * DistributedPruneSpec), i.e. fine at 10⁴–10⁵ files, multi-GB heap
     * and minutes of single-threaded parse at the 10⁶–10⁷ files a
-    * 100 TB table carries. Past [[TxLog.DistributedPruneMinBytesConf]]
-    * (default 64 MiB ≈ 2·10⁵ adds) with at least one usable bound,
+    * 100 TB table carries. Past [[TxLog.DistributedPruneMinBytes]]
+    * (64 MiB ≈ 2·10⁵ adds) with at least one usable bound,
     * checkpoint adds are parsed and pruned BY EXECUTORS
     * ([[TxLog.distributedPruneSurvivors]]); the driver holds the
     * commit SUFFIX (O(checkpoint interval)) plus survivors only.
@@ -1638,14 +1471,9 @@ final class GraftTable(val tablePath: String) {
       (lo.nonEmpty || hi.nonEmpty) &&
         lo.forall(isFiniteStat) && hi.forall(isFiniteStat)
     }
-    val minBytes =
-      try spark.conf.get(DistributedPruneMinBytesConf,
-        DistributedPruneMinBytesDefault.toString).toLong
-      catch { case scala.util.control.NonFatal(_) =>
-        DistributedPruneMinBytesDefault }
     checkpointAtOrBefore(target) match {
       case Some(cv) if usable.nonEmpty &&
-          Files.size(checkpointArtifact(cv)) >= minBytes =>
+          Files.size(checkpointFile(cv)) >= distributedPruneMinBytes =>
         prunedSnapshotDistributed(spark, cv, target, usable)
       case _ => prunedSnapshot(constraints, version)
     }
@@ -1673,22 +1501,15 @@ final class GraftTable(val tablePath: String) {
   private[graft] def prunedSnapshotDistributed(
       spark: SparkSession, cv: Long, target: Long,
       usable: Seq[(String, Option[Any], Option[Any])]): Snapshot = {
-    // phase 1: checkpoint meta, streamed (json) or projected (parquet —
-    // two small columns, add rows never touch the driver)
-    val cpIsParquet = Files.exists(checkpointFileParquet(cv))
-    val metaCp =
-      if (cpIsParquet)
-        parseCommit(ParquetCheckpoint.readMetaDoc(checkpointFileParquet(cv)))
-      else {
-        val metaSb = new StringBuilder
-        val linesIt = Files.lines(checkpointFile(cv))
-        try linesIt.iterator().asScala.foreach { line =>
-          if (line.nonEmpty && !isAddLine(line)) {
-            metaSb.append(line).append('\n'); ()
-          }
-        } finally linesIt.close()
-        parseCommit(metaSb.toString)
+    // phase 1: checkpoint meta, streamed — add lines never touch the driver
+    val metaSb = new StringBuilder
+    val linesIt = Files.lines(checkpointFile(cv))
+    try linesIt.iterator().asScala.foreach { line =>
+      if (line.nonEmpty && !isAddLine(line)) {
+        metaSb.append(line).append('\n'); ()
       }
+    } finally linesIt.close()
+    val metaCp = parseCommit(metaSb.toString)
     var schemaJson: String = metaCp.schemaJson.orNull
     var txns = metaCp.txns
     var cons = metaCp.constraints.getOrElse(Map.empty[String, String])
@@ -1729,12 +1550,8 @@ final class GraftTable(val tablePath: String) {
     }
     // phase 3: executor-side prune of checkpoint adds; suffix-touched
     // paths are excluded there and re-resolved from the delta below
-    val survivors =
-      if (cpIsParquet) distributedPruneSurvivorsParquet(
-        spark, checkpointFileParquet(cv).toString, schemaJson,
-        metaCp.schemaJson, delta.keySet.toSet, ser)
-      else distributedPruneSurvivors(
-        spark, checkpointFile(cv).toString, schemaJson, delta.keySet.toSet, ser)
+    val survivors = distributedPruneSurvivors(
+      spark, checkpointFile(cv).toString, schemaJson, delta.keySet.toSet, ser)
     val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     var addedIn = Map.empty[String, Long]
     survivors.foreach { case (a, vOpt) =>
@@ -1961,16 +1778,16 @@ final class GraftTable(val tablePath: String) {
     val changeRoot = root.resolve(ChangeDir)
     Files.createDirectories(changeRoot)
     val stage = root.resolve(s"_staged_cdc_${UUID.randomUUID().toString.take(8)}")
-    val files = ParquetWrites.write(changes,
-      ParquetWrites.factory(changes.sparkSession, changes.schema, stage.toString))
-    val batch = UUID.randomUUID().toString.take(8)
-    val refs = files.sorted.zipWithIndex.map { case (f, i) =>
-      val name = s"cdf-$batch-$i.parquet"
-      Files.move(Paths.get(f.path), changeRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      (s"$ChangeDir/$name", f.rows)
-    }
-    graft.core.Fs.rmTree(stage.toFile)
-    refs
+    try {
+      val files = ParquetWrites.write(changes,
+        ParquetWrites.factory(changes.sparkSession, changes.schema, stage.toString))
+      val batch = UUID.randomUUID().toString.take(8)
+      files.sorted.zipWithIndex.map { case (f, i) =>
+        val name = s"cdf-$batch-$i.parquet"
+        Files.move(Paths.get(f.path), changeRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+        (s"$ChangeDir/$name", f.rows)
+      }
+    } finally graft.core.Fs.rmTree(stage.toFile)
   }
 
   /** Net row changes of a rewrite, as a stageable PHYSICAL-named frame:
@@ -2336,12 +2153,12 @@ final class GraftTable(val tablePath: String) {
     // sorted: a task-local sort leaves every file's rows in order.
     val orderPhys: Seq[String] = head.toSeq.flatMap(h => writeOrderPhys(h, df.schema))
     val lead = tupleLead ++ orderPhys.map(col)
-    val files = ParquetWrites.write(
-      if (lead.isEmpty) df else df.sortWithinPartitions(lead: _*),
-      writerFactory(df.sparkSession, head, df.schema, stage.toString))
-    val adds = adoptStaged(files, sortedBy = orderPhys)
-    graft.core.Fs.rmTree(stage.toFile)
-    adds
+    try {
+      val files = ParquetWrites.write(
+        if (lead.isEmpty) df else df.sortWithinPartitions(lead: _*),
+        writerFactory(df.sparkSession, head, df.schema, stage.toString))
+      adoptStaged(files, sortedBy = orderPhys)
+    } finally graft.core.Fs.rmTree(stage.toFile)
   }
 
   /** Adopt staged files: the stats their writing tasks recorded become
@@ -3426,19 +3243,6 @@ final class GraftTable(val tablePath: String) {
         require(n >= 0,
           s"txlog: $LogRetentionProp must be >= 0, got $n")
       }
-      if (name == CheckpointFormatProp)
-        require(value == "json" || value == "parquet" || value == "auto",
-          s"txlog: $CheckpointFormatProp must be 'json', 'parquet' or " +
-            s"'auto', got '$value'")
-      if (name == CheckpointAutoMinAddsProp) {
-        val n = try value.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"txlog: $CheckpointAutoMinAddsProp must be an integer add " +
-              s"count, got '$value'")
-        }
-        require(n >= 0,
-          s"txlog: $CheckpointAutoMinAddsProp must be >= 0, got $n")
-      }
       if (name == SumColumnsProp) {
         val schema = snap.schema
         value.split(",").map(_.trim).filter(_.nonEmpty).foreach { c =>
@@ -4454,33 +4258,16 @@ final class GraftTable(val tablePath: String) {
     // actually using the feature)
     val cons = if (snap.constraints.nonEmpty) Some(snap.constraints) else None
     val prps = if (snap.props.nonEmpty) Some(snap.props) else None
-    val fmtProp = snap.props.get(TxLog.CheckpointFormatProp)
-    val autoMin = snap.props.get(TxLog.CheckpointAutoMinAddsProp)
-      .map(_.trim.toInt).getOrElse(TxLog.CheckpointAutoMinAddsDefault)
-    if (fmtProp.contains("parquet") ||
-        (fmtProp.contains("auto") && snap.files.size >= autoMin))
-      // columnar checkpoint: meta doc by the shared renderer, adds
-      // streamed row-at-a-time through the parquet writer
-      ParquetCheckpoint.write(
-        checkpointFileParquet(snap.version),
-        renderMetaLines("checkpoint", snap.version, Some(snap.schemaJson),
-          snap.files, snap.txns, cons, prps,
-          rowIdWatermark =
-            if (snap.rowIdWatermark > 0L) Some(snap.rowIdWatermark) else None)
-          .mkString("\n"),
-        snap.schema,
-        snap.files.iterator.map(a => (a, snap.addedIn.get(a.path))))
-    else
-      // streamed: a million-add checkpoint writes line-at-a-time, never
-      // materializing the document on the driver (lost race == same
-      // content — renderCommitLines is the ONE rendering path)
-      putIfAbsentLines(
-        renderCommitLines("checkpoint", snap.version, Some(snap.schemaJson),
-          snap.files, Nil, snap.txns, addVersions = snap.addedIn,
-          constraints = cons, props = prps,
-          rowIdWatermark =
-            if (snap.rowIdWatermark > 0L) Some(snap.rowIdWatermark) else None),
-        checkpointFile(snap.version))
+    // streamed: a million-add checkpoint writes line-at-a-time, never
+    // materializing the document on the driver (lost race == same
+    // content — renderCommitLines is the ONE rendering path)
+    putIfAbsentLines(
+      renderCommitLines("checkpoint", snap.version, Some(snap.schemaJson),
+        snap.files, Nil, snap.txns, addVersions = snap.addedIn,
+        constraints = cons, props = prps,
+        rowIdWatermark =
+          if (snap.rowIdWatermark > 0L) Some(snap.rowIdWatermark) else None),
+      checkpointFile(snap.version))
     val hint = JsonMethods.compact(JsonMethods.render(
       JObject("version" -> JLong(snap.version))))
     val tmp = logDir.resolve(s".hint-${UUID.randomUUID()}")
@@ -4557,12 +4344,11 @@ final class GraftTable(val tablePath: String) {
     val it = Files.list(logDir)
     val victims =
       try it.iterator().asScala.map(_.getFileName.toString).filter { n =>
-        if (n.endsWith(".checkpoint.json") || n.endsWith(".checkpoint.parquet")) {
+        if (n.endsWith(".checkpoint.json")) {
           // same all-digits guard as the commit branch: a stray
-          // non-numeric *.checkpoint.* must be skipped, not throw
+          // non-numeric *.checkpoint.json must be skipped, not throw
           // NumberFormatException out of a manual truncate_log call
           val v = n.stripSuffix(".checkpoint.json")
-            .stripSuffix(".checkpoint.parquet")
           v.nonEmpty && v.forall(_.isDigit) && v.toLong < cpF
         } else if (n.endsWith(".json") && !n.startsWith("."))
           n.stripSuffix(".json").forall(_.isDigit) &&

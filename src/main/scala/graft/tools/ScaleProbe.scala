@@ -2,30 +2,27 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.medallion.{GraftTable, ParquetCheckpoint, TxLog}
+import graft.medallion.{GraftTable, TxLog}
 import org.apache.spark.sql.types._
 
 /** Metadata-plane scale probe: build a SYNTHETIC commit log with n adds
   * (no data files — this measures the driver/metadata path alone) and
   * time the operations that bound a 100 TB table's planning:
   *
-  *   1. checkpoint WRITE (streamed: JSON line-at-a-time, or parquet
-  *      row-group-at-a-time),
+  *   1. checkpoint WRITE (streamed JSON, line-at-a-time),
   *   2. driver-side snapshot RESOLUTION (parse + live-set replay) —
   *      SKIPPED above 2·10⁶ adds, where full driver materialization is
   *      the documented anti-path (the distributed prune below is the
   *      production route at that scale),
-  *   3. DISTRIBUTED planning prune (executors parse/scan, survivors-only
-  *      collect) — for parquet checkpoints this is a real columnar scan
-  *      with row-group min/max skipping on the typed bound columns.
+  *   3. DISTRIBUTED planning prune (executors parse, survivors-only
+  *      collect).
   *
   * Prints one JSON line. Run:
   * {{{
-  * sbt "runMain graft.tools.ScaleProbe 1000000"          // json format
-  * sbt "runMain graft.tools.ScaleProbe 10000000 parquet" // columnar
+  * sbt "runMain graft.tools.ScaleProbe 1000000"
   * }}}
-  * DistributedPruneSpec / ParquetCheckpointSpec pin the same machinery
-  * at 2·10⁵ / 2·10⁴ on every test run; this main is the manual top-end
+  * DistributedPruneSpec pins the same machinery at 2·10⁵ adds on every
+  * test run; this main is the manual top-end
   * measurement. The add stream is a lazy view — 10⁷ adds never
   * materialize on the probe's own heap either.
   */
@@ -33,8 +30,6 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val format = args.drop(1).headOption.getOrElse("json")
-    require(format == "json" || format == "parquet", s"bad format $format")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("x", DoubleType)))
     val dir = new java.io.File(
@@ -58,19 +53,11 @@ object ScaleProbe {
             (i * 100L).toString, (i * 100L + 99L).toString, Some(0L)),
           "x" -> TxLog.ColStats("num", "0.0", "1.0", Some(0L))))
     }
-    val cpPath =
-      if (format == "parquet") logDir.resolve(f"${1L}%020d.checkpoint.parquet")
-      else logDir.resolve(f"${1L}%020d.checkpoint.json")
+    val cpPath = logDir.resolve(f"${1L}%020d.checkpoint.json")
     val (_, writeS) = timed {
-      if (format == "parquet")
-        ParquetCheckpoint.write(cpPath,
-          TxLog.renderMetaLines("checkpoint", 1L, Some(schema.json), Nil,
-            Map.empty, None, None).mkString("\n"),
-          schema, adds.iterator.map(a => (a, None)))
-      else
-        TxLog.putIfAbsentLines(
-          TxLog.renderCommitLines("checkpoint", 1L, Some(schema.json), adds, Nil),
-          cpPath)
+      TxLog.putIfAbsentLines(
+        TxLog.renderCommitLines("checkpoint", 1L, Some(schema.json), adds, Nil),
+        cpPath)
     }
     val cpBytes = Files.size(cpPath)
 
@@ -106,7 +93,7 @@ object ScaleProbe {
       s"expected the 100-file survivor range, got ${pruned.files.size}")
 
     println(
-      f"""{"adds":$n,"format":"$format","checkpoint_bytes":$cpBytes,""" +
+      f"""{"adds":$n,"checkpoint_bytes":$cpBytes,""" +
         f""""write_s":$writeS%.2f,""" +
         f""""resolve_cold_s":$resolveS%.2f,"resolve_cached_s":$cachedS%.2f,""" +
         f""""survivors":${pruned.files.size},"prune_distributed_s":$distS%.2f,""" +

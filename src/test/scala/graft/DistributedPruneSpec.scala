@@ -47,6 +47,13 @@ class DistributedPruneSpec extends SparkSpec {
     new GraftTable(dir.getAbsolutePath)
   }
 
+  /** Run `body` with the planning dispatch forced onto the distributed
+    * path, whatever the checkpoint's size. */
+  private def forcedDistributed[T](body: => T): T = {
+    TxLog.distributedPruneMinBytes = 1L
+    try body finally TxLog.distributedPruneMinBytes = TxLog.DistributedPruneMinBytes
+  }
+
   private def fileSet(s: TxLog.Snapshot): Set[(String, Long, String, String)] =
     s.files.map(a => (a.path, s.addedIn.getOrElse(a.path, -1L),
       a.stats("id").min, a.stats("id").max)).toSet
@@ -83,14 +90,9 @@ class DistributedPruneSpec extends SparkSpec {
     // the session-aware overload dispatches to the distributed path
     // past the size threshold — force it with a tiny threshold and
     // require identical results
-    val prev = spark.conf.getOption(TxLog.DistributedPruneMinBytesConf)
-    spark.conf.set(TxLog.DistributedPruneMinBytesConf, "1")
-    try {
+    forcedDistributed {
       val viaOverload = t.prunedSnapshot(spark, constraints, -1L)
       assert(fileSet(viaOverload) === fileSet(driver))
-    } finally prev match {
-      case Some(v) => spark.conf.set(TxLog.DistributedPruneMinBytesConf, v)
-      case None => spark.conf.unset(TxLog.DistributedPruneMinBytesConf)
     }
   }
 
@@ -102,18 +104,13 @@ class DistributedPruneSpec extends SparkSpec {
     t.append((0L until 1000L).map(i => (i, i * 2.0)).toDF("id", "x")
       .repartition(8))
     t.checkpoint()
-    val prev = spark.conf.getOption(TxLog.DistributedPruneMinBytesConf)
-    spark.conf.set(TxLog.DistributedPruneMinBytesConf, "1")
-    try {
+    forcedDistributed {
       val df = spark.read.format("graft-table").load(dir.getAbsolutePath)
         .filter($"id" >= 100L && $"id" <= 199L)
       val rows = df.select("id", "x").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(rows === (100L to 199L).map(i => i -> i * 2.0).toMap,
         "distributed-pruned DSv2 scan must return exactly the range rows")
-    } finally prev match {
-      case Some(v) => spark.conf.set(TxLog.DistributedPruneMinBytesConf, v)
-      case None => spark.conf.unset(TxLog.DistributedPruneMinBytesConf)
     }
   }
 
@@ -139,17 +136,12 @@ class DistributedPruneSpec extends SparkSpec {
     val dist = t.prunedSnapshotDistributed(spark, cv, t.latestVersion(), constraints)
     assert(fileSet(dist) === fileSet(driver))
     // and through the DSv2 scan under a forced-low threshold
-    val prev = spark.conf.getOption(TxLog.DistributedPruneMinBytesConf)
-    spark.conf.set(TxLog.DistributedPruneMinBytesConf, "1")
-    try {
+    forcedDistributed {
       val rows = spark.read.format("graft-table").load(dir.getAbsolutePath)
         .filter($"key" >= 100L && $"key" <= 149L)
         .select("key", "x").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(rows === (100L to 149L).map(i => i -> i * 3.0).toMap)
-    } finally prev match {
-      case Some(v) => spark.conf.set(TxLog.DistributedPruneMinBytesConf, v)
-      case None => spark.conf.unset(TxLog.DistributedPruneMinBytesConf)
     }
   }
 
@@ -194,10 +186,14 @@ class DistributedPruneSpec extends SparkSpec {
     val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
     bm.serialize(buf)
     val dv64 = java.util.Base64.getEncoder.encodeToString(buf.array())
+    // bloom/HLL/sum sketches ride along: the JSON checkpoint must
+    // round-trip every stats field exactly, on both resolution paths
     val adds = (0 until 100).map { i =>
       TxLog.AddFile(f"part-dv-$i%04d.parquet", 100L, 4096L,
         stats = Map("id" -> TxLog.ColStats("num",
-          (i * 10L).toString, (i * 10L + 9L).toString, Some(0L))),
+          (i * 10L).toString, (i * 10L + 9L).toString, Some(0L),
+          bloom = Some("QUJDRA=="), hll = Some("SEZMTA=="),
+          sum = Some((i * 100L + 45L).toString))),
         dv = if (i % 2 == 0) Some(dv64) else None,
         dvRows = if (i % 2 == 0) 2L else 0L)
     }
@@ -209,7 +205,9 @@ class DistributedPruneSpec extends SparkSpec {
       ("id", Some(100L), Some(139L))) // files 10..13: two DV'd, two plain
     val dist = t.prunedSnapshotDistributed(spark, 1L, 1L, constraints)
     assert(fileSet(dist) === fileSet(t.prunedSnapshot(constraints, -1L)))
+    assert(t.snapshot().files === adds, "driver resolution is exact")
     val byPath = dist.files.map(a => a.path -> a).toMap
+    assert(dist.files.forall(a => adds.contains(a)), "distributed survivors are exact")
     assert(byPath(f"part-dv-${10}%04d.parquet").dv === Some(dv64))
     assert(byPath(f"part-dv-${10}%04d.parquet").effectiveRows === 98L)
     assert(byPath(f"part-dv-${11}%04d.parquet").dv === None)
@@ -242,5 +240,68 @@ class DistributedPruneSpec extends SparkSpec {
     // provenance: suffix adds attribute their committing version
     assert(dist.addedIn("part-suffix-new.parquet") === 2L)
     assert(dist.addedIn("part-synth-0000100.parquet") === 1L)
+  }
+
+  test("distributed prune is exact across schema evolution after a checkpoint") {
+    import spark.implicits._
+    val t = new GraftTable(new java.io.File(
+      s"target/tmp/distprune_evo_${java.util.UUID.randomUUID().toString.take(8)}")
+      .getAbsolutePath)
+    t.create(StructType(Seq(StructField("a", LongType),
+      StructField("b", LongType), StructField("c", LongType))))
+    // one file per append. b's range [1000, 1005] never overlaps the
+    // c-constraint [20, 30] below: a prune that read b's checkpoint
+    // bounds as c's would silently exclude live files
+    (0 until 6).foreach { i =>
+      t.append(Seq((i.toLong, 1000L + i, i * 10L)).toDF("a", "b", "c")) }
+    val cv = t.checkpoint()
+    t.dropColumn("a") // c's field index shifts 2 -> 1 in the evolved schema
+    t.append(Seq((1006L, 60L)).toDF("b", "c"))
+    val target = t.latestVersion()
+    val cons = Seq[(String, Option[Any], Option[Any])](
+      ("c", Some(20L), Some(30L)))
+    val driver = t.prunedSnapshot(cons, target)
+    assert(driver.files.size === 2, "files with c in {20,30} survive")
+    val dist = t.prunedSnapshotDistributed(spark, cv, target, cons)
+    assert(dist.files.map(_.path).toSet === driver.files.map(_.path).toSet,
+      "a post-checkpoint drop must not change the distributed survivor set")
+    // a column ADDED after the checkpoint has no stats in it: every
+    // checkpoint file survives a constraint on it, as on the driver
+    t.addColumns(Seq(StructField("d", LongType)))
+    val target2 = t.latestVersion()
+    val consD = Seq[(String, Option[Any], Option[Any])](
+      ("d", Some(1L), Some(2L)))
+    val distD = t.prunedSnapshotDistributed(spark, cv, target2, consD)
+    assert(distD.files.map(_.path).toSet ===
+      t.prunedSnapshot(consD, target2).files.map(_.path).toSet)
+    assert(distD.files.size >= 6, "pre-add files have no 'd' stats — all kept")
+  }
+
+  test("type widening before and after a checkpoint: distributed prune is exact") {
+    import spark.implicits._
+    val t = new GraftTable(new java.io.File(
+      s"target/tmp/distprune_widen_${java.util.UUID.randomUUID().toString.take(8)}")
+      .getAbsolutePath)
+    t.create(StructType(Seq(
+      StructField("id", IntegerType), StructField("pay", IntegerType))))
+    t.setProperty(TxLog.TypeWideningProp, "true")
+    (0 until 4).foreach(i => t.append(Seq((i * 10, 7)).toDF("id", "pay")))
+    t.widenColumn("id", LongType) // BEFORE the checkpoint
+    (4 until 8).foreach(i => t.append(Seq((i * 10L, 7)).toDF("id", "pay")))
+    val cv = t.checkpoint()
+    t.widenColumn("pay", LongType) // AFTER the checkpoint
+    t.append(Seq((80L, 7L)).toDF("id", "pay"))
+    val target = t.latestVersion()
+    for (cons <- Seq(
+      Seq[(String, Option[Any], Option[Any])](("id", Some(20L), Some(50L))),
+      Seq[(String, Option[Any], Option[Any])](("pay", Some(7L), Some(7L))))) {
+      val driver = t.prunedSnapshot(cons, target)
+      val dist = t.prunedSnapshotDistributed(spark, cv, target, cons)
+      assert(dist.files.map(_.path).toSet === driver.files.map(_.path).toSet,
+        s"widen-straddling prune diverged for $cons")
+    }
+    // the mid-range id prune actually prunes (not vacuously equal)
+    assert(t.prunedSnapshot(
+      Seq(("id", Some(20L), Some(50L))), target).files.size === 4)
   }
 }

@@ -662,22 +662,69 @@ class TxLogSpec extends SparkSpec {
     assert(logText(t, t.latestVersion()).contains("columnMapping"))
     // ... and the table stays readable by THIS reader (round trip)
     assert(t.read(spark).count() === 42L)
-    // a commit demanding an unknown future feature fails with its NAME,
-    // before the reader trips over the gated action itself
-    val future = freshTable("proto_future")
-    future.append(df(Seq(1L -> "a")))
-    val v = future.latestVersion() + 1
-    val content =
-      """{"a":"info","op":"append","readVersion":1}
-        |{"a":"protocol","readerFeatures":["vectorClocks"]}
-        |{"a":"shard-map","path":"x"}""".stripMargin
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      future.tablePath, "_graft_log", "%020d.json".format(v)),
-      content.getBytes("UTF-8"))
-    val ex = intercept[IllegalStateException](future.snapshot())
-    assert(ex.getMessage.contains("vectorClocks") &&
+    // a commit demanding a feature this reader lacks — an unknown future
+    // one, or the columnar checkpoint older builds wrote — fails with its
+    // NAME, before the reader trips over the gated action itself
+    Seq("vectorClocks", "parquetCheckpoint").foreach { feature =>
+      val future = freshTable(s"proto_$feature")
+      future.append(df(Seq(1L -> "a")))
+      val v = future.latestVersion() + 1
+      val content =
+        s"""{"a":"info","op":"append","readVersion":1}
+          |{"a":"protocol","readerFeatures":["$feature"]}
+          |{"a":"shard-map","path":"x"}""".stripMargin
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        future.tablePath, "_graft_log", "%020d.json".format(v)),
+        content.getBytes("UTF-8"))
+      val ex = intercept[IllegalStateException](future.snapshot())
+      assert(ex.getMessage.contains(feature) &&
+        ex.getMessage.contains("reader feature"),
+        s"expected a NAMED missing capability, got: ${ex.getMessage}")
+    }
+  }
+
+  test("a log holding a columnar checkpoint fails by feature name, never reads empty") {
+    val t = freshTable("legacy_pq_ckpt")
+    t.append(df(Seq(1L -> "a", 2L -> "b")))
+    t.append(df(Seq(3L -> "c")))
+    // what an older build left after truncation: a columnar checkpoint
+    // at the head and no commit file at or below it
+    val logDir = Paths.get(t.tablePath, "_graft_log")
+    Files.write(logDir.resolve("%020d.checkpoint.parquet".format(2L)),
+      "PAR1".getBytes("UTF-8"))
+    (1L to 2L).foreach(v => Files.delete(logDir.resolve("%020d.json".format(v))))
+    val ex = intercept[IllegalStateException](t.snapshot())
+    assert(ex.getMessage.contains("parquetCheckpoint") &&
       ex.getMessage.contains("reader feature"),
-      s"expected a NAMED missing capability, got: ${ex.getMessage}")
+      s"expected the feature's NAME, got: ${ex.getMessage}")
+    // the old format property is now an ordinary free-form key: it
+    // gates nothing and checkpoints stay JSON lines
+    val plain = freshTable("legacy_pq_prop")
+    plain.append(df(Seq(1L -> "a")))
+    val pv = plain.setProperty("checkpoint.format", "parquet")
+    assert(!new String(Files.readAllBytes(Paths.get(plain.tablePath,
+      "_graft_log", "%020d.json".format(pv))), "UTF-8").contains("parquetCheckpoint"))
+    val cv = plain.checkpoint()
+    assert(Files.exists(Paths.get(plain.tablePath, "_graft_log",
+      "%020d.checkpoint.json".format(cv))))
+    assert(plain.snapshot().files.size === 1)
+  }
+
+  test("a failed batch write leaves no staging directory behind") {
+    val t = freshTable("stage_fail")
+    t.append(df(Seq(0L -> "seed")))
+    // partition 0 writes its file; partition 1 throws once it has
+    val boom = udf { (id: Long) =>
+      if (id >= 2L) { Thread.sleep(500); throw new IllegalStateException("boom") }
+      id
+    }
+    val batch = spark.range(0L, 4L, 1L, 2)
+      .select(boom(col("id")).as("id"), lit("x").as("name"))
+    intercept[Exception](t.append(batch))
+    val staged = Option(new java.io.File(t.tablePath).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("_staged_"))
+    assert(staged.isEmpty, s"staging directories leaked: $staged")
+    assert(t.read(spark).count() === 1L)
   }
 
   test("checkpoint preserves per-file commit provenance for the DSv2 _commit_version tag") {
