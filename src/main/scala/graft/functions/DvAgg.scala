@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Per-file deletion-vector builder for merge-on-read DELETE
-  * ([[graft.medallion.TxLog]] `deleteRows`): input is a matched
-  * parquet `_metadata.row_index`, buffer a RoaringBitmap, output the
+  * ([[graft.medallion.TxLog]] `deleteRows`): input is a matched row's
+  * physical index in its file (the scan's `_pos`), buffer a
+  * RoaringBitmap, output the
   * portable-serialized bitmap bytes — or `null` when the optimized
   * bitmap exceeds `maxBytes`, which routes that file to the
   * copy-on-write rewrite leg WITHOUT its indexes (or bytes) ever

@@ -6,6 +6,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters.IteratorHasAsScala
 
+import graft.streaming.GraftTableV2
+
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -118,7 +120,7 @@ object TxLog {
     * relocatable), row/byte counts, and optional per-column stats.
     *
     * `dv` is the file's DELETION VECTOR — a serialized RoaringBitmap
-    * (base64) of the row indexes (parquet `_metadata.row_index` order)
+    * (base64) of the PHYSICAL row indexes within the file
     * deleted merge-on-read: the file's bytes are immutable, the bitmap
     * says which of its rows no longer exist. `dvRows` is its exact
     * cardinality, persisted so metadata-only row accounting
@@ -233,13 +235,6 @@ object TxLog {
     if (!isMapped(schema)) df
     else df.select(df.columns.toIndexedSeq.map(c =>
       col(c).as(physicalOf(schema, c))): _*)
-
-  /** Project a physical-named frame back to the logical schema (field
-    * metadata carried, so a re-staged frame still knows its mapping). */
-  private[graft] def toLogical(df: DataFrame, schema: StructType): DataFrame =
-    if (!isMapped(schema)) df
-    else df.select(schema.fields.toIndexedSeq.map(f =>
-      col(physicalName(f)).as(f.name, f.metadata)): _*)
 
   /** A fresh physical name for a new column on a MAPPED table: unique
     * across the table's whole lifetime (a re-added name must never
@@ -661,6 +656,28 @@ object TxLog {
     case _ => true
   }
 
+  /** `snap` with only the files whose stats overlap EVERY per-column
+    * [lo, hi] bound. Columns without stats never prune; NaN/Infinity
+    * bounds are dropped (decimal stats cannot answer them) — both
+    * conservative, row semantics stay with the caller's residual
+    * filter. */
+  private[graft] def pruned(
+      snap: Snapshot, constraints: Seq[(String, Option[Any], Option[Any])]): Snapshot = {
+    val usable = constraints.filter { case (_, lo, hi) =>
+      lo.forall(isFiniteStat) && hi.forall(isFiniteStat)
+    }
+    if (usable.isEmpty) return snap
+    snap.copy(files = snap.files.filter { f =>
+      usable.forall { case (c, lo, hi) =>
+        val phys = physicalOf(snap.schema, c)
+        f.stats.get(phys).forall(_.overlaps(
+          lo.map(statsLiteral), hi.map(statsLiteral))) &&
+          PartitionSpec.admits(snap.schema, f, phys, lo, hi)
+      }
+    })
+  }
+
+
   private[graft] def bloomHashes(value: Any, dt: DataType): Option[(Long, Long)] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     if (value == null) return None
@@ -798,6 +815,10 @@ object TxLog {
     bm.serialize(buf)
     java.util.Base64.getEncoder.encodeToString(buf.array())
   }
+
+  /** `a` with `bm` as its deletion vector. */
+  private[graft] def withDv(a: AddFile, bm: org.roaringbitmap.RoaringBitmap): AddFile =
+    a.copy(dv = Some(dvSerialize(bm)), dvRows = bm.getLongCardinality)
 
   private[graft] def dvDeserialize(b64: String): org.roaringbitmap.RoaringBitmap = {
     val bm = new org.roaringbitmap.RoaringBitmap()
@@ -1378,11 +1399,12 @@ final class GraftTable(val tablePath: String) {
       live.values.toSeq, txns, addedIn, cons, prps, hwm)
   }
 
-  /** Read the table at `version` (default head). The scan is a plain
-    * multi-file parquet read of exactly the live files — pushdown,
-    * pruning and codegen all apply as usual. */
+  /** Read the table at `version` (default head) through the table's
+    * DSv2 scan ([[GraftTableV2.frame]]) over exactly the live files —
+    * deletion vectors, pushdown, pruning and codegen all apply as on a
+    * SQL read. */
   def read(spark: SparkSession, version: Long = -1L): DataFrame =
-    readFiles(spark, snapshot(version), identity)
+    GraftTableV2.frame(spark, this, snapshot(version))
 
   /** Stats-pruned range read: only files whose [min,max] for `column`
     * overlaps [lower,upper] are scanned (both bounds inclusive; pass
@@ -1398,53 +1420,24 @@ final class GraftTable(val tablePath: String) {
     val snap = prunedSnapshot(
       spark, Seq((column, lower, upper)), version)
     val physCol = physicalOf(snap.schema, column)
-    val pruned = snap.copy(files = snap.files.filter(a =>
-      pointAdmits(snap.schema, a, physCol, column, lower, upper)))
-    readFiles(spark, pruned, { df =>
-      val c = col(column)
-      (lower, upper) match {
-        case (Some(l), Some(u)) => df.filter(c >= lit(l) && c <= lit(u))
-        case (Some(l), None) => df.filter(c >= lit(l))
-        case (None, Some(u)) => df.filter(c <= lit(u))
-        case (None, None) => df
-      }
-    })
+    val df = GraftTableV2.frame(spark, this, snap.copy(files = snap.files.filter(a =>
+      pointAdmits(snap.schema, a, physCol, column, lower, upper))))
+    val c = col(column)
+    (lower, upper) match {
+      case (Some(l), Some(u)) => df.filter(c >= lit(l) && c <= lit(u))
+      case (Some(l), None) => df.filter(c >= lit(l))
+      case (None, Some(u)) => df.filter(c <= lit(u))
+      case (None, None) => df
+    }
   }
-
-  /** Multi-column stats-pruned read for pushdown callers (the batch
-    * `format("graft-table")` relation): a file survives only if EVERY
-    * per-column [lo, hi] bound overlaps its stats; columns without
-    * stats never prune (conservative). Residual row filtering is the
-    * caller's job — stats speak at FILE granularity only. */
-  private[graft] def readPruned(
-      spark: SparkSession,
-      constraints: Seq[(String, Option[Any], Option[Any])],
-      version: Long = -1L): DataFrame =
-    readFiles(spark, prunedSnapshot(constraints, version), identity)
 
   /** The snapshot with only the files whose stats overlap EVERY
-    * per-column [lo, hi] bound — the metadata half of [[readPruned]],
-    * for scan planners (the DSv2 relation) that build their own reads.
-    * Columns without stats never prune; NaN/Infinity bounds are dropped
-    * (decimal stats cannot answer them) — both conservative, row
-    * semantics stay with the caller's residual filter. */
+    * per-column [lo, hi] bound ([[TxLog.pruned]]), for scan planners
+    * that build their own reads. */
   private[graft] def prunedSnapshot(
       constraints: Seq[(String, Option[Any], Option[Any])],
-      version: Long = -1L): Snapshot = {
-    val usable = constraints.filter { case (_, lo, hi) =>
-      lo.forall(isFiniteStat) && hi.forall(isFiniteStat)
-    }
-    val snap = snapshot(version)
-    val live = snap.files.filter { f =>
-      usable.forall { case (c, lo, hi) =>
-        val phys = physicalOf(snap.schema, c)
-        f.stats.get(phys).forall(_.overlaps(
-          lo.map(statsLiteral), hi.map(statsLiteral))) &&
-          PartitionSpec.admits(snap.schema, f, phys, lo, hi)
-      }
-    }
-    snap.copy(files = live)
-  }
+      version: Long = -1L): Snapshot =
+    pruned(snapshot(version), constraints)
 
   /** Planning-path [[prunedSnapshot]] that BOUNDS DRIVER STATE on
     * million-file tables. The driver path parses the whole checkpoint
@@ -1674,94 +1667,17 @@ final class GraftTable(val tablePath: String) {
         }
     }
 
-  private def readFiles(
-      spark: SparkSession, snap: Snapshot, residual: DataFrame => DataFrame): DataFrame =
-    if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else
-      // explicit schema: file-order inference must not decide column
-      // order after a schema-widening overwrite. The bytes are read
-      // under PHYSICAL names and projected back to logical — a no-op
-      // select on unmapped tables
-      residual(toLogical(
-        readPhysicalFiles(spark, physicalSchema(snap.schema), snap.files),
-        snap.schema))
-
-  /** Read exactly `files` under the PHYSICAL schema with each file's
-    * deletion vector applied — the ONE raw-bytes entry point every
-    * snapshot read and every rewrite (compact / zorder / upsert /
-    * delete survivors) goes through, so DV'd rows can never resurrect.
-    *
-    * DV-free files stream through one plain vectorized parquet scan
-    * (unchanged plan). DV'd files read with their parquet row index and
-    * anti-join the deleted (file, row_index) pairs — pairs come from
-    * the log's bitmaps, whose total size the [[deleteRows]] thresholds
-    * bound (an over-threshold DV becomes a rewrite instead), so the
-    * broadcast side stays metadata-sized at any table size; a purge or
-    * any compaction retires it entirely. */
-  private[graft] def readPhysicalFiles(
-      spark: SparkSession, physSchema: StructType,
-      files: Seq[AddFile]): DataFrame = {
-    def cols = physSchema.fields.toIndexedSeq.map(f => col(s"`${f.name}`"))
-    def plain(fs: Seq[AddFile]): DataFrame =
-      spark.read.schema(physSchema)
-        .parquet(fs.map(a => root.resolve(a.path).toString): _*)
-    val (dvd, clean) = files.partition(_.dv.isDefined)
-    if (dvd.isEmpty) return plain(files)
-    // deleted positions expand EXECUTOR-side from the compressed
-    // bitmaps (positionsDf) — a run-encoded DV holds millions of
-    // indexes in a few KiB, and materializing them as driver pairs
-    // would scale with deleted-row count, not file count. Staged file
-    // names are unique within a table (part-<batch>-<i>), so the file
-    // NAME keys the join — no file_path URI-format coupling.
-    val pos = positionsDf(spark, dvd.map(a =>
-      a.path -> java.util.Base64.getDecoder.decode(a.dv.get)))
-      .toDF("__dv_file", "__dv_idx")
-    val surviving = plain(dvd)
-      .withColumn("__dv_file",
-        substring_index(col("_metadata.file_path"), "/", -1))
-      .withColumn("__dv_idx", col("_metadata.row_index"))
-      .join(pos, Seq("__dv_file", "__dv_idx"), "left_anti")
-      .select(cols: _*)
-    if (clean.isEmpty) surviving else plain(clean).unionAll(surviving)
-  }
-
-  /** [[readPhysicalFiles]] with each row's STABLE row id attached as a
-    * trailing [[TxLog.RowIdPhysCol]] long column: the file's
-    * materialized id column when present (the parquet read null-fills
-    * files lacking it), else baseRowId + physical row index, else null
-    * (pre-tracking file — honest degradation). DV'd rows drop AFTER
-    * their positions counted, so surviving ids never shift. One scan +
-    * one broadcast name-join against the metadata-sized base map. */
-  private[graft] def readPhysicalFilesWithRowIds(
-      spark: SparkSession, physSchema: StructType,
-      files: Seq[AddFile]): DataFrame = {
-    import spark.implicits._
-    require(!physSchema.fieldNames.contains(RowIdPhysCol),
-      s"txlog: physical schema already claims $RowIdPhysCol")
-    val readSchema = StructType(physSchema.fields :+
-      StructField(RowIdPhysCol, LongType, nullable = true))
-    val raw = spark.read.schema(readSchema)
-      .parquet(files.map(a => root.resolve(a.path).toString): _*)
-      .withColumn("__rt_file",
-        substring_index(col("_metadata.file_path"), "/", -1))
-      .withColumn("__rt_idx", col("_metadata.row_index"))
-    val bases = files.map(a => (a.path, a.baseRowId))
-      .toDF("__rt_file", "__rt_base")
-    val withId = raw.join(broadcast(bases), Seq("__rt_file"), "left")
-      .withColumn(RowIdPhysCol,
-        coalesce(col(s"`$RowIdPhysCol`"), col("__rt_base") + col("__rt_idx")))
-    val dvd = files.filter(_.dv.isDefined)
-    val survived =
-      if (dvd.isEmpty) withId
-      else withId.join(
-        positionsDf(spark, dvd.map(a =>
-          a.path -> java.util.Base64.getDecoder.decode(a.dv.get)))
-          .toDF("__rt_file", "__rt_idx"),
-        Seq("__rt_file", "__rt_idx"), "left_anti")
-    survived.select(physSchema.fields.toIndexedSeq.map(f =>
-      col(s"`${f.name}`")) :+ col(s"`$RowIdPhysCol`"): _*)
-  }
+  /** The rows of `files` for a rewrite, under PHYSICAL names ready to
+    * stage, read through the table's one scan ([[GraftTableV2.frame]])
+    * so deletion vectors apply exactly as on every read. With `rowIds`
+    * each row also carries its stable id as [[TxLog.RowIdPhysCol]],
+    * which the rewrite materializes instead of allocating new ids. */
+  private def rewriteRows(
+      spark: SparkSession, snap: Snapshot, files: Seq[AddFile],
+      rowIds: Boolean = false): DataFrame =
+    toPhysical(GraftTableV2.frame(spark, this, snap.copy(files = files),
+        if (rowIds) Seq(GraftTableV2.RowIdCol) else Nil), snap.schema)
+      .withColumnRenamed(GraftTableV2.RowIdCol, RowIdPhysCol)
 
   // ------------------------------------------------- change data feed
 
@@ -1805,11 +1721,6 @@ final class GraftTable(val tablePath: String) {
     require(!snap.schema.fieldNames.contains(ChangeTypeCol),
       s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
     val phys = physicalSchema(snap.schema)
-    def readOr(fs: Seq[AddFile]): DataFrame =
-      if (fs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], phys)
-      else readPhysicalFiles(spark, phys, fs)
     // ROW-TRACKING-aware diff (replaceFiles under rowTracking, when
     // every pre file carries rid info and the COW writer materialized
     // ids into the post files): the diff keys by (content, row id), so
@@ -1819,26 +1730,10 @@ final class GraftTable(val tablePath: String) {
     // content, same id); an UPDATE x=x cancels too. Default feed
     // consumers never see the column (the feed read's explicit schema
     // selects by name).
-    val (pre, post) =
-      if (!ridAware) (readOr(preFiles), readOr(postFiles))
-      else {
-        val ridSchema = StructType(phys.fields :+
-          StructField("__cdc_rid", LongType, nullable = true))
-        def emptyR = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ridSchema)
-        val p =
-          if (preFiles.isEmpty) emptyR
-          else readPhysicalFilesWithRowIds(spark, phys, preFiles)
-            .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
-        val q =
-          if (postFiles.isEmpty) emptyR
-          else spark.read
-            .schema(StructType(phys.fields :+
-              StructField(RowIdPhysCol, LongType, nullable = true)))
-            .parquet(postFiles.map(a => root.resolve(a.path).toString): _*)
-            .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
-        (p, q)
-      }
+    def side(fs: Seq[AddFile]): DataFrame =
+      rewriteRows(spark, snap, fs, rowIds = ridAware)
+        .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
+    val (pre, post) = (side(preFiles), side(postFiles))
     // ONE signed-count aggregate computes the whole symmetric multiset
     // difference (pre rows weigh +1, post rows -1; surviving copies
     // cancel to 0) — where a two-sided exceptAll would shuffle the
@@ -1918,7 +1813,8 @@ final class GraftTable(val tablePath: String) {
     require(sinceVersion <= head,
       s"txlog: readChangeFeed($sinceVersion) is ahead of head $head")
     val until = if (untilVersion < 0) head else math.min(untilVersion, head)
-    val schema = snapshot(until).schema
+    val untilSnap = snapshot(until)
+    val schema = untilSnap.schema
     val phys = physicalSchema(schema)
     // updateImages: the feed is built with an INTERNAL `__cdc_rid`
     // column (the stable row id a rid-aware cdcDiff staged; null for
@@ -1933,7 +1829,8 @@ final class GraftTable(val tablePath: String) {
         (col(ChangeTypeCol) +:
           (if (withRid) Seq(col("`__cdc_rid`")) else Nil)): _*)
     // pre-state entries (with their DVs as of v-1) read as deletes,
-    // post-state entries as inserts — both through the DV-aware reader
+    // post-state entries as inserts — both through the table's scan, at
+    // the until-schema
     def tagged(fs: Seq[AddFile], v: Long, kind: String): Option[DataFrame] =
       if (fs.isEmpty) None
       else {
@@ -1941,10 +1838,10 @@ final class GraftTable(val tablePath: String) {
           s"txlog: data file ${a.path} of commit $v was vacuumed — " +
             "readChangeFeed is behind the retention window; re-seed from " +
             "a snapshot read"))
-        val base = readPhysicalFiles(spark, phys, fs)
+        val base = GraftTableV2.frame(spark, this, untilSnap.copy(files = fs))
           .withColumn(ChangeTypeCol, lit(kind))
-        Some(logical(if (withRid)
-          base.withColumn("__cdc_rid", lit(null).cast(LongType)) else base))
+        Some(if (withRid)
+          base.withColumn("__cdc_rid", lit(null).cast(LongType)) else base)
       }
     val empty0a = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -2364,10 +2261,7 @@ final class GraftTable(val tablePath: String) {
       // `schema` is the LOGICAL commit schema (constraint expressions
       // speak logical names); the staged bytes carry physical names
       try enforceConstraintsImpl(
-        toLogical(
-          spark.read.schema(physicalSchema(schema))
-            .parquet(adds.map(a => root.resolve(a.path).toString): _*),
-          schema), cons)
+        GraftTableV2.frame(spark, this, Snapshot(0L, schema.json, adds)), cons)
       catch { case e: Throwable =>
         adds.foreach(a => Files.deleteIfExists(root.resolve(a.path)))
         throw e
@@ -2776,10 +2670,7 @@ final class GraftTable(val tablePath: String) {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           changes.drop("_deleted", "_op", seqCol).schema)
-      else
-        toLogical(
-          readPhysicalFiles(spark, physicalSchema(snap.schema), touched),
-          snap.schema)
+      else GraftTableV2.frame(spark, this, snap.copy(files = touched))
     val merged0 = Medallion.applyCdc(base, changes, key, seqCol)
     // row tracking: an UPDATED key keeps its base row's id, joined back
     // by key after the merge (the upsert contract treats `key` as a
@@ -2792,15 +2683,7 @@ final class GraftTable(val tablePath: String) {
       touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
     val merged =
       if (!tracked) merged0
-      else {
-        val keyed = readPhysicalFilesWithRowIds(
-          spark, physicalSchema(snap.schema), touched)
-          .select(col(s"`${physicalOf(snap.schema, key)}`").as(key),
-            col(s"`$RowIdPhysCol`"))
-          .groupBy(col(s"`$key`"))
-          .agg(min(col(s"`$RowIdPhysCol`")).as(RowIdPhysCol))
-        merged0.join(keyed, Seq(key), "left")
-      }
+      else merged0.join(rowIdsByKey(spark, snap, touched, key), Seq(key), "left")
     val adds0 = stageData(toPhysical(merged, snap.schema), Some(snap))
     val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
     // constraints check the WRITTEN rows (the merged file content), read
@@ -2827,6 +2710,17 @@ final class GraftTable(val tablePath: String) {
     v
   }
 
+  /** Each `key` of `files` with its row's stable id as [[RowIdPhysCol]]
+    * — how an upsert's post-image keeps the id of the row it updates
+    * (min id per key on a duplicate-keyed base, never a fan-out). */
+  private def rowIdsByKey(
+      spark: SparkSession, snap: Snapshot, files: Seq[AddFile],
+      key: String): DataFrame =
+    GraftTableV2.frame(spark, this, snap.copy(files = files),
+        Seq(GraftTableV2.RowIdCol))
+      .groupBy(col(s"`$key`"))
+      .agg(min(col(GraftTableV2.RowIdCol)).as(RowIdPhysCol))
+
   /** The merge-on-read leg of [[upsert]]: ONE tagged pass over the
     * touched files finds the matched positions (existing DVs applied —
     * an already-deleted row can never match again), the mergeable
@@ -2841,26 +2735,13 @@ final class GraftTable(val tablePath: String) {
   private def upsertMor(
       spark: SparkSession, snap: Snapshot, changes: DataFrame,
       key: String, seqCol: String, touched: Seq[AddFile]): Long = {
-    val phys = physicalSchema(snap.schema)
-    val physKey = physicalOf(snap.schema, key)
-    def tagged(): DataFrame = {
-      val raw = spark.read.schema(phys)
-        .parquet(touched.map(a => root.resolve(a.path).toString): _*)
-        .withColumn("__file",
-          substring_index(col("_metadata.file_path"), "/", -1))
-        .withColumn("__idx", col("_metadata.row_index"))
-      val dvd = touched.filter(_.dv.isDefined)
-      if (dvd.isEmpty) raw
-      else raw.join(
-        positionsDf(spark, dvd.map(a =>
-          a.path -> java.util.Base64.getDecoder.decode(a.dv.get)))
-          .toDF("__file", "__idx"),
-        Seq("__file", "__idx"), "left_anti")
-    }
     val keyVals = changes.select(col(key).as("__k")).distinct()
-    val matchedPairs = tagged()
-      .join(keyVals, col(s"`$physKey`") === col("__k"), "left_semi")
-      .select("__file", "__idx")
+    val matchedPairs =
+      GraftTableV2.frame(spark, this, snap.copy(files = touched),
+          Seq(GraftTableV2.FileCol, GraftTableV2.PosCol))
+        .join(keyVals, col(s"`$key`") === col("__k"), "left_semi")
+        .select(col(GraftTableV2.FileCol).as("__file"),
+          col(GraftTableV2.PosCol).as("__idx"))
     // one COMPRESSED bitmap row per touched file — file-count-sized
     // driver traffic (unbounded in-aggregate here: the commit core's
     // triage needs the full merged bitmaps to derive rewrite-leg
@@ -2884,13 +2765,7 @@ final class GraftTable(val tablePath: String) {
       touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
     val inserts =
       if (!tracked) inserts0
-      else {
-        val keyed = readPhysicalFilesWithRowIds(spark, phys, touched)
-          .select(col(s"`$physKey`").as(key), col(s"`$RowIdPhysCol`"))
-          .groupBy(col(s"`$key`"))
-          .agg(min(col(s"`$RowIdPhysCol`")).as(RowIdPhysCol))
-        inserts0.join(keyed, Seq(key), "left")
-      }
+      else inserts0.join(rowIdsByKey(spark, snap, touched, key), Seq(key), "left")
     // spec-cluster the image files like any append — post-images keep
     // tight transform ranges (day pruning, bucket single-valuedness for
     // storage-partitioned joins) instead of straddling every tuple
@@ -3164,7 +3039,7 @@ final class GraftTable(val tablePath: String) {
     require(!snap.constraints.contains(name),
       s"txlog: constraint '$name' already exists " +
         s"(${snap.constraints(name)}) — drop it first")
-    enforceConstraints(readFiles(spark, snap, identity), Map(name -> sqlExpr))
+    enforceConstraints(GraftTableV2.frame(spark, this, snap), Map(name -> sqlExpr))
     // CAS: a commit landing mid-validation brought rows never validated
     transact(Abort, read = snap.version)(_ => Some(Commit("addConstraint",
       constraints = Some(snap.constraints + (name -> sqlExpr)))))
@@ -3509,8 +3384,7 @@ final class GraftTable(val tablePath: String) {
     if (dropped.isEmpty && touched.isEmpty) return (0, 0, snap.version) // no-op, no commit
 
     val adds = if (touched.isEmpty) Seq.empty else {
-      // pure rewrite: read and re-stage under PHYSICAL names (no
-      // logical round trip needed — only the filter column translates)
+      // the filter column is PHYSICAL: the rows are read ready to stage
       val c = col(physCol)
       val matched = (lower, upper) match {
         case (Some(l), Some(u)) => c >= lit(l) && c <= lit(u)
@@ -3518,8 +3392,7 @@ final class GraftTable(val tablePath: String) {
         case (None, Some(u)) => c <= lit(u)
         case (None, None) => c.isNotNull // full-range: non-null rows match
       }
-      val survivors =
-        readPhysicalFiles(spark, physicalSchema(snap.schema), touched)
+      val survivors = rewriteRows(spark, snap, touched)
         .filter(!coalesce(matched, lit(false))) // NULL predicate ⇒ row survives
       stageData(survivors, Some(snap))
     }
@@ -3592,12 +3465,8 @@ final class GraftTable(val tablePath: String) {
     val tracked = rowTrackingEnabled(snap) &&
       touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
     val survivorAdds = if (touched.isEmpty) Seq.empty else {
-      val src =
-        if (tracked) readPhysicalFilesWithRowIds(
-          spark, physicalSchema(snap.schema), touched)
-        else readPhysicalFiles(spark, physicalSchema(snap.schema), touched)
-      val staged = stageData(
-        src.filter(!coalesce(matched, lit(false))), Some(snap))
+      val staged = stageData(rewriteRows(spark, snap, touched, rowIds = tracked)
+        .filter(!coalesce(matched, lit(false))), Some(snap))
       if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
     }
     // the replacement content, staged then RANGE-VALIDATED on its own
@@ -3606,8 +3475,7 @@ final class GraftTable(val tablePath: String) {
     def dropStaged(): Unit = (survivorAdds ++ newAdds).foreach(a =>
       Files.deleteIfExists(root.resolve(a.path)))
     if (newAdds.nonEmpty) {
-      val outside = spark.read.schema(physicalSchema(snap.schema))
-        .parquet(newAdds.map(a => root.resolve(a.path).toString): _*)
+      val outside = rewriteRows(spark, snap, newAdds)
         .filter(!coalesce(matched, lit(false)))
         .limit(1).count()
       if (outside > 0) {
@@ -3650,7 +3518,7 @@ final class GraftTable(val tablePath: String) {
     * 0.5) or whose merged bitmap would serialize past `dv.maxBytes`
     * (default 64 KiB) is rewritten copy-on-write in the same commit
     * instead — a DV bigger than the IO it saves is debt. The bounds are
-    * also what keep every reader's DV anti-join side metadata-sized.
+    * also what keep the bitmaps every scan task deserializes small.
     * Successive deletes OR into the existing bitmap (idempotent per
     * row); surviving rows keep their original `_commit_version`
     * provenance. The commit is a rewrite for tailing consumers (rows
@@ -3665,34 +3533,13 @@ final class GraftTable(val tablePath: String) {
       .map(_.toDouble).getOrElse(DvMaxFraction)
     val maxBytes = snap.props.get(DvMaxBytesProp)
       .map(_.toInt).getOrElse(DvMaxBytes)
-    val phys = physicalSchema(snap.schema)
     val byName = snap.files.map(a => a.path -> a).toMap
 
-    // live rows tagged with (file, row_index), existing DVs applied —
-    // so already-deleted rows can never match again (counts stay exact)
-    def taggedLive(): DataFrame = {
-      val raw = spark.read.schema(phys)
-        .parquet(snap.files.map(a => root.resolve(a.path).toString): _*)
-        .withColumn("__file",
-          substring_index(col("_metadata.file_path"), "/", -1))
-        .withColumn("__idx", col("_metadata.row_index"))
-      // existing DV positions expand executor-side (positionsDf) — the
-      // driver ships compressed bitmaps only, never index pairs
-      val dvd = snap.files.filter(_.dv.isDefined)
-      val live = if (dvd.isEmpty) raw
-        else raw.join(
-          positionsDf(spark, dvd.map(a =>
-            a.path -> java.util.Base64.getDecoder.decode(a.dv.get)))
-            .toDF("__file", "__idx"),
-          Seq("__file", "__idx"), "left_anti")
-      // logical names for the condition, tag columns carried through
-      live.select(snap.schema.fields.toIndexedSeq.map(f =>
-        col(s"`${physicalName(f)}`").as(f.name, f.metadata)) ++
-        Seq(col("__file"), col("__idx")): _*)
-    }
-    def matchedPairs(): DataFrame = taggedLive()
-      .filter(coalesce(expr(condition), lit(false)))
-      .select("__file", "__idx")
+    // live rows with their (file, position), existing DVs applied — so
+    // already-deleted rows can never match again (counts stay exact)
+    def matched(columns: Seq[String]): DataFrame =
+      GraftTableV2.frame(spark, this, snap, columns)
+        .filter(coalesce(expr(condition), lit(false)))
 
     // ONE pass computes per-file match counts AND deletion bitmaps
     // together (round 16 — guide §1.2: the old two-phase shape re-read
@@ -3704,9 +3551,10 @@ final class GraftTable(val tablePath: String) {
     // metadata-sized row per file, never row indexes, at any scale.
     val dvFn = org.apache.spark.sql.functions.udaf(
       new graft.functions.DvAgg(maxBytes))
-    val phase: Seq[(String, Long, Option[Array[Byte]])] = matchedPairs()
-      .groupBy("__file")
-      .agg(count(lit(1)).as("__n"), dvFn(col("__idx")).as("__dv"))
+    val phase: Seq[(String, Long, Option[Array[Byte]])] =
+      matched(Seq(GraftTableV2.FileCol, GraftTableV2.PosCol))
+      .groupBy(GraftTableV2.FileCol)
+      .agg(count(lit(1)).as("__n"), dvFn(col(GraftTableV2.PosCol)).as("__dv"))
       .collect().toSeq
       .map(r => (r.getString(0), r.getLong(1),
         Option(r.getAs[Array[Byte]]("__dv"))))
@@ -3723,7 +3571,7 @@ final class GraftTable(val tablePath: String) {
             val bm = new org.roaringbitmap.RoaringBitmap()
             bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
             // existing DVs are log metadata (≤maxBytes each, disjoint
-            // from new matches by the anti-join in taggedLive)
+            // from new matches: the scan already skips their rows)
             byName(p).dv.foreach(b64 => bm.or(dvDeserialize(b64)))
             bm
           }
@@ -3738,14 +3586,11 @@ final class GraftTable(val tablePath: String) {
     val rewriteFiles =
       (overFraction ++ overNew.map(_._1) ++ overMerged.map(_._1))
         .toSeq.sorted.map(byName)
-    val dvAdds = vectorized.sortBy(_._1).map { case (p, bm) =>
-      byName(p).copy(dv = Some(dvSerialize(bm)),
-        dvRows = bm.getLongCardinality)
-    }
+    val dvAdds = vectorized.sortBy(_._1).map { case (p, bm) => withDv(byName(p), bm) }
     // copy-on-write leg: over-threshold files rewrite DV-applied
     val stagedAdds = if (rewriteFiles.isEmpty) Seq.empty else
       stageData(toPhysical(
-        toLogical(readPhysicalFiles(spark, phys, rewriteFiles), snap.schema)
+        GraftTableV2.frame(spark, this, snap.copy(files = rewriteFiles))
           .filter(!coalesce(expr(condition), lit(false))),
         snap.schema), Some(snap))
     // provenance of the re-added DV files stays with their ORIGINAL
@@ -3758,11 +3603,7 @@ final class GraftTable(val tablePath: String) {
     val cdc = if (!cdfEnabled(snap)) Nil else {
       require(!snap.schema.fieldNames.contains(ChangeTypeCol),
         s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
-      stageChanges(
-        toPhysical(
-          taggedLive().filter(coalesce(expr(condition), lit(false)))
-            .drop("__file", "__idx"),
-          snap.schema)
+      stageChanges(toPhysical(matched(Nil), snap.schema)
         .withColumn(ChangeTypeCol, lit("delete")))
     }
     // staged: ONLY the rewrite output and change files — the DV adds
@@ -3773,25 +3614,6 @@ final class GraftTable(val tablePath: String) {
         rewriteFiles.map(_.path) ++ dvAdds.map(_.path),
         addVersions = addVersions, cdc = cdc)))
     (dvAdds.size, rewriteFiles.size, counts.values.sum, v)
-  }
-
-  /** Expand serialized per-file deletion bitmaps into `(__f, __i)`
-    * position rows EXECUTOR-side — a run-encoded RoaringBitmap holds
-    * millions of indexes in a few KiB, so driver-side expansion is the
-    * anti-pattern; here each bitmap ships compressed and explodes
-    * inside its task. */
-  private def positionsDf(
-      spark: SparkSession, bms: Seq[(String, Array[Byte])]): DataFrame = {
-    import spark.implicits._
-    bms.toDS().flatMap { case (f, bytes) =>
-      val bm = new org.roaringbitmap.RoaringBitmap()
-      bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-      val it = bm.getIntIterator
-      new Iterator[(String, Long)] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): (String, Long) = (f, it.next().toLong)
-      }
-    }.toDF("__f", "__i")
   }
 
   /** Commit a DELTA-based (merge-on-read) row-level write — the Delta
@@ -3857,7 +3679,6 @@ final class GraftTable(val tablePath: String) {
       .map(_.toDouble).getOrElse(DvMaxFraction)
     val maxBytes = snap.props.get(DvMaxBytesProp)
       .map(_.toInt).getOrElse(DvMaxBytes)
-    val phys = physicalSchema(snap.schema)
     // the post-image / NOT-MATCHED rows are the only NEW values —
     // validate them; DV'd survivors and rewrite-leg carry-overs are
     // rows the table already held
@@ -3879,55 +3700,20 @@ final class GraftTable(val tablePath: String) {
         bm.getLongCardinality.toDouble / a.rows <= maxFraction &&
         bm.serializedSizeInBytes() <= maxBytes
     }
-    val dvAdds = vectorized.map { case (p, bm) =>
-      byName(p).copy(dv = Some(dvSerialize(bm)), dvRows = bm.getLongCardinality) }
-    val cols = phys.fields.toIndexedSeq.map(f => col(s"`${f.name}`"))
-    def tagged(fs: Seq[AddFile]): DataFrame =
-      spark.read.schema(phys)
-        .parquet(fs.map(a => root.resolve(a.path).toString): _*)
-        .withColumn("__f",
-          substring_index(col("_metadata.file_path"), "/", -1))
-        .withColumn("__i", col("_metadata.row_index"))
-    def serialized(bm: org.roaringbitmap.RoaringBitmap): Array[Byte] = {
-      val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
-      bm.serialize(buf)
-      buf.array()
-    }
-    // copy-on-write leg: survivors = file minus MERGED bitmap (anti-
-    // join against executor-expanded positions — never driver longs).
-    // Row tracking: survivors of an over-threshold file are rows the
-    // table already held — they carry their ids into the rewrite
+    val dvAdds = vectorized.map { case (p, bm) => withDv(byName(p), bm) }
+    // copy-on-write leg: each over-threshold file reads with its MERGED
+    // bitmap as its deletion vector (it already ORs any pre-existing
+    // DV). Row tracking: survivors of an over-threshold file are rows
+    // the table already held — they carry their ids into the rewrite
     // (materialized), exactly like compact; only the post-images are
-    // new rows. The merged bitmap already ORs any pre-existing DV, so
-    // one anti-join covers both.
+    // new rows.
     val overFiles = over.map { case (p, _) => byName(p) }
     val overTracked = rowTrackingEnabled(snap) && overFiles.nonEmpty &&
       overFiles.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
     val stagedAdds = if (over.isEmpty) Nil else {
-      val src =
-        if (!overTracked) tagged(overFiles)
-        else {
-          import spark.implicits._
-          val readSchema = StructType(phys.fields :+
-            StructField(RowIdPhysCol, LongType, nullable = true))
-          val bases = overFiles.map(a => (a.path, a.baseRowId))
-            .toDF("__f", "__rt_base")
-          spark.read.schema(readSchema)
-            .parquet(overFiles.map(a => root.resolve(a.path).toString): _*)
-            .withColumn("__f",
-              substring_index(col("_metadata.file_path"), "/", -1))
-            .withColumn("__i", col("_metadata.row_index"))
-            .join(broadcast(bases), Seq("__f"), "left")
-            .withColumn(RowIdPhysCol, coalesce(
-              col(s"`$RowIdPhysCol`"), col("__rt_base") + col("__i")))
-        }
-      val outCols =
-        if (overTracked) cols :+ col(s"`$RowIdPhysCol`") else cols
-      val staged0 = stageData(
-        src.join(positionsDf(spark,
-            over.map { case (p, bm) => p -> serialized(bm) }),
-            Seq("__f", "__i"), "left_anti")
-          .select(outCols: _*), Some(snap))
+      val staged0 = stageData(rewriteRows(spark, snap,
+        over.map { case (p, bm) => withDv(byName(p), bm) },
+        rowIds = overTracked), Some(snap))
       if (overTracked) staged0.map(_.copy(ridMaterialized = true))
       else staged0
     }
@@ -3947,37 +3733,22 @@ final class GraftTable(val tablePath: String) {
         merged.forall { case (p, _) =>
           val a = byName(p); a.ridMaterialized || a.baseRowId.isDefined } &&
         (insertAdds.isEmpty || insertAdds.forall(_.ridMaterialized))
-      val ridSchema = StructType(phys.fields :+
-        StructField(RowIdPhysCol, LongType, nullable = true))
-      def taggedRid(fs: Seq[AddFile]): DataFrame = {
-        import spark.implicits._
-        val bases = fs.map(a => (a.path, a.baseRowId))
-          .toDF("__f", "__rt_base")
-        spark.read.schema(ridSchema)
-          .parquet(fs.map(a => root.resolve(a.path).toString): _*)
-          .withColumn("__f",
-            substring_index(col("_metadata.file_path"), "/", -1))
-          .withColumn("__i", col("_metadata.row_index"))
-          .join(broadcast(bases), Seq("__f"), "left")
-          .withColumn("__cdc_rid", coalesce(
-            col(s"`$RowIdPhysCol`"), col("__rt_base") + col("__i")))
-      }
-      val imgCols = if (ridAware) cols :+ col("`__cdc_rid`") else cols
-      val pre = if (newDeletes.isEmpty) None else Some(
-        (if (ridAware) taggedRid(merged.map { case (p, _) => byName(p) })
-         else tagged(merged.map { case (p, _) => byName(p) }))
-          .join(positionsDf(spark, newDeletes), Seq("__f", "__i"), "left_semi")
-          .select(imgCols: _*)
-          .withColumn(ChangeTypeCol, lit("delete")))
-      val post = if (insertAdds.isEmpty) None else Some({
-        val base =
-          if (!ridAware) readPhysicalFiles(spark, phys, insertAdds)
-          else spark.read.schema(ridSchema)
-            .parquet(insertAdds.map(a => root.resolve(a.path).toString): _*)
-            .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
-            .select(imgCols: _*)
-        base.withColumn(ChangeTypeCol, lit("insert"))
-      })
+      def images(files: Seq[AddFile], kind: String): DataFrame =
+        rewriteRows(spark, snap, files, rowIds = ridAware)
+          .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
+          .withColumn(ChangeTypeCol, lit(kind))
+      // the pre-images are exactly the newly-deleted positions: each
+      // touched file reads with the COMPLEMENT of its new deletes as its
+      // deletion vector
+      val pre = if (newDeletes.isEmpty) None else Some(images(
+        newDeletes.map { case (p, bytes) =>
+          val bm = new org.roaringbitmap.RoaringBitmap()
+          bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
+          val a = byName(p)
+          withDv(a, org.roaringbitmap.RoaringBitmap.flip(bm, 0L, a.rows))
+        }, "delete"))
+      val post =
+        if (insertAdds.isEmpty) None else Some(images(insertAdds, "insert"))
       (pre, post) match {
         case (Some(a), Some(b)) => stageChanges(a.unionAll(b))
         case (a, b) => a.orElse(b).map(stageChanges).getOrElse(Nil)
@@ -4015,8 +3786,7 @@ final class GraftTable(val tablePath: String) {
     val snap = snapshot()
     val dvd = snap.files.filter(_.dv.isDefined)
     if (dvd.isEmpty) return (0, 0, snap.version)
-    val adds = stageData(
-      readPhysicalFiles(spark, physicalSchema(snap.schema), dvd), Some(snap))
+    val adds = stageData(rewriteRows(spark, snap, dvd), Some(snap))
     val v = commitRewrite(snap, "purge", None, adds, dvd.map(_.path))
     (dvd.size, adds.size, v)
   }
@@ -4042,10 +3812,7 @@ final class GraftTable(val tablePath: String) {
     // them into the rewritten files — the rewrite allocates nothing,
     // so the rebase-over-concurrent-appends path stays sound
     val tracked = rowTrackingEnabled(snap)
-    val raw =
-      if (tracked) readPhysicalFilesWithRowIds(
-        spark, physicalSchema(snap.schema), snap.files)
-      else readPhysicalFiles(spark, physicalSchema(snap.schema), snap.files)
+    val raw = rewriteRows(spark, snap, snap.files, rowIds = tracked)
     // under a partition.spec, re-cluster by the transform tuple instead
     // of a round-robin repartition (which would scatter every tuple
     // across every output file and erase partition pruning)
@@ -4086,11 +3853,8 @@ final class GraftTable(val tablePath: String) {
     val outParts = math.max(1,
       math.ceil(targets.map(_.bytes).sum.toDouble / threshold).toInt)
     val tracked = rowTrackingEnabled(snap)
-    val df =
-      (if (tracked) readPhysicalFilesWithRowIds(
-        spark, physicalSchema(snap.schema), targets)
-      else readPhysicalFiles(spark, physicalSchema(snap.schema), targets))
-        .repartition(outParts)
+    val df = rewriteRows(spark, snap, targets, rowIds = tracked)
+      .repartition(outParts)
     val adds0 = stageData(df, Some(snap))
     val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
     val v = commitRewrite(snap, "compact", None, adds, targets.map(_.path))
@@ -4126,11 +3890,9 @@ final class GraftTable(val tablePath: String) {
     val adds = groups.flatMap { g =>
       val outParts = math.max(1,
         math.ceil(g.map(_.bytes).sum.toDouble / threshold).toInt)
-      val src =
-        if (tracked) readPhysicalFilesWithRowIds(
-          spark, physicalSchema(snap.schema), g)
-        else readPhysicalFiles(spark, physicalSchema(snap.schema), g)
-      val staged = stageData(src.repartition(outParts), Some(snap))
+      val staged = stageData(
+        rewriteRows(spark, snap, g, rowIds = tracked).repartition(outParts),
+        Some(snap))
       if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
     }
     val v = commitRewrite(snap, "compact", None, adds, targets.map(_.path))
@@ -4164,10 +3926,7 @@ final class GraftTable(val tablePath: String) {
     val snap = snapshot()
     if (snap.files.isEmpty) return (0, 0, snap.version)
     val tracked = rowTrackingEnabled(snap)
-    val df =
-      if (tracked) readPhysicalFilesWithRowIds(
-        spark, physicalSchema(snap.schema), snap.files)
-      else readPhysicalFiles(spark, physicalSchema(snap.schema), snap.files)
+    val df = rewriteRows(spark, snap, snap.files, rowIds = tracked)
     // under a partition.spec, the transform tuple LEADS the layout
     // (partition-major, z-within) — a global z-curve would interleave
     // every partition into every file and erase partition pruning
@@ -4479,21 +4238,20 @@ final class GraftTable(val tablePath: String) {
     // of every in-flight batch suddenly changing shape mid-query
     val schema = readSchema.getOrElse(snapshot(latestVersion()).schema)
     val perVersion = appendFilesSince(sinceVersion, skipRewrites, untilVersion)
-    perVersion.foldLeft(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .withColumn("_commit_version", lit(0L)).limit(0)) {
-      case (acc, (v, adds)) =>
-        adds.foreach(a => require(Files.exists(root.resolve(a.path)),
-          s"txlog: data file ${a.path} of commit $v was vacuumed — appendsSince " +
-            "is behind the retention window; re-seed from a snapshot read"))
-        // DV-aware: a clone's v1 may re-add files with deletion vectors
-        // (the fork of a DV'd table) — its tail must not resurrect them
-        acc.unionAll(
-          toLogical(readPhysicalFiles(spark, physicalSchema(schema), adds),
-            schema)
-          .withColumn("_commit_version", lit(v)))
+    perVersion.foreach { case (v, adds) =>
+      adds.foreach(a => require(Files.exists(root.resolve(a.path)),
+        s"txlog: data file ${a.path} of commit $v was vacuumed — appendsSince " +
+          "is behind the retention window; re-seed from a snapshot read"))
     }
+    // ONE scan over every qualifying add-file, each tagged with its
+    // adding commit; DV-aware, since a clone's v1 may re-add files with
+    // deletion vectors (the fork of a DV'd table) and its tail must not
+    // resurrect them
+    GraftTableV2.frame(spark, this,
+      Snapshot(perVersion.lastOption.fold(0L)(_._1), schema.json,
+        perVersion.flatMap(_._2),
+        addedIn = perVersion.flatMap { case (v, adds) => adds.map(_.path -> v) }.toMap),
+      Seq(GraftTableV2.VersionCol))
   }
 
   /** The key envelope of a CDF batch, from the log alone: min/max of

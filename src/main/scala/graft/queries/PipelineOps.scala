@@ -1801,8 +1801,7 @@ object PipelineOps {
     require(snap.files.size == 2 && snap.files.count(_.dv.isDefined) == 1,
       "exactly one of the two files must carry a deletion vector")
     // the DSv2 connector read — the path whose partition planning
-    // serves DVs columnar (the Scala-API t.read() uses the v1
-    // row-index anti-join instead and was never row-forced)
+    // serves DVs columnar
     val out = s.read.format("graft-table").option("path", t.tablePath).load()
       .groupBy((col("l_partkey") % 11).as("bucket"))
       .agg(count(lit(1)).as("n"),

@@ -275,7 +275,10 @@ private final class GraftRowLevelScan(
       org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_FIRST))
       .toArray
 
-  override def toBatch: Batch = {
+  override def toBatch: Batch = batch
+
+  // one batch, and so one reader factory, per scan (see GraftScan)
+  private lazy val batch: Batch = {
     // evaluated at planInputPartitions time, AFTER runtime filters
     // land; the planned set is exactly what the write later replaces
     def currentFiles(): Seq[(TxLog.AddFile, Long)] = {

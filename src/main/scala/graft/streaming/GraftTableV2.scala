@@ -283,14 +283,20 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
   * cannot tear a multi-action read or reshape a running stream).
   * `versionAsOf` time-travels batch reads to that committed snapshot —
   * including its THEN-current schema, so a read before a mergeSchema
-  * widening doesn't grow phantom null columns. */
+  * widening doesn't grow phantom null columns.
+  *
+  * `files` pins the scan to exactly that snapshot's file list (each file
+  * with its deletion vector and `addedIn` version) instead of resolving
+  * the log: the entry of every programmatic read and rewrite, see
+  * [[GraftTableV2.frame]]. */
 class GraftTableV2(
     val tablePath: String, pinnedSchema: StructType,
     skipRewrites: Boolean, startingVersion: Long,
     versionAsOf: Option[Long] = None,
     maxVersionsPerTrigger: Option[Long] = None,
     pinnedVersion: Option[Long] = None,
-    changeFeed: Boolean = false)
+    changeFeed: Boolean = false,
+    files: Option[TxLog.Snapshot] = None)
     extends Table with SupportsRead with SupportsDelete {
 
   // version pinned alongside the schema: every batch scan of this table
@@ -386,21 +392,22 @@ class GraftTableV2(
 
   /** Whether a required column named `_commit_version` is the SYNTHETIC
     * provenance tag (resolved from the log) rather than a real data
-    * column. The catalog table overrides this when the data schema
-    * claims the name. */
-  protected def versionIsSynthetic: Boolean = true
+    * column. A pinned file list and the catalog table read the data
+    * column when the data schema claims the name. */
+  protected def versionIsSynthetic: Boolean =
+    files.isEmpty || !pinnedSchema.fieldNames.contains(GraftTableV2.VersionCol)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // the first unambiguously-READ entry point: a typo'd path must fail
     // loudly here, not resolve as an empty table (inferSchema stays
     // lenient because the write path probes it before the table exists)
-    require(snapVersion > 0L,
+    require(snapVersion > 0L || files.isDefined,
       s"graft-table: no committed table at $tablePath — create it " +
         "(one append) before reading")
     new GraftScanBuilder(
       SparkSession.active, tablePath, pinnedSchema, snapVersion,
       skipRewrites, startingVersion, maxVersionsPerTrigger, versionIsSynthetic,
-      changeFeed)
+      changeFeed, files)
   }
 }
 
@@ -423,7 +430,8 @@ final class GraftScanBuilder(
     snapVersion: Long, skipRewrites: Boolean, startingVersion: Long,
     maxVersionsPerTrigger: Option[Long] = None,
     syntheticVersion: Boolean = true,
-    changeFeed: Boolean = false)
+    changeFeed: Boolean = false,
+    files: Option[TxLog.Snapshot] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
@@ -469,8 +477,8 @@ final class GraftScanBuilder(
     if (changeFeed) return None // a feed is row attribution, not a rollup
     if (!resolvedFor.exists(_._1 eq agg))
       resolvedFor = Some((agg, GraftTableV2.metadataAggregate(
-        new GraftTable(tablePath), fullSchema, snapVersion, filters, agg,
-        syntheticVersion)))
+        files.getOrElse(new GraftTable(tablePath).snapshot(snapVersion)),
+        fullSchema, filters, agg, syntheticVersion)))
     resolvedFor.get._2
   }
 
@@ -487,7 +495,7 @@ final class GraftScanBuilder(
     case None =>
       new GraftScan(spark, tablePath, fullSchema, required, filters,
         snapVersion, skipRewrites, startingVersion, limit,
-        maxVersionsPerTrigger, syntheticVersion, changeFeed)
+        maxVersionsPerTrigger, syntheticVersion, changeFeed, files)
   }
 }
 
@@ -510,7 +518,8 @@ final class GraftScan(
     limit: Option[Int] = None,
     maxVersionsPerTrigger: Option[Long] = None,
     syntheticVersion: Boolean = true,
-    changeFeed: Boolean = false)
+    changeFeed: Boolean = false,
+    files: Option[TxLog.Snapshot] = None)
     extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -544,9 +553,15 @@ final class GraftScan(
     * bounds, then `_commit_version` predicates against each file's
     * adding commit. Session-aware: past the checkpoint-size threshold
     * the prune runs distributively so planning driver state stays
-    * O(survivors) on million-file tables. */
-  private lazy val prunedSnap: TxLog.Snapshot = table.prunedSnapshot(
-    spark, dataFilters.flatMap(GraftTableV2.bounds), version = snapVersion)
+    * O(survivors) on million-file tables. A pinned file list prunes in
+    * memory — its log was already resolved. */
+  private lazy val prunedSnap: TxLog.Snapshot = {
+    val bounds = dataFilters.flatMap(GraftTableV2.bounds)
+    files match {
+      case Some(snap) => TxLog.pruned(snap, bounds)
+      case None => table.prunedSnapshot(spark, bounds, version = snapVersion)
+    }
+  }
 
   private lazy val pruned: Seq[(TxLog.AddFile, Long)] = {
     val snap = prunedSnap
@@ -730,16 +745,25 @@ final class GraftScan(
       Expressions.column(c),
       SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
 
+  // ONE batch per scan: Spark asks again at execution (AQE re-plans and
+  // copies the scan node), and each batch builds its reader factory,
+  // which broadcasts the Hadoop conf
+  private lazy val batch = new GraftBatch(spark, table, dataSchema, required,
+    dataFilters, () => currentFiles(), syntheticVersion,
+    // frozen at compile-time pruning: runtime filters must not
+    // shrink the reported partition count on the plain scan
+    keyed = () => keyedGroups.map(_._2),
+    key = Some((tablePath, snapVersion,
+      files.map(s => (s.files.map(a => (a.path, a.dv)), s.addedIn)),
+      fullSchema, required,
+      filters.toSeq, limit, syntheticVersion)))
+
   override def toBatch: Batch = {
     require(!changeFeed,
       "graft-table: batch change-feed reads go through the " +
         "graft_table_changes table function (or GraftTable.readChangeFeed); " +
         "the readChangeFeed option is the STREAMING surface")
-    new GraftBatch(spark, table, dataSchema, required, dataFilters,
-      () => currentFiles(), syntheticVersion,
-      // frozen at compile-time pruning: runtime filters must not
-      // shrink the reported partition count on the plain scan
-      keyed = () => keyedGroups.map(_._2))
+    batch
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -762,8 +786,19 @@ final class GraftBatch(
     files: () => Seq[(TxLog.AddFile, Long)],
     syntheticVersion: Boolean = true,
     keyed: () => Option[Seq[(Seq[Int], Seq[(TxLog.AddFile, Long)])]] =
-      () => None)
+      () => None,
+    private val key: Option[Any] = None)
     extends Batch {
+
+  // Spark reuses an exchange only between scan nodes whose batches are
+  // EQUAL (BatchScanExec.equals): two scans with the same `key` —
+  // the same files, schema, projection and filters — read the same rows
+  override def equals(o: Any): Boolean = o match {
+    case b: GraftBatch => (b eq this) || (key.isDefined && key == b.key)
+    case _ => false
+  }
+  override lazy val hashCode: Int =
+    key.fold(System.identityHashCode(this))(_.hashCode)
 
   import GraftTableV2.VersionCol
 
@@ -797,14 +832,14 @@ final class GraftBatch(
   private val physRequired = GraftTableV2.physicalProjection(dataSchema, innerRequired)
   private val physFilters = GraftTableV2.physicalFilters(dataSchema, dataFilters)
 
-  private lazy val innerFactory: PartitionReaderFactory =
+  private def innerFactory: PartitionReaderFactory =
     org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
       spark, physDataSchema, physRequired, physFilters)
   // filter-free factory for the keyed deletion-vector partitions: their
   // reader counts raw row positions, so row-group skipping stays OFF
   // underneath (the residual Filter above the scan still owns row
   // semantics)
-  private lazy val dvFactory: PartitionReaderFactory =
+  private def dvFactory: PartitionReaderFactory =
     org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
       spark, physDataSchema, physRequired, Nil)
   // POSITIONAL factory (round 16): every synthetic-position need — DV
@@ -823,7 +858,7 @@ final class GraftBatch(
       else physRequired
     base.add(org.apache.spark.sql.graft.ParquetScans.RowIndexCol, LongType)
   }
-  private lazy val idxFactory: PartitionReaderFactory =
+  private def idxFactory: PartitionReaderFactory =
     org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
       spark,
       if (idxMat)
@@ -930,14 +965,38 @@ final class GraftBatch(
     (cleanParts ++ dvParts).toArray
   }
 
+  /** The delegates (0 inner, 1 dv, 2 idx) that [[planInputPartitions]]
+    * routes the current files through. Runtime filters and the pushed
+    * limit only ever shrink the file list, so the set taken when the
+    * factory is built covers every later plan of this batch. */
+  private def delegatesUsed(): Set[Int] =
+    if (positional) Set(2)
+    else keyed() match {
+      case Some(groups) =>
+        val anyDv = groups.exists(_._2.exists(_._1.dv.isDefined))
+        Set(if (!anyDv && !needVersion) 0 else 1)
+      case None =>
+        val all = files()
+        (if (all.exists(_._1.dv.isEmpty)) Set(0) else Set.empty[Int]) ++
+          (if (all.exists(_._1.dv.isDefined)) Set(2) else Set.empty[Int])
+    }
+
   // always the wrapping factory: it DELEGATES columnar reads for plain
   // parquet partitions (vectorized batches pass through untouched),
   // serves version tags and row ids COLUMNAR via constant/computed
   // vectors, and row-wraps only the DV / declined cases — so no
-  // plan-time/factory-time race over which partition kinds exist
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftVersionedReaderFactory(
-      Array(innerFactory, dvFactory, idxFactory), required, innerRequired)
+  // plan-time/factory-time race over which partition kinds exist.
+  // Built ONCE per batch, with only the delegates the partitions use
+  // (each delegate broadcasts the Hadoop conf); an unused slot is null.
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val used = delegatesUsed()
+    GraftVersionedReaderFactory(Array(
+      if (used(0)) innerFactory else null,
+      if (used(1)) dvFactory else null,
+      if (used(2)) idxFactory else null), required, innerRequired)
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 /** An inner parquet partition tagged with its commit version and the
@@ -2209,6 +2268,37 @@ object GraftTableV2 {
     * machinery, so it costs nothing unless selected. */
   val RowIdCol = "_row_id"
 
+  /** The entry of every programmatic read and rewrite of a
+    * [[GraftTable]]: a DataFrame over exactly `snap.files` — each with
+    * its deletion vector and `snap.addedIn` version — at `snap.schema`,
+    * planned by this scan without resolving the log again. Columns are
+    * the schema's LOGICAL names (nullable, as a file scan's are),
+    * followed by the synthetic `columns` the caller selects from
+    * `_commit_version`, `_row_id`, `_file` and `_pos`. An empty list
+    * gives an empty frame of that shape. */
+  private[graft] def frame(
+      spark: SparkSession, table: GraftTable, snap: TxLog.Snapshot,
+      columns: Seq[String] = Nil): DataFrame = {
+    require(!columns.exists(snap.schema.fieldNames.contains),
+      s"graft-table: ${columns.mkString(", ")} would shadow a data column")
+    val extra = columns.map {
+      case VersionCol => StructField(VersionCol, LongType, nullable = false)
+      case FileCol => StructField(FileCol, StringType, nullable = false)
+      case PosCol => StructField(PosCol, LongType, nullable = false)
+      case RowIdCol => StructField(RowIdCol, LongType, nullable = true)
+      case other => throw new IllegalArgumentException(
+        s"graft-table: '$other' is not a synthetic column")
+    }
+    if (snap.files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(snap.schema.fields ++ extra))
+    else org.apache.spark.sql.graft.ParquetScans.relationFrame(spark,
+      new GraftTableV2(table.tablePath, snap.schema, skipRewrites = false,
+        startingVersion = 0L, pinnedVersion = Some(snap.version),
+        files = Some(snap)),
+      snap.schema, extra)
+  }
+
   /** The read schema: committed columns + `_commit_version`, resolved
     * at `versionAsOf` when time-traveling (the THEN-current schema).
     *
@@ -2331,13 +2421,12 @@ object GraftTableV2 {
     *     the provenance map makes every file single-valued on it.
     */
   private[streaming] def metadataAggregate(
-      table: GraftTable, fullSchema: StructType, snapVersion: Long,
+      snapAll: => TxLog.Snapshot, fullSchema: StructType,
       filters: Array[Filter], agg: Aggregation,
       syntheticVersion: Boolean = true): Option[(StructType, Seq[InternalRow])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     import org.apache.spark.sql.connector.expressions.NamedReference
     if (filters.nonEmpty) return None
-    val snapAll = table.prunedSnapshot(Seq.empty, version = snapVersion)
     // deletion vectors: a fully-DV'd file contributes no rows (and must
     // not manufacture an empty group), so it drops here; partially-DV'd
     // files keep COUNT(*) exact through effectiveRows, but their

@@ -169,6 +169,22 @@ object ParquetScans {
       : Array[Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
 
+  /** A DataFrame over a DSv2 `table`, built from its logical plan
+    * rather than a format string: the relation's output is `data`
+    * (nullable, as a file scan's columns are) followed by `extra`, the
+    * synthetic columns the table's scan serves beyond its schema. */
+  def relationFrame(
+      spark: SparkSession, table: org.apache.spark.sql.connector.catalog.Table,
+      data: StructType, extra: Seq[org.apache.spark.sql.types.StructField])
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation(
+        table,
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
+          StructType(data.asNullable.fields ++ extra)),
+        None, None, CaseInsensitiveStringMap.empty()))
+
   /** Re-plan a streaming micro-batch frame as a BATCH frame over the
     * same physical rows — the standard custom-`Sink.addBatch` pattern
     * (a frame with `isStreaming=true` refuses batch writes). The plan

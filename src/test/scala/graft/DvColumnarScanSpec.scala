@@ -21,8 +21,8 @@ class DvColumnarScanSpec extends SparkSpec {
     s"target/tmp/dvcol_${java.util.UUID.randomUUID().toString.take(8)}")
 
   /** The DSv2 connector read — the path whose partition planning
-    * serves DVs columnar (the Scala-API `t.read()` goes through the v1
-    * row-index anti-join instead and was never row-forced). */
+    * serves DVs columnar (the Scala-API `t.read()` plans the same scan
+    * over a pinned file list). */
   private def dsv2(t: GraftTable) =
     spark.read.format("graft-table").option("path", t.tablePath).load()
 
@@ -193,6 +193,56 @@ class DvColumnarScanSpec extends SparkSpec {
       spark.conf.unset(s"spark.sql.catalog.$cat")
       spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
     }
+  }
+
+  /** Broadcasts created while `body` runs: each delegated parquet
+    * reader factory broadcasts the Hadoop conf, each stage its task
+    * binary. */
+  private def broadcasts(body: => Unit): Long = {
+    val before = spark.sparkContext.broadcast(0).id
+    body
+    spark.sparkContext.broadcast(0).id - before - 1
+  }
+
+  test("one reader factory per scan: broadcasts no more than GraftTable.read") {
+    val root = freshRoot()
+    val t = new GraftTable(new java.io.File(root, "tbl").getAbsolutePath)
+    import spark.implicits._
+    (0 until 4).foreach { f =>
+      t.append((0L until 4000L).map(i => (f * 4000L + i, s"p$i")).toDF("id", "payload")
+        .coalesce(1))
+    }
+    // a hash the commit log cannot answer: the scan must really run
+    def digest(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), sum(hash(col("id"), col("payload"))))
+    def compare(what: String): Unit = {
+      val viaScan = broadcasts(digest(dsv2(t)).collect())
+      val viaRead = broadcasts(digest(t.read(spark)).collect())
+      info(s"$what: $viaScan broadcasts through the scan, $viaRead through GraftTable.read")
+      assert(viaScan <= viaRead,
+        s"$what: the scan broadcast $viaScan times, GraftTable.read $viaRead")
+    }
+    compare("DV-free")
+    assert(broadcasts(digest(dsv2(t)).queryExecution.executedPlan) === 1,
+      "planning a DV-free scan builds exactly one reader factory")
+    // one of the four files DV'd: clean and DV'd files in one scan
+    t.deleteRows(spark, "id < 4000 AND id % 97 = 3")
+    compare("with a deletion vector")
+  }
+
+  test("two reads of the same files reuse one exchange: equal scans have equal batches") {
+    val root = freshRoot()
+    val t = new GraftTable(new java.io.File(root, "tbl").getAbsolutePath)
+    import spark.implicits._
+    t.append((0L until 2000L).map(i => (i, i % 7)).toDF("id", "k").coalesce(1))
+    t.deleteRows(spark, "id % 5 = 0")
+    def counts = t.read(spark).groupBy("k").count()
+    val q = counts.as("a").join(counts.as("b"), "k")
+    assert(q.collect().length === 7)
+    val reused = graft.plans.AdaptivePlans.collectDeep(q) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    }
+    assert(reused.nonEmpty, "the second read's exchange must reuse the first's")
   }
 
   test("SelectedColumnVector unit: remap over a struct-of-array vector incl. nulls") {

@@ -189,7 +189,7 @@ class FooterStatsSpec extends SparkSpec {
     assert(check(Seq.empty[(Long, String)].toDF("k", "s"), "empty").isEmpty)
   }
 
-  test("differential: unicode and oversize strings (residual fallback)") {
+  test("differential: unicode and oversize strings") {
     check(Seq("😀end", "�bmp", "aÄ±ÅŸÄ±k").toDF("s"), "multi-byte")
     // longer than parquet's 4 KB footer-stats cap: the writer's bounds
     // are exact at any length
@@ -199,7 +199,7 @@ class FooterStatsSpec extends SparkSpec {
     check(Seq(("k1", "a" * 1000), ("k2", "b" * 1000)).toDF("k", "s"), "1000-char strings")
   }
 
-  test("differential: row tracking base-id assignment unchanged by the footer path") {
+  test("differential: row tracking base ids stay dense across a multi-file append") {
     // row ids stay dense and unique after a multi-file append: the
     // commit order of the files is their base-id order
     val t = new GraftTable(freshDir("rid"))
@@ -213,14 +213,14 @@ class FooterStatsSpec extends SparkSpec {
     files.sliding(2).foreach { case Seq(a, b) =>
       assert(b.baseRowId.get === a.baseRowId.get + a.rows, "base ids leave no gap")
     }
-    val ids = t.readPhysicalFilesWithRowIds(spark,
-      TxLog.physicalSchema(t.snapshot().schema), files)
-      .select(col(s"`${TxLog.RowIdPhysCol}`")).as[Long].collect()
+    val ids = graft.streaming.GraftTableV2.frame(spark, t, t.snapshot(),
+        Seq(graft.streaming.GraftTableV2.RowIdCol))
+      .select(graft.streaming.GraftTableV2.RowIdCol).as[Long].collect()
     assert(ids.length === 501 && ids.distinct.length === 501)
     assert(ids.max - ids.min === 500L, "row ids are dense")
   }
 
-  test("differential: bucket-split staging derives transform stats from dirnames") {
+  test("differential: bucket-split staging records single-valued transform stats") {
     // a bucket spec splits files by the transform tuple in the writer's
     // fanout: each file is single-valued on the tuple, null sources
     // included, and its transform bounds equal the reference
@@ -239,7 +239,7 @@ class FooterStatsSpec extends SparkSpec {
       "string bucket")
   }
 
-  test("differential: non-bucket specs derive transform stats from footer bounds") {
+  test("differential: non-bucket specs record transform stats") {
     val dated = spark.range(0, 400).select(col("id").as("k"),
       when(col("id") % 7 === 0, lit(null))
         .otherwise(date_add(lit(java.sql.Date.valueOf("2021-03-01")),
@@ -343,7 +343,7 @@ class FooterStatsSpec extends SparkSpec {
     }
   }
 
-  test("cdc staging rowcounts: footer counts equal the old spark count") {
+  test("cdc staging rowcounts: each change file records its own row count") {
     // change files record the row counts their writing tasks counted:
     // each must equal the file's own rows, and the feed serves them all
     val t = new GraftTable(freshDir("cdc"))
