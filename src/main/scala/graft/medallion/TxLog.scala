@@ -1671,13 +1671,16 @@ final class GraftTable(val tablePath: String) {
     * stage, read through the table's one scan ([[GraftTableV2.frame]])
     * so deletion vectors apply exactly as on every read. With `rowIds`
     * each row also carries its stable id as [[TxLog.RowIdPhysCol]],
-    * which the rewrite materializes instead of allocating new ids. */
+    * which the rewrite materializes instead of allocating new ids.
+    * `keep`, over LOGICAL names, selects the rows to rewrite. */
   private def rewriteRows(
       spark: SparkSession, snap: Snapshot, files: Seq[AddFile],
-      rowIds: Boolean = false): DataFrame =
-    toPhysical(GraftTableV2.frame(spark, this, snap.copy(files = files),
-        if (rowIds) Seq(GraftTableV2.RowIdCol) else Nil), snap.schema)
+      rowIds: Boolean = false, keep: Option[Column] = None): DataFrame = {
+    val rows = GraftTableV2.frame(spark, this, snap.copy(files = files),
+      if (rowIds) Seq(GraftTableV2.RowIdCol) else Nil)
+    toPhysical(keep.fold(rows)(rows.filter), snap.schema)
       .withColumnRenamed(GraftTableV2.RowIdCol, RowIdPhysCol)
+  }
 
   // ------------------------------------------------- change data feed
 
@@ -3383,6 +3386,9 @@ final class GraftTable(val tablePath: String) {
     })
     if (dropped.isEmpty && touched.isEmpty) return (0, 0, snap.version) // no-op, no commit
 
+    // row tracking: straddler survivors carry their ids into the
+    // rewrite (materialized), exactly like compact
+    val tracked = rowTrackingEnabled(snap)
     val adds = if (touched.isEmpty) Seq.empty else {
       // the filter column is PHYSICAL: the rows are read ready to stage
       val c = col(physCol)
@@ -3392,9 +3398,10 @@ final class GraftTable(val tablePath: String) {
         case (None, Some(u)) => c <= lit(u)
         case (None, None) => c.isNotNull // full-range: non-null rows match
       }
-      val survivors = rewriteRows(spark, snap, touched)
+      val survivors = rewriteRows(spark, snap, touched, rowIds = tracked)
         .filter(!coalesce(matched, lit(false))) // NULL predicate ⇒ row survives
-      stageData(survivors, Some(snap))
+      val staged = stageData(survivors, Some(snap))
+      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
     }
     // cdf.enabled: metadata-dropped files become `cdcfull` refs (their
     // own bytes ARE the change rows — the drop stays zero-write); only
@@ -3587,12 +3594,15 @@ final class GraftTable(val tablePath: String) {
       (overFraction ++ overNew.map(_._1) ++ overMerged.map(_._1))
         .toSeq.sorted.map(byName)
     val dvAdds = vectorized.sortBy(_._1).map { case (p, bm) => withDv(byName(p), bm) }
-    // copy-on-write leg: over-threshold files rewrite DV-applied
-    val stagedAdds = if (rewriteFiles.isEmpty) Seq.empty else
-      stageData(toPhysical(
-        GraftTableV2.frame(spark, this, snap.copy(files = rewriteFiles))
-          .filter(!coalesce(expr(condition), lit(false))),
-        snap.schema), Some(snap))
+    // copy-on-write leg: over-threshold files rewrite DV-applied; on a
+    // row-tracked table the survivors carry their ids (materialized)
+    val tracked = rowTrackingEnabled(snap)
+    val stagedAdds = if (rewriteFiles.isEmpty) Seq.empty else {
+      val staged = stageData(rewriteRows(spark, snap, rewriteFiles,
+        rowIds = tracked, keep = Some(!coalesce(expr(condition), lit(false)))),
+        Some(snap))
+      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
+    }
     // provenance of the re-added DV files stays with their ORIGINAL
     // commit — the delete changed which rows exist, not who wrote them
     val addVersions = dvAdds.map(a =>
@@ -3786,7 +3796,10 @@ final class GraftTable(val tablePath: String) {
     val snap = snapshot()
     val dvd = snap.files.filter(_.dv.isDefined)
     if (dvd.isEmpty) return (0, 0, snap.version)
-    val adds = stageData(rewriteRows(spark, snap, dvd), Some(snap))
+    // row tracking: survivors keep their ids (materialized), as in compact
+    val tracked = rowTrackingEnabled(snap)
+    val adds0 = stageData(rewriteRows(spark, snap, dvd, rowIds = tracked), Some(snap))
+    val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
     val v = commitRewrite(snap, "purge", None, adds, dvd.map(_.path))
     (dvd.size, adds.size, v)
   }

@@ -316,8 +316,8 @@ object PipelineOps {
   // The oracle recomputes every id from row_number() arithmetic, so a
   // single shifted/reassigned id anywhere hash-fails the row. At scale:
   // appends assign ids as log METADATA (zero data bytes); only rewrites
-  // pay one long column; the scan's id path is the same whole-file
-  // positional machinery the deletion vectors already use.
+  // pay one long column; the scan's id path is the same positional
+  // (generated row index) machinery the deletion vectors already use.
   // --------------------------------------------------------------------
   def q165RowTracking(s: SparkSession, dir: String): DataFrame = {
     val wh = s"${scratch("rowtrack", dir)}/warehouse"

@@ -219,8 +219,8 @@ private final class GraftRowLevelScan(
   // matching-groups pruning keeps its IO savings — the post-filter
   // keys are a subset of the reported ones, which Spark reconciles via
   // pushed partition values (SPARK-45652 semantics). The delta (MOR)
-  // scan stays unreported: its `_file`/`_pos` row ids need whole-file
-  // positional partitions.
+  // scan stays unreported: its `_file`/`_pos` row ids need positional
+  // (generated row index) partitions.
   private lazy val keyedReport = {
     // `spark` is the session CAPTURED at scan-builder construction —
     // the one that planned this DML; SparkSession.active here could be
@@ -239,8 +239,8 @@ private final class GraftRowLevelScan(
           .equalsIgnoreCase("true") ||
         required.fieldNames.contains(GraftTableV2.FileCol) ||
         required.fieldNames.contains(GraftTableV2.PosCol) ||
-        // row tracking: a _row_id-requiring scan needs whole-file
-        // positional partitions — keyed partitions cannot serve it
+        // row tracking: a _row_id-requiring scan needs positional
+        // partitions — keyed partitions cannot serve it
         required.fieldNames.contains(GraftTableV2.RowIdCol)) None
     else GraftTableV2.keyedGroupsFor(snap, candidates)
   }
@@ -436,7 +436,7 @@ final class GraftDeltaRowLevelOperation(
     // preserved metadata and is materialized into the post-image files
     // — Delta's contract keeps the id stable across updates on the MOR
     // plane too, not just copy-on-write. The delta scan already serves
-    // whole-file positional partitions for _file/_pos, so requesting
+    // positional partitions for _file/_pos, so requesting
     // _row_id costs no extra plan degradation. Untracked tables stay
     // byte-identical.
     if (rowTracked)

@@ -694,8 +694,8 @@ final class GraftScan(
     else
       // the pruned snapshot is already resolved for file listing —
       // reporting partitioning costs no extra log IO. A required
-      // `_commit_version` does NOT disqualify: the keyed batch serves
-      // it per file from the row path (the tag is per-file-constant,
+      // `_commit_version` does NOT disqualify: the keyed batch tags
+      // each file's partition with it (the tag is per-file-constant,
       // so it never perturbs the tuple grouping) — what lets the COW
       // MERGE rewrite join, whose scan always needs provenance, stay
       // storage-partitioned.
@@ -725,7 +725,8 @@ final class GraftScan(
   //    one partition its own guard (DataSourceV2ScanExecBase
   //    .outputOrdering requires 1 input partition per grouped key)
   //    drops the report — multi-file tuples degrade, never lie.
-  //  - DV'd files skip bitmap positions IN PLACE; the `_commit_version`
+  //  - a DV'd file drops the rows whose generated row index is in its
+  //    bitmap and keeps the rest in file order; the `_commit_version`
   //    splice is per-file-constant — both preserve row order.
   //  - fanout-written files (streaming epochs, row-level staging) are
   //    row-at-a-time and never stamped, so their presence disables the
@@ -772,14 +773,15 @@ final class GraftScan(
       skipRewrites, startingVersion, maxVersionsPerTrigger, changeFeed)
 }
 
-/** Batch read of a pruned snapshot. Fast path (no `_commit_version`
-  * required): transparent delegation to ONE parquet scan — columnar
-  * batches pass through untouched. Provenance path: files group by
-  * adding commit; each group plans its own partitions, and ONE
-  * partition-agnostic parquet reader factory (it embeds only the
-  * schema/filters/conf, not the file list) serves every partition with
-  * the group's version appended. The file list is a THUNK because
-  * runtime filters can shrink it after this batch is constructed. */
+/** Batch read of a pruned snapshot. Clean files: transparent
+  * delegation to ONE parquet scan — columnar batches pass through
+  * untouched; when `_commit_version` is required, files group by adding
+  * commit and each group's partitions carry its version. DV'd files
+  * (and every file of a positional scan) read through the idx delegate
+  * and its generated row index. ONE partition-agnostic reader factory
+  * (it embeds only the schema/filters/conf, not the file list) serves
+  * every partition. The file list is a THUNK because runtime filters
+  * can shrink it after this batch is constructed. */
 final class GraftBatch(
     spark: SparkSession, table: GraftTable, dataSchema: StructType,
     required: StructType, dataFilters: Seq[Filter],
@@ -828,29 +830,22 @@ final class GraftBatch(
   // tables (files carry them); rows come back positionally, so the
   // logical `required`/`innerRequired` above stay authoritative for
   // everything row-shaped
-  private val physDataSchema = GraftTableV2.physicalProjection(dataSchema, dataSchema)
-  private val physRequired = GraftTableV2.physicalProjection(dataSchema, innerRequired)
+  private[streaming] val physDataSchema =
+    GraftTableV2.physicalProjection(dataSchema, dataSchema)
+  private[streaming] val physRequired =
+    GraftTableV2.physicalProjection(dataSchema, innerRequired)
   private val physFilters = GraftTableV2.physicalFilters(dataSchema, dataFilters)
 
   private def innerFactory: PartitionReaderFactory =
     org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
       spark, physDataSchema, physRequired, physFilters)
-  // filter-free factory for the keyed deletion-vector partitions: their
-  // reader counts raw row positions, so row-group skipping stays OFF
-  // underneath (the residual Filter above the scan still owns row
-  // semantics)
-  private def dvFactory: PartitionReaderFactory =
-    org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
-      spark, physDataSchema, physRequired, Nil)
-  // POSITIONAL factory (round 16): every synthetic-position need — DV
-  // application, `_row_id`, `_pos` — reads through one delegate whose
+  // POSITIONAL factory: every DV'd file and every synthetic-position
+  // need — `_row_id`, `_pos` — reads through one delegate whose
   // required schema appends (a) the materialized rid column when the
   // scan serves `_row_id` (files lacking it null-fill) and (b) the
   // reader-GENERATED row-index column, which stays true-to-file under
   // byte-range splits, pushed filters, and row-group/page skipping.
-  // Positions therefore no longer cost split parallelism or pushdown:
-  // the pre-round-16 whole-file filter-free contract survives only in
-  // the keyed (SPJ) plane, where one-partition-per-file is the point.
+  // Positions therefore cost neither split parallelism nor pushdown.
   private val idxMat = needRowId
   private val idxInner: StructType = {
     val base =
@@ -866,188 +861,131 @@ final class GraftBatch(
       else physDataSchema,
       idxInner, physFilters)
 
-  /** Plan ONE file's positional partitions — byte-range splits
-    * computed directly from the file length (no per-file scan builder:
-    * planning a 100k-file table costs one getFileStatus per file) —
-    * and tag each with the file's DV / base row id / (relative) path /
-    * commit version. Pushed filters ride in the idx READER FACTORY.
-    * Every partition holds a range of a SINGLE file, so per-file
-    * constants stay per-partition constants. */
-  private def idxParts(a: TxLog.AddFile, v: Long): Seq[InputPartition] =
-    org.apache.spark.sql.graft.ParquetScans.splitFilePartitions(
-      spark, table.absoluteDataPath(a)).map(p =>
-        GraftIdxPartition(p, a.dv,
-          if (needVersion) Some(v) else None,
-          if (needFile) Some(a.path) else None,
-          a.baseRowId): InputPartition)
+  /** Tag one partition of file `a` (a split or the whole file) with the
+    * file's DV / base row id / (relative) path / commit version for the
+    * idx delegate. Every such partition holds a range of a SINGLE file,
+    * so per-file constants stay per-partition constants. */
+  private def idxPart(p: InputPartition, a: TxLog.AddFile, v: Long): InputPartition =
+    GraftIdxPartition(p, a.dv,
+      if (needVersion) Some(v) else None,
+      if (needFile) Some(a.path) else None,
+      a.baseRowId)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // POSITIONAL mode — any of _row_id / _file / _pos required (row
-    // tracking, the merge-on-read delta scan) — plans every file
-    // through the idx delegate: the reader-generated row-index column
-    // keeps positions exact while SPLITS and PUSHED FILTERS stay on
-    // (round 16; previously whole unsplit filter-free files), and the
-    // synthetic columns serve COLUMNAR — rid as a computed vector
-    // (coalesce(materialized, base + index)), _pos as the index vector
-    // itself, _file/_commit_version as constants, deletion vectors as
-    // a SelectedColumnVector remap of the surviving offsets. _row_id
-    // still never rides keyed partitions (the scan-side gates exclude
-    // RowIdCol from keyed reports; this ordering is the batch-side
-    // belt to that brace).
-    if (positional) {
-      val all = files()
-      return all.flatMap { case (a, v) => idxParts(a, v) }.toArray
+  /** The pushed-filter parquet scan's own packing of clean files. */
+  private def packed(fs: Seq[(TxLog.AddFile, Long)]): Seq[InputPartition] =
+    org.apache.spark.sql.graft.ParquetScans.scanFor(
+      spark, physDataSchema, fs.map(f => table.absoluteDataPath(f._1)),
+      physRequired, physFilters).toBatch.planInputPartitions().toSeq
+
+  /** Plan a non-keyed `(file, adding version)` list — this batch's and
+    * every micro-batch of [[GraftMicroBatchStream]]. Clean files pack
+    * through the pushed-filter parquet scan (one scan per commit
+    * version when `_commit_version` is required, each partition tagged
+    * with it). A DV'd file — and every file of a positional scan
+    * (`_row_id` / `_file` / `_pos`) — plans as byte-range splits
+    * through the idx delegate: planning a 100k-file table costs one
+    * getFileStatus per file, and the pushed filters ride in the idx
+    * READER FACTORY. */
+  private[streaming] def planFiles(all: Seq[(TxLog.AddFile, Long)]): Seq[InputPartition] = {
+    val (idxd, clean) = all.partition(f => positional || f._1.dv.isDefined)
+    val cleanParts =
+      if (clean.isEmpty) Nil
+      else if (!needVersion) packed(clean)
+      else clean.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (v, group) =>
+        packed(group).map(p => GraftVersionedPartition(p, v))
+      }
+    cleanParts ++ idxd.flatMap { case (a, v) =>
+      org.apache.spark.sql.graft.ParquetScans.splitFilePartitions(
+        spark, table.absoluteDataPath(a)).map(idxPart(_, a, v))
     }
-    // storage-partitioned-join mode: one keyed partition PER FILE —
-    // Spark's DataSourceV2ScanExecBase.groupedPartitions groups them
-    // by key itself (the Iceberg shape), which is what lets
-    // partially-clustered distribution split a SKEWED tuple's files
-    // across tasks (replicating the other side) instead of serializing
-    // a 100-GB bucket into one task; with partial clustering off the
-    // grouped count equals the tuple count, same plan as a pre-packed
-    // report. The group set was frozen at compile-time pruning (see
-    // GraftScan); columnar reads delegate untouched.
-    keyed().foreach { groups =>
-      // a deletion vector — or a required `_commit_version` tag —
-      // keeps the keyed scan COLUMNAR too (round 16): the DV'd or
-      // tagged file plans whole and filter-free (positions must be
-      // exact under a bitmap) and its vectorized batches serve through
-      // the SelectedColumnVector remap / constant version vector,
-      // while DV-free untagged scans keep the pushed-filter delegated
-      // fast path. The version is per-file-constant, so tagging never
-      // perturbs the tuple grouping — this is what keeps the COW MERGE
-      // rewrite scan (which always needs provenance)
-      // storage-partitioned.
-      val anyDv = groups.exists(_._2.exists(_._1.dv.isDefined))
-      return groups.flatMap { case (k, fs) =>
+  }
+
+  // _row_id / _file / _pos never ride keyed partitions (the scan-side
+  // gates exclude them from keyed reports; this is the batch-side belt
+  // to that brace)
+  private def keyedGroups = if (positional) None else keyed()
+
+  /** Storage-partitioned-join mode: one keyed partition PER FILE —
+    * Spark's DataSourceV2ScanExecBase.groupedPartitions groups them by
+    * key itself (the Iceberg shape), which is what lets partially-
+    * clustered distribution split a SKEWED tuple's files across tasks
+    * (replicating the other side) instead of serializing a 100-GB
+    * bucket into one task. The group set was frozen at compile-time
+    * pruning (see GraftScan). A keyed partition only adds the key to
+    * the partition its file would plan as anyway — plain, version-
+    * tagged or idx — so clean files keep their pushed filters and a DV
+    * applies exactly as on a non-keyed scan. The version is per-file-
+    * constant, so tagging never perturbs the tuple grouping — what
+    * keeps the COW MERGE rewrite scan (which always needs provenance)
+    * storage-partitioned. */
+  override def planInputPartitions(): Array[InputPartition] = keyedGroups match {
+    case Some(groups) =>
+      groups.flatMap { case (k, fs) =>
         fs.map { case (a, v) =>
-          if (!anyDv && !needVersion)
-            GraftKeyedPartition(
-              org.apache.spark.sql.graft.ParquetScans.filesPartition(
-                spark, Seq(table.absoluteDataPath(a))),
-              0, k): InputPartition
-          else
-            GraftKeyedDvColumnarPartition(
-              org.apache.spark.sql.graft.ParquetScans.wholeFilePartition(
-                spark, table.absoluteDataPath(a)),
-              a.dv, if (needVersion) Some(v) else None, k): InputPartition
+          val whole = org.apache.spark.sql.graft.ParquetScans.filesPartition(
+            spark, Seq(table.absoluteDataPath(a)))
+          GraftKeyedPartition(
+            if (a.dv.isDefined) idxPart(whole, a, v)
+            else if (needVersion) GraftVersionedPartition(whole, v)
+            else whole, k): InputPartition
         }
       }.toArray
-    }
-    val all = files()
-    // files with a deletion vector stay COLUMNAR with splits and
-    // pushed filters (round 16): each plans through the idx delegate,
-    // whose generated row-index column stays true under skipping, and
-    // the reader drops DV'd indexes via the SelectedColumnVector
-    // remap — batches whose index range holds no deleted bit (the
-    // overwhelming majority under sparse DVs) pass through untouched,
-    // and clean sibling files keep their own fast path instead of
-    // being row-forced alongside (the pre-round-16 uniformRows
-    // degradation)
-    val (dvd, fs) = all.partition(_._1.dv.isDefined)
-    val dvParts: Seq[InputPartition] =
-      dvd.flatMap { case (a, v) => idxParts(a, v) }
-    val cleanParts: Seq[InputPartition] =
-      if (fs.isEmpty) Seq.empty
-      else if (!needVersion)
-        org.apache.spark.sql.graft.ParquetScans.scanFor(
-          spark, physDataSchema, fs.map(f => table.absoluteDataPath(f._1)),
-          physRequired, physFilters).toBatch.planInputPartitions().toSeq
-      else fs.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (v, group) =>
-        org.apache.spark.sql.graft.ParquetScans.scanFor(
-          spark, physDataSchema, group.map(g => table.absoluteDataPath(g._1)),
-          physRequired, physFilters).toBatch.planInputPartitions()
-          .map(p => GraftVersionedPartition(p, 0, v))
-      }
-    // no uniformRows here: DV partitions are columnar now, so the one-
-    // BatchScan kind invariant holds without row-forcing the clean
-    // siblings (it still guards the streaming CDF path's mixed plans)
-    (cleanParts ++ dvParts).toArray
+    case None => planFiles(files()).toArray
   }
 
-  /** The delegates (0 inner, 1 dv, 2 idx) that [[planInputPartitions]]
-    * routes the current files through. Runtime filters and the pushed
-    * limit only ever shrink the file list, so the set taken when the
-    * factory is built covers every later plan of this batch. */
-  private def delegatesUsed(): Set[Int] =
-    if (positional) Set(2)
-    else keyed() match {
-      case Some(groups) =>
-        val anyDv = groups.exists(_._2.exists(_._1.dv.isDefined))
-        Set(if (!anyDv && !needVersion) 0 else 1)
-      case None =>
-        val all = files()
-        (if (all.exists(_._1.dv.isEmpty)) Set(0) else Set.empty[Int]) ++
-          (if (all.exists(_._1.dv.isDefined)) Set(2) else Set.empty[Int])
-    }
+  /** A reader factory holding the plain delegate, the idx delegate, or
+    * both. Each delegate broadcasts the Hadoop conf, so a batch builds
+    * only the ones its files plan through. */
+  private[streaming] def readerFactory(plain: Boolean, idx: Boolean)
+      : GraftVersionedReaderFactory =
+    GraftVersionedReaderFactory(
+      if (plain) Some(innerFactory) else None,
+      if (idx) Some(idxFactory) else None, required, innerRequired)
 
-  // always the wrapping factory: it DELEGATES columnar reads for plain
-  // parquet partitions (vectorized batches pass through untouched),
-  // serves version tags and row ids COLUMNAR via constant/computed
-  // vectors, and row-wraps only the DV / declined cases — so no
-  // plan-time/factory-time race over which partition kinds exist.
-  // Built ONCE per batch, with only the delegates the partitions use
-  // (each delegate broadcasts the Hadoop conf); an unused slot is null.
-  private lazy val readerFactory: PartitionReaderFactory = {
-    val used = delegatesUsed()
-    GraftVersionedReaderFactory(Array(
-      if (used(0)) innerFactory else null,
-      if (used(1)) dvFactory else null,
-      if (used(2)) idxFactory else null), required, innerRequired)
+  // Built ONCE per batch. Runtime filters and the pushed limit only
+  // ever shrink the file list, so the delegates taken when the factory
+  // is built cover every later plan of this batch.
+  private lazy val scanFactory: PartitionReaderFactory = {
+    val fs = keyedGroups.fold(files())(_.flatMap(_._2)).map(_._1)
+    readerFactory(
+      plain = !positional && fs.exists(_.dv.isEmpty),
+      idx = positional || fs.exists(_.dv.isDefined))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def createReaderFactory(): PartitionReaderFactory = scanFactory
 }
 
-/** An inner parquet partition tagged with its commit version and the
-  * index of the delegate factory that can read it. Served COLUMNAR
-  * when the delegate vectorizes (the version is a per-partition
-  * CONSTANT vector — zero per-row work), unless `rowOnly` forces the
-  * row path (set by [[GraftTableV2.uniformRows]] when DV partitions
-  * coexist in the scan: Spark refuses mixed columnar/row kinds). */
-final case class GraftVersionedPartition(
-    inner: InputPartition, delegate: Int, version: Long,
-    rowOnly: Boolean = false) extends InputPartition
-
-/** One whole unsplit file whose reader must skip the deletion vector's
-  * row indexes (`dv`: serialized bitmap). `version` is present when the
-  * surviving rows also need the `_commit_version` tag. The delegate
-  * factory index MUST point at a filter-free factory — row positions
-  * are only exact when no row group is skipped underneath. */
-final case class GraftDvPartition(
-    inner: InputPartition, delegate: Int, version: Option[Long], dv: String)
+/** An inner parquet partition tagged with its commit version. Served
+  * COLUMNAR when the scan reads columnar (the version is a
+  * per-partition CONSTANT vector — zero per-row work). */
+final case class GraftVersionedPartition(inner: InputPartition, version: Long)
     extends InputPartition
 
-/** A POSITIONAL partition (round 16) — splits of ONE file planned
-  * through the idx delegate, whose required schema ends with the
-  * reader-GENERATED row-index column (and, on `_row_id` scans, the
+/** A POSITIONAL partition — a split (or, keyed, the whole) of ONE file
+  * planned through the idx delegate, whose required schema ends with
+  * the reader-GENERATED row-index column (and, on `_row_id` scans, the
   * materialized rid column just before it). Because the generated
   * index is true-to-file under byte-range splits, pushed filters, and
-  * row-group/page skipping, every synthetic-position need serves
-  * COLUMNAR without the old whole-file filter-free contract:
-  *   - deletion vector `dv`: deleted indexes drop out via a zero-copy
-  *     [[SelectedColumnVector]] remap (one `rangeCardinality` probe
-  *     per batch; untouched batches pass through as-is),
+  * row-group/page skipping, it is the ONE way any reader applies a
+  * deletion vector, and every synthetic-position need serves COLUMNAR:
+  *   - deletion vector `dv`: a row survives iff its generated index is
+  *     not in the bitmap ([[GraftTableV2.survives]]); deleted indexes
+  *     drop out via a zero-copy [[SelectedColumnVector]] remap (one
+  *     `rangeCardinality` probe per batch; untouched batches pass
+  *     through as-is),
   *   - `_row_id`: one computed long vector, rid[i] =
   *     coalesce(materialized[phys], baseRowId + index[phys]) — a
   *     function of the PHYSICAL index, so survivor ids stay stable
   *     across MOR deletes,
   *   - `_pos`: the index vector itself (remapped under a DV),
   *   - `_file` / `_commit_version`: per-partition constant vectors
-  *     (splits never mix files — [[idxParts]] plans per file).
-  * Falls back to an equivalent row-at-a-time reader (the row delegate
-  * also generates indexes) when the parquet reader declines columnar
-  * for the schema. */
+  *     (splits never mix files — [[GraftBatch.planFiles]] plans per
+  *     file).
+  * The row-at-a-time reader (the row delegate also generates indexes)
+  * serves the same rows when the scan reads rows. */
 final case class GraftIdxPartition(
     inner: InputPartition, dv: Option[String], version: Option[Long],
     file: Option[String], baseRowId: Option[Long])
-    extends InputPartition
-
-/** A plain inner partition FORCED onto the row path: Spark refuses to
-  * mix columnar and row partitions in one BatchScan, so when a scan
-  * plans any DV partition, its clean siblings ride through this
-  * delegating wrapper instead of the columnar fast path. */
-final case class GraftRowPartition(inner: InputPartition, delegate: Int)
     extends InputPartition
 
 /** ONE FILE as a keyed partition — the storage-partitioned-join unit:
@@ -1056,88 +994,47 @@ final case class GraftRowPartition(inner: InputPartition, delegate: Int)
   * compute; Spark groups same-key partitions itself and zips two
   * co-partitioned scans key-by-key without an exchange — and, under
   * partially-clustered distribution, splits a skewed tuple's files
-  * across tasks. Reads delegate untouched (columnar included). */
-final case class GraftKeyedPartition(
-    inner: InputPartition, delegate: Int, key: Seq[Int])
+  * across tasks. `inner` is the partition the file would plan as
+  * anyway (plain, [[GraftVersionedPartition]] or [[GraftIdxPartition]])
+  * and reads exactly as it would unkeyed. */
+final case class GraftKeyedPartition(inner: InputPartition, key: Seq[Int])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(key.map(Int.box).toArray[Any])
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** A tuple's file(s) as ONE row-based keyed partition whose reader
-  * walks the files sequentially, skipping each file's deletion-vector
-  * positions — what keeps storage-partitioned joins available on
-  * merge-on-read tables. Each file may carry its commit version: when
-  * present, rows are re-emitted in `required` order with the version
-  * in the `_commit_version` slot (the COW rewrite scan's provenance).
-  * The delegate must be filter-free (positions are only exact with no
-  * row group skipped underneath). */
-final case class GraftKeyedRowPartition(
-    files: Seq[(InputPartition, Option[String], Option[Long])],
-    delegate: Int, key: Seq[Int])
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(key.map(Int.box).toArray[Any])
-}
-
-/** One DV'd or version-tagged FILE as a COLUMNAR keyed partition
-  * (round 16): the storage-partitioned MERGE/UPDATE rewrite scan and
-  * keyed reads of merge-on-read tables no longer pay the row path —
-  * batches serve through the same [[SelectedColumnVector]] remap /
-  * constant-version machinery as the plain DV serving, with
-  * the transform tuple preserved so Spark still groups and zips scans
-  * without an exchange. Whole-file and filter-free (bitmap positions
-  * must be exact). Row fallback: the [[GraftKeyedRowPartition]]
-  * reader, same key. */
-final case class GraftKeyedDvColumnarPartition(
-    inner: InputPartition, dv: Option[String], version: Option[Long],
-    key: Seq[Int])
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(key.map(Int.box).toArray[Any])
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Wraps the delegated parquet readers: version-tagged partitions emit
-  * rows in `required` order with the commit version in the
-  * `_commit_version` slot; DV partitions count row positions and skip
-  * the bitmap's indexes; every other partition DELEGATES — including
-  * columnar reads, so plain parquet partitions keep full vectorization
-  * through this factory. */
+/** Wraps the delegated parquet readers: `plain` reads clean files (with
+  * the version tag spliced in for [[GraftVersionedPartition]]s), `idx`
+  * reads [[GraftIdxPartition]]s through the generated row index; plain
+  * partitions DELEGATE untouched, columnar included, so they keep full
+  * vectorization through this factory. A scan holds only the delegates
+  * its files plan through. */
 final case class GraftVersionedReaderFactory(
-    delegates: Array[PartitionReaderFactory],
+    plain: Option[PartitionReaderFactory], idx: Option[PartitionReaderFactory],
     required: StructType, innerRequired: StructType)
     extends PartitionReaderFactory {
 
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case vp: GraftVersionedPartition =>
-      !vp.rowOnly && delegates(vp.delegate).supportColumnarReads(vp.inner)
-    case _: GraftDvPartition | _: GraftRowPartition => false
-    case kp: GraftKeyedPartition =>
-      delegates(kp.delegate).supportColumnarReads(kp.inner)
-    case _: GraftKeyedRowPartition => false
-    // the idx/dv delegates decide per the projected schema — identical
-    // for every partition of the scan (the factories share the
-    // projection and conf), so the answer stays uniform across the
-    // batch (Spark refuses mixed kinds)
-    case ip: GraftIdxPartition =>
-      delegates(2).supportColumnarReads(ip.inner)
-    case kc: GraftKeyedDvColumnarPartition =>
-      delegates(1).supportColumnarReads(kc.inner)
-    case other => delegates(0).supportColumnarReads(other)
-  }
+  // ONE answer for every partition of the scan (Spark refuses a scan
+  // that mixes columnar and row partitions): columnar only when every
+  // delegate held reads columnar for its projection. The idx
+  // projection is one column (the generated row index) wider than the
+  // plain one, so at the codegen field limit the two disagree — then
+  // every partition reads rows. The parquet factories decide from schema and conf
+  // alone, so an empty partition stands in for all of them.
+  @transient private lazy val columnar: Boolean = (plain ++ idx).forall(
+    _.supportColumnarReads(
+      org.apache.spark.sql.execution.datasources.FilePartition(0, Array.empty)))
+
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     p match {
-      case kp: GraftKeyedPartition =>
-        delegates(kp.delegate).createColumnarReader(kp.inner)
+      case kp: GraftKeyedPartition => createColumnarReader(kp.inner)
       case ip: GraftIdxPartition => idxColumnar(ip)
-      case kc: GraftKeyedDvColumnarPartition =>
-        dvColumnar(kc.inner, kc.dv, kc.version)
       case vp: GraftVersionedPartition => versionedColumnar(vp)
-      case other => delegates(0).createColumnarReader(other)
+      case other => plain.get.createColumnarReader(other)
     }
 
   // required-ordinal → inner-ordinal for idx partitions; negative =
@@ -1163,7 +1060,7 @@ final case class GraftVersionedReaderFactory(
     * `_commit_version` ride as constants. */
   private def idxColumnar(ip: GraftIdxPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val inner = delegates(2).createColumnarReader(ip.inner)
+    val inner = idx.get.createColumnarReader(ip.inner)
     val bm = ip.dv.map(graft.medallion.TxLog.dvDeserialize)
     val mapping = idxMapping
     val hasRid = mapping.contains(-4)
@@ -1192,8 +1089,8 @@ final case class GraftVersionedReaderFactory(
         val idxVec = in.column(idxOrd)
         // surviving in-batch offsets under the DV (null = all survive);
         // generated indexes ascend within a batch, so one range probe
-        // clears the common no-deletion case. Indexes past Int.MaxValue
-        // can never be in a DV (the build guard refuses them).
+        // clears the common no-deletion case (clamped where
+        // GraftTableV2.survives stops looking)
         val sel: Array[Int] = bm match {
           case Some(b) if n > 0 && idxVec.getLong(0) <= Int.MaxValue.toLong &&
               b.rangeCardinality(idxVec.getLong(0),
@@ -1203,8 +1100,7 @@ final case class GraftVersionedReaderFactory(
             var i = 0
             var k = 0
             while (i < n) {
-              val p = idxVec.getLong(i)
-              if (p > Int.MaxValue.toLong || !b.contains(p.toInt)) {
+              if (GraftTableV2.survives(b, idxVec.getLong(i))) {
                 out(k) = i; k += 1
               }
               i += 1
@@ -1259,11 +1155,11 @@ final case class GraftVersionedReaderFactory(
     }
   }
 
-  /** Row-at-a-time fallback for idx partitions (the delegate declined
-    * columnar for the schema): same semantics through the row reader,
-    * which also generates the trailing row-index column. */
+  /** Row-at-a-time serving of idx partitions (the scan reads rows):
+    * same semantics through the row reader, which also generates the
+    * trailing row-index column. */
   private def idxRow(ip: GraftIdxPartition): PartitionReader[InternalRow] = {
-    val inner = delegates(2).createReader(ip.inner)
+    val inner = idx.get.createReader(ip.inner)
     val bm = ip.dv.map(graft.medallion.TxLog.dvDeserialize)
     val mapping = idxMapping
     val hasRid = mapping.contains(-4)
@@ -1274,13 +1170,11 @@ final case class GraftVersionedReaderFactory(
       .map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull
     val version = ip.version.getOrElse(0L)
     new PartitionReader[InternalRow] {
-      private var idx = 0L
+      private var pos = 0L
       override def next(): Boolean = {
         while (inner.next()) {
-          idx = inner.get().getLong(idxOrd)
-          if (bm.forall(b =>
-              idx > Int.MaxValue.toLong || !b.contains(idx.toInt)))
-            return true
+          pos = inner.get().getLong(idxOrd)
+          if (bm.forall(GraftTableV2.survives(_, pos))) return true
         }
         false
       }
@@ -1292,91 +1186,16 @@ final case class GraftVersionedReaderFactory(
           out(i) = mapping(i) match {
             case -1 => version
             case -2 => fileConst
-            case -3 => idx
+            case -3 => pos
             case -4 =>
               if (!in.isNullAt(matOrd)) in.getLong(matOrd)
               else ip.baseRowId
-                .map(b => java.lang.Long.valueOf(b + idx)).orNull
+                .map(b => java.lang.Long.valueOf(b + pos)).orNull
             case ord => if (in.isNullAt(ord)) null else in.get(ord, types(ord))
           }
           i += 1
         }
         new GenericInternalRow(out)
-      }
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  /** Columnar deletion-vector serving: the filter-free delegate's
-    * vectorized batches pass through with the DV'd row indexes
-    * DROPPED — one `rangeCardinality` probe per batch; a batch with no
-    * deleted bit in its position range (the common case under sparse
-    * DVs) is served untouched, otherwise the surviving in-batch
-    * offsets are collected once and every data vector is wrapped in a
-    * zero-copy [[SelectedColumnVector]] remap. The optional
-    * `_commit_version` tag rides as a constant vector, so the DV'd
-    * provenance scan stays vectorized too. */
-  private def dvColumnar(
-      innerPart: InputPartition, dv: Option[String], version: Option[Long])
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val inner = delegates(1).createColumnarReader(innerPart)
-    val bmOpt = dv.map(graft.medallion.TxLog.dvDeserialize)
-    val mapping = versionMapping
-    val identity = version.isEmpty // mapping is then 0,1,2,… by construction
-    val vvec = version.map { v =>
-      val c = new org.apache.spark.sql.execution.vectorized
-        .ConstantColumnVector(1 << 16, LongType)
-      c.setLong(v)
-      c
-    }
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var pos = 0L
-      override def next(): Boolean = inner.next()
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-        val in = inner.get()
-        val n = in.numRows()
-        val start = pos
-        pos += n
-        // indexes past Int.MaxValue can never be in a DV (the build
-        // guard refuses them), so the probe range clamps there
-        val deleted = bmOpt match {
-          case Some(b) if start <= Int.MaxValue.toLong =>
-            b.rangeCardinality(
-              start, math.min(start + n, Int.MaxValue.toLong + 1L))
-          case _ => 0L
-        }
-        if (deleted == 0L) {
-          if (identity) return in
-          return rewrap(in, null, n)
-        }
-        val bm = bmOpt.get
-        val sel = new Array[Int](n - deleted.toInt)
-        var i = 0
-        var k = 0
-        while (i < n) {
-          val p = start + i
-          if (p > Int.MaxValue.toLong || !bm.contains(p.toInt)) {
-            sel(k) = i; k += 1
-          }
-          i += 1
-        }
-        rewrap(in, sel, k)
-      }
-      private def rewrap(
-          in: org.apache.spark.sql.vectorized.ColumnarBatch,
-          sel: Array[Int], m: Int)
-          : org.apache.spark.sql.vectorized.ColumnarBatch = {
-        val vecs =
-          new Array[org.apache.spark.sql.vectorized.ColumnVector](mapping.length)
-        var j = 0
-        while (j < mapping.length) {
-          vecs(j) =
-            if (mapping(j) < 0) vvec.get
-            else if (sel == null) in.column(mapping(j))
-            else new SelectedColumnVector(in.column(mapping(j)), sel)
-          j += 1
-        }
-        new org.apache.spark.sql.vectorized.ColumnarBatch(vecs, m)
       }
       override def close(): Unit = inner.close()
     }
@@ -1390,7 +1209,7 @@ final case class GraftVersionedReaderFactory(
     * vectorized parquet decode. */
   private def versionedColumnar(vp: GraftVersionedPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val inner = delegates(vp.delegate).createColumnarReader(vp.inner)
+    val inner = plain.get.createColumnarReader(vp.inner)
     val mapping = versionMapping
     val vvec = new org.apache.spark.sql.execution.vectorized
       .ConstantColumnVector(1 << 16, LongType)
@@ -1443,121 +1262,34 @@ final case class GraftVersionedReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case vp: GraftVersionedPartition =>
-        tagged(delegates(vp.delegate).createReader(vp.inner), vp.version)
-      case dp: GraftDvPartition =>
-        val inner = delegates(dp.delegate).createReader(dp.inner)
-        val bm = graft.medallion.TxLog.dvDeserialize(dp.dv)
-        val skipping = new PartitionReader[InternalRow] {
-          private var pos = -1L // row index of the row `inner` points at
-          override def next(): Boolean = {
-            while (inner.next()) {
-              pos += 1
-              // indexes past Int.MaxValue can never be in a DV (the
-              // build guard refuses them) — such rows always survive
-              if (pos > Int.MaxValue.toLong || !bm.contains(pos.toInt))
-                return true
-            }
-            false
-          }
-          override def get(): InternalRow = inner.get()
-          override def close(): Unit = inner.close()
-        }
-        dp.version.fold(skipping)(v => tagged(skipping, v))
-      // row-path fallbacks when the delegate declined columnar for the
-      // projected schema: identical semantics through the row readers
-      // (the idx row reader also generates the row-index column)
+      case kp: GraftKeyedPartition => createReader(kp.inner)
       case ip: GraftIdxPartition => idxRow(ip)
-      case kc: GraftKeyedDvColumnarPartition =>
-        createReader(GraftKeyedRowPartition(
-          Seq((kc.inner, kc.dv, kc.version)), 1, kc.key))
-      case rp: GraftRowPartition =>
-        delegates(rp.delegate).createReader(rp.inner)
-      case kp: GraftKeyedPartition =>
-        delegates(kp.delegate).createReader(kp.inner)
-      case kr: GraftKeyedRowPartition =>
-        // version slot mapping engages only when some file carries a
-        // commit version (the provenance-tagged keyed scan); untagged
-        // keyed row partitions pass inner rows through untouched
-        val mapping = versionMapping
-        val needMap = kr.files.exists(_._3.isDefined) &&
-          mapping.contains(-1)
-        val types: Array[DataType] = innerRequired.fields.map(_.dataType)
-        new PartitionReader[InternalRow] {
-          private val it = kr.files.iterator
-          private var cur: PartitionReader[InternalRow] = _
-          private var bm: org.roaringbitmap.RoaringBitmap = _
-          private var ver = 0L
-          private var pos = -1L
-          private def open(): Boolean = it.hasNext && {
-            val (p, dv, v) = it.next()
-            cur = delegates(kr.delegate).createReader(p)
-            bm = dv.map(graft.medallion.TxLog.dvDeserialize).orNull
-            ver = v.getOrElse(0L)
-            pos = -1L
-            true
-          }
-          override def next(): Boolean = {
-            var out = false
-            var done = false
-            while (!done) {
-              if (cur == null && !open()) done = true
-              else {
-                var hit = false
-                while (!hit && cur.next()) {
-                  pos += 1
-                  if (bm == null || pos > Int.MaxValue.toLong ||
-                      !bm.contains(pos.toInt)) hit = true
-                }
-                if (hit) { out = true; done = true }
-                else { cur.close(); cur = null }
-              }
-            }
-            out
-          }
-          override def get(): InternalRow = {
-            val in = cur.get()
-            if (!needMap) in
-            else {
-              val out = new Array[Any](mapping.length)
-              var i = 0
-              while (i < mapping.length) {
-                val m = mapping(i)
-                out(i) = if (m < 0) ver
-                  else if (in.isNullAt(m)) null
-                  else in.get(m, types(m))
-                i += 1
-              }
-              new GenericInternalRow(out)
-            }
-          }
-          override def close(): Unit = if (cur != null) cur.close()
-        }
-      case other => delegates(0).createReader(other)
+      case vp: GraftVersionedPartition =>
+        tagged(plain.get.createReader(vp.inner), vp.version)
+      case other => plain.get.createReader(other)
     }
 }
 
-/** A feed partition of the streaming CHANGE DATA FEED source: an inner
-  * parquet partition tagged with its commit version and either a
-  * CONSTANT change type (pre-state files served as all-deletes,
-  * add-files as all-inserts) or none — the staged-cdc-file case, where
-  * `_change_type` is the file's own trailing column. `dv`: serialized
-  * deletion-vector bitmap whose row positions the reader must skip
-  * (the delegate must then be filter-free — positions are only exact
-  * with no row group skipped underneath). */
+/** A feed partition of the streaming CHANGE DATA FEED source: a data
+  * partition (plain or idx, as [[GraftBatch.planFiles]] plans it)
+  * tagged with its commit version and a CONSTANT change type (pre-state
+  * files served as all-deletes, add-files as all-inserts), or a staged
+  * change file's partition with no change type — `_change_type` is
+  * then the file's own trailing column. */
 final case class GraftChangePartition(
-    inner: InputPartition, delegate: Int, version: Long,
-    changeType: Option[String], dv: Option[String]) extends InputPartition
+    inner: InputPartition, version: Long, changeType: Option[String])
+    extends InputPartition
 
 /** Reader factory of the streaming CDF source: every partition emits
   * rows in `required` order with `_commit_version` and `_change_type`
   * filled from the partition's constants (or, for staged change files,
-  * `_change_type` read as the inner row's trailing column). All feed
-  * partitions are row-based — the feed's value is attribution, not
-  * scan throughput, and mixing columnar kinds in one scan is not worth
-  * the complexity here. */
+  * `_change_type` read as the inner row's trailing column). Data
+  * partitions read through `data` (a [[GraftVersionedReaderFactory]],
+  * so a DV applies as on every read), change files through `cdc`. All
+  * feed partitions are row-based — the feed's value is attribution,
+  * not scan throughput. */
 final case class GraftChangeFeedReaderFactory(
-    delegates: Array[PartitionReaderFactory],
+    data: PartitionReaderFactory, cdc: PartitionReaderFactory,
     required: StructType, innerRequired: StructType)
     extends PartitionReaderFactory {
 
@@ -1568,23 +1300,9 @@ final case class GraftChangeFeedReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case cp: GraftChangePartition =>
-        val raw = delegates(cp.delegate).createReader(cp.inner)
-        val inner = cp.dv.fold(raw) { b64 =>
-          val bm = graft.medallion.TxLog.dvDeserialize(b64)
-          new PartitionReader[InternalRow] {
-            private var pos = -1L
-            override def next(): Boolean = {
-              while (raw.next()) {
-                pos += 1
-                if (pos > Int.MaxValue.toLong || !bm.contains(pos.toInt))
-                  return true
-              }
-              false
-            }
-            override def get(): InternalRow = raw.get()
-            override def close(): Unit = raw.close()
-          }
-        }
+        val inner =
+          if (cp.changeType.isDefined) data.createReader(cp.inner)
+          else cdc.createReader(cp.inner)
         // required-ordinal mapping: -1 = version const, -2 = change-type
         // const; the staged-cdc read appends _change_type as the
         // trailing inner column (ordinal innerRequired.length)
@@ -1618,7 +1336,6 @@ final case class GraftChangeFeedReaderFactory(
           }
           override def close(): Unit = inner.close()
         }
-      case other => delegates(0).createReader(other)
     }
 }
 
@@ -1641,7 +1358,6 @@ final class GraftMicroBatchStream(
 
   import GraftTableV2.VersionCol
 
-  private val needVersion = required.fieldNames.contains(VersionCol)
   private val innerRequired = StructType(
     required.fields.filterNot(f => f.name == VersionCol ||
       (changeFeed && f.name == TxLog.ChangeTypeCol)))
@@ -1677,38 +1393,31 @@ final class GraftMicroBatchStream(
   override def deserializeOffset(json: String): Offset =
     GraftVersionOffset(json.trim.toLong) // V1 LongOffset checkpoints replay as-is
 
-  // column-mapped tables: the delegated parquet reader speaks PHYSICAL
-  // names (see GraftBatch) — rows are positional, logical stays above.
   // In CDF mode the declared schema carries the feed's tag columns too,
   // which no DATA file holds — strip them before facing parquet.
   private val dataOnly = StructType(dataSchema.fields.filterNot(f =>
     changeFeed &&
       (f.name == TxLog.ChangeTypeCol || f.name == GraftTableV2.VersionCol)))
-  private val physDataSchema = GraftTableV2.physicalProjection(dataOnly, dataOnly)
-  private val physRequired = GraftTableV2.physicalProjection(dataOnly, innerRequired)
-  private val physFilters = GraftTableV2.physicalFilters(dataOnly, dataFilters)
 
-  // ONE partition-agnostic parquet reader factory, built on the driver
-  // at stream creation and serialized once: it can read every file
-  // partition any micro-batch plans (the per-batch scans below exist
-  // only for maxPartitionBytes file packing)
-  private val innerFactory: PartitionReaderFactory =
-    org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
-      spark, physDataSchema, physRequired, physFilters)
+  // the micro-batch planner: a batch over the data columns, handed each
+  // micro-batch's (file, version) list — so a stream plans and reads
+  // its files exactly as a batch scan does, deletion vectors included.
+  // The CDF feed tags versions itself, so its data batch reads without.
+  private val planner = new GraftBatch(spark, table, dataOnly,
+    if (changeFeed) innerRequired else required, dataFilters, () => Nil)
 
-  // filter-free factory for deletion-vector partitions (a clone's v1 —
-  // the one append-family commit whose adds can carry DVs)
-  private val dvFactory: PartitionReaderFactory =
-    org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
-      spark, physDataSchema, physRequired, Nil)
+  // ONE reader factory, built on the driver once per stream: it can
+  // read every partition any micro-batch plans (the per-batch scans
+  // exist only for maxPartitionBytes file packing)
+  private lazy val dataFactory = planner.readerFactory(plain = true, idx = true)
 
   // CDF: staged change files carry the physical data columns PLUS the
   // trailing _change_type string — their own read projection/factory
   private val cdcPhysSchema =
-    StructType(physDataSchema.fields :+
+    StructType(planner.physDataSchema.fields :+
       StructField(TxLog.ChangeTypeCol, StringType))
   private val cdcPhysRequired =
-    StructType(physRequired.fields :+
+    StructType(planner.physRequired.fields :+
       StructField(TxLog.ChangeTypeCol, StringType))
   private lazy val cdcFactory: PartitionReaderFactory =
     org.apache.spark.sql.graft.ParquetScans.readerFactoryFor(
@@ -1717,7 +1426,7 @@ final class GraftMicroBatchStream(
   /** CDF mode: each commit in `(from, until]` plans its feed slice —
     * staged change files read as-is (their trailing `_change_type`
     * column rides through), pre-state delete entries and add-file
-    * insert entries as constant-tagged partitions, DV-aware. The same
+    * insert entries as constant-tagged data partitions. The same
     * serving rules as [[GraftTable.readChangeFeed]] (ONE classifier —
     * `changeFeedSlice`), so a stream and a batch feed read can never
     * disagree. O(changes per batch), never O(table). */
@@ -1734,22 +1443,10 @@ final class GraftMicroBatchStream(
         else org.apache.spark.sql.graft.ParquetScans.scanFor(
           spark, cdcPhysSchema, slice.cdc.map(_.toString),
           cdcPhysRequired, Nil).toBatch.planInputPartitions().toSeq
-          .map(p => GraftChangePartition(p, 2, v, None, None))
-      def tagged(fs: Seq[TxLog.AddFile], ct: String): Seq[InputPartition] = {
-        val (dvd, clean) = fs.partition(_.dv.isDefined)
-        val dvParts: Seq[InputPartition] = dvd.map(a =>
-          GraftChangePartition(
-            org.apache.spark.sql.graft.ParquetScans.wholeFilePartition(
-              spark, table.absoluteDataPath(a)),
-            1, v, Some(ct), a.dv))
-        val cleanParts: Seq[InputPartition] =
-          if (clean.isEmpty) Nil
-          else org.apache.spark.sql.graft.ParquetScans.scanFor(
-            spark, physDataSchema, clean.map(table.absoluteDataPath),
-            physRequired, physFilters).toBatch.planInputPartitions()
-            .toSeq.map(p => GraftChangePartition(p, 0, v, Some(ct), None))
-        cleanParts ++ dvParts
-      }
+          .map(p => GraftChangePartition(p, v, None))
+      def tagged(fs: Seq[TxLog.AddFile], ct: String): Seq[InputPartition] =
+        planner.planFiles(fs.map(_ -> v))
+          .map(p => GraftChangePartition(p, v, Some(ct)))
       cdcParts ++ tagged(slice.deletes, "delete") ++
         tagged(slice.inserts, "insert")
     }.toArray
@@ -1762,30 +1459,14 @@ final class GraftMicroBatchStream(
     // the same contract appendsSince enforces: appends flow, row-neutral
     // rewrites are skipped, attribution-breaking rewrites throw
     table.appendFilesSince(from, skipRewrites, untilVersion = until)
-      .flatMap { case (v, adds) =>
-        val (dvd, clean) = adds.partition(_.dv.isDefined)
-        val dvParts: Seq[InputPartition] = dvd.map(a =>
-          GraftDvPartition(
-            org.apache.spark.sql.graft.ParquetScans.wholeFilePartition(
-              spark, table.absoluteDataPath(a)),
-            1, if (needVersion) Some(v) else None, a.dv.get))
-        val cleanParts: Seq[InputPartition] =
-          if (clean.isEmpty) Seq.empty
-          else org.apache.spark.sql.graft.ParquetScans.scanFor(
-            spark, physDataSchema, clean.map(table.absoluteDataPath),
-            physRequired, physFilters).toBatch.planInputPartitions()
-            .toSeq.map(p =>
-              if (needVersion) GraftVersionedPartition(p, 0, v) else p)
-        cleanParts ++ dvParts
-      } match { case parts => GraftTableV2.uniformRows(parts) }
+      .flatMap { case (v, adds) => planner.planFiles(adds.map(_ -> v)) }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     if (changeFeed)
-      GraftChangeFeedReaderFactory(
-        Array(innerFactory, dvFactory, cdcFactory), required, innerRequired)
-    else GraftVersionedReaderFactory(
-      Array(innerFactory, dvFactory), required, innerRequired)
+      GraftChangeFeedReaderFactory(dataFactory, cdcFactory, required, innerRequired)
+    else dataFactory
 
   override def commit(end: Offset): Unit = ()
 
@@ -2129,9 +1810,9 @@ object GraftCatalogTable {
   }
 
   /** Row-position metadata columns (see [[GraftTableV2.FileCol]]):
-    * selecting either routes the scan through whole-file positional
-    * partitions — exact physical row indexes, the deletion vectors'
-    * addressing domain. */
+    * selecting either routes the scan through positional partitions —
+    * exact physical row indexes, the deletion vectors' addressing
+    * domain. */
   private object FileColumn extends MetadataColumn {
     override def name(): String = GraftTableV2.FileCol
     override def dataType: DataType = StringType
@@ -2255,8 +1936,8 @@ object GraftTableV2 {
     * shape): source file name and PHYSICAL row index within it — the
     * addressing domain of the deletion vectors, and the row id the
     * merge-on-read row-level operations key their delta writes by.
-    * Serving them forces whole-file row-order scans (positions must be
-    * exact), so they cost nothing unless actually selected. */
+    * Serving them routes every file through the positional (generated
+    * row index) partitions, so they cost nothing unless selected. */
   val FileCol = "_file"
   val PosCol = "_pos"
 
@@ -2264,8 +1945,8 @@ object GraftTableV2 {
     * materialized [[graft.medallion.TxLog.RowIdPhysCol]] column when
     * the file carries one (rewrites under the `rowTracking` property),
     * else the file's baseRowId + physical row index, else null
-    * (pre-tracking file). Serving it rides the positional whole-file
-    * machinery, so it costs nothing unless selected. */
+    * (pre-tracking file). Serving it rides the positional machinery,
+    * so it costs nothing unless selected. */
   val RowIdCol = "_row_id"
 
   /** The entry of every programmatic read and rewrite of a
@@ -2617,19 +2298,12 @@ object GraftTableV2 {
       s"statsValue on unsupported type $other — eligibility must gate this")
   }
 
-  /** Enforce Spark's one-BatchScan invariant (all partitions columnar
-    * or all row): when any deletion-vector partition is planned, every
-    * plain parquet partition wraps into the row-delegating
-    * [[GraftRowPartition]]. DV-free scans pass through untouched and
-    * keep full vectorization. */
-  private[streaming] def uniformRows(
-      parts: Seq[InputPartition]): Array[InputPartition] =
-    if (!parts.exists(_.isInstanceOf[GraftDvPartition])) parts.toArray
-    else parts.map {
-      case w: GraftVersionedPartition => w.copy(rowOnly = true): InputPartition
-      case d: GraftDvPartition => d: InputPartition
-      case raw => GraftRowPartition(raw, 0): InputPartition
-    }.toArray
+  /** Whether the row at generated row index `idx` survives deletion
+    * vector `dv` — the one test every DV'd read applies. Indexes past
+    * Int.MaxValue can never be in a DV (the build guard refuses them). */
+  private[streaming] def survives(
+      dv: org.roaringbitmap.RoaringBitmap, idx: Long): Boolean =
+    idx > Int.MaxValue.toLong || !dv.contains(idx.toInt)
 
   /** EXACT translation of DELETE predicates into the table's range
     * shape — the opposite discipline from [[bounds]]: pruning may

@@ -32,9 +32,9 @@ object ParquetScans {
     * physical index within its file — correct under byte-range splits,
     * pushed filters, and row-group/page skipping, because the
     * generator reads the true row ranges off the PageReadStore
-    * (`ParquetRowIndexUtil`). This is what lets positional serving
-    * (deletion vectors, `_row_id`, `_pos`) keep splits AND pushdown
-    * instead of planning whole unsplit filter-free files. */
+    * (`ParquetRowIndexUtil`). It is the one way a graft-table reader
+    * applies a deletion vector, and what serves `_row_id` and `_pos`:
+    * positions keep splits AND pushdown. */
   val RowIndexCol: String =
     org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       .ROW_INDEX_TEMPORARY_COLUMN_NAME
@@ -74,9 +74,11 @@ object ParquetScans {
   /** A partition-agnostic parquet [[PartitionReaderFactory]] for the
     * given (schema, projection, filters) spec: the factory only embeds
     * the broadcast Hadoop conf and the read schema/filters, so ONE
-    * factory (built on the driver, serialized once) can read the file
-    * partitions of EVERY micro-batch a streaming source plans — the
-    * per-batch scans are only needed for maxPartitionBytes file packing. */
+    * factory (built on the driver, serialized once) reads every file
+    * partition of a batch scan — packed, split or keyed — and of EVERY
+    * micro-batch a streaming source plans; the per-batch scans are only
+    * needed for maxPartitionBytes file packing. Its columnar decision
+    * depends on the projection and conf alone, never on the partition. */
   def readerFactoryFor(
       spark: SparkSession, schema: StructType,
       requiredSchema: StructType, filters: Seq[Filter])
@@ -84,29 +86,15 @@ object ParquetScans {
     scanFor(spark, schema, Seq.empty, requiredSchema, filters)
       .toBatch.createReaderFactory()
 
-  /** One UNSPLIT partition covering the whole of `file`, for readers
-    * that must see the file's rows in exact row-index order (deletion-
-    * vector application counts positions): byte-range splits would
-    * reset the count mid-file, and pushed filters would skip row groups
-    * underneath it — so DV partitions are planned whole and unfiltered
-    * (Spark's residual Filter above the scan still drops rows). One
-    * file per partition costs split parallelism only on the DV'd files,
-    * which the delete thresholds keep few and small. */
-  def wholeFilePartition(spark: SparkSession, file: String): org.apache.spark.sql.connector.read.InputPartition = {
-    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-    val p = new Path(file)
-    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
-    FilePartition(0, Array(PartitionedFile(
-      org.apache.spark.sql.catalyst.InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPath(p),
-      0L, st.getLen, Array.empty, st.getModificationTime, st.getLen)))
-  }
-
   /** Byte-range SPLIT partitions of one file — the positional-scan
-    * unit (round 16): each split becomes its own [[FilePartition]], so
-    * per-file constants (deletion vector, base row id, path, commit
-    * version) stay per-partition constants while a large file still
-    * fans out across tasks. Unlike [[scanFor]], this computes the
+    * unit for every DV'd file (batch, micro-batch and change-feed
+    * slice) and every file of a `_row_id` / `_file` / `_pos` scan: each
+    * split becomes its own [[FilePartition]], so per-file constants
+    * (deletion vector, base row id, path, commit version) stay
+    * per-partition constants while a large file still fans out across
+    * tasks. Splits are safe under a deletion vector because the reader
+    * matches the bitmap against the generated [[RowIndexCol]], never
+    * against a count of the rows it has seen. Unlike [[scanFor]], this computes the
     * ranges directly from the file length — no per-file
     * `InMemoryFileIndex` + builder, so planning a 100k-file table
     * costs one `getFileStatus` per file and nothing else (the pushed
@@ -141,8 +129,8 @@ object ParquetScans {
   }
 
   /** One partition covering several whole files — the storage-
-    * partitioned-join unit: all files of one bucket read by one task
-    * (splits would tear the key grouping). */
+    * partitioned-join unit, one file per keyed partition (splits would
+    * tear the key grouping and the reported sort order). */
   def filesPartition(
       spark: SparkSession, files: Seq[String])
       : org.apache.spark.sql.connector.read.InputPartition = {

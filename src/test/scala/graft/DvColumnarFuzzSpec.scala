@@ -7,8 +7,10 @@ import scala.util.Random
 /** Differential fuzz for the positional scan plane (generated
   * row-index column, SelectedColumnVector remap, byte-range splits,
   * pushed filters): every read path of a table — the programmatic
-  * `t.read`, the `format("graft-table")` scan and a stats-pruned
-  * `readRange` — must return exactly the generator's MODEL of it: the
+  * `t.read`, the `format("graft-table")` scan, a stats-pruned
+  * `readRange` and, in every fourth trial, an `AvailableNow` stream of
+  * a clone and a scan through the row (non-vectorized) readers — must
+  * return exactly the generator's MODEL of it: the
   * generated rows minus every row any of the trial's deletes matched,
   * across randomized file counts, delete patterns, filters, and split
   * sizes. The model shares no code with the scan. Seeded: failures
@@ -102,6 +104,28 @@ class DvColumnarFuzzSpec extends SparkSpec {
         check(s"readRange [$lo, $hi]",
           rows(t.readRange(spark, "id", Some(lo), Some(hi))),
           model(i => i >= lo && i <= hi))
+        if (trial % 4 == 0) {
+          // the stream source: a clone's v1 re-adds every file with its DV
+          val clone = t.cloneTo(new java.io.File(root, "clone").getAbsolutePath)
+          val name = s"dvfuzz_stream_$trial"
+          val src = spark.readStream.format("graft-table")
+            .option("path", clone.tablePath).load()
+          filter.fold(src)(src.filter).select("id", "k", "payload")
+            .writeStream.format("memory").queryName(name)
+            .option("checkpointLocation",
+              new java.io.File(root, "ckpt").getAbsolutePath)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start().awaitTermination()
+          check("AvailableNow stream of a clone", rows(spark.table(name)), all)
+          spark.catalog.dropTempView(name)
+          // the row readers: every partition of the scan reads rows
+          val vec = "spark.sql.parquet.enableVectorizedReader"
+          val prevVec = spark.conf.get(vec)
+          try {
+            spark.conf.set(vec, "false")
+            check("row readers", rows(dsv2(t)), all)
+          } finally spark.conf.set(vec, prevVec)
+        }
       } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
       graft.core.Fs.rmTree(root)
     }

@@ -195,6 +195,35 @@ class DvColumnarScanSpec extends SparkSpec {
     }
   }
 
+  test("a table exactly spark.sql.codegen.maxFields wide reads and compacts with a DV'd and a clean file") {
+    // the idx projection is one column wider than the plain one: at the
+    // field limit the plain delegate alone would read columnar, and a
+    // scan may not mix columnar and row partitions
+    val width = spark.conf.get("spark.sql.codegen.maxFields").toInt
+    val root = freshRoot()
+    val t = new GraftTable(new java.io.File(root, "tbl").getAbsolutePath)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi, 1, 1)
+      .select((0 until width).map(c => (col("id") + c).as(s"c$c")): _*)
+    t.append(rows(0L, 500L))
+    t.append(rows(500L, 1000L))
+    t.deleteRows(spark, "c0 < 500 AND c0 % 7 = 3")
+    assert(t.snapshot().files.count(_.dv.isDefined) === 1)
+    val live = (0L until 1000L).filterNot(i => i < 500L && i % 7 == 3)
+    def check(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val got = df.collect()
+      got.foreach { r =>
+        val c0 = r.getAs[Long]("c0")
+        assert(r.getAs[Long](s"c${width - 1}") === c0 + width - 1, what)
+      }
+      assert(got.map(_.getAs[Long]("c0")).sorted.toSeq === live, what)
+    }
+    check("t.read", t.read(spark))
+    check("format(graft-table)", dsv2(t))
+    t.compact(spark)
+    assert(t.snapshot().files.forall(_.dv.isEmpty))
+    check("after compact", t.read(spark))
+  }
+
   /** Broadcasts created while `body` runs: each delegated parquet
     * reader factory broadcasts the Hadoop conf, each stage its task
     * binary. */

@@ -538,6 +538,56 @@ class RowTrackingSpec extends SparkSpec {
     } finally dropCat(cat)
   }
 
+  /** A row-tracked table of 200 rows in two sorted files (k 0..99 and
+    * 100..199) and the ids its rows read before any rewrite. */
+  private def twoFiles(tag: String): (String, GraftTable, Map[Long, Long]) = {
+    val (cat, _, path) = freshTable(tag)
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('rowTracking' = 'true')")
+    val t = new GraftTable(path)
+    Seq(0L, 100L).foreach(lo => t.append((lo until lo + 100L)
+      .map(i => (i, s"v$i")).toDF("k", "v").orderBy("k").coalesce(1)))
+    (cat, t, ids(cat))
+  }
+
+  /** Exactly the `live` keys remain, each with the id it had in
+    * `before` (a lost id reads null). */
+  private def assertIdsKept(cat: String, before: Map[Long, Long], live: Set[Long]): Unit = {
+    val after = spark.sql(s"SELECT k, _row_id FROM $cat.db.t").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(after.keySet === live)
+    val lost = live.filterNot(k => after(k).contains(before(k)))
+    assert(lost.size === 0, s"of ${live.size} surviving rows")
+  }
+
+  test("purgeDeletes keeps surviving ids") {
+    val (cat, t, before) = twoFiles("purge")
+    try {
+      t.deleteRows(spark, "k = 5")
+      assert(t.purgeDeletes(spark)._1 === 1)
+      assert(t.snapshot().files.forall(_.dv.isEmpty))
+      assertIdsKept(cat, before, before.keySet - 5L)
+    } finally dropCat(cat)
+  }
+
+  test("range delete: straddler survivors keep their ids") {
+    val (cat, t, before) = twoFiles("rangedel")
+    try {
+      assert(t.delete(spark, "k", Some(110L), Some(120L))._2 === 1,
+        "the second file straddles the range and must be rewritten")
+      assertIdsKept(cat, before, before.keySet.filterNot(k => k >= 110L && k <= 120L))
+    } finally dropCat(cat)
+  }
+
+  test("deleteRows over-threshold rewrite: survivors keep their ids") {
+    val (cat, t, before) = twoFiles("delover")
+    try {
+      assert(t.deleteRows(spark, "k >= 100 AND k < 180")._2 === 1,
+        "80% of the second file is over dv.maxFraction: it must be rewritten")
+      assertIdsKept(cat, before, before.keySet.filterNot(k => k >= 100L && k < 180L))
+    } finally dropCat(cat)
+  }
+
   test("protocol: the enable commit gates by the 'rowTracking' reader feature; plain tables stay protocol-free") {
     val (cat, _, path) = freshTable("protocol")
     try {

@@ -1257,10 +1257,10 @@ class StoragePartitionedJoinSpec extends SparkSpec {
   }
 
   test("a DV'd co-bucketed join stays SPJ AND columnar (round 16)") {
-    // merge-on-read deletes on a bucketed table used to row-force the
-    // keyed scan (GraftKeyedRowPartition); the keyed DV partitions now
-    // serve vectorized batches through the SelectedColumnVector remap,
-    // so the join keeps BOTH properties at once: zero exchanges
+    // a keyed partition over a DV'd file wraps the same idx partition
+    // a non-keyed scan plans for it: the reader drops the bitmap's
+    // generated row indexes through the SelectedColumnVector remap, so
+    // the join keeps BOTH properties at once: zero exchanges
     // (storage-partitioned) and columnar parquet decode
     val wh = freshWarehouse()
     spark.conf.set("spark.sql.catalog.spjdv", classOf[GraftCatalog].getName)
@@ -1295,9 +1295,11 @@ class StoragePartitionedJoinSpec extends SparkSpec {
         }
         assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
           "the DV'd keyed scan must stay columnar (remap)")
-        assert(scans.exists(_.inputPartitions.exists(
-          _.isInstanceOf[graft.streaming.GraftKeyedDvColumnarPartition])),
-          "the fact side must plan keyed DV-columnar partitions")
+        assert(scans.exists(_.inputPartitions.exists {
+          case k: graft.streaming.GraftKeyedPartition =>
+            k.inner.isInstanceOf[graft.streaming.GraftIdxPartition]
+          case _ => false
+        }), "the fact side's keyed partitions must wrap idx partitions")
         val rows = join.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(rows === (0L until 500L).filterNot(_ % 9 == 4)
           .map(i => i -> i * 1.0).toMap)
