@@ -2225,15 +2225,19 @@ final class GraftTable(val tablePath: String) {
     * expressions (cast to the declared type) and project into table
     * schema order; frames already carrying every generated column pass
     * through untouched (their values are then VALIDATED on the staged
-    * bytes via [[TxLog.generatedChecks]]). */
+    * bytes via [[TxLog.generatedChecks]]). With `nullsOmitted` a
+    * provided NULL counts as omitted and is computed too (the SQL
+    * `INSERT` door, see [[append]]). */
   private def fillGenerated(
-      df: DataFrame, schema: StructType, props: Map[String, String]): DataFrame = {
-    val missing = generatedCols(props).filter { case (c, _) =>
-      schema.fieldNames.contains(c) && !df.columns.contains(c) }
-    if (missing.isEmpty) df
+      df: DataFrame, schema: StructType, props: Map[String, String],
+      nullsOmitted: Boolean = false): DataFrame = {
+    val fill = generatedCols(props).filter { case (c, _) =>
+      schema.fieldNames.contains(c) && (nullsOmitted || !df.columns.contains(c)) }
+    if (fill.isEmpty) df
     else {
-      val filled = missing.foldLeft(df) { case (d, (c, e)) =>
-        d.withColumn(c, expr(e).cast(schema(c).dataType)) }
+      val filled = fill.foldLeft(df) { case (d, (c, e)) =>
+        val v = expr(e).cast(schema(c).dataType)
+        d.withColumn(c, if (d.columns.contains(c)) coalesce(col(c), v) else v) }
       projectSchemaOrder(filled, schema)
     }
   }
@@ -2302,91 +2306,98 @@ final class GraftTable(val tablePath: String) {
     * still fails: silent type coercion corrupts readers (the Delta
     * `mergeSchema` contract). Dropping or retyping columns remains an
     * `overwrite()`. */
-  def append(df0: DataFrame, mergeSchema: Boolean, maxRetries: Int): Long = {
-    // validation runs BEFORE staging (a type conflict must not cost the
-    // caller a complete data write); the schema actually COMMITTED is
-    // recomputed against the live head on every attempt — see
-    // commitSchemaFor
+  def append(df0: DataFrame, mergeSchema: Boolean, maxRetries: Int): Long =
+    append(df0, mergeSchema, maxRetries, txn = None, nullsOmitted = false)
+
+  /** The append every DataFrame door commits through (the two above,
+    * `df.write.format`, catalog `INSERT`, [[appendIdempotent]] and the
+    * streaming sinks). Generated columns the batch omits are computed
+    * BEFORE the schema check; provided ones validate on the staged
+    * bytes. Identity columns fill with monotonically-unique values at
+    * or above the property's `next` (gaps allowed — the Delta
+    * contract), and a batch PROVIDING one refuses: ALWAYS semantics.
+    * `txn` = (appId, batchId) is the streaming ledger entry. With
+    * `nullsOmitted` (the SQL `INSERT` door: Spark fills every column an
+    * INSERT omits with NULL) a NULL identity or generated value counts
+    * as omitted, and a non-NULL identity value fails the staging job. */
+  private[graft] def append(
+      df0: DataFrame, mergeSchema: Boolean, maxRetries: Int,
+      txn: Option[(String, Long)], nullsOmitted: Boolean): Long =
+    appendCommit(df0.sparkSession, df0.schema, mergeSchema, maxRetries, txn) {
+      (snap0, idBase) =>
+        if (!nullsOmitted) idBase.keys.foreach(c =>
+          require(!df0.columns.contains(c), identityProvided(c)))
+        val idFilled = idBase.foldLeft(
+            fillGenerated(df0, snap0.schema, snap0.props, nullsOmitted)) {
+          case (d, (c, next)) if snap0.schema.fieldNames.contains(c) =>
+            val id = (lit(next) + monotonically_increasing_id())
+              .cast(snap0.schema(c).dataType)
+            d.withColumn(c,
+              if (!d.columns.contains(c)) id
+              else when(col(c).isNull, id).otherwise(raise_error(lit(identityProvided(c)))))
+          case (d, _) => d
+        }
+        val df = if (idBase.isEmpty) idFilled else projectSchemaOrder(idFilled, snap0.schema)
+        // mapped tables: the staged bytes carry the commit schema's PHYSICAL
+        // names (a rename/drop racing this append is detected per attempt)
+        val stagedUnder = DataType.fromJson(commitSchemaFor(snap0, df.schema, mergeSchema))
+          .asInstanceOf[StructType]
+        // hidden partitioning: cluster the batch by the spec's transform
+        // tuple (one range exchange) so files cover tight transform ranges —
+        // see [[PartitionSpec.cluster]]; no-op on spec-less tables
+        val physDf = toPhysical(df, stagedUnder)
+        (df.schema, stagedUnder, stageData(PartitionSpec.cluster(physDf,
+          PartitionSpec.resolved(snap0.props, snap0.schema, physDf.schema)), Some(snap0)))
+    }
+
+  /** The `writeStream.toTable` door: the files a DSv2 streaming epoch
+    * already staged (under `schema`'s physical names, sorted by
+    * `sortedBy`) commit through [[appendCommit]] under the txn ledger.
+    * Bytes written before the commit cannot take engine-assigned
+    * values, so an identity column, or a generated column the epoch
+    * omits, refuses, naming the column. */
+  private[graft] def appendStaged(
+      spark: SparkSession, schema: StructType,
+      staged: Seq[ParquetWrites.StagedFile], sortedBy: Seq[String],
+      txn: (String, Long)): Long =
+    appendCommit(spark, schema, mergeSchema = false, maxRetries = 20, Some(txn)) {
+      (snap0, idBase) =>
+        (idBase.keys ++ generatedCols(snap0.props).keys.filter(c =>
+          snap0.schema.fieldNames.contains(c) && !schema.fieldNames.contains(c)))
+          .foreach(c => throw new IllegalArgumentException(s"txlog: column '$c' " +
+            "is engine-assigned (GENERATED ALWAYS AS IDENTITY, or generated and " +
+            "omitted), but writeStream.toTable stages its epochs before the " +
+            s"commit — stream into $tablePath with writeStream.format(\"graft-table\")"))
+        (schema, schema, adoptStaged(staged, sortedBy))
+    }
+
+  private def identityProvided(c: String): String =
+    s"txlog: column '$c' is GENERATED ALWAYS AS IDENTITY — the engine " +
+      "assigns it (overwrite() is the reshape escape hatch, then syncIdentity)"
+
+  private def txnCovered(snap: Snapshot, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, id) => snap.txns.get(app).exists(_ >= id) }
+
+  /** The one append commit. A batch the txn ledger already covers
+    * stages nothing. `stage` validates BEFORE writing (a type conflict
+    * must not cost a complete data write) against the head read here
+    * and the identity bases to allocate from; it returns the staged
+    * bytes' logical schema, the schema whose physical names they carry,
+    * and the files, which [[appendBody]] commits. A racing identity
+    * allocator re-runs the whole append, restaging. */
+  private def appendCommit(
+      spark: SparkSession, schema0: StructType, mergeSchema: Boolean,
+      maxRetries: Int, txn: Option[(String, Long)])(
+      stage: (Snapshot, Map[String, Long]) => (StructType, StructType, Seq[AddFile])
+  ): Long = {
+    require(txn.forall(_._1.nonEmpty), "txlog: appId must be non-empty")
     val head0 = latestVersion()
     val snap0 =
-      if (head0 == 0L) Snapshot(0L, df0.schema.json, Nil) else snapshot(head0)
-    // generated columns the batch omits are computed here, BEFORE the
-    // schema check (an omitting batch is the feature's contract, not a
-    // mismatch); provided values are validated on the staged bytes below.
-    // Identity columns fill with monotonically-unique values at or above
-    // the property's `next` (gaps allowed — the Delta contract); the
-    // commit below advances `next` transactionally, and a racing
-    // allocator forces a restage (see `finish` below). A batch
-    // PROVIDING an identity column refuses: ALWAYS semantics.
-    val idBase: Map[String, Long] = identityCols(snap0.props)
-    idBase.keys.foreach(c => require(!df0.columns.contains(c),
-      s"txlog: column '$c' is GENERATED ALWAYS AS IDENTITY — the " +
-        "engine assigns it (overwrite() is the reshape escape hatch, " +
-        "then syncIdentity)"))
-    val idFilled = idBase.foldLeft(fillGenerated(df0, snap0.schema, snap0.props)) {
-      case (d, (c, next)) =>
-        if (!snap0.schema.fieldNames.contains(c)) d
-        else d.withColumn(c,
-          (lit(next) + monotonically_increasing_id())
-            .cast(snap0.schema(c).dataType))
-    }
-    val df = if (idBase.isEmpty) idFilled else projectSchemaOrder(idFilled, snap0.schema)
-    // mapped tables: the staged bytes carry the commit schema's PHYSICAL
-    // names (a rename/drop racing this append is detected per attempt)
-    val stagedUnder = DataType.fromJson(commitSchemaFor(snap0, df.schema, mergeSchema))
-      .asInstanceOf[StructType]
-    // hidden partitioning: cluster the batch by the spec's transform
-    // tuple (one range exchange) so files cover tight transform ranges —
-    // see [[PartitionSpec.cluster]]; no-op on spec-less tables
-    val physDf = toPhysical(df, stagedUnder)
-    val adds = stageData(PartitionSpec.cluster(physDf,
-      PartitionSpec.resolved(snap0.props, snap0.schema, physDf.schema)), Some(snap0))
-    // upcast-on-write: when the commit schema is WIDER than the staged
-    // bytes (an integral-narrow batch on a widened table), the narrow
-    // column's hash-keyed stats artifacts — bloom bitsets, HLL
-    // sketches, bucket-transform keys — were hashed over the NARROW
-    // representation and must drop (probes hash the table's type; a
-    // stale hash prunes wrongly, a missing one only costs pruning).
-    // min/max/null/sum strings are value-identical in the integral
-    // domain and stay. Re-derived per commit attempt: a concurrent
-    // widen can move the commit schema mid-race.
-    def narrowAdjusted(cs: StructType, in: Seq[AddFile]): Seq[AddFile] = {
-      val physTypes = physicalSchema(cs).fields
-        .map(f => f.name -> f.dataType).toMap
-      val narrowed: Set[String] = physDf.schema.fields.collect {
-        case f if physTypes.get(f.name).exists(_ != f.dataType) => f.name
-      }.toSet
-      if (narrowed.isEmpty) in
-      else in.map { a =>
-        val drop = a.stats.keysIterator.filter(k =>
-          PartitionSpec.fromStatKey(k).exists(t =>
-            t.kind == "bucket" && narrowed(t.source))).toSet
-        a.copy(stats = (a.stats -- drop).map {
-          case (k, st) if narrowed(k) => k -> st.copy(bloom = None, hll = None)
-          case kv => kv
-        })
-      }
-    }
-    // identity: the staged values were allocated against idBase — a
-    // head whose identity columns moved means a racing allocator;
-    // restage with fresh bases rather than commit overlapping ranges.
-    // Checked even when idBase was EMPTY at staging: a concurrent
-    // setProperty('identity.<c>') landing mid-flight would otherwise
-    // let a batch that PROVIDES c commit past ALWAYS semantics without
-    // advancing `next` — later allocations would collide.
-    def finish(head: Snapshot, cs: StructType, c: Commit): Commit = {
-      if (identityCols(head.props) != idBase) throw IdentityRaced
-      c.copy(adds = narrowAdjusted(cs, c.adds),
-        props = if (idBase.isEmpty) None else Some(head.props ++ idBase.map {
-          case (name, next) =>
-            val mx = adds.flatMap(_.stats.get(physicalOf(cs, name)))
-              .map(st => BigDecimal(st.max).toLongExact)
-            (IdentityPrefix + name) ->
-              (if (mx.isEmpty) next else math.max(next, mx.max + 1L)).toString
-        }))
-    }
-    val body = appendBody(df.sparkSession, "append", df.schema, mergeSchema,
-      adds, stagedUnder, finish = finish)
+      if (head0 == 0L) Snapshot(0L, schema0.json, Nil) else snapshot(head0)
+    if (txnCovered(snap0, txn)) return head0
+    val idBase = identityCols(snap0.props)
+    val (batch, stagedUnder, adds) = stage(snap0, idBase)
+    val body = appendBody(spark, batch, mergeSchema, adds, stagedUnder, idBase, txn)
     var attempts = 0
     try transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries) { head =>
       attempts += 1
@@ -2394,33 +2405,38 @@ final class GraftTable(val tablePath: String) {
     } catch { case IdentityRaced =>
       if (maxRetries - attempts <= 0) throw new ConcurrentWriteException(
         s"txlog: identity allocation kept racing at $tablePath")
-      append(df0, mergeSchema, maxRetries - attempts)
+      appendCommit(spark, schema0, mergeSchema, maxRetries - attempts, txn)(stage)
     }
   }
 
-  /** The per-attempt body every append path hands [[transact]] (`Retry`).
-    * At each head it re-derives the schema line ([[commitSchemaFor]]),
-    * refuses a column mapping that moved under the staged bytes,
-    * validates the staged bytes against the head's constraints whenever
-    * they differ from the set the bytes last passed, skips a batch the
-    * head's txn ledger already covers, and assigns row ids from the
-    * head's watermark — all from ONE snapshot resolution per attempt.
-    * `stagedUnder` is the logical schema whose physical names the staged
-    * bytes carry; `finish` adds [[append]]'s identity and up-cast steps. */
+  /** The per-attempt body [[appendCommit]] hands [[transact]] (`Retry`),
+    * from ONE snapshot resolution per attempt. At each head it skips a
+    * batch the txn ledger covers; refuses an identity column the engine
+    * did not allocate (also one a concurrent setProperty made identity
+    * mid-flight) and restages (IdentityRaced) when the identity columns
+    * moved since `idBase`; re-derives the schema line
+    * ([[commitSchemaFor]]) and refuses a column mapping that moved under
+    * the staged bytes; validates them against a constraint set they have
+    * not yet passed; drops hash sketches of narrow-staged columns;
+    * assigns row ids and advances each allocated `next` past the
+    * committed max. `batch` is the staged bytes' logical schema,
+    * `stagedUnder` the schema whose physical names they carry. */
   private def appendBody(
-      spark: SparkSession, op: String, batch: StructType, mergeSchema: Boolean,
-      adds: Seq[AddFile], stagedUnder: StructType,
-      txn: Option[(String, Long)] = None,
-      finish: (Snapshot, StructType, Commit) => Commit = (_, _, c) => c
-  ): Long => Option[Commit] = {
+      spark: SparkSession, batch: StructType, mergeSchema: Boolean,
+      adds: Seq[AddFile], stagedUnder: StructType, idBase: Map[String, Long],
+      txn: Option[(String, Long)]): Long => Option[Commit] = {
+    val op = if (txn.isEmpty) "append" else "streamingUpdate"
     val stagedPhysical = physicalSchema(stagedUnder).fieldNames.toSeq
+    val stagedTypes = batch.fields.map(f => physicalOf(stagedUnder, f.name) -> f.dataType)
     var validated = Map.empty[String, String]
     head => {
       val snap = if (head == 0L) Snapshot(0L, batch.json, Nil) else snapshot(head)
-      // a racing writer (same restarted query) already landed this
-      // batch — ours would be a duplicate
-      if (txn.exists { case (app, id) => snap.txns.get(app).exists(_ >= id) }) None
+      if (txnCovered(snap, txn)) None
       else {
+        val ids = identityCols(snap.props)
+        batch.fieldNames.filter(c => ids.contains(c) && !idBase.contains(c))
+          .foreach(c => throw new IllegalArgumentException(identityProvided(c)))
+        if (ids != idBase) throw IdentityRaced
         val schemaJson = commitSchemaFor(snap, batch, mergeSchema)
         val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
         // PREFIX compare: physical names are immutable for surviving
@@ -2447,11 +2463,41 @@ final class GraftTable(val tablePath: String) {
           enforceOnStaged(spark, schema, adds, cur)
           validated = cur
         }
+        // upcast-on-write: when the commit schema is WIDER than the staged
+        // bytes (an integral-narrow batch on a widened table), the narrow
+        // column's hash-keyed stats artifacts — bloom bitsets, HLL
+        // sketches, bucket-transform keys — were hashed over the NARROW
+        // representation and must drop (probes hash the table's type; a
+        // stale hash prunes wrongly, a missing one only costs pruning).
+        // min/max/null/sum strings are value-identical in the integral
+        // domain and stay. Re-derived per attempt: a concurrent widen can
+        // move the commit schema mid-race.
+        val physTypes = physicalSchema(schema).fields.map(f => f.name -> f.dataType).toMap
+        val narrowed = stagedTypes.collect {
+          case (p, t) if physTypes.get(p).exists(_ != t) => p }.toSet
+        val commitAdds =
+          if (narrowed.isEmpty) adds
+          else adds.map { a =>
+            val drop = a.stats.keysIterator.filter(k =>
+              PartitionSpec.fromStatKey(k).exists(t =>
+                t.kind == "bucket" && narrowed(t.source))).toSet
+            a.copy(stats = (a.stats -- drop).map {
+              case (k, st) if narrowed(k) => k -> st.copy(bloom = None, hll = None)
+              case kv => kv
+            })
+          }
         // row tracking: every append assigns VIRTUAL row ids from the
         // head's watermark — log metadata only
-        val (ridAdds, hwm) = assignBaseRowIds(adds, snap.rowIdWatermark)
-        Some(finish(snap, schema, Commit(op, Some(schemaJson), ridAdds,
-          txns = txn.toMap, rowIdWatermark = Some(hwm))))
+        val (ridAdds, hwm) = assignBaseRowIds(commitAdds, snap.rowIdWatermark)
+        Some(Commit(op, Some(schemaJson), ridAdds,
+          txns = txn.toMap, rowIdWatermark = Some(hwm),
+          props = if (idBase.isEmpty) None else Some(snap.props ++ idBase.map {
+            case (name, next) =>
+              val mx = adds.flatMap(_.stats.get(physicalOf(schema, name)))
+                .map(st => BigDecimal(st.max).toLongExact)
+              (IdentityPrefix + name) ->
+                (if (mx.isEmpty) next else math.max(next, mx.max + 1L)).toString
+          })))
       }
     }
   }
@@ -2470,8 +2516,7 @@ final class GraftTable(val tablePath: String) {
     if (head.version == 0L) batch.json
     else {
       val existing = head.schema
-      if (sameSchema(existing, batch) ||
-          upcastCompatible(existing, batch)) existing.json
+      if (upcastCompatible(existing, batch)) existing.json
       else if (!mergeSchema) throw new IllegalArgumentException(
         s"txlog: append schema ${batch.simpleString} does not match table " +
           s"schema ${existing.simpleString}; pass mergeSchema = true to add " +
@@ -2516,70 +2561,15 @@ final class GraftTable(val tablePath: String) {
     * into exactly-once: after a crash between commit and offset-log
     * update, Structured Streaming re-runs the batch with the SAME id,
     * and the replay lands here as a no-op — the Delta `txn` protocol
-    * [Armbrust et al., VLDB 2020 §3.1].
+    * [Armbrust et al., VLDB 2020 §3.1]. Any other batch is a plain
+    * strict [[append]] — a sink must not silently evolve the table.
     *
     * The txn check re-runs on every lost commit race: two executors of
     * the same restarted query racing the same batch resolve to exactly
     * one append. Returns the committed (or already-covering) version. */
   def appendIdempotent(
-      df0: DataFrame, appId: String, batchId: Long, maxRetries: Int = 20): Long = {
-    require(appId.nonEmpty, "txlog: appId must be non-empty")
-    val pre = if (Files.exists(logDir)) snapshot() else Snapshot(0L, df0.schema.json, Nil)
-    if (pre.txns.get(appId).exists(_ >= batchId)) return pre.version
-    // generated columns an epoch omits are computed, like append
-    val df = if (pre.version == 0L) df0 else fillGenerated(df0, pre.schema, pre.props)
-    val existing = pre.version > 0 && pre.schema.nonEmpty
-    if (existing) {
-      require(sameSchema(pre.schema, df.schema),
-        s"txlog: append schema ${df.schema.simpleString} does not match table " +
-          s"schema ${pre.schema.simpleString}; use overwrite() to change schema")
-    }
-    // mapped tables: stage under the table's physical names; validate
-    // against the table's LOGICAL schema (constraints speak logical)
-    val stagedUnder = if (existing) pre.schema else df.schema
-    val adds = stageData(toPhysical(df, stagedUnder), Some(pre))
-    // streaming appends are strict: a sink must not silently evolve the
-    // table
-    transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries)(
-      appendBody(df.sparkSession, "streamingUpdate", df.schema, mergeSchema = false,
-        adds, stagedUnder, txn = Some(appId -> batchId)))
-  }
-
-  /** [[appendIdempotent]] over files a DSv2 streaming write already
-    * staged (the `writeStream.toTable` path): same txn-ledger contract
-    * — a batch id at or below the app's high-water mark is a no-op and
-    * the staged files are dropped; otherwise the files adopt with
-    * stats and commit with the (appId, batchId) action. The table must
-    * already exist: the catalog's streaming write resolves it through
-    * `loadTable`, so the schema was validated by Spark's resolution. */
-  private[graft] def appendStagedIdempotent(
-      spark: SparkSession, appId: String, batchId: Long, schema: StructType,
-      staged: Seq[ParquetWrites.StagedFile], maxRetries: Int = 20,
-      sortedBy: Seq[String] = Nil): Long = {
-    require(appId.nonEmpty, "txlog: appId must be non-empty")
-    val pre = snapshot()
-    require(pre.version > 0L,
-      s"txlog: no committed table at $root for a streaming append")
-    if (pre.txns.get(appId).exists(_ >= batchId)) {
-      staged.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
-      return pre.version
-    }
-    // the staged bytes carry PHYSICAL names (the DSv2 writer factory is
-    // built over physicalSchema); `schema` here is the logical schema.
-    // `sortedBy` is the write-declared effective sort (spec sources ++
-    // write.orderBy): Spark sorted each epoch task by it, so every
-    // tuple-rolled file is a sorted subsequence — stamp it
-    val adds = adoptStaged(staged, sortedBy = sortedBy)
-    // DSv2-staged epochs validate like every other write (the adopted
-    // parquet is the batch)
-    transact(Retry, staged = adds.map(_.path), maxRetries = maxRetries)(
-      appendBody(spark, "streamingUpdate", schema, mergeSchema = false,
-        adds, schema, txn = Some(appId -> batchId)))
-  }
-
-  private def sameSchema(a: StructType, b: StructType): Boolean =
-    a.fields.map(f => (f.name, f.dataType)).toSeq ==
-      b.fields.map(f => (f.name, f.dataType)).toSeq
+      df: DataFrame, appId: String, batchId: Long, maxRetries: Int = 20): Long =
+    append(df, mergeSchema = false, maxRetries, Some(appId -> batchId), nullsOmitted = false)
 
   /** Is `from` → `to` an INTEGRAL-family widening (byte→short→int→long)?
     * The subset of type widening where the stats comparison domain is

@@ -104,20 +104,20 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
   // ------------------------------------------------------------- writes
   // The table deliberately does NOT advertise DSv2 write capabilities:
   // V2 byName output resolution would demand the synthetic
-  // `_commit_version` column from every writer. Spark therefore falls
-  // back to these V1 hooks, where the input schema is the TABLE's data
-  // schema — what a writer naturally has.
+  // `_commit_version` column from every writer, and a `BATCH_WRITE`
+  // table refuses ErrorIfExists (the default mode) and Ignore outright.
+  // Spark therefore falls back to these V1 hooks, where the input
+  // schema is the TABLE's data schema — what a writer naturally has.
 
-  /** `df.write.format("graft-table").option("path", t).mode(...)`:
-    * Append commits through the table's optimistic append (pass
+  /** `df.write.format("graft-table").option("path", t).mode(...)`: a
+    * SaveMode shim. Append is [[GraftTable.append]] (pass
     * `mergeSchema=true` to widen); Overwrite is the CAS overwrite
     * commit; ErrorIfExists/Ignore follow their SaveMode contracts
     * against table existence (≥1 commit). */
   override def createRelation(
       sqlContext: SQLContext, mode: SaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val p = parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-table requires .option(\"path\", <table root>)"))
+    val p = path(parameters.asJava)
     val t = new GraftTable(p)
     val exists = t.latestVersion() > 0L
     val mergeSchema = parameters.get("mergeSchema").exists(_.toBoolean)
@@ -141,13 +141,12 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
   }
 
   /** `df.writeStream.format("graft-table").option("path", t)`: the
-    * exactly-once table sink as a format — each micro-batch commits
-    * through [[GraftTable.appendIdempotent]] under the query's txn
-    * ledger, so a crash-replayed batch id is a no-op (the
-    * [[TableSink]] contract without writing foreachBatch yourself).
-    * `appId` names the ledger; it defaults to the checkpoint location,
-    * which shares the batch-id lifetime — pass it explicitly when two
-    * logical queries must not suppress each other's batches. */
+    * one streaming sink — each micro-batch commits through
+    * [[TableSink.writerFor]] (a txn-ledger [[GraftTable.append]]), so a
+    * crash-replayed batch id is a no-op. `appId` names the ledger; it
+    * defaults to the checkpoint location, which shares the batch-id
+    * lifetime — pass it explicitly when two logical queries must not
+    * suppress each other's batches. */
   override def createSink(
       sqlContext: SQLContext, parameters: Map[String, String],
       partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
@@ -155,14 +154,14 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
       "graft-table sink: partitionBy is the table's layout concern (zorder/compact), not the sink's")
     require(outputMode == OutputMode.Append(),
       s"graft-table sink supports Append output only, got $outputMode")
-    val p = parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-table requires .option(\"path\", <table root>)"))
+    val p = path(parameters.asJava)
     val appId = parameters.get("appId")
       .orElse(parameters.get("checkpointLocation"))
       .getOrElse(throw new IllegalArgumentException(
         "graft-table sink needs .option(\"appId\", ...) or a checkpointLocation " +
           "to name its exactly-once txn ledger"))
     val table = new GraftTable(p)
+    val write = TableSink.writerFor(table, appId)
     // opt-in auto-compaction (the Delta autoOptimize shape): when the
     // count of sub-target files reaches minFiles after a commit, merge
     // JUST those sub-target files in one transactional compactSmall —
@@ -179,8 +178,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
       override def addBatch(batchId: Long, data: DataFrame): Unit = {
         // re-plan the micro-batch as a batch frame (the standard sink
         // pattern: a streaming frame refuses batch writes)
-        table.appendIdempotent(
-          org.apache.spark.sql.graft.ParquetScans.asBatch(data), appId, batchId)
+        write(org.apache.spark.sql.graft.ParquetScans.asBatch(data), batchId)
         if (autoCompact) {
           try {
             val _ = table.compactSmall(
@@ -1701,7 +1699,8 @@ final class GraftCatalogTable(
             override def insert(data: Dataset[Row], ignored: Boolean): Unit = {
               val t = new GraftTable(tablePath)
               if (overwrite) t.overwrite(data.toDF())
-              else t.append(data.toDF(), mergeSchema = false, maxRetries = 20)
+              else t.append(data.toDF(), mergeSchema = false, maxRetries = 20,
+                txn = None, nullsOmitted = true)
               ()
             }
           }
@@ -1733,10 +1732,11 @@ final class GraftCatalogTable(
 }
 
 /** The exactly-once streaming table write behind `writeStream.toTable`.
-  * Epochs stage attempt-unique parquet files; `commit(epoch)` adopts
-  * exactly the winning messages' files and lands ONE `streamingUpdate`
-  * commit carrying the (queryId, epoch) txn action — replayed or
-  * racing epochs no-op through the ledger, same as [[TableSink]]. */
+  * Epochs stage attempt-unique parquet files; `commit(epoch)` hands
+  * exactly the winning messages' files to the one append commit
+  * ([[GraftTable.appendStaged]]) under the (queryId, epoch) txn entry —
+  * replayed or racing epochs no-op through the ledger, same as
+  * [[TableSink]]; identity and omitted generated columns refuse. */
 private final class GraftStreamingTableWrite(
     tablePath: String, writeSchema: StructType, queryId: String,
     sortedBy: Seq[String] = Nil)
@@ -1750,7 +1750,7 @@ private final class GraftStreamingTableWrite(
     * it): staged bytes must use the table's physical names. Resolved
     * ONCE per write object so the writer factory and the commit agree
     * on the physical names even if a rename races the epoch (the
-    * commit-side drift check in appendStagedIdempotent then decides). */
+    * commit-side drift check in the append body then decides). */
   private lazy val tableSchema: StructType = {
     val t = new GraftTable(tablePath).snapshot(-1L).schema
     if (!TxLog.isMapped(t)) writeSchema
@@ -1772,11 +1772,12 @@ private final class GraftStreamingTableWrite(
       epochId: Long,
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
     try {
-      new GraftTable(tablePath).appendStagedIdempotent(
-        SparkSession.active, s"graft-stream-$queryId", epochId, tableSchema,
+      new GraftTable(tablePath).appendStaged(
+        SparkSession.active, tableSchema,
         org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
         // physical names: staged bytes carry the table's mapping
-        sortedBy = sortedBy.map(c => TxLog.physicalOf(tableSchema, c)))
+        sortedBy.map(c => TxLog.physicalOf(tableSchema, c)),
+        s"graft-stream-$queryId" -> epochId)
       ()
     } finally cleanupStage()
 

@@ -69,7 +69,7 @@ class CommitRaceSpec extends SparkSpec {
     _.properties.get("other").contains("1")
 
   /** A parquet batch written outside the table — what a DSv2 streaming
-    * write hands `appendStagedIdempotent`. */
+    * write hands `appendStaged`. */
   private def stagedBatch(): Seq[ParquetWrites.StagedFile] = {
     val dir = new java.io.File(s"target/tmp/crace_stage_${UUID.randomUUID().toString.take(8)}")
     val df = Seq((4L, "d", 40)).toDF("id", "v", "n")
@@ -88,8 +88,9 @@ class CommitRaceSpec extends SparkSpec {
     RetryCase("appendIdempotent", Map.empty, _ => (), blindAppend, rowKept,
       _.appendIdempotent(Seq((4L, "d", 40)).toDF("id", "v", "n"), "app", 1L),
       t => ids(t).contains(4L) && t.snapshot().txns.get("app").contains(1L)),
+    // The idempotent form of appendStaged: a staged batch carrying a txn.
     RetryCase("appendStagedIdempotent", Map.empty, _ => (), blindAppend, rowKept,
-      t => t.appendStagedIdempotent(spark, "app", 1L, t.snapshot().schema, stagedBatch()),
+      t => t.appendStaged(spark, t.snapshot().schema, stagedBatch(), Nil, "app" -> 1L),
       t => ids(t).contains(4L) && t.snapshot().txns.get("app").contains(1L)),
     RetryCase("addColumns", Map.empty, _ => (), addExtra, extraKept,
       _.addColumns(Seq(StructField("x", StringType))),

@@ -127,4 +127,55 @@ class IdentityColumnsSpec extends SparkSpec {
       s"the restaged batch must allocate from the new base: ${ids.mkString(",")}")
     assert(t2.properties("identity.id").toLong > ids.max)
   }
+
+  test("identity appearing MID-append is detected on the streaming door too") {
+    // the same race through the txn-ledger append: the commit attempt
+    // re-reads the head's identity columns and refuses the provided id
+    val t = freshTable("midrace_txn")
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    val racer = new GraftTable(t.tablePath)
+    t.beforePublishHook = () => {
+      t.beforePublishHook = () => ()
+      racer.setProperty("identity.id", "1000")
+    }
+    val err = intercept[IllegalArgumentException] {
+      t.appendIdempotent(Seq((99L, "x")).toDF("id", "v"), "app", 0L) }
+    assert(err.getMessage.contains("IDENTITY"))
+    assert(t.read(spark).count() === 1L, "the racing append must not commit")
+    assert(!t.snapshot().txns.contains("app"), "nor record its batch")
+  }
+
+  // every door an append reaches the table through holds ALWAYS
+  // semantics: a provided id refuses with nothing committed, an omitted
+  // one allocates at or above `next` and moves `next` past it. The one
+  // door that stages bytes before its commit cannot allocate, so it
+  // refuses both, naming the column.
+  graft.WriteDoors.all.foreach { door =>
+    test(s"${door.name}: provided ids refuse, omitted ids allocate from next") {
+      val target = graft.WriteDoors.create(spark, "id BIGINT, v STRING")
+      val t = target.table
+      t.append(Seq((1L, "a")).toDF("id", "v"))
+      t.setProperty("identity.id", "10")
+      val head = t.latestVersion()
+      def refused(df: org.apache.spark.sql.DataFrame): Unit = {
+        val err = intercept[Exception](door.write(spark, target, df))
+        val msg = graft.WriteDoors.messages(err)
+        assert(msg.contains("IDENTITY") && msg.contains("'id'"), msg)
+        assert(t.latestVersion() === head, "a refused batch commits nothing")
+        assert(t.read(spark).count() === 1L)
+        assert(t.properties("identity.id") === "10")
+      }
+      refused(Seq((99L, "x")).toDF("id", "v"))
+      if (door.stagesFirst) refused(Seq("y").toDF("v"))
+      else {
+        door.write(spark, target, Seq("y", "z").toDF("v"))
+        val got = t.read(spark).filter(col("v") =!= "a").select("id")
+          .collect().map(_.getLong(0))
+        assert(got.length === 2 && got.distinct.length === 2)
+        assert(got.min >= 10L, s"ids start at next: ${got.mkString(",")}")
+        assert(t.properties("identity.id").toLong > got.max,
+          "next must clear the allocated range")
+      }
+    }
+  }
 }

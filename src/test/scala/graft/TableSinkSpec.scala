@@ -50,6 +50,9 @@ class TableSinkSpec extends SparkSpec {
     write(b0, 0L)
     write(b1, 1L)
     val before = table.snapshot().version
+    def rootEntries(): Set[String] =
+      new java.io.File(table.tablePath).listFiles().map(_.getName).toSet
+    val filesBefore = rootEntries()
 
     // crash-replay: the restarted query re-delivers batch 1, then an
     // even older batch (out-of-order replay must not resurrect either)
@@ -58,6 +61,11 @@ class TableSinkSpec extends SparkSpec {
 
     assert(table.snapshot().version === before, "replays must not commit")
     assert(table.read(spark).count() === 3L)
+    // the ledger is checked before anything stages: a replay writes no
+    // data file and leaves no staging directory behind
+    assert(rootEntries().filter(_.endsWith(".parquet")) ===
+      filesBefore.filter(_.endsWith(".parquet")))
+    assert(!rootEntries().exists(_.startsWith("_staged_")))
   }
 
   test("the txn ledger survives a table checkpoint") {
