@@ -391,10 +391,12 @@ object TxLog {
         case _ => false
       })
 
-  /** The writer of `schema`'s files under snapshot `at` (None or
-    * version 0: a table not yet created), with everything resolved from
-    * that one snapshot — the one the caller validated its commit
-    * against: the bucket-spec split key
+  /** The writer of `schema`'s files into the table directory `dir`
+    * under snapshot `at` (None or version 0: a table not yet created):
+    * each task writes its files under final, UUID-unique names where the
+    * commit will reference them (see [[ParquetWrites]]), with everything
+    * resolved from that one snapshot — the one the caller validated its
+    * commit against: the bucket-spec split key
     * ([[PartitionSpec.tupleKeyFn]]) and the per-file stats its tasks
     * compute ([[FileStats]]) — min/max/nulls of the stats columns, the
     * partition-transform bounds under their `__p$` keys, and the opt-in
@@ -402,7 +404,7 @@ object TxLog {
     * physical columns `schema` carries. */
   private[graft] def writerFactory(
       spark: SparkSession, at: Option[Snapshot], schema: StructType,
-      stageDir: String, ridMetaIdx: Option[Int] = None)
+      dir: String, ridMetaIdx: Option[Int] = None)
       : org.apache.spark.sql.graft.GraftParquetWriterFactory = {
     import FileStats.{Bloom, Bounds, Fold, Hll, Sum}
     val head = at.filter(_.version > 0L)
@@ -433,7 +435,7 @@ object TxLog {
         propCols(SumColumnsProp, dt => dt == ByteType || dt == ShortType ||
           dt == IntegerType || dt == LongType).map(p =>
           c(p).cast(DecimalType(38, 0)) -> Sum(p))
-    org.apache.spark.sql.graft.ParquetWrites.factory(spark, schema, stageDir,
+    org.apache.spark.sql.graft.ParquetWrites.factory(spark, schema, dir,
       PartitionSpec.tupleKeyFn(transforms, schema), ridMetaIdx,
       FileStats.spec(spark, schema, folds))
   }
@@ -451,6 +453,9 @@ object TxLog {
     * `delta.enableChangeDataFeed`). */
   private[graft] val CdfEnabledProp = "cdf.enabled"
   private[graft] val ChangeDir = "_change"
+  /** Suffix of the bitmap manifests merge-on-read tasks spill into the
+    * table root; the commit deletes them once folded, vacuum the rest. */
+  private[graft] val DvManifestSuffix = ".dvmanifest"
 
   // -------------------------------------------------------- row tracking
   // Delta-style ROW TRACKING (opt-in via the `rowTracking` table
@@ -553,13 +558,13 @@ object TxLog {
     props.collect { case (k, v) if k.startsWith(IdentityPrefix) =>
       k.stripPrefix(IdentityPrefix) -> v.trim.toLong }
 
-  /** Min age (ms) before vacuum may sweep an UNREFERENCED change file.
-    * Writers stage change files into [[ChangeDir]] BEFORE they publish,
-    * so a zero-age sweep racing an in-flight writer would delete its
-    * just-staged cdc files and leave the winning commit's feed
-    * unreadable. The guard must exceed the longest stage→commit gap
-    * (the same contract as vacuum retention vs the longest write);
-    * tests set it to 0 via the table property. */
+  /** Min age (ms) before vacuum may delete an unreachable data or
+    * change file (or spilled bitmap manifest) no commit in the log
+    * removed. Writers write where the commit will reference them BEFORE
+    * they publish, so a zero-age sweep racing an in-flight writer would
+    * leave the winning commit naming deleted files: the guard must
+    * exceed the longest write→commit gap. The key predates data files
+    * being covered; tests set it to 0 via the table property. */
   private[graft] val VacuumCdcMinAgeProp = "vacuum.cdcMinAgeMs"
   private[graft] val VacuumCdcMinAge = 600000L
   /** Column carrying the change kind in CDF output: `insert` |
@@ -1687,27 +1692,17 @@ final class GraftTable(val tablePath: String) {
   private def cdfEnabled(snap: Snapshot): Boolean =
     snap.props.get(CdfEnabledProp).contains("true")
 
-  /** Stage a change frame (PHYSICAL column names + [[ChangeTypeCol]])
-    * as parquet under [[ChangeDir]] and return (relative path, rows)
-    * refs for the commit's `cdc` actions — rows as counted by the tasks
-    * that wrote the files. Invisible until a commit references them; a
-    * lost commit race leaves orphans for [[vacuum]]. An empty frame
-    * stages nothing. */
-  private def stageChanges(changes: DataFrame): Seq[(String, Long)] = {
-    val changeRoot = root.resolve(ChangeDir)
-    Files.createDirectories(changeRoot)
-    val stage = root.resolve(s"_staged_cdc_${UUID.randomUUID().toString.take(8)}")
-    try {
-      val files = ParquetWrites.write(changes,
-        ParquetWrites.factory(changes.sparkSession, changes.schema, stage.toString))
-      val batch = UUID.randomUUID().toString.take(8)
-      files.sorted.zipWithIndex.map { case (f, i) =>
-        val name = s"cdf-$batch-$i.parquet"
-        Files.move(Paths.get(f.path), changeRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-        (s"$ChangeDir/$name", f.rows)
-      }
-    } finally graft.core.Fs.rmTree(stage.toFile)
-  }
+  /** Write a change frame (PHYSICAL column names + [[ChangeTypeCol]])
+    * as parquet straight into [[ChangeDir]] and return (relative path,
+    * rows) refs for the commit's `cdc` actions — rows as counted by the
+    * tasks that wrote the files. Invisible until a commit references
+    * them; a commit that does not land deletes them ([[transact]]), and
+    * a crashed writer's are orphans for [[vacuum]]. An empty frame
+    * writes nothing. */
+  private def stageChanges(changes: DataFrame): Seq[(String, Long)] =
+    ParquetWrites.write(changes, ParquetWrites.factory(changes.sparkSession,
+        changes.schema, root.resolve(ChangeDir).toString))
+      .sorted.map(f => (s"$ChangeDir/${f.name}", f.rows))
 
   /** Net row changes of a rewrite, as a stageable PHYSICAL-named frame:
     * multiset difference pre-vs-post — rows only in the pre state are
@@ -2008,12 +2003,12 @@ final class GraftTable(val tablePath: String) {
 
   // ------------------------------------------------------------- writes
 
-  /** Stage `df` as uniquely-named parquet files in the table root and
-    * return their add-actions. The table's one writer
+  /** Write `df` as uniquely-named parquet files straight into the table
+    * root and return their add-actions. The table's one writer
     * ([[ParquetWrites]]) runs inside the tasks of `df`'s own plan, and
     * each task computes the exact stats of the files it writes — one
-    * Spark job, nothing read back. Files only become visible when a
-    * later commit references them; a crash here leaves invisible
+    * Spark job, nothing read back or moved. Files only become visible
+    * when a later commit references them; a crash here leaves invisible
     * orphans for [[vacuum]].
     *
     * `at` is the CALLER's read snapshot (None for a not-yet-created
@@ -2026,7 +2021,6 @@ final class GraftTable(val tablePath: String) {
     * spec). */
   private def stageData(df: DataFrame, at: Option[Snapshot]): Seq[AddFile] = {
     ensureDirs()
-    val stage = root.resolve(s"_staged_${UUID.randomUUID().toString.take(8)}")
     val head: Option[Snapshot] = at.filter(_.version > 0L)
     // Bucket-spec FILE INTEGRITY (the storage-partitioned-join
     // precondition): under a bucket transform every staged file must be
@@ -2053,25 +2047,20 @@ final class GraftTable(val tablePath: String) {
     // sorted: a task-local sort leaves every file's rows in order.
     val orderPhys: Seq[String] = head.toSeq.flatMap(h => writeOrderPhys(h, df.schema))
     val lead = tupleLead ++ orderPhys.map(col)
-    try {
-      val files = ParquetWrites.write(
-        if (lead.isEmpty) df else df.sortWithinPartitions(lead: _*),
-        writerFactory(df.sparkSession, head, df.schema, stage.toString))
-      adoptStaged(files, sortedBy = orderPhys)
-    } finally graft.core.Fs.rmTree(stage.toFile)
+    adoptStaged(ParquetWrites.write(
+      if (lead.isEmpty) df else df.sortWithinPartitions(lead: _*),
+      writerFactory(df.sparkSession, head, df.schema, root.toString)),
+      sortedBy = orderPhys)
   }
 
-  /** Adopt staged files: the stats their writing tasks recorded become
-    * the add-actions, in commit order (task partition, file sequence);
-    * each file moves INTO the root under a fresh unique name (data files
-    * are invisible until committed, so the moves need no atomicity), and
-    * a write that sorted its files stamps the locally-sorted marker. */
+  /** Adopt written root files: the stats their writing tasks recorded
+    * become the add-actions, in commit order (task partition, file
+    * sequence), and a write that sorted its files stamps the
+    * locally-sorted marker. The files already lie in the root under
+    * their final names; nothing moves. */
   private[graft] def adoptStaged(
       staged: Seq[ParquetWrites.StagedFile],
       sortedBy: Seq[String] = Nil): Seq[AddFile] = {
-    if (staged.isEmpty) return Nil
-    ensureDirs()
-    val batch = UUID.randomUUID().toString.take(8)
     // locally-sorted marker: min == max == the physical sort list;
     // read-side ordering reports require EVERY scanned file to carry an
     // identical one
@@ -2079,11 +2068,8 @@ final class GraftTable(val tablePath: String) {
       if (sortedBy.isEmpty) Map.empty[String, ColStats]
       else Map(SortedKey -> ColStats(
         "str", sortedBy.mkString(","), sortedBy.mkString(","), Some(0L)))
-    staged.sorted.zipWithIndex.map { case (f, i) =>
-      val name = s"part-$batch-$i.parquet"
-      Files.move(Paths.get(f.path), root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      AddFile(name, f.rows, Files.size(root.resolve(name)), f.stats ++ sStat)
-    }
+    staged.sorted.map(f =>
+      AddFile(f.name, f.rows, Files.size(root.resolve(f.name)), f.stats ++ sStat))
   }
 
   /** Group-replace commit for the SQL row-level operations (copy-on-write
@@ -2351,25 +2337,30 @@ final class GraftTable(val tablePath: String) {
     }
 
   /** The `writeStream.toTable` door: the files a DSv2 streaming epoch
-    * already staged (under `schema`'s physical names, sorted by
+    * already wrote (under `schema`'s physical names, sorted by
     * `sortedBy`) commit through [[appendCommit]] under the txn ledger.
-    * Bytes written before the commit cannot take engine-assigned
-    * values, so an identity column, or a generated column the epoch
-    * omits, refuses, naming the column. */
+    * [[refuseEngineAssigned]] runs while planning and again here,
+    * against a head that may have moved since. */
   private[graft] def appendStaged(
       spark: SparkSession, schema: StructType,
       staged: Seq[ParquetWrites.StagedFile], sortedBy: Seq[String],
       txn: (String, Long)): Long =
     appendCommit(spark, schema, mergeSchema = false, maxRetries = 20, Some(txn)) {
-      (snap0, idBase) =>
-        (idBase.keys ++ generatedCols(snap0.props).keys.filter(c =>
-          snap0.schema.fieldNames.contains(c) && !schema.fieldNames.contains(c)))
-          .foreach(c => throw new IllegalArgumentException(s"txlog: column '$c' " +
-            "is engine-assigned (GENERATED ALWAYS AS IDENTITY, or generated and " +
-            "omitted), but writeStream.toTable stages its epochs before the " +
-            s"commit — stream into $tablePath with writeStream.format(\"graft-table\")"))
+      (snap0, _) =>
+        refuseEngineAssigned(snap0, schema)
         (schema, schema, adoptStaged(staged, sortedBy))
     }
+
+  /** Bytes written before the commit cannot take engine-assigned
+    * values: an identity column of `snap`, or a generated column a
+    * write of `schema` omits, refuses, naming the column. */
+  private[graft] def refuseEngineAssigned(snap: Snapshot, schema: StructType): Unit =
+    (identityCols(snap.props).keys ++ generatedCols(snap.props).keys.filter(c =>
+      snap.schema.fieldNames.contains(c) && !schema.fieldNames.contains(c)))
+      .foreach(c => throw new IllegalArgumentException(s"txlog: column '$c' " +
+        "is engine-assigned (GENERATED ALWAYS AS IDENTITY, or generated and " +
+        "omitted), but writeStream.toTable writes its epochs before the " +
+        s"commit — stream into $tablePath with writeStream.format(\"graft-table\")"))
 
   private def identityProvided(c: String): String =
     s"txlog: column '$c' is GENERATED ALWAYS AS IDENTITY — the engine " +
@@ -2605,7 +2596,13 @@ final class GraftTable(val tablePath: String) {
     * outside, commit conditionally — the shape long-running jobs need:
     * stage an hour-long rewrite, then refuse to clobber anything that
     * landed meanwhile). */
-  def overwrite(df0: DataFrame, expectedVersion: Long = -1L): Long = {
+  def overwrite(df0: DataFrame, expectedVersion: Long = -1L): Long =
+    overwrite(df0, expectedVersion, nullsOmitted = false)
+
+  /** [[overwrite]] for SQL `INSERT OVERWRITE`: `nullsOmitted` as in
+    * [[append]]'s `INSERT` door. */
+  private[graft] def overwrite(
+      df0: DataFrame, expectedVersion: Long, nullsOmitted: Boolean): Long = {
     val snap = if (Files.exists(logDir)) snapshot() else Snapshot(0L, df0.schema.json, Nil)
     if (expectedVersion >= 0 && snap.version != expectedVersion)
       throw new ConcurrentWriteException(
@@ -2614,7 +2611,7 @@ final class GraftTable(val tablePath: String) {
     // an overwrite that omits a generated column keeps the table shape
     // (the column is computed, like append); reshaping overwrites unset
     // the `generated.` property first
-    val df = fillGenerated(df0, snap.schema, snap.props)
+    val df = fillGenerated(df0, snap.schema, snap.props, nullsOmitted)
     // the committed schema is df's OWN (overwrite may change schema —
     // and with it the mapping: a metadata-free frame resets the table
     // to unmapped); the staged bytes must match whatever that schema
@@ -4122,14 +4119,14 @@ final class GraftTable(val tablePath: String) {
     (victims.sorted, effectiveRetain)
   }
 
-  /** Delete data files no version in (head−retainVersions, head] can
-    * reach — both files removed by old commits and never-committed
-    * orphans from crashed writers. Time travel older than the retention
-    * window stops working, as documented by every format with a vacuum.
-    * NOT safe concurrent with an in-flight writer whose files are staged
-    * but uncommitted — the standard table-format contract that vacuum
-    * retention must exceed the longest write (Delta's RETAIN n HOURS).
-    * Returns the deleted file names. */
+  /** Delete data and change files no version in
+    * [head−retainVersions, head] can reach, by one rule: an unreachable
+    * file goes when a commit still in the log removed it, or when it is
+    * older than [[TxLog.VacuumCdcMinAgeProp]] (a crashed or losing
+    * writer's). Safe concurrent with a writer whose write→commit gap is
+    * shorter than that guard. Time travel older than the retention
+    * window stops working, as with every format's vacuum. Returns the
+    * deleted root-relative paths. */
   def vacuum(retainVersions: Int = 2): Seq[String] =
     vacuum(retainVersions, dryRun = false)
 
@@ -4166,48 +4163,39 @@ final class GraftTable(val tablePath: String) {
       lastVacuumRetain = retainVersions
     val head = latestVersion()
     val floor = math.max(0L, head - retainVersions)
+    def commits(vs: Seq[Long]): Seq[Commit] = vs.map(versionFile)
+      .filter(Files.exists(_)).map(readCommitFileCached)
+    // reachable: the data files of every version in the window, and the
+    // change files of every commit in it (a change file describes v-1 → v)
     val reachable = ((floor.max(1L)) to head).flatMap(v =>
-      snapshot(v).files.map(_.path)).toSet
-    val it = Files.list(root)
-    val deletable =
-      try it.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !reachable.contains(n)).toList
-      finally it.close()
-    // change-data-feed files are retention-governed like data files:
-    // keep those referenced by commits inside the window, drop the rest
-    // (orphans of lost commit races included). An unreferenced-but-
-    // YOUNG file may belong to an in-flight writer (stageChanges runs
-    // before its publish) — the age guard keeps it until it is either
-    // committed (referenced) or provably abandoned.
-    val changeRoot = root.resolve(ChangeDir)
-    val staleCdc = if (!Files.exists(changeRoot)) Nil else {
-      val keep = ((floor.max(0L) + 1) to head).flatMap { v =>
-        val f = versionFile(v)
-        if (!Files.exists(f)) Nil
-        else readCommitFileCached(f)
-          .cdc.map { case (p, _) => p.stripPrefix(s"$ChangeDir/") }
-      }.toSet
-      val minAge = (if (head == 0L) None
-        else snapshot(head).props.get(VacuumCdcMinAgeProp))
-        .map(_.toLong).getOrElse(VacuumCdcMinAge)
-      val cutoff = System.currentTimeMillis() - minAge
-      val itc = Files.list(changeRoot)
-      try itc.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !keep.contains(n) &&
-          Files.getLastModifiedTime(changeRoot.resolve(n)).toMillis <= cutoff)
-        .toList
-      finally itc.close()
+      snapshot(v).files.map(_.path)).toSet ++
+      commits((floor + 1) to head).flatMap(_.cdc.map(_._1))
+    // retired: named by a `remove` of a commit still in the log — so no
+    // writer can still be about to commit it
+    lazy val retired = commits(1L to head).flatMap(_.removes).toSet
+    val minAge = (if (head == 0L) None
+      else snapshot(head).props.get(VacuumCdcMinAgeProp))
+      .map(_.toLong).getOrElse(VacuumCdcMinAge)
+    val cutoff = System.currentTimeMillis() - minAge
+    // a file gone since the listing (a losing writer dropped it) is no victim
+    def old(p: String): Boolean =
+      try Files.getLastModifiedTime(root.resolve(p)).toMillis <= cutoff
+      catch { case _: java.nio.file.NoSuchFileException => false }
+    def files(dir: String): Seq[String] = {
+      val d = root.resolve(dir)
+      if (!Files.exists(d)) Nil
+      else {
+        val it = Files.list(d)
+        try it.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.endsWith(".parquet") || n.endsWith(DvManifestSuffix))
+          .map(n => if (dir.isEmpty) n else s"$dir/$n").toList
+        finally it.close()
+      }
     }
-    if (dryRun) return deletable ++ staleCdc.map(n => s"$ChangeDir/$n")
-    deletable.foreach(n => Files.deleteIfExists(root.resolve(n)))
-    staleCdc.foreach(n => Files.deleteIfExists(changeRoot.resolve(n)))
-    // staged dirs from crashed writers are orphans too
-    val it2 = Files.list(root)
-    val staged =
-      try it2.iterator().asScala.filter(_.getFileName.toString.startsWith("_staged_")).toList
-      finally it2.close()
-    staged.foreach(p => graft.core.Fs.rmTree(p.toFile))
-    deletable ++ staleCdc.map(n => s"$ChangeDir/$n")
+    val victims = (files("") ++ files(ChangeDir)).filter(p => !reachable(p) &&
+      (old(p) || retired(p)))
+    if (!dryRun) victims.foreach(p => Files.deleteIfExists(root.resolve(p)))
+    victims
   }
 
   /** Incremental consumption: all rows ADDED by append-family commits

@@ -27,10 +27,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *      file when the groups are written back.
   *   2. Spark computes the replacement rows (updated + carried-over,
   *      plus MERGE's inserts) and hands them to the operation's WRITE:
-  *      executors stage plain parquet through the table's one writer
+  *      executors write plain parquet straight into the table root
+  *      through the table's one writer
   *      ([[org.apache.spark.sql.graft.ParquetWrites]]), whose tasks
   *      also compute each file's stats.
-  *   3. The commit swaps exactly the scanned files for the staged ones
+  *   3. The commit swaps exactly the scanned files for the written ones
   *      in ONE serializable `replace` commit; a head that moved since
   *      the scan fails loudly instead of dropping a concurrent
   *      writer's rows.
@@ -323,8 +324,9 @@ private[streaming] object GraftRowLevel {
   }
 }
 
-/** The group-replace write: executors stage parquet, the driver commits
-  * staged-for-scanned in one `replace` commit. */
+/** The group-replace write: executors write parquet into the table
+  * root, the driver commits written-for-scanned in one `replace`
+  * commit. */
 private final class GraftReplaceWrite(
     op: GraftRowLevelOperation, tablePath: String, writeSchema: StructType,
     ridMetaIdx: Option[Int] = None)
@@ -349,17 +351,14 @@ private final class GraftReplaceWrite(
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = declared
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val stageDir =
-      s"$tablePath/_staged_rlw_${UUID.randomUUID().toString.take(8)}"
-
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       TxLog.writerFactory(
         SparkSession.active, Some(new GraftTable(tablePath).snapshot(op.snapVersion)),
-        // row tracking: the staged files carry the materialized id as a
+        // row tracking: the written files carry the materialized id as a
         // trailing physical column, filled from the metadata row
         ridMetaIdx.fold(writeSchema)(_ => writeSchema.add(
           TxLog.RowIdPhysCol, org.apache.spark.sql.types.LongType)),
-        stageDir, ridMetaIdx)
+        tablePath, ridMetaIdx)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val removed = op.plannedFiles.getOrElse(throw new IllegalStateException(
@@ -369,14 +368,10 @@ private final class GraftReplaceWrite(
         SparkSession.active, op.snapVersion, removed,
         org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
         writerRid = Some(ridMetaIdx.isDefined))
-      cleanupStage()
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStage()
-
-    private def cleanupStage(): Unit = {
-      graft.core.Fs.rmTree(new java.io.File(stageDir)); ()
-    }
+    // a failed write's files are never referenced: young orphans for vacuum
+    override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
 }
 
@@ -485,12 +480,12 @@ final class GraftDeltaRowLevelOperation(
   }
 }
 
-/** The delta write: executors stage post-image parquet (through
-  * Spark's own writer factory) and per-file deletion bitmaps; the
-  * driver merges bitmaps per file and commits once. Task bitmap sets
-  * above [[GraftDeltaWrite.InlineBitmapBytes]] spill to a manifest
-  * file in the staging dir and ship by PATH — commit-message traffic
-  * stays bounded no matter how many rows a task deleted. */
+/** The delta write: executors write post-image parquet into the table
+  * root (through the table's one writer) and per-file deletion
+  * bitmaps; the driver merges bitmaps per file and commits once. Task
+  * bitmap sets above [[GraftDeltaWrite.InlineBitmapBytes]] spill to a
+  * manifest file in the table root and ship by PATH — commit-message
+  * traffic stays bounded no matter how many rows a task deleted. */
 private final class GraftDeltaWrite(
     tablePath: String, snapVersion: Long, writeSchema: StructType,
     fileOrd: Int, posOrd: Int, dataColsPresent: Boolean,
@@ -514,9 +509,6 @@ private final class GraftDeltaWrite(
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite =
     new org.apache.spark.sql.connector.write.DeltaBatchWrite {
-      private val stageDir =
-        s"$tablePath/_staged_mor_${UUID.randomUUID().toString.take(8)}"
-
       override def createBatchWriterFactory(
           info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -527,8 +519,8 @@ private final class GraftDeltaWrite(
             // trailing physical column, filled from the metadata row
             ridMetaIdx.fold(writeSchema)(_ => writeSchema.add(
               TxLog.RowIdPhysCol, org.apache.spark.sql.types.LongType)),
-            stageDir, ridMetaIdx),
-          stageDir, fileOrd, posOrd)
+            tablePath, ridMetaIdx),
+          tablePath, fileOrd, posOrd)
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         val msgs = messages.toSeq.collect {
@@ -550,6 +542,7 @@ private final class GraftDeltaWrite(
           m.spilledDeletes.foreach { p =>
             GraftDeltaWrite.readManifest(Paths.get(p)).foreach {
               case (n, b) => fold(n, b) }
+            java.nio.file.Files.delete(Paths.get(p))
           }
         }
         val deletes = merged.toSeq.map { case (n, bm) =>
@@ -562,21 +555,18 @@ private final class GraftDeltaWrite(
           SparkSession.active, snapVersion, deletes,
           msgs.flatMap(_.files),
           ridMaterialized = ridMetaIdx.isDefined)
-        cleanupStage()
       }
 
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        cleanupStage()
-
-      private def cleanupStage(): Unit = {
-        graft.core.Fs.rmTree(new java.io.File(stageDir)); ()
-      }
+      // a failed write's files and manifests are never referenced:
+      // young orphans for vacuum
+      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
     }
 }
 
 private[streaming] object GraftDeltaWrite {
 
-  /** Task bitmap payloads above this spill to a staging-dir manifest. */
+  /** Task bitmap payloads above this spill to a manifest in the table
+    * root ([[TxLog.DvManifestSuffix]]). */
   val InlineBitmapBytes: Int = 1 << 22 // 4 MiB
 
   /** One task's contribution: staged insert files + its per-file
@@ -619,7 +609,7 @@ private[streaming] object GraftDeltaWrite {
   * task — never a row-sized buffer). */
 private final class GraftDeltaWriterFactory(
     inner: org.apache.spark.sql.graft.GraftParquetWriterFactory,
-    stageDir: String, fileOrd: Int, posOrd: Int)
+    tablePath: String, fileOrd: Int, posOrd: Int)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -675,10 +665,8 @@ private final class GraftDeltaWriterFactory(
             GraftDeltaWrite.InlineBitmapBytes.toLong)
           GraftDeltaWrite.DeltaStaged(staged, entries, Nil)
         else {
-          val p = Paths.get(stageDir,
-            s"dv-manifest-$partitionId-$taskId-" +
-              s"${UUID.randomUUID().toString.take(8)}.bin")
-          java.nio.file.Files.createDirectories(p.getParent)
+          val p = Paths.get(tablePath,
+            s"dv-$partitionId-${UUID.randomUUID()}${TxLog.DvManifestSuffix}")
           GraftDeltaWrite.writeManifest(p, entries)
           GraftDeltaWrite.DeltaStaged(staged, Nil, Seq(p.toString))
         }

@@ -1698,7 +1698,7 @@ final class GraftCatalogTable(
           new InsertableRelation {
             override def insert(data: Dataset[Row], ignored: Boolean): Unit = {
               val t = new GraftTable(tablePath)
-              if (overwrite) t.overwrite(data.toDF())
+              if (overwrite) t.overwrite(data.toDF(), -1L, nullsOmitted = true)
               else t.append(data.toDF(), mergeSchema = false, maxRetries = 20,
                 txn = None, nullsOmitted = true)
               ()
@@ -1706,8 +1706,8 @@ final class GraftCatalogTable(
           }
 
         /** `df.writeStream.toTable("cat.db.t")`: the exactly-once table
-          * sink on the DSv2 plane — executors stage parquet through
-          * Spark's own writer factory, each epoch commits through the
+          * sink on the DSv2 plane — executors write parquet into the
+          * table root through its one writer, each epoch commits through the
           * txn ledger keyed by the streaming queryId, so a
           * crash-replayed epoch is a no-op (the same contract as
           * `writeStream.format("graft-table")`, without the option
@@ -1716,6 +1716,8 @@ final class GraftCatalogTable(
           require(!overwrite,
             "graft-table streaming writes are append-only — Complete/" +
               "Update output modes would overwrite history every epoch")
+          // refuse before any epoch writes a file into the table root
+          headSnap.foreach(new GraftTable(tablePath).refuseEngineAssigned(_, info.schema()))
           // stamp epochs ONLY under write.orderBy (spec-only sorts
           // would stamp streaming files while batch appends stay
           // unstamped — a mixed history that disables the report). The
@@ -1732,18 +1734,16 @@ final class GraftCatalogTable(
 }
 
 /** The exactly-once streaming table write behind `writeStream.toTable`.
-  * Epochs stage attempt-unique parquet files; `commit(epoch)` hands
-  * exactly the winning messages' files to the one append commit
-  * ([[GraftTable.appendStaged]]) under the (queryId, epoch) txn entry —
-  * replayed or racing epochs no-op through the ledger, same as
-  * [[TableSink]]; identity and omitted generated columns refuse. */
+  * Epochs write UUID-named parquet files into the table root;
+  * `commit(epoch)` hands exactly the winning messages' files to the one
+  * append commit ([[GraftTable.appendStaged]]) under the (queryId,
+  * epoch) txn entry — replayed or racing epochs no-op through the
+  * ledger, same as [[TableSink]]; identity and omitted generated
+  * columns refuse. Files no commit takes are orphans for vacuum. */
 private final class GraftStreamingTableWrite(
     tablePath: String, writeSchema: StructType, queryId: String,
     sortedBy: Seq[String] = Nil)
     extends streaming_write.StreamingWrite {
-
-  private val stageDir =
-    s"$tablePath/_staged_stream_${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** The query's logical schema re-dressed with the TABLE's mapping
     * metadata (info.schema() is resolution output — it never carries
@@ -1766,31 +1766,23 @@ private final class GraftStreamingTableWrite(
       : streaming_write.StreamingDataWriterFactory =
     TxLog.writerFactory(
       SparkSession.active, Some(new GraftTable(tablePath).snapshot()),
-      TxLog.physicalSchema(tableSchema), stageDir)
+      TxLog.physicalSchema(tableSchema), tablePath)
 
   override def commit(
       epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    try {
-      new GraftTable(tablePath).appendStaged(
-        SparkSession.active, tableSchema,
-        org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
-        // physical names: staged bytes carry the table's mapping
-        sortedBy.map(c => TxLog.physicalOf(tableSchema, c)),
-        s"graft-stream-$queryId" -> epochId)
-      ()
-    } finally cleanupStage()
+      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
+    new GraftTable(tablePath).appendStaged(
+      SparkSession.active, tableSchema,
+      org.apache.spark.sql.graft.ParquetWrites.filesOf(messages.toSeq),
+      // physical names: written bytes carry the table's mapping
+      sortedBy.map(c => TxLog.physicalOf(tableSchema, c)),
+      s"graft-stream-$queryId" -> epochId)
+    ()
+  }
 
   override def abort(
       epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    cleanupStage()
-
-  // micro-batch epochs run one at a time: once an epoch commits or
-  // aborts, nothing else is writing into the staging directory
-  private def cleanupStage(): Unit = {
-    graft.core.Fs.rmTree(new java.io.File(stageDir)); ()
-  }
+      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = ()
 }
 
 object GraftCatalogTable {

@@ -46,12 +46,19 @@ object ParquetScans {
     * @param filters        data filters to push into the parquet reader
     *                       (row-group/page skipping); Spark re-applies
     *                       them above the scan, so over-claiming is safe
+    * A missing file fails, naming it (Spark's listing reads a missing
+    * root path as empty): the listed paths are compared, no extra I/O.
     */
   def scanFor(
       spark: SparkSession, schema: StructType, files: Seq[String],
       requiredSchema: StructType, filters: Seq[Filter]): Scan = {
     val index = new InMemoryFileIndex(
       spark, files.map(new Path(_)), Map.empty[String, String], Some(schema))
+    // listed paths come back qualified (`file:/…`), root paths as given
+    val listed = index.allFiles().iterator.map(_.getPath.toUri.getPath).toSet
+    index.rootPaths.find(p => !listed.contains(p.toUri.getPath)).foreach(p =>
+      throw new java.io.FileNotFoundException(s"graft-table: committed file $p " +
+        "does not exist — deleted outside the log; this version cannot be read"))
     val builder = ParquetScanBuilder(
       spark, index, schema, schema, CaseInsensitiveStringMap.empty())
     // pushDataFilters is the builder's TRANSLATION hook, not a store —

@@ -6,7 +6,7 @@ import java.util.UUID
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
@@ -28,10 +28,11 @@ import graft.medallion.{FileStats, TxLog}
   * rows. [[ParquetUtils.prepareWrite]] builds the same serializable
   * [[OutputWriterFactory]] the built-in parquet sink uses
   * (dictionary/codec/timestamp settings from the session conf), and each
-  * task opens files in the staging directory through it. The task that
-  * writes a file also computes its stats ([[FileStats]]) and returns
-  * them in its commit message, so a commit adopts files without reading
-  * them back.
+  * task writes its files through it under their final names, where the
+  * commit references them — never renamed (on an object store a rename
+  * is a copy). The task that writes a file also computes its stats
+  * ([[FileStats]]) and returns them in its commit message, so a commit
+  * adopts files without reading them back.
   *
   * Like [[ParquetScans]], this lives in `org.apache.spark.sql` because
   * the writer factory is session-internal API; the public surface stays
@@ -39,31 +40,35 @@ import graft.medallion.{FileStats, TxLog}
   */
 object ParquetWrites {
 
-  /** One staged file: written `seq`-th by the task of partition
-    * `partition`, with the rows and stats that task recorded. */
+  /** One written, not yet committed file: written `seq`-th by the task
+    * of partition `partition`, with the rows and stats that task
+    * recorded. */
   final case class StagedFile(
       path: String, partition: Int, seq: Int, rows: Long,
-      stats: Map[String, TxLog.ColStats])
+      stats: Map[String, TxLog.ColStats]) {
+    /** The file's name in the directory it was written to. */
+    def name: String = new Path(path).getName
+  }
   object StagedFile {
     /** Commit order: task partition, then file sequence in the task. */
     implicit val commitOrder: Ordering[StagedFile] = Ordering.by(f => (f.partition, f.seq))
   }
 
-  /** The staged parquet files of one (non-empty) task. */
+  /** The parquet files of one (non-empty) task. */
   final case class StagedFiles(files: Seq[StagedFile]) extends WriterCommitMessage
 
   /** A serializable [[DataWriterFactory]] writing rows of `schema` as
-    * parquet files under `stageDir`, each with the per-file `stats`.
-    * Files open lazily — an empty task stages nothing. Task attempts
-    * write attempt-unique names; the commit coordinator picks exactly
-    * one winner per task, and losers' files stay behind in the staging
-    * directory for the caller's abort/vacuum cleanup (never adopted: the
-    * commit lists only winning messages).
+    * parquet files directly in `dir`, each with the per-file `stats`.
+    * Files open lazily — an empty task writes nothing. Every name
+    * carries a full random UUID, so no two attempts of any write
+    * collide; the commit coordinator picks exactly one winner per task,
+    * and losers' files are never referenced (the commit lists only
+    * winning messages) — orphans for the vacuum's age guard.
     *
     * `splitKey` (from [[graft.medallion.PartitionSpec.tupleKeyFn]])
     * switches the task writer to FANOUT mode — one open file per
     * distinct transform-tuple key seen (the Iceberg fanout-writer
-    * semantic): under a bucket partition spec every staged file must be
+    * semantic): under a bucket partition spec every written file must be
     * single-valued on the tuple or the table's storage-partitioned
     * joins silently degrade, and rows reach these writers in arbitrary
     * tuple order (streaming epochs, COW rewrite output), so rolling on
@@ -85,26 +90,33 @@ object ParquetWrites {
     * inserts); plain `write` calls append null. The split key speaks the
     * original (un-extended) row layout; `stats` binds to `schema`. */
   def factory(
-      spark: SparkSession, schema: StructType, stageDir: String,
+      spark: SparkSession, schema: StructType, dir: String,
       splitKey: Option[InternalRow => String] = None,
       ridMetaIdx: Option[Int] = None,
       stats: FileStats.Spec = FileStats.RowsOnly,
       maxOpenWriters: Int = 64): GraftParquetWriterFactory = {
     require(maxOpenWriters >= 1, s"maxOpenWriters must be >= 1, got $maxOpenWriters")
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // no `.crc` sibling: a data file lies in the table root, where nothing
+    // would ever delete one (uncached, or the checksummed instance returns)
+    job.getConfiguration.set("fs.file.impl", classOf[RawLocalFileSystem].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val options = new ParquetOptions(Map.empty[String, String], spark.sessionState.conf)
     val owf = ParquetUtils.prepareWrite(spark.sessionState.conf, job, schema, options)
     new GraftParquetWriterFactory(
-      owf, new SerializableConfiguration(job.getConfiguration), schema, stageDir,
+      owf, new SerializableConfiguration(job.getConfiguration), schema, dir,
       splitKey, maxOpenWriters, ridMetaIdx, stats)
   }
 
   /** Write `df` through `factory` inside the tasks of `df`'s own plan
-    * (one Spark job, one SQL execution) and return the staged files. */
+    * (one Spark job, one SQL execution) and return the written files.
+    * A failed job deletes the files its finished tasks wrote (a failed
+    * task deletes its own). */
   def write(df: DataFrame, factory: GraftParquetWriterFactory): Seq[StagedFile] = {
     val qe = df.queryExecution
-    filesOf(SQLExecution.withNewExecutionId(qe, Some("graft write")) {
-      qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+    var done = Array.empty[WriterCommitMessage] // by partition, as tasks finish
+    try SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      val rdd = qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
         val w = factory.createWriter(pid, TaskContext.get().taskAttemptId())
         try {
           rows.foreach(w.write)
@@ -112,11 +124,19 @@ object ParquetWrites {
         } catch {
           case t: Throwable => w.abort(); throw t
         } finally w.close()
-      }.collect().toSeq
-    })
+      }
+      done = new Array(rdd.getNumPartitions)
+      df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[WriterCommitMessage]) => it.next(),
+        (pid: Int, m: WriterCommitMessage) => done(pid) = m)
+    } catch { case t: Throwable =>
+      filesOf(done.filter(_ != null).toSeq).foreach(f =>
+        new java.io.File(new Path(f.path).toUri.getPath).delete())
+      throw t
+    }
+    filesOf(done.toSeq)
   }
 
-  /** The staged files of the winning task messages. */
+  /** The files of the winning task messages. */
   def filesOf(messages: Seq[WriterCommitMessage]): Seq[StagedFile] =
     messages.flatMap {
       case StagedFiles(fs) => fs
@@ -131,7 +151,7 @@ object ParquetWrites {
   * UUID regardless). */
 final class GraftParquetWriterFactory(
     owf: OutputWriterFactory, conf: SerializableConfiguration,
-    schema: StructType, stageDir: String,
+    schema: StructType, dir: String,
     splitKey: Option[InternalRow => String],
     maxOpenWriters: Int,
     ridMetaIdx: Option[Int],
@@ -160,7 +180,7 @@ final class GraftParquetWriterFactory(
       // sentinel key when splitKey is absent — the plain one-file path)
       private val open = mutable.LinkedHashMap.empty[String, Open]
       // files already closed-and-rolled by the cap: still part of this
-      // task's staged output
+      // task's output
       private val rolled = mutable.ArrayBuffer.empty[Open]
       private var clock = 0L
       private var opened = 0
@@ -173,10 +193,8 @@ final class GraftParquetWriterFactory(
           conf.value,
           new TaskAttemptID(new TaskID(new JobID(UUID.randomUUID().toString.take(8), 0),
             TaskType.MAP, partitionId), 0))
-        val path = new Path(
-          stageDir,
-          s"part-$partitionId-$taskId-${UUID.randomUUID().toString.take(8)}" +
-            owf.getFileExtension(ctx))
+        val path = new Path(dir,
+          s"part-$partitionId-${UUID.randomUUID()}" + owf.getFileExtension(ctx))
         opened += 1
         new Open(owf.newInstance(path.toString, schema, ctx), path, opened,
           statsTask.newFile())

@@ -68,12 +68,11 @@ class CommitRaceSpec extends SparkSpec {
   private val otherKept: GraftTable => Boolean =
     _.properties.get("other").contains("1")
 
-  /** A parquet batch written outside the table — what a DSv2 streaming
-    * write hands `appendStaged`. */
-  private def stagedBatch(): Seq[ParquetWrites.StagedFile] = {
-    val dir = new java.io.File(s"target/tmp/crace_stage_${UUID.randomUUID().toString.take(8)}")
+  /** A parquet batch written into `t`'s root but not committed — what
+    * a DSv2 streaming write hands `appendStaged`. */
+  private def stagedBatch(t: GraftTable): Seq[ParquetWrites.StagedFile] = {
     val df = Seq((4L, "d", 40)).toDF("id", "v", "n")
-    ParquetWrites.write(df, TxLog.writerFactory(spark, None, df.schema, dir.getAbsolutePath))
+    ParquetWrites.write(df, TxLog.writerFactory(spark, None, df.schema, t.tablePath))
   }
 
   private case class RetryCase(
@@ -90,7 +89,7 @@ class CommitRaceSpec extends SparkSpec {
       t => ids(t).contains(4L) && t.snapshot().txns.get("app").contains(1L)),
     // The idempotent form of appendStaged: a staged batch carrying a txn.
     RetryCase("appendStagedIdempotent", Map.empty, _ => (), blindAppend, rowKept,
-      t => t.appendStaged(spark, t.snapshot().schema, stagedBatch(), Nil, "app" -> 1L),
+      t => t.appendStaged(spark, t.snapshot().schema, stagedBatch(t), Nil, "app" -> 1L),
       t => ids(t).contains(4L) && t.snapshot().txns.get("app").contains(1L)),
     RetryCase("addColumns", Map.empty, _ => (), addExtra, extraKept,
       _.addColumns(Seq(StructField("x", StringType))),

@@ -155,10 +155,13 @@ class GeneratedColumnsSpec extends SparkSpec {
       val batch = Seq((2L, 20L), (3L, 30L)).toDF("id", "v")
       if (door.stagesFirst) {
         val head = t.latestVersion()
+        val rootFiles = graft.WriteDoors.rootParquet(t)
         val msg = graft.WriteDoors.messages(
           intercept[Exception](door.write(spark, target, batch)))
         assert(msg.contains("'v2'"), msg)
         assert(t.latestVersion() === head)
+        // refused while planning: no epoch wrote into the root
+        assert(graft.WriteDoors.rootParquet(t) === rootFiles)
       } else {
         door.write(spark, target, batch)
         assert(t.read(spark).orderBy("id").collect().map(r =>
@@ -166,5 +169,13 @@ class GeneratedColumnsSpec extends SparkSpec {
           Seq((1L, 10L, 10L), (2L, 20L, 40L), (3L, 30L, 60L)))
       }
     }
+  }
+
+  test("INSERT OVERWRITE that omits a generated column computes it") {
+    val target = graft.WriteDoors.create(spark, "id BIGINT, v BIGINT, v2 BIGINT")
+    seed(target.table)
+    spark.sql(s"INSERT OVERWRITE ${target.ident} (id, v) VALUES (3, 7)")
+    assert(target.table.read(spark).collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq === Seq((3L, 7L, 14L)))
   }
 }

@@ -157,6 +157,7 @@ class IdentityColumnsSpec extends SparkSpec {
       t.append(Seq((1L, "a")).toDF("id", "v"))
       t.setProperty("identity.id", "10")
       val head = t.latestVersion()
+      val rootFiles = graft.WriteDoors.rootParquet(t)
       def refused(df: org.apache.spark.sql.DataFrame): Unit = {
         val err = intercept[Exception](door.write(spark, target, df))
         val msg = graft.WriteDoors.messages(err)
@@ -164,6 +165,8 @@ class IdentityColumnsSpec extends SparkSpec {
         assert(t.latestVersion() === head, "a refused batch commits nothing")
         assert(t.read(spark).count() === 1L)
         assert(t.properties("identity.id") === "10")
+        // the door writing before its commit refuses while planning
+        if (door.stagesFirst) assert(graft.WriteDoors.rootParquet(t) === rootFiles)
       }
       refused(Seq((99L, "x")).toDF("id", "v"))
       if (door.stagesFirst) refused(Seq("y").toDF("v"))

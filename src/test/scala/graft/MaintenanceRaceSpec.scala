@@ -73,6 +73,39 @@ class MaintenanceRaceSpec extends SparkSpec {
     assert(t.read(spark).count() === 3L)
   }
 
+  /** Every file the head snapshot commits exists, and the head read
+    * returns exactly `ids`. */
+  private def assertIntact(t: GraftTable, ids: Set[Long]): Unit = {
+    t.snapshot().files.foreach(a => assert(
+      java.nio.file.Files.exists(java.nio.file.Paths.get(t.tablePath, a.path)),
+      s"committed file ${a.path} was vacuumed"))
+    assert(t.read(spark).select("id").collect().map(_.getLong(0)).toSet === ids)
+  }
+
+  /** Run a zero-retention vacuum once, between `t`'s next write and its
+    * publish — where a concurrent maintenance job lands one. */
+  private def vacuumBeforePublish(t: GraftTable): Unit =
+    t.beforePublishHook = () => { t.beforePublishHook = () => (); t.vacuum(0) }
+
+  test("vacuum racing a publish keeps the in-flight writer's files (append, compact, upsert)") {
+    val t = freshTable("vacuum_race")
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    vacuumBeforePublish(t)
+    t.append(Seq((2L, "b")).toDF("id", "v"))
+    assertIntact(t, Set(1L, 2L))
+
+    vacuumBeforePublish(t)
+    val (in, _, _) = t.compactSnapshot(spark, t.snapshot())
+    assert(in === 2)
+    assertIntact(t, Set(1L, 2L))
+
+    vacuumBeforePublish(t)
+    t.upsert(Seq((2L, "b2", 1L, false), (3L, "c", 1L, false))
+      .toDF("id", "v", "_seq", "_deleted"), "id", "_seq")
+    assertIntact(t, Set(1L, 2L, 3L))
+    assert(t.read(spark).filter(col("id") === 2L).head().getString(1) === "b2")
+  }
+
   private implicit class IterOps[A](it: java.util.Iterator[A]) {
     def asScala: Iterator[A] = new Iterator[A] {
       def hasNext: Boolean = it.hasNext

@@ -93,19 +93,19 @@ class TxLogSpec extends SparkSpec {
     t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(1))   // v1
     val readVersion = t.latestVersion()
     assert(t.read(spark).count() === 2L) // the scan a row-level write would run
-    // stage a replacement like the DSv2 write would
-    val stage = new java.io.File(s"target/tmp/replace_stage_${java.util.UUID.randomUUID().toString.take(8)}")
+    // write a replacement into the table root like the DSv2 write would
     val replacement = Seq((1L, "A"), (2L, "B")).toDF("id", "v").repartition(1)
     val staged = org.apache.spark.sql.graft.ParquetWrites.write(replacement,
       graft.medallion.TxLog.writerFactory(spark, Some(t.snapshot(readVersion)),
-        replacement.schema, stage.getAbsolutePath))
+        replacement.schema, t.tablePath))
     // a concurrent append moves the head between scan and commit
     t.append(Seq((3L, "c")).toDF("id", "v"))                             // v2
     intercept[graft.medallion.TxLog.ConcurrentWriteException](
       t.replaceFiles(spark, readVersion, Seq("whatever.parquet"), staged))
-    // the concurrent writer's row survives; nothing was torn
+    // the concurrent writer's row survives; nothing was torn, and the
+    // replacement that did not commit is gone
     assert(t.read(spark).count() === 3L)
-    graft.core.Fs.rmTree(stage)
+    assert(staged.forall(f => !Files.exists(Paths.get(f.path))))
   }
 
   test("addColumns refuses duplicate and case-colliding names before committing anything") {
@@ -204,22 +204,68 @@ class TxLogSpec extends SparkSpec {
     assert(t.latestVersion() === 2L)
   }
 
+  /** A fully-formed parquet file in `t`'s root that no commit
+    * references — what a crashed writer leaves — last modified
+    * `ageMs` ago. */
+  private def orphan(t: GraftTable, name: String, ageMs: Long): Unit = {
+    val src = s"${t.tablePath}_${name}_src"
+    df(Seq(99L -> "ghost")).coalesce(1).write.mode("overwrite").parquet(src)
+    val ghost = new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dst = Paths.get(t.tablePath, name)
+    Files.move(ghost.toPath, dst)
+    Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
+    ()
+  }
+
   test("uncommitted data files are invisible to readers (no directory listing)") {
     val t = freshTable("orphan")
     t.append(df(Seq(1L -> "a")))
-    // simulate a crashed writer: a fully-formed parquet lands in the
-    // table root but no commit references it
-    df(Seq(99L -> "ghost")).coalesce(1)
-      .write.parquet(s"${t.tablePath}/_staged_crashed")
-    val ghost = new java.io.File(s"${t.tablePath}/_staged_crashed").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.move(ghost.toPath, Paths.get(t.tablePath, "part-crashed-0.parquet"))
+    // a crashed writer's file, older than vacuum's age guard
+    orphan(t, "part-crashed-0.parquet", TxLog.VacuumCdcMinAge + 60000L)
     assert(t.read(spark).count() === 1L)
-    // vacuum removes the orphan (file + stale staging dir), read unchanged
+    // vacuum removes the orphan, read unchanged
     val deleted = t.vacuum()
     assert(deleted.contains("part-crashed-0.parquet"))
-    assert(!Files.exists(Paths.get(t.tablePath, "_staged_crashed")))
     assert(t.read(spark).count() === 1L)
+  }
+
+  test("vacuum keeps a young orphan and deletes one older than the age guard") {
+    val t = freshTable("orphan_age")
+    t.append(df(Seq(1L -> "a")))
+    t.append(df(Seq(2L -> "b")))
+    t.compact(spark) // retires both appended files
+    orphan(t, "part-young.parquet", 0L)
+    orphan(t, "part-old.parquet", TxLog.VacuumCdcMinAge + 60000L)
+    val deleted = t.vacuum(0).toSet
+    // files a commit removed go at once; a never-committed file only
+    // once it is older than the guard (it may belong to a writer that
+    // has yet to publish)
+    assert(deleted.contains("part-old.parquet"))
+    assert(!deleted.contains("part-young.parquet"))
+    assert(deleted.size === 3, s"the two retired files and the old orphan: $deleted")
+    assert(dataFiles(t) === t.snapshot().files.map(_.path).toSet + "part-young.parquet")
+    // the guard is the one table property for data and change files
+    t.setProperty(TxLog.VacuumCdcMinAgeProp, "0")
+    assert(t.vacuum(0) === Seq("part-young.parquet"))
+    assert(t.read(spark).select("id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+  }
+
+  test("a read fails loudly, naming the file, when a committed file is missing") {
+    val t = freshTable("missing")
+    t.append(df(Seq(1L -> "a")))
+    t.append(df(Seq(2L -> "b")))
+    val gone = t.snapshot().files.head.path
+    Files.delete(Paths.get(t.tablePath, gone))
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString("\n")
+    val viaTable = intercept[Exception](t.read(spark).collect())
+    assert(messages(viaTable).contains(gone), messages(viaTable))
+    val viaFormat = intercept[Exception](
+      spark.read.format("graft-table").load(t.tablePath).collect())
+    assert(messages(viaFormat).contains(gone), messages(viaFormat))
   }
 
   test("commit is put-if-absent: losing writer of the same version retries (append) or aborts (rewrite)") {
@@ -732,6 +778,8 @@ class TxLogSpec extends SparkSpec {
     val staged = Option(new java.io.File(t.tablePath).listFiles()).toSeq.flatten
       .map(_.getName).filter(_.startsWith("_staged_"))
     assert(staged.isEmpty, s"staging directories leaked: $staged")
+    // the finished task's file, written into the root, went with the job
+    assert(dataFiles(t) === t.snapshot().files.map(_.path).toSet)
     assert(t.read(spark).count() === 1L)
   }
 

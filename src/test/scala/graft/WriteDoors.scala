@@ -75,6 +75,11 @@ object WriteDoors {
         .option("checkpointLocation", checkpoint())
         .trigger(Trigger.AvailableNow()).toTable(t.ident).awaitTermination()))
 
+  /** The `.parquet` files in `t`'s root. */
+  def rootParquet(t: GraftTable): Set[String] =
+    Option(new java.io.File(t.tablePath).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+
   /** Every message down an exception's cause chain — a streaming door
     * wraps the refusal in a query failure. */
   def messages(e: Throwable): String =
