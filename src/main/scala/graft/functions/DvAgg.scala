@@ -3,19 +3,20 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Per-file deletion-vector builder for merge-on-read DELETE
-  * ([[graft.medallion.TxLog]] `deleteRows`): input is a matched row's
-  * physical index in its file (the scan's `_pos`), buffer a
-  * RoaringBitmap, output the
-  * portable-serialized bitmap bytes — or `null` when the optimized
-  * bitmap exceeds `maxBytes`, which routes that file to the
-  * copy-on-write rewrite leg WITHOUT its indexes (or bytes) ever
-  * reaching the driver.
+/** Per-file deletion-vector builder behind [[graft.medallion.TxLog]]
+  * `dvAggregate` (merge-on-read `deleteRows` and `upsert`): input is a
+  * matched row's physical index in its file (the scan's `_pos`),
+  * buffer a RoaringBitmap, output the portable-serialized bitmap
+  * bytes — or `null` when the optimized bitmap exceeds `maxBytes`, so
+  * an over-size bitmap never reaches the driver. Both production
+  * callers pass no bound: the commit core's triage decides the
+  * copy-on-write leg from the merged bitmaps.
   *
   * Mergeable by bitmap OR, so it rides ordinary partial aggregation:
   * map-side partials union executor-local, the shuffle carries one
   * compressed bitmap per (partition × file), and the driver collects
-  * one ≤maxBytes row per DV-eligible file. This replaces a
+  * one compressed bitmap per matched file (a roaring bitmap is at most
+  * 8 KiB per 65,536 rows). This replaces a
   * `collect_list(row_index)` build whose driver footprint grew with
   * the total matched-row count — unbounded for a scattered delete
   * over a 100 TB table.
@@ -46,18 +47,12 @@ class DvAgg(maxBytes: Int)
     a
   }
 
-  /** Byte layout must agree with `TxLog.dvDeserialize` (RoaringBitmap
-    * portable format). `null` = over `maxBytes` after run-length
-    * optimization: the caller treats the file as rewrite-bound. */
+  /** `TxLog.dvBytes` layout. `null` = over `maxBytes` after run-length
+    * optimization. */
   override def finish(bm: org.roaringbitmap.RoaringBitmap): Array[Byte] = {
     bm.runOptimize()
-    val n = bm.serializedSizeInBytes()
-    if (n > maxBytes) null
-    else {
-      val buf = java.nio.ByteBuffer.allocate(n)
-      bm.serialize(buf)
-      buf.array()
-    }
+    if (bm.serializedSizeInBytes() > maxBytes) null
+    else graft.medallion.TxLog.dvBytes(bm)
   }
 
   // RoaringBitmap is Externalizable — Java serialization round-trips

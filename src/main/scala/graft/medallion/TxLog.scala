@@ -280,8 +280,8 @@ object TxLog {
   private[graft] val SumColumnsProp = "sum.columns"
 
   /** Table property: max deleted fraction of a file before a
-    * merge-on-read delete rewrites it instead (see
-    * [[GraftTable.deleteRows]]). */
+    * merge-on-read delete, update or upsert rewrites it instead (the
+    * commit core's triage, see [[GraftTable.deleteRows]]). */
   private[graft] val DvMaxFractionProp = "dv.maxFraction"
   private[graft] val DvMaxFraction = 0.5
   /** Table property: max serialized deletion-vector bytes per file. */
@@ -492,6 +492,14 @@ object TxLog {
   //     baseRowId + row index, null). Files with neither (written
   //     before tracking was enabled) read as null rather than
   //     failing: honest degradation, never wrong ids.
+  //
+  // The ONE rule every rewrite follows: with the property on, a
+  // rewrite materializes each carried row's id — also when some
+  // touched file has no id info (its rows materialize null and take
+  // base + index where the commit assigns a base), so one untracked
+  // file never costs the tracked rows their ids. The change-feed diff
+  // keys by row id only when every pre-image file carries id info
+  // (`ridKeyed`). Survivor rewrites share one body (`restage`).
   //
   // MOR deletes need no handling at all: the file's bytes are immutable
   // and DV'd rows still advance the row index, so surviving ids never
@@ -814,30 +822,40 @@ object TxLog {
   // sufficient — a single parquet file beyond 2^31 rows does not
   // happen under any sane target file size, and the build guards it.
 
-  private[graft] def dvSerialize(bm: org.roaringbitmap.RoaringBitmap): String = {
+  /** `bm` run-optimized, in the RoaringBitmap portable format — the
+    * bytes [[graft.functions.DvAgg]], the delta writers and the log's
+    * base64 DVs share. */
+  private[graft] def dvBytes(bm: org.roaringbitmap.RoaringBitmap): Array[Byte] = {
     bm.runOptimize()
     val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
     bm.serialize(buf)
-    java.util.Base64.getEncoder.encodeToString(buf.array())
+    buf.array()
   }
+
+  /** The bitmap [[dvBytes]] wrote. */
+  private[graft] def dvFromBytes(bytes: Array[Byte]): org.roaringbitmap.RoaringBitmap = {
+    val bm = new org.roaringbitmap.RoaringBitmap()
+    bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
+    bm
+  }
+
+  private[graft] def dvSerialize(bm: org.roaringbitmap.RoaringBitmap): String =
+    java.util.Base64.getEncoder.encodeToString(dvBytes(bm))
 
   /** `a` with `bm` as its deletion vector. */
   private[graft] def withDv(a: AddFile, bm: org.roaringbitmap.RoaringBitmap): AddFile =
     a.copy(dv = Some(dvSerialize(bm)), dvRows = bm.getLongCardinality)
 
-  private[graft] def dvDeserialize(b64: String): org.roaringbitmap.RoaringBitmap = {
-    val bm = new org.roaringbitmap.RoaringBitmap()
-    bm.deserialize(java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64)))
-    bm
-  }
+  private[graft] def dvDeserialize(b64: String): org.roaringbitmap.RoaringBitmap =
+    dvFromBytes(java.util.Base64.getDecoder.decode(b64))
 
-  /** Phase-2 of [[GraftTable.deleteRows]]: fold `(__file, __idx)`
-    * match pairs into per-file deletion bitmaps EXECUTOR-SIDE via the
-    * mergeable [[graft.functions.DvAgg]] aggregator. Output is one row
-    * per file: (`__file` string, `dv` binary) — `dv` is null when the optimized
-    * bitmap exceeds `maxBytes`, routing that file to the rewrite leg.
-    * The driver therefore collects file-count-sized metadata only,
-    * never row indexes. */
+  /** Fold `(__file, __idx)` match pairs into per-file deletion bitmaps
+    * EXECUTOR-SIDE via the mergeable [[graft.functions.DvAgg]]
+    * aggregator — the bitmaps [[GraftTable.deleteRows]] and the
+    * merge-on-read [[GraftTable.upsert]] hand to the commit core. Output
+    * is one row per file: (`__file` string, `dv` binary) — `dv` is null
+    * when the optimized bitmap exceeds `maxBytes`. The driver therefore
+    * collects one compressed bitmap per file, never row indexes. */
   private[graft] def dvAggregate(pairs: DataFrame, maxBytes: Int): DataFrame = {
     val dvFn = org.apache.spark.sql.functions.udaf(new graft.functions.DvAgg(maxBytes))
     pairs.groupBy("__file").agg(dvFn(col("__idx")).as("dv"))
@@ -1676,16 +1694,37 @@ final class GraftTable(val tablePath: String) {
     * stage, read through the table's one scan ([[GraftTableV2.frame]])
     * so deletion vectors apply exactly as on every read. With `rowIds`
     * each row also carries its stable id as [[TxLog.RowIdPhysCol]],
-    * which the rewrite materializes instead of allocating new ids.
-    * `keep`, over LOGICAL names, selects the rows to rewrite. */
+    * which the rewrite materializes instead of allocating new ids. */
   private def rewriteRows(
       spark: SparkSession, snap: Snapshot, files: Seq[AddFile],
-      rowIds: Boolean = false, keep: Option[Column] = None): DataFrame = {
-    val rows = GraftTableV2.frame(spark, this, snap.copy(files = files),
-      if (rowIds) Seq(GraftTableV2.RowIdCol) else Nil)
-    toPhysical(keep.fold(rows)(rows.filter), snap.schema)
+      rowIds: Boolean = false): DataFrame =
+    toPhysical(GraftTableV2.frame(spark, this, snap.copy(files = files),
+        if (rowIds) Seq(GraftTableV2.RowIdCol) else Nil), snap.schema)
       .withColumnRenamed(GraftTableV2.RowIdCol, RowIdPhysCol)
+
+  /** The one survivor rewrite behind the range [[delete]] and
+    * [[overwriteRange]] straddlers, the commit core's over-threshold
+    * leg, [[purgeDeletes]], [[compact]], [[compactRange]],
+    * [[compactSmall]] and [[optimizeZorder]]: `files`' rows (deletion
+    * vectors applied), shaped by the caller's `layout` (a survivor
+    * filter, a repartition, a clustering), staged under `snap`'s spec.
+    * Row tracking: with `rowTracking` on every row carries its id into
+    * the new files, marked materialized (see [[TxLog.RowTrackingProp]]). */
+  private def restage(spark: SparkSession, snap: Snapshot, files: Seq[AddFile])(
+      layout: DataFrame => DataFrame): Seq[AddFile] = {
+    val tracked = rowTrackingEnabled(snap)
+    val adds = stageData(layout(rewriteRows(spark, snap, files, rowIds = tracked)),
+      Some(snap))
+    if (tracked) adds.map(_.copy(ridMaterialized = true)) else adds
   }
+
+  /** The change-feed half of the row-id rule: a rewrite's change rows
+    * key by row id only when its new files materialized ids (`tracked`)
+    * and every pre-image file carries id info — a rid-less pre copy
+    * against a materialized post copy would fail to cancel and surface
+    * phantom change rows. */
+  private def ridKeyed(tracked: Boolean, pre: Seq[AddFile]): Boolean =
+    tracked && pre.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
 
   // ------------------------------------------------- change data feed
 
@@ -1699,10 +1738,13 @@ final class GraftTable(val tablePath: String) {
     * them; a commit that does not land deletes them ([[transact]]), and
     * a crashed writer's are orphans for [[vacuum]]. An empty frame
     * writes nothing. */
-  private def stageChanges(changes: DataFrame): Seq[(String, Long)] =
+  private def stageChanges(snap: Snapshot, changes: DataFrame): Seq[(String, Long)] = {
+    require(!snap.schema.fieldNames.contains(ChangeTypeCol),
+      s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
     ParquetWrites.write(changes, ParquetWrites.factory(changes.sparkSession,
         changes.schema, root.resolve(ChangeDir).toString))
       .sorted.map(f => (s"$ChangeDir/${f.name}", f.rows))
+  }
 
   /** Net row changes of a rewrite, as a stageable PHYSICAL-named frame:
     * multiset difference pre-vs-post — rows only in the pre state are
@@ -1711,23 +1753,21 @@ final class GraftTable(val tablePath: String) {
     * Exactly what an incremental consumer folds, and derived from the
     * SAME bytes the commit removes/adds — the feed can never disagree
     * with the table. Cost: one exceptAll over the TOUCHED files only,
-    * and only on `cdf.enabled` tables. */
+    * and only on `cdf.enabled` tables. `tracked`: the post files
+    * materialized row ids. */
   private def cdcDiff(
       spark: SparkSession, snap: Snapshot,
       preFiles: Seq[AddFile], postFiles: Seq[AddFile],
-      ridAware: Boolean = false): Seq[(String, Long)] = {
-    require(!snap.schema.fieldNames.contains(ChangeTypeCol),
-      s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
+      tracked: Boolean): Seq[(String, Long)] = {
+    val ridAware = ridKeyed(tracked, preFiles)
     val phys = physicalSchema(snap.schema)
-    // ROW-TRACKING-aware diff (replaceFiles under rowTracking, when
-    // every pre file carries rid info and the COW writer materialized
-    // ids into the post files): the diff keys by (content, row id), so
-    // each change row carries its stable id as a trailing `__cdc_rid`
-    // column — what lets updateImages pair an UPDATE's pre/post rows
-    // WITHOUT a recorded merge key. Carried rows still cancel (same
-    // content, same id); an UPDATE x=x cancels too. Default feed
-    // consumers never see the column (the feed read's explicit schema
-    // selects by name).
+    // ROW-TRACKING-aware diff ([[ridKeyed]]): the diff keys by
+    // (content, row id), so each change row carries its stable id as a
+    // trailing `__cdc_rid` column — what lets updateImages pair an
+    // UPDATE's pre/post rows WITHOUT a recorded merge key. Carried rows
+    // still cancel (same content, same id); an UPDATE x=x cancels too.
+    // Default feed consumers never see the column (the feed read's
+    // explicit schema selects by name).
     def side(fs: Seq[AddFile]): DataFrame =
       rewriteRows(spark, snap, fs, rowIds = ridAware)
         .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
@@ -1744,7 +1784,7 @@ final class GraftTable(val tablePath: String) {
     // column (same convention as the __file/__idx tags elsewhere)
     require(!phys.fieldNames.exists(_.startsWith("__cdc_")),
       "txlog: '__cdc_*' column names are reserved")
-    stageChanges(
+    stageChanges(snap,
       pre.withColumn("__cdc_w", lit(1L))
         .unionAll(post.withColumn("__cdc_w", lit(-1L)))
         .groupBy(cols: _*).agg(sum(col("__cdc_w")).as("__cdc_d"))
@@ -2113,16 +2153,8 @@ final class GraftTable(val tablePath: String) {
     // the allocation cannot collide with a concurrent assigner.
     val tracked = writerRid.getOrElse(rowTrackingEnabled(snap))
     val cdc = if (cdfEnabled(snap)) {
-      val removedEntries = {
-        val want = removePaths.toSet
-        snap.files.filter(a => want.contains(a.path))
-      }
-      // rid-aware diff only when EVERY pre file carries id info — a
-      // rid-less pre copy against a materialized post copy would fail
-      // to cancel and surface phantom change rows
-      cdcDiff(spark, snap, removedEntries, adds,
-        ridAware = tracked && removedEntries.forall(a =>
-          a.ridMaterialized || a.baseRowId.isDefined))
+      val want = removePaths.toSet
+      cdcDiff(spark, snap, snap.files.filter(a => want.contains(a.path)), adds, tracked)
     } else Nil
     val (ridAdds, newHwm) = assignBaseRowIds(
       if (tracked) adds.map(_.copy(ridMaterialized = true)) else adds,
@@ -2665,12 +2697,10 @@ final class GraftTable(val tablePath: String) {
     // row tracking: an UPDATED key keeps its base row's id, joined back
     // by key after the merge (the upsert contract treats `key` as a
     // primary key; a duplicate-keyed base degrades to min-id per key
-    // rather than fanning rows out); new keys stage a null id and take
-    // fresh base + index through the coalesce convention. Requires
-    // every touched file to carry id info.
-    val tracked = rowTrackingEnabled(snap) && snap.schema.fields.nonEmpty &&
-      touched.nonEmpty &&
-      touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
+    // rather than fanning rows out); new keys, and keys whose file has
+    // no id info, stage a null id and take fresh base + index through
+    // the coalesce convention
+    val tracked = rowTrackingEnabled(snap) && touched.nonEmpty
     val merged =
       if (!tracked) merged0
       else merged0.join(rowIdsByKey(spark, snap, touched, key), Seq(key), "left")
@@ -2688,8 +2718,7 @@ final class GraftTable(val tablePath: String) {
     val schemaJson = if (snap.schema.isEmpty) Some(merged0.schema.json) else None
     // cdf.enabled: the feed batch is the pre-vs-post diff of the TOUCHED
     // files only — O(rewrite), never O(table)
-    val cdc = if (cdfEnabled(snap))
-      cdcDiff(spark, snap, touched, adds, ridAware = tracked) else Nil
+    val cdc = if (cdfEnabled(snap)) cdcDiff(spark, snap, touched, adds, tracked) else Nil
     val (ridAdds, newHwm) = assignBaseRowIds(adds, snap.rowIdWatermark)
     val v = commitRewrite(snap, "upsert", schemaJson, ridAdds,
       touched.map(_.path), cdc = cdc, mergeKey = Some(key),
@@ -2726,19 +2755,10 @@ final class GraftTable(val tablePath: String) {
       spark: SparkSession, snap: Snapshot, changes: DataFrame,
       key: String, seqCol: String, touched: Seq[AddFile]): Long = {
     val keyVals = changes.select(col(key).as("__k")).distinct()
-    val matchedPairs =
+    val bitmaps = matchedBitmaps(
       GraftTableV2.frame(spark, this, snap.copy(files = touched),
           Seq(GraftTableV2.FileCol, GraftTableV2.PosCol))
-        .join(keyVals, col(s"`$key`") === col("__k"), "left_semi")
-        .select(col(GraftTableV2.FileCol).as("__file"),
-          col(GraftTableV2.PosCol).as("__idx"))
-    // one COMPRESSED bitmap row per touched file — file-count-sized
-    // driver traffic (unbounded in-aggregate here: the commit core's
-    // triage needs the full merged bitmaps to derive rewrite-leg
-    // survivors; roaring keeps even dense per-file sets KiB-scale)
-    val bitmaps: Seq[(String, Array[Byte])] =
-      dvAggregate(matchedPairs, Int.MaxValue).collect().toSeq
-        .flatMap(r => Option(r.getAs[Array[Byte]](1)).map(r.getString(0) -> _))
+        .join(keyVals, col(s"`$key`") === col("__k"), "left_semi"))
     // the batch's own latest images ARE the post-state for matched and
     // brand-new keys alike (changes carry full rows — the applyCdc
     // contract); base rows of untouched keys never move
@@ -2748,11 +2768,9 @@ final class GraftTable(val tablePath: String) {
     // (Delta's row-tracking contract holds on BOTH DML planes — a
     // MOR update is an update, not delete+insert, to an id-keyed
     // consumer). Same keyed join-back as the COW leg: min-id per key
-    // on duplicate-keyed bases, null for brand-new keys (they coalesce
-    // to fresh base + index). Requires every touched file to carry id
-    // info.
-    val tracked = rowTrackingEnabled(snap) &&
-      touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
+    // on duplicate-keyed bases, null for brand-new keys and keys whose
+    // file has no id info (they coalesce to fresh base + index).
+    val tracked = rowTrackingEnabled(snap)
     val inserts =
       if (!tracked) inserts0
       else inserts0.join(rowIdsByKey(spark, snap, touched, key), Seq(key), "left")
@@ -2767,7 +2785,7 @@ final class GraftTable(val tablePath: String) {
       if (tracked) insertAdds0.map(_.copy(ridMaterialized = true))
       else insertAdds0
     commitDeltaRowLevelAdds(spark, snap, bitmaps, insertAdds,
-      op = "upsert", mergeKey = Some(key))
+      op = "upsert", mergeKey = Some(key))._3
   }
 
   /** Create an EMPTY table: commit v1 carries the schema and no files.
@@ -3308,26 +3326,15 @@ final class GraftTable(val tablePath: String) {
   }
 
   /** Transactional range DELETE (`DELETE WHERE lower <= column <=
-    * upper`, either bound open): three-way file triage from log stats —
-    *
-    *   - files whose stats prove EVERY row matches (file range inside
-    *     the delete range AND zero nulls — a null key never matches a
-    *     comparison, so it would wrongly die with the file) drop by
-    *     pure metadata: no byte read, no byte written;
-    *   - files whose stats cannot overlap the range carry over
-    *     untouched;
-    *   - only genuinely straddling files are read and rewritten with
-    *     their surviving rows (rows where the predicate is NULL — a
-    *     null key — survive, per SQL DELETE semantics).
+    * upper`, either bound open) over [[rangeTriage]]: fully-matching
+    * files drop by pure metadata, non-overlapping files carry over
+    * untouched, and only genuinely straddling files are read and
+    * rewritten with their surviving rows (rows where the predicate is
+    * NULL — a null key — survive, per SQL DELETE semantics).
     *
     * At 100 TB this makes the retention delete ("drop everything before
     * date D" on date-clustered data) a metadata operation that rewrites
-    * only the boundary file. A file with NO stats for `column` is
-    * provably all-null when the column's type always gets stats and
-    * isn't float/double — those carry over untouched (no row can
-    * match); otherwise the no-stats file is conservatively rewritten
-    * (it may hold matches — or NaNs, which compare greatest in Spark's
-    * ordering). Commits as a conflict-checked rewrite:
+    * only the boundary file. Commits as a conflict-checked rewrite:
     * concurrent writers abort it, and streaming tails refuse to cross
     * it unless `skipRewrites` (rows disappeared — the Delta contract).
     * Returns (droppedFiles, rewrittenFiles, committedVersion). */
@@ -3337,6 +3344,47 @@ final class GraftTable(val tablePath: String) {
     require(lower.forall(isFiniteStat) && upper.forall(isFiniteStat),
       "txlog: delete bounds must be finite (NaN/Infinity compare unreliably)")
     val snap = snapshot()
+    val (dropped, touched, matched) = rangeTriage(snap, column, lower, upper)
+    if (dropped.isEmpty && touched.isEmpty) return (0, 0, snap.version) // no-op, no commit
+    // straddler survivors: a NULL predicate keeps the row
+    val adds = if (touched.isEmpty) Nil
+      else restage(spark, snap, touched)(_.filter(!coalesce(matched, lit(false))))
+    // cdf.enabled: metadata-dropped files become `cdcfull` refs (their
+    // own bytes ARE the change rows — the drop stays zero-write); only
+    // the straddling rewrites stage a real diff (O(rewrite))
+    val cdc = if (cdfEnabled(snap) && touched.nonEmpty)
+      cdcDiff(spark, snap, touched, adds, rowTrackingEnabled(snap)) else Nil
+    val cdcFull = if (cdfEnabled(snap)) dropped.map(_.path) else Nil
+    val v = commitRewrite(snap, "delete", None, adds,
+      (dropped ++ touched).map(_.path), cdc = cdc, cdcFull = cdcFull)
+    // untouched files are never staged or referenced by the commit, so
+    // there is nothing to verify driver-side — a post-commit existence
+    // sweep would be O(#files) stat() calls appended to what is
+    // otherwise a metadata-only operation
+    (dropped.size, touched.size, v)
+  }
+
+  /** The three-way file triage of a one-column inclusive range
+    * `[lower, upper]` (either bound open) from log stats, shared by
+    * [[delete]] and [[overwriteRange]]. Returns (dropped, touched,
+    * matched):
+    *
+    *   - dropped: files whose stats prove EVERY row matches (file range
+    *     inside the range AND zero nulls — a null key never matches a
+    *     comparison, so it would wrongly die with the file);
+    *   - touched: files that may hold a match but are not proven full —
+    *     the straddlers to rewrite. A file with NO stats for `column`
+    *     is provably all-null when the column's type always gets stats
+    *     and isn't float/double — it carries over (no row can match);
+    *     otherwise it is touched (it may hold matches — or NaNs, which
+    *     compare greatest in Spark's ordering);
+    *   - matched: the row predicate over PHYSICAL names (NULL on a null
+    *     key — callers treat NULL as no match).
+    *
+    * Every other file carries over untouched. */
+  private def rangeTriage(
+      snap: Snapshot, column: String,
+      lower: Option[Any], upper: Option[Any]): (Seq[AddFile], Seq[AddFile], Column) = {
     val lo = lower.map(statsLiteral); val hi = upper.map(statsLiteral)
     // UTF-8 byte order for strings — the order the stored min/max were
     // written in (String.compareTo would invert supplementary-char
@@ -3358,8 +3406,6 @@ final class GraftTable(val tablePath: String) {
       exactStats && cs.nulls.contains(0L) &&
         lo.forall(l => cmp(cs.kind, cs.min, l) >= 0) &&
         hi.forall(h => cmp(cs.kind, cs.max, h) <= 0)
-    // stats absent + always-stat'd non-float type ⇒ the file is all
-    // null there ⇒ no row can match a comparison: never read, never drop
     val provablyAllNull = field.exists(f =>
       (f.dataType match {
         case _: NumericType | StringType | DateType | TimestampType => true
@@ -3367,83 +3413,7 @@ final class GraftTable(val tablePath: String) {
       }) && f.dataType != DoubleType && f.dataType != FloatType)
     val physCol = physicalOf(snap.schema, column)
     val (dropped, kept) = snap.files.partition(_.stats.get(physCol).exists(allMatch))
-    val (touched, _) = kept.partition(_.stats.get(physCol) match {
-      case Some(cs) => cs.overlaps(lo, hi)
-      case None => !provablyAllNull
-    })
-    if (dropped.isEmpty && touched.isEmpty) return (0, 0, snap.version) // no-op, no commit
-
-    // row tracking: straddler survivors carry their ids into the
-    // rewrite (materialized), exactly like compact
-    val tracked = rowTrackingEnabled(snap)
-    val adds = if (touched.isEmpty) Seq.empty else {
-      // the filter column is PHYSICAL: the rows are read ready to stage
-      val c = col(physCol)
-      val matched = (lower, upper) match {
-        case (Some(l), Some(u)) => c >= lit(l) && c <= lit(u)
-        case (Some(l), None) => c >= lit(l)
-        case (None, Some(u)) => c <= lit(u)
-        case (None, None) => c.isNotNull // full-range: non-null rows match
-      }
-      val survivors = rewriteRows(spark, snap, touched, rowIds = tracked)
-        .filter(!coalesce(matched, lit(false))) // NULL predicate ⇒ row survives
-      val staged = stageData(survivors, Some(snap))
-      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
-    }
-    // cdf.enabled: metadata-dropped files become `cdcfull` refs (their
-    // own bytes ARE the change rows — the drop stays zero-write); only
-    // the straddling rewrites stage a real diff (O(rewrite))
-    val cdc = if (cdfEnabled(snap) && touched.nonEmpty)
-      cdcDiff(spark, snap, touched, adds) else Nil
-    val cdcFull = if (cdfEnabled(snap)) dropped.map(_.path) else Nil
-    val v = commitRewrite(snap, "delete", None, adds,
-      (dropped ++ touched).map(_.path), cdc = cdc, cdcFull = cdcFull)
-    // untouched files are never staged or referenced by the commit, so
-    // there is nothing to verify driver-side — a post-commit existence
-    // sweep would be O(#files) stat() calls appended to what is
-    // otherwise a metadata-only operation
-    (dropped.size, touched.size, v)
-  }
-
-  /** Atomic REPLACE WHERE over the one-column inclusive range
-    * `[lower, upper]` (Delta's `replaceWhere` shape): ONE commit drops
-    * fully-covered files by metadata, rewrites straddlers' survivors,
-    * and adopts `df` as the range's new content — the BACKFILL shape
-    * (recompute a day, swap it in) with no delete-then-append gap a
-    * concurrent reader could observe. Every replacement row must fall
-    * INSIDE the range and carry a non-null key — validated on the
-    * STAGED bytes (the rows committed are the rows checked); a
-    * violation deletes the staged files and commits nothing, so the
-    * operation can never clobber rows outside its declared window.
-    * NULL-keyed existing rows survive (they match no range), exactly
-    * like [[delete]]. Returns (filesDropped, filesRewritten, version). */
-  def overwriteRange(
-      spark: SparkSession, df: DataFrame, column: String,
-      lower: Option[Any], upper: Option[Any]): (Int, Int, Long) = {
-    require(lower.forall(isFiniteStat) && upper.forall(isFiniteStat),
-      "txlog: replace bounds must be finite")
-    val snap = snapshot()
-    require(snap.schema.fieldNames.contains(column),
-      s"txlog: unknown range column '$column'")
-    // the same three-way triage as delete(): metadata drops, straddler
-    // rewrites, untouched carry-over
-    val lo = lower.map(statsLiteral); val hi = upper.map(statsLiteral)
-    def cmp(kind: String, a: String, b: String): Int =
-      if (kind == "num") BigDecimal(a).compare(BigDecimal(b)) else utf8Cmp(a, b)
-    val field = snap.schema.fields.find(_.name == column)
-    val exactStats = field.exists(_.dataType != TimestampType)
-    def allMatch(cs: ColStats): Boolean =
-      exactStats && cs.nulls.contains(0L) &&
-        lo.forall(l => cmp(cs.kind, cs.min, l) >= 0) &&
-        hi.forall(h => cmp(cs.kind, cs.max, h) <= 0)
-    val provablyAllNull = field.exists(f =>
-      (f.dataType match {
-        case _: NumericType | StringType | DateType | TimestampType => true
-        case _ => false
-      }) && f.dataType != DoubleType && f.dataType != FloatType)
-    val physCol = physicalOf(snap.schema, column)
-    val (dropped, kept) = snap.files.partition(_.stats.get(physCol).exists(allMatch))
-    val (touched, _) = kept.partition(_.stats.get(physCol) match {
+    val touched = kept.filter(_.stats.get(physCol) match {
       case Some(cs) => cs.overlaps(lo, hi)
       case None => !provablyAllNull
     })
@@ -3452,17 +3422,37 @@ final class GraftTable(val tablePath: String) {
       case (Some(l), Some(u)) => c >= lit(l) && c <= lit(u)
       case (Some(l), None) => c >= lit(l)
       case (None, Some(u)) => c <= lit(u)
-      case (None, None) => c.isNotNull
+      case (None, None) => c.isNotNull // full-range: non-null rows match
     }
+    (dropped, touched, matched)
+  }
+
+  /** Atomic REPLACE WHERE over the one-column inclusive range
+    * `[lower, upper]` (Delta's `replaceWhere` shape): ONE commit drops
+    * fully-covered files by metadata, rewrites straddlers' survivors
+    * ([[rangeTriage]], as [[delete]]), and adopts `df` as the range's
+    * new content — the BACKFILL shape (recompute a day, swap it in)
+    * with no delete-then-append gap a concurrent reader could observe.
+    * Every replacement row must fall INSIDE the range and carry a
+    * non-null key — validated on the STAGED bytes (the rows committed
+    * are the rows checked); a violation deletes the staged files and
+    * commits nothing, so the operation can never clobber rows outside
+    * its declared window. NULL-keyed existing rows survive (they match
+    * no range), exactly like [[delete]]. Returns (filesDropped,
+    * filesRewritten, version). */
+  def overwriteRange(
+      spark: SparkSession, df: DataFrame, column: String,
+      lower: Option[Any], upper: Option[Any]): (Int, Int, Long) = {
+    require(lower.forall(isFiniteStat) && upper.forall(isFiniteStat),
+      "txlog: replace bounds must be finite")
+    val snap = snapshot()
+    require(snap.schema.fieldNames.contains(column),
+      s"txlog: unknown range column '$column'")
+    val (dropped, touched, matched) = rangeTriage(snap, column, lower, upper)
     // row tracking: straddler survivors carry their ids into the
     // rewrite (materialized), replacement content takes fresh bases
-    val tracked = rowTrackingEnabled(snap) &&
-      touched.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
-    val survivorAdds = if (touched.isEmpty) Seq.empty else {
-      val staged = stageData(rewriteRows(spark, snap, touched, rowIds = tracked)
-        .filter(!coalesce(matched, lit(false))), Some(snap))
-      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
-    }
+    val survivorAdds = if (touched.isEmpty) Nil
+      else restage(spark, snap, touched)(_.filter(!coalesce(matched, lit(false))))
     // the replacement content, staged then RANGE-VALIDATED on its own
     // bytes — out-of-window or null-keyed rows refuse atomically
     val newAdds = stageData(toPhysical(df, snap.schema), Some(snap))
@@ -3488,7 +3478,8 @@ final class GraftTable(val tablePath: String) {
     // cdf.enabled: dropped files ride as zero-write cdcfull refs; the
     // straddler+insert net diff stages like every rewrite
     val cdc = if (cdfEnabled(snap) && (touched.nonEmpty || newAdds.nonEmpty))
-      cdcDiff(spark, snap, touched, survivorAdds ++ newAdds) else Nil
+      cdcDiff(spark, snap, touched, survivorAdds ++ newAdds, rowTrackingEnabled(snap))
+    else Nil
     val cdcFull = if (cdfEnabled(snap)) dropped.map(_.path) else Nil
     val (ridAdds, newHwm) = assignBaseRowIds(
       survivorAdds ++ newAdds, snap.rowIdWatermark)
@@ -3507,111 +3498,46 @@ final class GraftTable(val tablePath: String) {
     * copy-on-write turns into a full-table rewrite — commits here as
     * metadata: one bitmap per touched file.
     *
-    * Per-file triage keeps DVs honest: a file whose total deleted
-    * fraction would exceed `dv.maxFraction` (table property, default
-    * 0.5) or whose merged bitmap would serialize past `dv.maxBytes`
-    * (default 64 KiB) is rewritten copy-on-write in the same commit
-    * instead — a DV bigger than the IO it saves is debt. The bounds are
-    * also what keep the bitmaps every scan task deserializes small.
-    * Successive deletes OR into the existing bitmap (idempotent per
-    * row); surviving rows keep their original `_commit_version`
-    * provenance. The commit is a rewrite for tailing consumers (rows
-    * disappeared — same contract as [[delete]]).
+    * One pass over the live rows (existing DVs applied, so an
+    * already-deleted row can never match again) folds the matched
+    * positions into per-file bitmaps executor-side ([[dvAggregate]]);
+    * the commit goes through the merge-on-read core
+    * ([[commitDeltaRowLevelAdds]], op `delete`, no inserts), whose
+    * triage rewrites a file copy-on-write instead when its merged
+    * bitmap would empty it, exceed `dv.maxFraction` (table property,
+    * default 0.5) or serialize past `dv.maxBytes` (default 64 KiB) — a
+    * DV bigger than the IO it saves is debt. Successive deletes OR into
+    * the existing bitmap (idempotent per row); surviving rows keep
+    * their original `_commit_version` provenance. The commit is a
+    * rewrite for tailing consumers (rows disappeared — same contract as
+    * [[delete]]).
     *
     * Returns (filesVectorized, filesRewritten, rowsDeleted, version) —
     * a no-match delete is (0, 0, 0, head) with no commit. */
   def deleteRows(spark: SparkSession, condition: String): (Int, Int, Long, Long) = {
     val snap = snapshot()
     if (snap.files.isEmpty) return (0, 0, 0L, snap.version)
-    val maxFraction = snap.props.get(DvMaxFractionProp)
-      .map(_.toDouble).getOrElse(DvMaxFraction)
-    val maxBytes = snap.props.get(DvMaxBytesProp)
-      .map(_.toInt).getOrElse(DvMaxBytes)
-    val byName = snap.files.map(a => a.path -> a).toMap
-
-    // live rows with their (file, position), existing DVs applied — so
-    // already-deleted rows can never match again (counts stay exact)
-    def matched(columns: Seq[String]): DataFrame =
-      GraftTableV2.frame(spark, this, snap, columns)
-        .filter(coalesce(expr(condition), lit(false)))
-
-    // ONE pass computes per-file match counts AND deletion bitmaps
-    // together (round 16 — guide §1.2: the old two-phase shape re-read
-    // every matched row a second time just to materialize indexes the
-    // first pass had already seen). The bitmap aggregate is
-    // maxBytes-bounded IN-AGGREGATE (finish → null), so building one
-    // for a file the fraction triage then routes to rewrite wastes at
-    // most one ≤maxBytes buffer — the driver still receives one
-    // metadata-sized row per file, never row indexes, at any scale.
-    val dvFn = org.apache.spark.sql.functions.udaf(
-      new graft.functions.DvAgg(maxBytes))
-    val phase: Seq[(String, Long, Option[Array[Byte]])] =
-      matched(Seq(GraftTableV2.FileCol, GraftTableV2.PosCol))
-      .groupBy(GraftTableV2.FileCol)
-      .agg(count(lit(1)).as("__n"), dvFn(col(GraftTableV2.PosCol)).as("__dv"))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1),
-        Option(r.getAs[Array[Byte]]("__dv"))))
-    val counts: Map[String, Long] = phase.map(t => t._1 -> t._2).toMap
-    if (counts.isEmpty) return (0, 0, 0L, snap.version)
-    val overFraction = counts.keySet.filter { p =>
-      val a = byName(p)
-      (a.dvRows + counts(p)).toDouble / a.rows > maxFraction
-    }
-    val built: Seq[(String, Option[org.roaringbitmap.RoaringBitmap])] =
-      phase.filterNot(t => overFraction.contains(t._1)).sortBy(_._1)
-        .map { case (p, _, bytesOpt) =>
-          p -> bytesOpt.map { bytes =>
-            val bm = new org.roaringbitmap.RoaringBitmap()
-            bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-            // existing DVs are log metadata (≤maxBytes each, disjoint
-            // from new matches: the scan already skips their rows)
-            byName(p).dv.foreach(b64 => bm.or(dvDeserialize(b64)))
-            bm
-          }
-        }
-    val (kept, overNew) = built.partition(_._2.isDefined)
-    // merged-with-existing size re-check — both sides ≤maxBytes, so
-    // this runs on metadata-sized driver state
-    val (vectorized, overMerged) = kept.map { case (p, o) => p -> o.get }
-      .partition { case (_, bm) =>
-        bm.runOptimize(); bm.serializedSizeInBytes() <= maxBytes
-      }
-    val rewriteFiles =
-      (overFraction ++ overNew.map(_._1) ++ overMerged.map(_._1))
-        .toSeq.sorted.map(byName)
-    val dvAdds = vectorized.sortBy(_._1).map { case (p, bm) => withDv(byName(p), bm) }
-    // copy-on-write leg: over-threshold files rewrite DV-applied; on a
-    // row-tracked table the survivors carry their ids (materialized)
-    val tracked = rowTrackingEnabled(snap)
-    val stagedAdds = if (rewriteFiles.isEmpty) Seq.empty else {
-      val staged = stageData(rewriteRows(spark, snap, rewriteFiles,
-        rowIds = tracked, keep = Some(!coalesce(expr(condition), lit(false)))),
-        Some(snap))
-      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
-    }
-    // provenance of the re-added DV files stays with their ORIGINAL
-    // commit — the delete changed which rows exist, not who wrote them
-    val addVersions = dvAdds.map(a =>
-      a.path -> snap.addedIn.getOrElse(a.path, snap.version)).toMap
-    // cdf.enabled: the matched rows ARE the change batch (MOR delete
-    // never inserts) — one more pass over the live set, staged as
-    // all-delete change rows. No diff computation needed.
-    val cdc = if (!cdfEnabled(snap)) Nil else {
-      require(!snap.schema.fieldNames.contains(ChangeTypeCol),
-        s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
-      stageChanges(toPhysical(matched(Nil), snap.schema)
-        .withColumn(ChangeTypeCol, lit("delete")))
-    }
-    // staged: ONLY the rewrite output and change files — the DV adds
-    // reference live data files that must never be touched on abort
-    val v = transact(Abort, read = snap.version,
-        staged = stagedAdds.map(_.path) ++ cdc.map(_._1))(_ =>
-      Some(Commit("delete", None, stagedAdds ++ dvAdds,
-        rewriteFiles.map(_.path) ++ dvAdds.map(_.path),
-        addVersions = addVersions, cdc = cdc)))
-    (dvAdds.size, rewriteFiles.size, counts.values.sum, v)
+    val bitmaps = matchedBitmaps(
+      GraftTableV2.frame(spark, this, snap,
+          Seq(GraftTableV2.FileCol, GraftTableV2.PosCol))
+        .filter(coalesce(expr(condition), lit(false))))
+    val rowsDeleted = bitmaps.map(b => dvFromBytes(b._2).getLongCardinality).sum
+    val (vectorized, rewritten, v) = commitDeltaRowLevelAdds(spark, snap, bitmaps, Nil,
+      op = "delete", mergeKey = None)
+    (vectorized, rewritten, rowsDeleted, v)
   }
+
+  /** One compressed bitmap per file of a `(FileCol, PosCol)` match
+    * frame, unbounded ([[dvAggregate]]): the commit core's triage needs
+    * the full merged bitmaps to decide and derive its rewrite leg. A
+    * roaring bitmap is at most 8 KiB per 65,536 rows, so the driver
+    * receives ~rows/8 bytes per matched file at worst, never row
+    * indexes. */
+  private def matchedBitmaps(matched: DataFrame): Seq[(String, Array[Byte])] =
+    dvAggregate(matched.select(col(GraftTableV2.FileCol).as("__file"),
+        col(GraftTableV2.PosCol).as("__idx")), Int.MaxValue)
+      .collect().toSeq
+      .flatMap(r => Option(r.getAs[Array[Byte]](1)).map(r.getString(0) -> _))
 
   /** Commit a DELTA-based (merge-on-read) row-level write — the Delta
     * DV-backed `UPDATE` / `MERGE` shape (cf. Delta protocol
@@ -3620,19 +3546,9 @@ final class GraftTable(val tablePath: String) {
     * RoaringBitmaps over physical row indexes (built executor-side by
     * [[graft.streaming.GraftDeltaRowLevelOperation]]'s writers);
     * `insertStaged` are the already-written post-image / NOT-MATCHED
-    * parquet files. One serializable commit swaps each touched file
-    * for its DV'd copy and adopts the inserts — an UPDATE touching
-    * 0.1% of a 100 TB table moves no data bytes at all.
-    *
-    * The same [[DvMaxFractionProp]]/[[DvMaxBytesProp]] triage as
-    * [[deleteRows]] keeps DVs honest: an over-threshold file (or a
-    * fully-emptied one) is rewritten copy-on-write in the SAME commit,
-    * its survivors derived from the merged bitmap. `cdf.enabled`
-    * stages exact change rows: the newly-deleted positions' pre-images
-    * as `delete`, the insert files as `insert` (net-change semantics,
-    * same as the copy-on-write replace path). A moved head fails
-    * loudly — the deletes were computed against `readVersion`'s exact
-    * row positions. */
+    * parquet files, committed through [[commitDeltaRowLevelAdds]] as
+    * op `replace`. A moved head fails loudly — the deletes were
+    * computed against `readVersion`'s exact row positions. */
   private[graft] def commitDeltaRowLevel(
       spark: SparkSession, readVersion: Long,
       newDeletes: Seq[(String, Array[Byte])],
@@ -3653,19 +3569,34 @@ final class GraftTable(val tablePath: String) {
     commitDeltaRowLevelAdds(spark, snap, newDeletes,
       if (ridMaterialized) adopted.map(_.copy(ridMaterialized = true))
       else adopted,
-      op = "replace", mergeKey = None)
+      op = "replace", mergeKey = None)._3
   }
 
-  /** [[commitDeltaRowLevel]] over ALREADY-ADOPTED insert files — the
-    * shared core behind the SQL delta write ("replace") and the
-    * merge-on-read keyed [[upsert]] ("upsert" + recorded merge key, so
-    * the change feed can re-pair images). */
+  /** The ONE merge-on-read commit core, behind the SQL delta write
+    * ([[commitDeltaRowLevel]], op `replace`), the merge-on-read keyed
+    * [[upsert]] (op `upsert` + recorded merge key, so the change feed
+    * can re-pair images) and [[deleteRows]] (op `delete`, no inserts).
+    * `newDeletes` are per-file bitmaps of the rows the operation
+    * retired; `insertAdds` its already-adopted new rows. One
+    * serializable commit swaps each touched file for its DV'd copy and
+    * adopts the inserts — an UPDATE touching 0.1% of a 100 TB table
+    * moves no data bytes at all.
+    *
+    * The ONE deletion-vector triage ([[DvMaxFractionProp]],
+    * [[DvMaxBytesProp]]): a file whose merged bitmap would empty it,
+    * exceed the fraction or serialize past the byte bound is rewritten
+    * copy-on-write in the SAME commit, its survivors derived from the
+    * merged bitmap (a fully-emptied file simply leaves the snapshot).
+    * `cdf.enabled` stages exact change rows: the newly-deleted
+    * positions' pre-images as `delete`, the insert files as `insert`.
+    * Returns (filesVectorized, filesRewritten, version) — (0, 0, head)
+    * with no commit when there is nothing to commit. */
   private def commitDeltaRowLevelAdds(
       spark: SparkSession, snap: Snapshot,
       newDeletes: Seq[(String, Array[Byte])],
       insertAdds: Seq[AddFile],
-      op: String, mergeKey: Option[String]): Long = {
-    if (newDeletes.isEmpty && insertAdds.isEmpty) return snap.version
+      op: String, mergeKey: Option[String]): (Int, Int, Long) = {
+    if (newDeletes.isEmpty && insertAdds.isEmpty) return (0, 0, snap.version)
     val readVersion = snap.version
     val byName = snap.files.map(a => a.path -> a).toMap
     newDeletes.foreach { case (p, _) =>
@@ -3685,8 +3616,7 @@ final class GraftTable(val tablePath: String) {
     // over-fraction / over-bytes / fully-emptied files rewrite instead
     val merged: Seq[(String, org.roaringbitmap.RoaringBitmap)] =
       newDeletes.sortBy(_._1).map { case (p, bytes) =>
-        val bm = new org.roaringbitmap.RoaringBitmap()
-        bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
+        val bm = dvFromBytes(bytes)
         byName(p).dv.foreach(b64 => bm.or(dvDeserialize(b64)))
         bm.runOptimize()
         p -> bm
@@ -3700,36 +3630,23 @@ final class GraftTable(val tablePath: String) {
     val dvAdds = vectorized.map { case (p, bm) => withDv(byName(p), bm) }
     // copy-on-write leg: each over-threshold file reads with its MERGED
     // bitmap as its deletion vector (it already ORs any pre-existing
-    // DV). Row tracking: survivors of an over-threshold file are rows
-    // the table already held — they carry their ids into the rewrite
-    // (materialized), exactly like compact; only the post-images are
-    // new rows.
-    val overFiles = over.map { case (p, _) => byName(p) }
-    val overTracked = rowTrackingEnabled(snap) && overFiles.nonEmpty &&
-      overFiles.forall(a => a.ridMaterialized || a.baseRowId.isDefined)
-    val stagedAdds = if (over.isEmpty) Nil else {
-      val staged0 = stageData(rewriteRows(spark, snap,
-        over.map { case (p, bm) => withDv(byName(p), bm) },
-        rowIds = overTracked), Some(snap))
-      if (overTracked) staged0.map(_.copy(ridMaterialized = true))
-      else staged0
-    }
+    // DV); its survivors are rows the table already held, so they keep
+    // their ids ([[restage]]) — only the post-images are new rows
+    val stagedAdds = if (over.isEmpty) Nil
+      else restage(spark, snap, over.map { case (p, bm) => withDv(byName(p), bm) })(identity)
     // cdf.enabled: newly-deleted positions' pre-images + insert rows.
-    // ROW-TRACKING-aware staging (the replaceFiles/cdcDiff parity on
-    // the MOR plane): when every touched file carries id info and the
-    // post-images were writer-materialized, each image row carries its
-    // stable id as a trailing `__cdc_rid` — so updateImages pairs a
-    // SQL MOR UPDATE's pre/post rows WITHOUT a recorded merge key
-    // (a NOT-MATCHED insert's id is null → stays `insert`; a MOR
-    // DELETE stages pre rows only → stays `delete`). Default feed
-    // consumers never see the column (explicit-schema read by name).
+    // ROW-TRACKING-aware staging ([[ridKeyed]], the cdcDiff rule on
+    // the MOR plane; the post-images materialized ids when the writer
+    // did): each image row carries its stable id as a trailing
+    // `__cdc_rid` — so updateImages pairs a SQL MOR UPDATE's pre/post
+    // rows WITHOUT a recorded merge key (a NOT-MATCHED insert's id is
+    // null → stays `insert`; a MOR DELETE stages pre rows only → stays
+    // `delete`). Default feed consumers never see the column
+    // (explicit-schema read by name).
     val cdc = if (!cdfEnabled(snap)) Nil else {
-      require(!snap.schema.fieldNames.contains(ChangeTypeCol),
-        s"txlog: cdf.enabled tables must not have a '$ChangeTypeCol' column")
-      val ridAware = rowTrackingEnabled(snap) &&
-        merged.forall { case (p, _) =>
-          val a = byName(p); a.ridMaterialized || a.baseRowId.isDefined } &&
-        (insertAdds.isEmpty || insertAdds.forall(_.ridMaterialized))
+      val ridAware = ridKeyed(
+        rowTrackingEnabled(snap) && insertAdds.forall(_.ridMaterialized),
+        merged.map { case (p, _) => byName(p) })
       def images(files: Seq[AddFile], kind: String): DataFrame =
         rewriteRows(spark, snap, files, rowIds = ridAware)
           .withColumnRenamed(RowIdPhysCol, "__cdc_rid")
@@ -3739,17 +3656,12 @@ final class GraftTable(val tablePath: String) {
       // deletion vector
       val pre = if (newDeletes.isEmpty) None else Some(images(
         newDeletes.map { case (p, bytes) =>
-          val bm = new org.roaringbitmap.RoaringBitmap()
-          bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
           val a = byName(p)
-          withDv(a, org.roaringbitmap.RoaringBitmap.flip(bm, 0L, a.rows))
+          withDv(a, org.roaringbitmap.RoaringBitmap.flip(dvFromBytes(bytes), 0L, a.rows))
         }, "delete"))
       val post =
         if (insertAdds.isEmpty) None else Some(images(insertAdds, "insert"))
-      (pre, post) match {
-        case (Some(a), Some(b)) => stageChanges(a.unionAll(b))
-        case (a, b) => a.orElse(b).map(stageChanges).getOrElse(Nil)
-      }
+      (pre ++ post).reduceOption(_ unionAll _).map(stageChanges(snap, _)).getOrElse(Nil)
     }
     // provenance of DV'd survivors stays with their ORIGINAL commit —
     // the operation changed which rows exist, not who wrote them
@@ -3762,13 +3674,13 @@ final class GraftTable(val tablePath: String) {
     val (ridNew, newHwm) =
       assignBaseRowIds(stagedAdds ++ insertAdds, snap.rowIdWatermark)
     // staged: the new files and change files only — dvAdds reference
-    // LIVE data files that must never be touched on abort (same
-    // discipline as deleteRows)
-    transact(Abort, read = readVersion,
+    // LIVE data files that must never be touched on abort
+    val v = transact(Abort, read = readVersion,
         staged = (stagedAdds ++ insertAdds).map(_.path) ++ cdc.map(_._1))(_ =>
       Some(Commit(op, None, dvAdds ++ ridNew, removes,
         addVersions = addVersions, cdc = cdc, mergeKey = mergeKey,
         rowIdWatermark = Some(newHwm))))
+    (dvAdds.size, over.size, v)
   }
 
   /** Materialize every deletion vector: each DV'd file is rewritten
@@ -3783,10 +3695,7 @@ final class GraftTable(val tablePath: String) {
     val snap = snapshot()
     val dvd = snap.files.filter(_.dv.isDefined)
     if (dvd.isEmpty) return (0, 0, snap.version)
-    // row tracking: survivors keep their ids (materialized), as in compact
-    val tracked = rowTrackingEnabled(snap)
-    val adds0 = stageData(rewriteRows(spark, snap, dvd, rowIds = tracked), Some(snap))
-    val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
+    val adds = restage(spark, snap, dvd)(identity)
     val v = commitRewrite(snap, "purge", None, adds, dvd.map(_.path))
     (dvd.size, adds.size, v)
   }
@@ -3808,21 +3717,15 @@ final class GraftTable(val tablePath: String) {
     val bytes = snap.files.map(_.bytes).sum
     val outParts = math.max(1,
       math.ceil(bytes.toDouble / (targetFileMB * 1024.0 * 1024.0)).toInt)
-    // row tracking: read the sources WITH their ids and MATERIALIZE
-    // them into the rewritten files — the rewrite allocates nothing,
-    // so the rebase-over-concurrent-appends path stays sound
-    val tracked = rowTrackingEnabled(snap)
-    val raw = rewriteRows(spark, snap, snap.files, rowIds = tracked)
     // under a partition.spec, re-cluster by the transform tuple instead
     // of a round-robin repartition (which would scatter every tuple
-    // across every output file and erase partition pruning)
+    // across every output file and erase partition pruning). The
+    // rewrite allocates no row ids, so the rebase-over-concurrent-
+    // appends path stays sound.
     val spec = PartitionSpec.resolved(
       snap.props, snap.schema, physicalSchema(snap.schema))
-    val df =
-      if (spec.isEmpty) raw.repartition(outParts)
-      else PartitionSpec.cluster(raw, spec)
-    val adds0 = stageData(df, Some(snap))
-    val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
+    val adds = restage(spark, snap, snap.files)(raw =>
+      if (spec.isEmpty) raw.repartition(outParts) else PartitionSpec.cluster(raw, spec))
     val v = commitRewrite(snap, "compact", None, adds, snap.files.map(_.path))
     (snap.files.size, adds.size, v)
   }
@@ -3852,11 +3755,7 @@ final class GraftTable(val tablePath: String) {
     if (targets.size < 2) return (0, 0, snap.version) // nothing worth merging
     val outParts = math.max(1,
       math.ceil(targets.map(_.bytes).sum.toDouble / threshold).toInt)
-    val tracked = rowTrackingEnabled(snap)
-    val df = rewriteRows(spark, snap, targets, rowIds = tracked)
-      .repartition(outParts)
-    val adds0 = stageData(df, Some(snap))
-    val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
+    val adds = restage(spark, snap, targets)(_.repartition(outParts))
     val v = commitRewrite(snap, "compact", None, adds, targets.map(_.path))
     (targets.size, adds.size, v)
   }
@@ -3886,14 +3785,10 @@ final class GraftTable(val tablePath: String) {
       .sortBy(g => g.map(_.path).min)
     if (groups.isEmpty) return (0, 0, snap.version)
     val targets = groups.flatten
-    val tracked = rowTrackingEnabled(snap)
     val adds = groups.flatMap { g =>
       val outParts = math.max(1,
         math.ceil(g.map(_.bytes).sum.toDouble / threshold).toInt)
-      val staged = stageData(
-        rewriteRows(spark, snap, g, rowIds = tracked).repartition(outParts),
-        Some(snap))
-      if (tracked) staged.map(_.copy(ridMaterialized = true)) else staged
+      restage(spark, snap, g)(_.repartition(outParts))
     }
     val v = commitRewrite(snap, "compact", None, adds, targets.map(_.path))
     (targets.size, adds.size, v)
@@ -3925,8 +3820,6 @@ final class GraftTable(val tablePath: String) {
       s"txlog: unknown layout '$layout' — zorder | hilbert")
     val snap = snapshot()
     if (snap.files.isEmpty) return (0, 0, snap.version)
-    val tracked = rowTrackingEnabled(snap)
-    val df = rewriteRows(spark, snap, snap.files, rowIds = tracked)
     // under a partition.spec, the transform tuple LEADS the layout
     // (partition-major, z-within) — a global z-curve would interleave
     // every partition into every file and erase partition pruning
@@ -3935,12 +3828,9 @@ final class GraftTable(val tablePath: String) {
       .flatMap(t => phys.fields.find(_.name == t.source)
         .map(f => PartitionSpec.column(t, f.dataType)))
     val physCols = cols.map(physicalOf(snap.schema, _))
-    val clustered =
-      if (layout == "hilbert")
-        Layout.hilbertBy(df, physCols, targetFiles, prefix = prefix)
-      else Layout.zorderBy(df, physCols, targetFiles, prefix = prefix)
-    val adds0 = stageData(clustered, Some(snap))
-    val adds = if (tracked) adds0.map(_.copy(ridMaterialized = true)) else adds0
+    val adds = restage(spark, snap, snap.files)(df =>
+      if (layout == "hilbert") Layout.hilbertBy(df, physCols, targetFiles, prefix = prefix)
+      else Layout.zorderBy(df, physCols, targetFiles, prefix = prefix))
     val v = commitRewrite(snap, "zorder", None, adds, snap.files.map(_.path))
     (snap.files.size, adds.size, v)
   }

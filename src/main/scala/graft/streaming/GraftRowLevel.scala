@@ -530,8 +530,7 @@ private final class GraftDeltaWrite(
         val merged = scala.collection.mutable.LinkedHashMap
           .empty[String, org.roaringbitmap.RoaringBitmap]
         def fold(name: String, bytes: Array[Byte]): Unit = {
-          val bm = new org.roaringbitmap.RoaringBitmap()
-          bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
+          val bm = TxLog.dvFromBytes(bytes)
           merged.get(name) match {
             case Some(acc) => acc.or(bm)
             case None => merged.put(name, bm)
@@ -545,12 +544,7 @@ private final class GraftDeltaWrite(
             java.nio.file.Files.delete(Paths.get(p))
           }
         }
-        val deletes = merged.toSeq.map { case (n, bm) =>
-          bm.runOptimize()
-          val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
-          bm.serialize(buf)
-          n -> buf.array()
-        }
+        val deletes = merged.toSeq.map { case (n, bm) => n -> TxLog.dvBytes(bm) }
         new GraftTable(tablePath).commitDeltaRowLevel(
           SparkSession.active, snapVersion, deletes,
           msgs.flatMap(_.files),
@@ -655,12 +649,7 @@ private final class GraftDeltaWriterFactory(
       override def commit(): WriterCommitMessage = {
         val staged =
           org.apache.spark.sql.graft.ParquetWrites.filesOf(Seq(rows.commit()))
-        val entries = bitmaps.toSeq.map { case (n, bm) =>
-          bm.runOptimize()
-          val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
-          bm.serialize(buf)
-          n -> buf.array()
-        }
+        val entries = bitmaps.toSeq.map { case (n, bm) => n -> TxLog.dvBytes(bm) }
         if (entries.map(_._2.length.toLong).sum <=
             GraftDeltaWrite.InlineBitmapBytes.toLong)
           GraftDeltaWrite.DeltaStaged(staged, entries, Nil)

@@ -83,6 +83,31 @@ class DeletionVectorSpec extends SparkSpec {
       ((80L until 150L) ++ (152L until 200L)).toSet)
   }
 
+  test("a delete that empties a file drops it from the snapshot, even at dv.maxFraction = 1.0") {
+    import spark.implicits._
+    val t = freshTable("emptied")
+    // file A: ids 0..9, file B: ids 10..19
+    t.append((0L until 10L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1))
+    t.append((10L until 20L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1))
+    t.setProperty(TxLog.DvMaxFractionProp, "1.0")
+    t.setProperty(TxLog.CdfEnabledProp, "true")
+    val head = t.latestVersion()
+    val (dvFiles, rewrites, rows, v) = t.deleteRows(spark, "id < 10")
+    assert((dvFiles, rewrites, rows) === ((0, 1, 10L)),
+      "a fully-deleted file takes the rewrite leg, never a full DV")
+    val snap = t.snapshot()
+    // the emptied file leaves the snapshot: no live file whose every
+    // row is deleted, so no later scan plans it
+    assert(snap.files.size === 1)
+    assert(snap.files.forall(a => a.dv.isEmpty && a.rows === 10L))
+    assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq ===
+      (10L until 20L))
+    val feed = t.readChangeFeed(spark, head, v)
+    assert(feed.filter($"_change_type" === "delete").select("id").as[Long]
+      .collect().sorted.toSeq === (0L until 10L))
+    assert(feed.count() === 10L)
+  }
+
   test("dv.maxBytes property forces the rewrite path") {
     import spark.implicits._
     val t = freshTable("maxbytes")

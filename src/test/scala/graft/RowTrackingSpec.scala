@@ -588,6 +588,72 @@ class RowTrackingSpec extends SparkSpec {
     } finally dropCat(cat)
   }
 
+  /** A table whose files disagree on id info: k 0..9 compacted while
+    * untracked (no ids), then k 10..19 appended (virtual ids 10..19),
+    * then tracking turned on. */
+  private def mixedIds(tag: String): (String, GraftTable) = {
+    val (cat, _, path) = freshTable(tag)
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING)")
+    val t = new GraftTable(path)
+    t.append((0L until 10L).map(i => (i, s"v$i")).toDF("k", "v").orderBy("k").coalesce(1))
+    t.compact(spark)
+    t.append((10L until 20L).map(i => (i, s"v$i")).toDF("k", "v").orderBy("k").coalesce(1))
+    t.setProperty(TxLog.RowTrackingProp, "true")
+    assert(t.snapshot().files.count(a => a.baseRowId.isEmpty && !a.ridMaterialized) === 1)
+    (cat, t)
+  }
+
+  /** Every live key's id (None = null). */
+  private def idsOpt(cat: String): Map[Long, Option[Long]] =
+    spark.sql(s"SELECT k, _row_id FROM $cat.db.t").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+
+  test("one untracked touched file does not cost tracked rows their ids: overwriteRange") {
+    val (cat, t) = mixedIds("mixrw")
+    try {
+      t.overwriteRange(spark,
+        (5L until 15L).map(i => (i, s"R$i")).toDF("k", "v"), "k", Some(5L), Some(14L))
+      val after = idsOpt(cat)
+      (15L until 20L).foreach(k =>
+        assert(after(k) === Some(k), s"tracked survivor k=$k moved"))
+      // untracked survivors and replacement rows take fresh ids
+      (0L until 15L).foreach(k =>
+        assert(after(k).exists(_ >= 20L), s"k=$k has id ${after(k)}"))
+      assert(after.values.flatten.toSeq.distinct.size === 20)
+    } finally dropCat(cat)
+  }
+
+  test("one untracked touched file does not cost tracked rows their ids: copy-on-write upsert") {
+    val (cat, t) = mixedIds("mixcow")
+    try {
+      t.upsert(Seq((3L, "U3", false, 1L), (12L, "U12", false, 1L))
+        .toDF("k", "v", "_deleted", "_seq"), "k", "_seq")
+      assert(t.snapshot().files.forall(_.dv.isEmpty))
+      val after = idsOpt(cat)
+      (10L until 20L).foreach(k =>
+        assert(after(k) === Some(k), s"tracked key k=$k moved"))
+      (0L until 10L).foreach(k =>
+        assert(after(k).exists(_ >= 20L), s"k=$k has id ${after(k)}"))
+      assert(after.values.flatten.toSeq.distinct.size === 20)
+    } finally dropCat(cat)
+  }
+
+  test("one untracked touched file does not cost tracked rows their ids: merge-on-read upsert") {
+    val (cat, t) = mixedIds("mixmor")
+    try {
+      t.setProperty(TxLog.UpdateModeProp, TxLog.DeleteModeMor)
+      t.upsert(Seq((3L, "U3", false, 1L), (12L, "U12", false, 1L))
+        .toDF("k", "v", "_deleted", "_seq"), "k", "_seq")
+      assert(t.snapshot().files.count(_.dv.isDefined) === 2, "both files DV'd in place")
+      val after = idsOpt(cat)
+      (10L until 20L).foreach(k =>
+        assert(after(k) === Some(k), s"tracked key k=$k moved"))
+      // the untracked file's rows stay id-less in place; the updated
+      // key's post-image takes a fresh id
+      assert(after(3L).exists(_ >= 20L), s"k=3 has id ${after(3L)}")
+    } finally dropCat(cat)
+  }
+
   test("protocol: the enable commit gates by the 'rowTracking' reader feature; plain tables stay protocol-free") {
     val (cat, _, path) = freshTable("protocol")
     try {
