@@ -3537,7 +3537,7 @@ final class GraftTable(val tablePath: String) {
     dvAggregate(matched.select(col(GraftTableV2.FileCol).as("__file"),
         col(GraftTableV2.PosCol).as("__idx")), Int.MaxValue)
       .collect().toSeq
-      .flatMap(r => Option(r.getAs[Array[Byte]](1)).map(r.getString(0) -> _))
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
 
   /** Commit a DELTA-based (merge-on-read) row-level write — the Delta
     * DV-backed `UPDATE` / `MERGE` shape (cf. Delta protocol
@@ -3555,7 +3555,6 @@ final class GraftTable(val tablePath: String) {
       insertStaged: Seq[ParquetWrites.StagedFile],
       ridMaterialized: Boolean = false): Long = {
     val snap = snapshot(readVersion)
-    if (newDeletes.isEmpty && insertStaged.isEmpty) return snap.version
     // insert files carry the GraftDeltaWrite-declared ordering (same
     // writeOrderDeclared resolution over the same snapshot) — stamp
     // them; DV'd originals keep their own stats, marker included
